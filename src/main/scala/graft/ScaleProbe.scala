@@ -431,15 +431,10 @@ object ScaleProbe {
         "l_returnflag", probeTreeFeatures)
       val sdf = spark.readStream.schema(li.schema)
         .parquet(graft.api.StandardQueries.streamableDir(s"$outDir/lineitem.parquet"))
-      val qn = "sp_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sdf.select(F.col("l_returnflag").as("label"),
+      val counts = sdf.select(F.col("l_returnflag").as("label"),
           graft.analysis.TreeSplit.stumpPredictColumn(m, probeTreeFeatures).as("pred"))
         .groupBy("label", "pred").count()
-        .writeStream.format("memory").queryName(qn).outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(qn).count()
+      graft.streaming.Streams.toMemory(counts, "complete").count()
     }),
     // round-16b: blocked fuzzy dedup at an engineered block shape —
     // 200k strings in 50k blocks of exactly 4 mutually-1-edit members

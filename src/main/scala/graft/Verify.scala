@@ -17,6 +17,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // local iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the dump
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val failed = Seq.newBuilder[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -24,6 +25,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -42,5 +44,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // a failed query only leaves its output directory missing: name them all
+    val names = failed.result()
+    System.err.println(s"[verify] failed ${names.size}: " +
+      (if (names.isEmpty) "none" else names.mkString(",")))
   }
 }

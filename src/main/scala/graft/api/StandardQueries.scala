@@ -11,6 +11,7 @@ import graft.functions._
 import graft.functions.Fingerprints.rolling_min_hash
 import graft.pipeline.{Audio, Decontaminate, Dedup, Embeddings, Exif, HtmlExtract, Multimodal, NaiveBayes, Packing, Pii, QualityClassifier, Sampling, Similarity, TextAnalysis, Video}
 import graft.profile.Why1
+import graft.streaming.Streams
 
 /** The driver-facing query registry: one entry per implemented operator
   * (SURVEY §2 + the training-data pipeline extensions), each built on the
@@ -67,22 +68,29 @@ object StandardQueries {
   private val tableSchemas =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
+  private def tableSchema(s: SparkSession, dir: String, name: String)
+      : org.apache.spark.sql.types.StructType = {
     // Older fixtures store events.ts as INT64 TIMESTAMP(NANOS), which
     // Spark's parquet reader rejects unless nanos are surfaced as raw
     // longs. Harmless for the current timestamp[us] fixtures; keeping it
     // lets rebuildTs dispatch on whichever dtype the file actually has.
     if (name == "events") s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // NOTE: the local test files are single-row-group parquet, so scans
-    // arrive as one partition. A blanket repartition was measured SLOWER
-    // (the row exchange outweighs local parallelism for sketch updates at
-    // these sizes); only compute-heavy map stages (dedup_near's minhash)
-    // repartition explicitly. Real multi-split tables parallelize at the
-    // source.
-    val path = s"$dir/$name.parquet"
-    val sch = tableSchemas.computeIfAbsent(path, p => s.read.parquet(p).schema)
-    s.read.schema(sch).parquet(path)
+    tableSchemas.computeIfAbsent(s"$dir/$name.parquet", p => s.read.parquet(p).schema)
   }
+
+  // NOTE: the local test files are single-row-group parquet, so scans
+  // arrive as one partition. A blanket repartition was measured SLOWER
+  // (the row exchange outweighs local parallelism for sketch updates at
+  // these sizes); only compute-heavy map stages (dedup_near's minhash)
+  // repartition explicitly. Real multi-split tables parallelize at the
+  // source.
+  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+    s.read.schema(tableSchema(s, dir, name)).parquet(s"$dir/$name.parquet")
+
+  /** Fixture table `name` as a file-source stream, read with [[t]]'s schema. */
+  private def st(s: SparkSession, dir: String, name: String): DataFrame =
+    s.readStream.schema(tableSchema(s, dir, name))
+      .parquet(streamableDir(s"$dir/$name.parquet"))
 
   /** Rebuild `ts` as a session-tz timestamp whatever dtype the fixture
     * stores: legacy raw-nanos BIGINT → micros (truncation irrelevant at
@@ -844,21 +852,15 @@ object StandardQueries {
         .select("img_id", "dhash")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val sdf = s.readStream.schema(docs.schema)
-          .parquet(StandardQueries.streamableDir(s"$dir/documents.parquet"))
+        val sdf = st(s, dir, "documents")
           .select((F.col("doc_id") * 2 + 1).as("img_id"),
             F.col("doc_id").as("base"), F.lit(1).as("shift"))
         val probe = Multimodal.withDHash(
           Multimodal.syntheticBmpShifted(sdf, "base", "shift"), "img")
           .select("img_id", "dhash")
-        val qn = "sdi_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = Dedup.hashNearDupsAgainstIndex(probe, "img_id", "dhash",
-            index, "img_id", "dhash", maxHamming = 7, bands = 8)
-          .writeStream.format("memory").queryName(qn).outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(qn).orderBy("a", "b")
+        Streams.toMemory(Dedup.hashNearDupsAgainstIndex(probe, "img_id", "dhash",
+            index, "img_id", "dhash", maxHamming = 7, bands = 8))
+          .orderBy("a", "b")
       } finally index.unpersist(blocking = false)
     },
     Some(imageDhashCte +
@@ -3205,8 +3207,7 @@ object StandardQueries {
     (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val ix = Similarity.ivfPqBuild(emb, numCentroids = 8, m = 16, ksub = 16)
-      val sdf = s.readStream.schema(emb.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/embeddings.parquet"))
+      val sdf = st(s, dir, "embeddings")
         .filter(F.col("vec_id") < 20)
       val out = s"target/tmp/ivfpq_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       val q = Similarity.ivfPqStream(ix, sdf, "vec_id", "embedding", out,
@@ -3230,8 +3231,7 @@ object StandardQueries {
     (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val ix0 = Similarity.ivfPqBuild(emb, numCentroids = 8, m = 16, ksub = 16)
-      val sdf = s.readStream.schema(emb.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/embeddings.parquet"))
+      val sdf = st(s, dir, "embeddings")
       val base = s"target/tmp/ivfpqstore_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       val q = Similarity.ivfPqIngest(ix0, sdf, "vec_id", "embedding",
         s"$base/store", s"$base/ckpt")
@@ -4957,17 +4957,10 @@ object StandardQueries {
     * one file processed as one batch. */
   private def qStreamingSessionize = Q(
     (s, dir) => {
-      val raw = t(s, dir, "events") // also sets the nanosAsLong conf
-      val sdf = s.readStream.schema(raw.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/events.parquet"))
+      val sdf = st(s, dir, "events")
         .transform(rebuildTs)
-      val qn = "ssq_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.SessionStream.sessions(sdf, gapSeconds = 21600L)
-        .writeStream.format("memory").queryName(qn).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("user_id", "session_seq")
+      Streams.toMemory(graft.streaming.SessionStream.sessions(sdf, gapSeconds = 21600L))
+        .orderBy("user_id", "session_seq")
     },
     Some("""WITH e AS (
            |  SELECT user_id, event_id, event_type, value,
@@ -5031,16 +5024,9 @@ object StandardQueries {
     * split, so the oracle is plain SQL. */
   private def qStreamingDedup = Q(
     (s, dir) => {
-      val raw = t(s, dir, "documents")
-      val sdf = s.readStream.schema(raw.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/documents.parquet"))
-      val qn = "sdq_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.streaming.DedupStream.exactKeepers(sdf, "text", "doc_id")
-        .writeStream.format("memory").queryName(qn).outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("text_hash")
+      val sdf = st(s, dir, "documents")
+      Streams.toMemory(graft.streaming.DedupStream.exactKeepers(sdf, "text", "doc_id"),
+        "complete").orderBy("text_hash")
     },
     Some("""SELECT md5(text) AS text_hash, min(doc_id) AS keeper_id,
            | count(*) AS dup_count
@@ -5054,9 +5040,7 @@ object StandardQueries {
     * instead of a bounded memory sink. */
   private def qStreamingDedupStore = Q(
     (s, dir) => {
-      val raw = t(s, dir, "documents")
-      val sdf = s.readStream.schema(raw.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/documents.parquet"))
+      val sdf = st(s, dir, "documents")
       val path = "target/tmp/sds_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val q = graft.streaming.DedupStream.exactKeepersToStore(
         sdf, "text", "doc_id", path, numBuckets = 8)
@@ -5085,18 +5069,11 @@ object StandardQueries {
     * as they arrive, profile/route on `keep`. */
   private def qStreamingQualityScore = Q(
     (s, dir) => {
-      val docs = t(s, dir, "documents")
-      val sdf = s.readStream.schema(docs.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/documents.parquet"))
-      val qn = "sqs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = QualityClassifier.scoreDocs(sdf, "text", "doc_id",
+      val sdf = st(s, dir, "documents")
+      Streams.toMemory(QualityClassifier.scoreDocs(sdf, "text", "doc_id",
           QualityClassifier.md5Weights(1024).toSeq,
-          bias = 0.0, dim = 1024, md5Mode = true)
-        .writeStream.format("memory").queryName(qn).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("doc_id")
+          bias = 0.0, dim = 1024, md5Mode = true))
+        .orderBy("doc_id")
     },
     qQualityClassifierScore.oracle)
 
@@ -5110,17 +5087,11 @@ object StandardQueries {
         docs.filter(F.col("source") =!= "src1"), "text", "doc_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val sdf = s.readStream.schema(docs.schema)
-          .parquet(StandardQueries.streamableDir(s"$dir/documents.parquet"))
+        val sdf = st(s, dir, "documents")
           .filter(F.col("source") === "src1")
-        val qn = "snq_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = graft.streaming.DedupStream.nearDupsAgainstIndex(
-          sdf, index, "text", "doc_id", numPerm = 64, bands = 32, threshold = 0.5)
-          .writeStream.format("memory").queryName(qn).outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(qn).orderBy("a", "b")
+        Streams.toMemory(graft.streaming.DedupStream.nearDupsAgainstIndex(
+          sdf, index, "text", "doc_id", numPerm = 64, bands = 32, threshold = 0.5))
+          .orderBy("a", "b")
       } finally index.unpersist(blocking = false)
     },
     Some("""WITH sh AS (
@@ -5168,9 +5139,7 @@ object StandardQueries {
     * windows buy us over the reference's wall-clock rollover. */
   private def qStreamingWindowProfile = Q(
     (s, dir) => {
-      val raw = t(s, dir, "events") // also sets the nanosAsLong conf
-      val sdf = s.readStream.schema(raw.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/events.parquet"))
+      val sdf = st(s, dir, "events")
         .transform(rebuildTs)
       val profiler = new Profiler(MetricConfig(),
         ResolverSpec(byKind = _ => Seq(Namespace.Counts, Namespace.Distribution)))
@@ -5178,13 +5147,7 @@ object StandardQueries {
         sdf, "ts", "1 hour", watermark = Some("1 hour"),
         profiler = profiler, columns = Some(Seq("value")),
         segmentColumns = Seq("event_type"))
-      val qn = "swp_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = win.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+      Streams.toMemory(win, "complete")
         .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
           F.col("segment_event_type").as("event_type"),
           F.col("value.counts.n").as("n"),
@@ -5208,21 +5171,13 @@ object StandardQueries {
     * leaderboard with the same (count desc, value asc) order. */
   private def qStreamingHeavyHitters = Q(
     (s, dir) => {
-      val raw = t(s, dir, "events")
-      val sdf = s.readStream.schema(raw.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/events.parquet"))
+      val sdf = st(s, dir, "events")
         .transform(rebuildTs)
       val win = sdf
         .groupBy(F.window(F.col("ts"), "1 day"))
         .agg(frequent_items_agg(F.col("event_type"), limit = 8)
           .getField("items").as("items"))
-      val qn = "shh_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = win.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+      Streams.toMemory(win, "complete")
         .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
           F.posexplode(F.col("items")).as(Seq("rank0", "item")))
         .select(F.col("window_start"), (F.col("rank0") + 1).cast("long").as("rank"),
@@ -5334,25 +5289,17 @@ object StandardQueries {
     * oracle matches bit-for-bit. */
   private def qStreamingDriftPsi = Q(
     (s, dir) => {
-      val raw = t(s, dir, "events") // also sets the nanosAsLong conf
       val split = F.lit("2024-01-11").cast("timestamp")
       val env = graft.streaming.DriftStream.referenceEnvelope(
         events(s, dir).filter(F.col("ts") < split), "value", nBins = 30)
-      val sdf = s.readStream.schema(raw.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/events.parquet"))
+      val sdf = st(s, dir, "events")
         .transform(rebuildTs)
       val counts = graft.streaming.DriftStream.windowedBinCounts(
         sdf, "ts", "1 day", "value", env)
-      val qn = "sdp_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = counts.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       // round(8): Math.log and DuckDB's std::log disagree by 1 ulp on
       // some arguments (~1e-18 on these psi magnitudes) — same parity
       // trim as nlp_svd's residual
-      graft.streaming.DriftStream.psiPerWindow(s.table(qn), env)
+      graft.streaming.DriftStream.psiPerWindow(Streams.toMemory(counts, "complete"), env)
         .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
           F.round(F.col("psi"), 8).as("psi"), F.col("n_target"))
         .orderBy("window_start")
@@ -5387,22 +5334,14 @@ object StandardQueries {
     * exactly rather than at 8 decimals. */
   private def qStreamingDriftJsd = Q(
     (s, dir) => {
-      val raw = t(s, dir, "events")
       val split = F.lit("2024-01-11").cast("timestamp")
       val env = graft.streaming.DriftStream.referenceEnvelope(
         events(s, dir).filter(F.col("ts") < split), "value", nBins = 30)
-      val sdf = s.readStream.schema(raw.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/events.parquet"))
+      val sdf = st(s, dir, "events")
         .transform(rebuildTs)
       val counts = graft.streaming.DriftStream.windowedBinCounts(
         sdf, "ts", "1 day", "value", env)
-      val qn = "sdj_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = counts.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.DriftStream.jsdPerWindow(s.table(qn), env)
+      graft.streaming.DriftStream.jsdPerWindow(Streams.toMemory(counts, "complete"), env)
         .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
           F.col("jsd"), F.col("n_target"))
         .orderBy("window_start")
@@ -5437,22 +5376,14 @@ object StandardQueries {
     * division, zero float caveats. */
   private def qStreamingDriftEmd = Q(
     (s, dir) => {
-      val raw = t(s, dir, "events")
       val split = F.lit("2024-01-11").cast("timestamp")
       val env = graft.streaming.DriftStream.referenceEnvelope(
         events(s, dir).filter(F.col("ts") < split), "value", nBins = 30)
-      val sdf = s.readStream.schema(raw.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/events.parquet"))
+      val sdf = st(s, dir, "events")
         .transform(rebuildTs)
       val counts = graft.streaming.DriftStream.windowedBinCounts(
         sdf, "ts", "1 day", "value", env)
-      val qn = "sde_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = counts.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.DriftStream.emdPerWindow(s.table(qn), env)
+      graft.streaming.DriftStream.emdPerWindow(Streams.toMemory(counts, "complete"), env)
         .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
           F.col("emd"), F.col("n_target"))
         .orderBy("window_start")
@@ -5774,19 +5705,11 @@ object StandardQueries {
     * missing from a shrunk customer dim, so the orphan path is live). */
   private def qStreamingRefIntegrity = Q(
     (s, dir) => {
-      val env = t(s, dir, "events")
-      val sdf = s.readStream.schema(env.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/events.parquet"))
+      val sdf = st(s, dir, "events")
         .transform(rebuildTs)
       val dim = t(s, dir, "customer").where(F.col("c_custkey") < 100)
-      val qn = "sri_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.analysis.DataAudit.streamingOrphanCounts(
-          sdf, "user_id", "ts", "1 day", dim, "c_custkey")
-        .writeStream.format("memory").queryName(qn).outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+      Streams.toMemory(graft.analysis.DataAudit.streamingOrphanCounts(
+          sdf, "user_id", "ts", "1 day", dim, "c_custkey"), "complete")
         .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
           F.col("orphan_rows"))
         .orderBy("window_start")
@@ -6109,19 +6032,13 @@ object StandardQueries {
     (s, dir) => {
       val docs = t(s, dir, "documents")
       val model = NaiveBayes.trainModel(docs, "text", "lang")
-      val sdf = s.readStream.schema(docs.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/documents.parquet"))
-      val qn = "nbs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sdf
+      val sdf = st(s, dir, "documents")
+      Streams.toMemory(sdf
         .select(F.col("doc_id"),
           NaiveBayes.scoreColumn(F.col("text"), model).as("r"))
         .select(F.col("doc_id"), F.col("r.pred").as("pred"),
-          F.col("r.score").as("score"))
-        .writeStream.format("memory").queryName(qn).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("doc_id")
+          F.col("r.score").as("score")))
+        .orderBy("doc_id")
     },
     qNbLangScore.oracle)
 
@@ -6552,16 +6469,13 @@ object StandardQueries {
         TextAnalysis.tokenCount(F.col("text")).as("x1"),
         TextAnalysis.alphaCount(F.col("text")).as("x2"))
       val m = graft.analysis.Conformal.fit(feats, "doc_id", "y", "x1", "x2")
-      val docs = t(s, dir, "documents")
-      val sdf = s.readStream.schema(docs.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/documents.parquet"))
+      val sdf = st(s, dir, "documents")
         .select(F.col("doc_id"), F.col("n_chars").as("y"),
           TextAnalysis.tokenCount(F.col("text")).as("x1"),
           TextAnalysis.alphaCount(F.col("text")).as("x2"))
         .filter(F.col("doc_id") % 3 === 2 &&
           F.col("y").isNotNull && F.col("x1").isNotNull && F.col("x2").isNotNull)
-      val qn = "conf_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sdf
+      val coverage = sdf
         .groupBy()
         .agg(F.count(F.lit(1)).as("n_test"),
           F.sum(F.when(
@@ -6571,11 +6485,7 @@ object StandardQueries {
           F.col("n_test"), F.col("n_covered"),
           (F.col("n_covered").cast("double") / F.col("n_test").cast("double"))
             .as("coverage"))
-        .writeStream.format("memory").queryName(qn).outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn)
+      Streams.toMemory(coverage, "complete")
     },
     qConformalCoverage.oracle)
 
@@ -7084,8 +6994,7 @@ object StandardQueries {
         graft.functions.Gzip.gzip_compress(r)): _*)
       val abs = writeWarcGzFiles(docs, gz)
       val idPat = "<urn:doc:([0-9]+):([0-9]+)>"
-      val qn = "wfs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.sources.WarcFiles.streamRecords(s, abs)
+      Streams.toMemory(graft.sources.WarcFiles.streamRecords(s, abs)
         .select(
           F.regexp_extract(F.col("record_id"), idPat, 1).cast("bigint").as("doc_id"),
           F.regexp_extract(F.col("record_id"), idPat, 2).cast("int").as("rec_idx"),
@@ -7094,12 +7003,8 @@ object StandardQueries {
           // the record carries bytes only; the string view is derived
           // (column pruning keeps unconsumed views off the scan)
           graft.functions.Http.decodeWith(
-            F.col("payload_bytes"), F.lit("utf-8")).as("payload"))
-        .writeStream.format("memory").queryName(qn)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("doc_id", "rec_idx")
+            F.col("payload_bytes"), F.lit("utf-8")).as("payload")))
+        .orderBy("doc_id", "rec_idx")
     },
     qWarcParse.oracle)
 
@@ -8071,23 +7976,16 @@ object StandardQueries {
     * crawl-side shape. Same oracle again. */
   private def qStreamingHtmlExtract = Q(
     (s, dir) => {
-      val docs = t(s, dir, "documents")
-      val sdf = s.readStream.schema(docs.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/documents.parquet"))
-      val qn = "html_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val sdf = st(s, dir, "documents")
       // per-batch repartition: the one-file micro-batch would run the
       // whole synthesize+extract chain on one core (graft.core.Par)
-      val q = graft.core.Par.widenStream(sdf).withColumn("html", syntheticHtml)
+      Streams.toMemory(graft.core.Par.widen(sdf).withColumn("html", syntheticHtml)
         .select(F.col("doc_id"),
           HtmlExtract.extractTextColumn(F.col("html")).as("x"))
         .select(F.col("doc_id"), F.col("x.text").as("text"),
           F.col("x.n_blocks").as("n_blocks"), F.col("x.n_chars").as("n_chars"))
-        .filter(F.col("n_blocks") > 0)
-        .writeStream.format("memory").queryName(qn)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("doc_id")
+        .filter(F.col("n_blocks") > 0))
+        .orderBy("doc_id")
     },
     qHtmlExtractText.oracle)
 
@@ -8207,19 +8105,12 @@ object StandardQueries {
     * [[qTokenCountsBpe]] verbatim. */
   private def qStreamingTokenCountsBpe = Q(
     (s, dir) => {
-      val docs = t(s, dir, "documents")
       val merges = trainedMerges8(s, dir)
-      val sdf = s.readStream.schema(docs.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/documents.parquet"))
-      val qn = "tc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sdf.select(F.col("doc_id"),
+      val sdf = st(s, dir, "documents")
+      Streams.toMemory(sdf.select(F.col("doc_id"),
           F.coalesce(F.size(TextAnalysis.bpeSegmentNative(F.col("text"), merges))
-            .cast("long"), F.lit(0L)).as("bpe_tokens"))
-        .writeStream.format("memory").queryName(qn)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("doc_id")
+            .cast("long"), F.lit(0L)).as("bpe_tokens")))
+        .orderBy("doc_id")
     },
     qTokenCountsBpe.oracle)
 
@@ -8449,17 +8340,11 @@ object StandardQueries {
     (s, dir) => {
       val li = t(s, dir, "lineitem")
       val m = TreeSplit.stumpModel(li, "l_returnflag", treeFeatures)
-      val sdf = s.readStream.schema(li.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/lineitem.parquet"))
-      val qn = "st_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sdf.select(F.col("l_returnflag").as("label"),
+      val sdf = st(s, dir, "lineitem")
+      val confusion = sdf.select(F.col("l_returnflag").as("label"),
           TreeSplit.stumpPredictColumn(m, treeFeatures).as("pred"))
         .groupBy("label", "pred").agg(F.count(F.lit(1)).as("n"))
-        .writeStream.format("memory").queryName(qn).outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("label", "pred")
+      Streams.toMemory(confusion, "complete").orderBy("label", "pred")
     },
     qStumpConfusion.oracle)
 
@@ -8499,17 +8384,11 @@ object StandardQueries {
         TreeSplit.FeatureSpec("l_tax_c", F.round(F.col("l_tax") * 100)),
         TreeSplit.FeatureSpec("l_linenumber", F.col("l_linenumber")))
       val m = Boost.lsBoostModel(li, "l_quantity", feats, rounds = 3)
-      val sdf = s.readStream.schema(li.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/lineitem.parquet"))
-      val qn = "lsb_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sdf.select(Boost.predictColumn(m, feats).as("pred"),
+      val sdf = st(s, dir, "lineitem")
+      val byPred = sdf.select(Boost.predictColumn(m, feats).as("pred"),
           F.col("l_quantity").cast("long").as("y"))
         .groupBy("pred").agg(F.count(F.lit(1)).as("n"), F.sum("y").as("sum_y"))
-        .writeStream.format("memory").queryName(qn).outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("pred")
+      Streams.toMemory(byPred, "complete").orderBy("pred")
     },
     qLsBoostPredict.oracle)
 
@@ -8937,15 +8816,9 @@ object StandardQueries {
       val emb = t(s, dir, "embeddings")
       val m = graft.pipeline.KMeansFixed.trainModel(emb, "embedding", "vec_id",
         k = 4, iters = 3)
-      val sdf = s.readStream.schema(emb.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/embeddings.parquet"))
-      val qn = "km_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.pipeline.KMeansFixed.assign(sdf, "embedding", "vec_id", m)
-        .writeStream.format("memory").queryName(qn)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("id")
+      val sdf = st(s, dir, "embeddings")
+      Streams.toMemory(graft.pipeline.KMeansFixed.assign(sdf, "embedding", "vec_id", m))
+        .orderBy("id")
     },
     qKmeansAssign.oracle)
 
@@ -9233,16 +9106,10 @@ object StandardQueries {
   private def qStreamingAnn = Q(
     (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val sdf = s.readStream.schema(emb.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/embeddings.parquet"))
+      val sdf = st(s, dir, "embeddings")
         .filter(F.col("vec_id") < 20)
-      val qn = "ann_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = Similarity.ivfTopK(emb, sdf, numCentroids = 8, nprobe = 8, k = 5)
-        .writeStream.format("memory").queryName(qn).outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).select("query_id", "neighbor_id", "rank")
+      Streams.toMemory(Similarity.ivfTopK(emb, sdf, numCentroids = 8, nprobe = 8, k = 5),
+        "complete").select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     },
     qEmbeddingIvfExhaustive.oracle)
@@ -9350,20 +9217,14 @@ object StandardQueries {
       val part = t(s, dir, "part")
       val indexDf = part.select(F.col("p_partkey").as("ix_id"),
         F.lower(F.col("p_name")).as("ix_s"))
-      val sdf = s.readStream.schema(part.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/part.parquet"))
+      val sdf = st(s, dir, "part")
         .filter(F.col("p_partkey") % 5 === 0)
         .select((F.col("p_partkey") + 1000000L).as("probe_id"),
           F.concat(F.substring(F.lower(F.col("p_name")), 1, 2),
             F.expr("substring(lower(p_name), 4)")).as("probe_s"))
-      val qn = "fz_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.pipeline.FuzzyDedup.matchIndex(
-          sdf, "probe_id", "probe_s", indexDf, "ix_id", "ix_s", maxDist = 1)
-        .writeStream.format("memory").queryName(qn)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("id", "index_id")
+      Streams.toMemory(graft.pipeline.FuzzyDedup.matchIndex(
+          sdf, "probe_id", "probe_s", indexDf, "ix_id", "ix_s", maxDist = 1))
+        .orderBy("id", "index_id")
     },
     Some("""WITH ix AS (SELECT CAST(p_partkey AS BIGINT) AS index_id, lower(p_name) AS index_s,
            |   substr(lower(p_name), 1, 2) AS blk, CAST(len(p_name) AS BIGINT) AS l FROM part),
@@ -9507,21 +9368,15 @@ object StandardQueries {
       val part = t(s, dir, "part")
       val indexDf = part.select(F.col("p_partkey").as("ix_id"),
         F.lower(F.col("p_name")).as("ix_s"))
-      val sdf = s.readStream.schema(part.schema)
-        .parquet(StandardQueries.streamableDir(s"$dir/part.parquet"))
+      val sdf = st(s, dir, "part")
         .filter(F.col("p_partkey") % 5 === 0)
         .select((F.col("p_partkey") + 1000000L).as("probe_id"),
           F.concat(F.substring(F.lower(F.col("p_name")), 1, 2),
             F.expr("substring(lower(p_name), 4)")).as("probe_s"))
-      val qn = "fzc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = graft.pipeline.FuzzyDedup.matchIndex(
+      Streams.toMemory(graft.pipeline.FuzzyDedup.matchIndex(
           sdf, "probe_id", "probe_s", indexDf, "ix_id", "ix_s",
-          maxDist = 1, maxBlockSize = Some(250))
-        .writeStream.format("memory").queryName(qn)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qn).orderBy("id", "index_id")
+          maxDist = 1, maxBlockSize = Some(250)))
+        .orderBy("id", "index_id")
     },
     Some("""WITH ix0 AS (SELECT CAST(p_partkey AS BIGINT) AS index_id, lower(p_name) AS index_s,
            |   substr(lower(p_name), 1, 2) AS blk, CAST(len(p_name) AS BIGINT) AS l FROM part),

@@ -90,9 +90,4 @@ object Par {
     if (!df.isStreaming &&
       df.queryExecution.optimizedPlan.stats.sizeInBytes < minInputBytes) df
     else widen(df)
-
-  /** [[widen]] for frames that may be streaming — retained alias; the
-    * streaming guard now lives in [[widen]] itself so no public entry
-    * point can hit the `.rdd`-on-streaming crash. */
-  def widenStream(df: DataFrame): DataFrame = widen(df)
 }

@@ -162,7 +162,7 @@ object FuzzyDedup {
     // runs at the probe's partitioning once the index broadcasts; a
     // single-file micro-batch or one-file batch probe would serialize
     // it onto one core (guide §2.5; see [[graft.core.Par]])
-    val p = graft.core.Par.widenStream(prep(probe, idCol, strCol, "id", "s"))
+    val p = graft.core.Par.widen(prep(probe, idCol, strCol, "id", "s"))
     val ix0 = prep(index, indexIdCol, indexStrCol, "index_id", "index_s")
     val ix = maxBlockSize match {
       case None => ix0

@@ -136,7 +136,7 @@ object HtmlExtract {
     require(keyCols.nonEmpty, "need at least one document key column")
     // block split + per-block regex/entity work fuses with the scan —
     // widen a one-file input first (guide §2.5, graft.core.Par)
-    val segs = graft.core.Par.widenStream(df).select(
+    val segs = graft.core.Par.widen(df).select(
       keyCols.map(F.col) :+
         F.posexplode(F.split(F.col(htmlCol), blockTagPattern)).as(Seq("__pos", "__seg")): _*)
     val vis = visibleText(F.col("__seg"))

@@ -390,7 +390,7 @@ object Multimodal {
     val encoder = org.apache.spark.sql.Encoders.row(outSchema)
     // per-row encode (and the decode/hash stages fused above it) run at
     // this frame's partitioning — widen a one-file input (graft.core.Par)
-    graft.core.Par.widenStream(df).mapPartitions { rows =>
+    graft.core.Par.widen(df).mapPartitions { rows =>
       rows.map { row =>
         val id = row.getLong(idIdx)
         val w = (8 + id % 9).toInt
@@ -415,7 +415,7 @@ object Multimodal {
     val outSchema = StructType(df.schema.fields :+ StructField(out, BinaryType))
     val idIdx = df.schema.fieldIndex(idCol)
     val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    graft.core.Par.widenStream(df).mapPartitions { rows =>
+    graft.core.Par.widen(df).mapPartitions { rows =>
       rows.map { row =>
         val id = row.getLong(idIdx)
         val w = (8 + id % 9).toInt
@@ -597,7 +597,7 @@ object Multimodal {
     val baseIdx = df.schema.fieldIndex(baseCol)
     val shiftIdx = df.schema.fieldIndex(shiftCol)
     val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    graft.core.Par.widenStream(df).mapPartitions { rows =>
+    graft.core.Par.widen(df).mapPartitions { rows =>
       rows.map { row =>
         val id = row.getLong(baseIdx)
         val shift = row.getInt(shiftIdx)

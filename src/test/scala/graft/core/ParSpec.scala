@@ -87,13 +87,18 @@ class ParSpec extends SparkSpec {
     assert(spark.table(qn).head.getLong(0) === 7L)
   }
 
-  test("widenStream repartitions a streaming frame without touching .rdd") {
+  test("widen repartitions a streaming frame without touching .rdd") {
     val dir = java.nio.file.Files.createTempDirectory("parstream").toString
     spark.range(10).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
     val sdf = spark.readStream
       .schema(spark.read.parquet(dir).schema).parquet(dir)
-    val w = Par.widenStream(sdf)
+    val w = Par.widen(sdf)
     assert(w.isStreaming)
+    // streaming frames repartition unconditionally, to defaultParallelism
+    val parts = w.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r.numPartitions
+    }
+    assert(parts === Seq(spark.sparkContext.defaultParallelism))
     val qn = "par_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = w.groupBy().count()
       .writeStream.format("memory").queryName(qn).outputMode("complete")
