@@ -3,6 +3,8 @@ package graft.analysis
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
+
 /** BIT-EXACT gradient boosting (least-squares boosting over decision
   * stumps, Friedman 2001 §4.1) — the trainable family's ensemble
   * member. Float GBMs are run-to-run irreproducible at scale (partial
@@ -185,7 +187,7 @@ object Boost {
       out += ((p._1, p._2, p._3, p._4, p._5, p._6, p._7, sse))
     }
     // the trace is driver-held — the checkpointed corpus can go now
-    base0.unpersist(blocking = false)
+    Checkpoint.release(base0)
     out.toSeq.toDF("round", "feature", "threshold", "left_val", "right_val",
       "n_left", "n_right", "sse")
       .orderBy("round")

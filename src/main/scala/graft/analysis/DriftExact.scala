@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
+
 /** Exact (sketch-free) drift statistics computed distributed over the raw
   * column, complementing the profile-vs-profile path in [[Drift]] (which
   * works over two collected KB-scale sketch profiles and never rescans the
@@ -34,19 +36,37 @@ object DriftExact {
     * Distributed shape — no global-sort window (a bare
     * `Window.orderBy` collapses to ONE partition and dies at scale):
     *  1. one map-side-combined groupBy(value) exchange → exact per-value
-    *     counts for both samples (the only corpus-sized shuffle);
-    *  2. `repartitionByRange(value)` of the DISTINCT values only, pinned
-    *     with a localCheckpoint so both passes see identical splits;
-    *  3. per-partition cumulative sums + O(numPartitions) driver-side
-    *     prefix offsets broadcast back (same two-pass prefix-sum shape as
+    *     counts for both samples (the only corpus-sized shuffle), pinned
+    *     with a localCheckpoint whose exact row count picks the finish;
+    *  2. at most [[LocalPairBound]] distinct pairs (a monitoring batch,
+    *     a segment table) are collected and finished on the driver: per
+    *     key, a sort in Spark's double order (NaN last; −0.0 was already
+    *     folded into 0.0 by the groupBy) and one integer running-sum
+    *     scan — no sampling, range exchange or window jobs;
+    *  3. above the bound, `repartitionByRange(value)` of the checkpointed
+    *     distinct values, itself pinned with a localCheckpoint so both
+    *     passes see identical splits, then per-partition cumulative sums
+    *     + O(numPartitions) driver-side prefix offsets broadcast back
+    *     (same two-pass prefix-sum shape as
     *     [[graft.pipeline.Packing.withOffsets]]);
-    *  4. D's numerator max|cumT·nRef − cumR·nTarget| stays integral —
-    *     exact while nTarget·nRef fits a long (both ≲ 3·10⁹; beyond that
-    *     use the sketch path [[Drift.ks]], whose error is then far below
-    *     any decision threshold anyway).
+    *  4. either way D's numerator max|cumT·nRef − cumR·nTarget| stays
+    *     integral until ONE final division, so both finishes return the
+    *     bit-identical double — exact while nTarget·nRef fits a long
+    *     (both ≲ 3·10⁹; beyond that use the sketch path [[Drift.ks]],
+    *     whose error is then far below any decision threshold anyway).
+    *
+    * Eager: the call runs its Spark jobs before returning (the result is
+    * a driver-side map) and releases both checkpoints on the way out.
     */
   def ksStat(df: DataFrame, valueCol: String, isTarget: Column): (Double, Long, Long) =
     ksStats(df, Seq(valueCol), isTarget)(valueCol)
+
+  /** Distinct (key, value) pair ceiling for [[ksStat]]'s driver-side
+    * finish — the same rationale as `ConnectedComponents.LocalEdgeBound`:
+    * the collected rows and their per-key sort are a few tens of MB of
+    * driver memory at worst, far past any monitoring batch and far below
+    * a corpus-scale column, which keeps the distributed prefix sums. */
+  private[graft] val LocalPairBound: Long = 200000L
 
   /** [[ksStat]] over N columns in ONE input scan: the (column, value)
     * pairs are exploded into a single keyed relation, so profiling drift
@@ -59,6 +79,13 @@ object DriftExact {
     * integral columns beyond 2^53 use a per-column [[ksStat]] on the raw
     * type). */
   def ksStats(df: DataFrame, valueCols: Seq[String], isTarget: Column)
+      : Map[String, (Double, Long, Long)] =
+    ksStats(df, valueCols, isTarget, LocalPairBound)
+
+  /** [[ksStats]] with an explicit driver-finish bound (0 forces the
+    * distributed prefix sums). */
+  private[graft] def ksStats(
+      df: DataFrame, valueCols: Seq[String], isTarget: Column, localPairBound: Long)
       : Map[String, (Double, Long, Long)] = {
     require(valueCols.nonEmpty, "ksStats needs at least one column")
     val pair = F.explode(F.array(valueCols.map(c =>
@@ -74,7 +101,7 @@ object DriftExact {
     val prepared = df.select(pair, ca.as("__ca"))
       .select(F.col("__p.c").as("__c"), F.col("__p.v").as("__v"),
         F.col("__ca"), (F.lit(1L) - F.col("__ca")).as("__cb"))
-    ksCore(prepared, valueCols)
+    ksCore(prepared, valueCols, localPairBound)
   }
 
   /** [[ksStat]] per KEY — exact KS between the target/ref slices WITHIN
@@ -85,29 +112,88 @@ object DriftExact {
     * NULL keys are dropped (they are no segment). */
   def ksStatsByKey(
       df: DataFrame, key: Column, valueCol: String, isTarget: Column)
-      : Map[String, (Double, Long, Long)] = {
+      : Map[String, (Double, Long, Long)] =
+    ksStatsByKey(df, key, valueCol, isTarget, LocalPairBound)
+
+  /** [[ksStatsByKey]] with an explicit driver-finish bound (0 forces the
+    * distributed prefix sums). */
+  private[graft] def ksStatsByKey(
+      df: DataFrame, key: Column, valueCol: String, isTarget: Column,
+      localPairBound: Long): Map[String, (Double, Long, Long)] = {
     val ca = F.when(isTarget, 1L).otherwise(0L)
     val prepared = df
       .select(key.cast("string").as("__c"),
         F.col(valueCol).cast("double").as("__v"), ca.as("__ca"))
       .filter(F.col("__c").isNotNull)
       .withColumn("__cb", F.lit(1L) - F.col("__ca"))
-    ksCore(prepared, Nil)
+    ksCore(prepared, Nil, localPairBound)
   }
 
-  /** Shared distributed ECDF-supremum core: `prepared` carries
-    * (__c key, __v value, __ca, __cb). `wantKeys` fixes the output key
-    * set ([[ksStats]] reports every requested column); empty ⇒ the keys
-    * found in the data ([[ksStatsByKey]]). */
-  private def ksCore(prepared: DataFrame, wantKeys: Seq[String])
+  /** Shared ECDF-supremum core: `prepared` carries (__c key, __v value,
+    * __ca, __cb). `wantKeys` fixes the output key set ([[ksStats]]
+    * reports every requested column); empty ⇒ the keys found in the data
+    * ([[ksStatsByKey]]). */
+  private def ksCore(
+      prepared: DataFrame, wantKeys: Seq[String], localPairBound: Long)
       : Map[String, (Double, Long, Long)] = {
     // NOT widened (r20): a pre-aggregation repartition ships every raw
     // (c, v) row and loses the map-side combine (guide §2.3) — measured
     // slower at sf0.1, same finding as the file's two-exchange note above.
-    val g = prepared
+    val pairs = prepared
       .filter(F.col("__v").isNotNull)
       .groupBy("__c", "__v")
       .agg(F.sum("__ca").as("__ca"), F.sum("__cb").as("__cb"))
+      .localCheckpoint(false)
+    try {
+      // an RDD count is one job with no exchange (Dataset.count plans an
+      // aggregate shuffle) and it materializes the lazy checkpoint, so
+      // either finish reads the pinned pairs, never the input again
+      val (ns, nums) =
+        if (pairs.rdd.count() <= localPairBound) localNumerators(pairs)
+        else distributedNumerators(pairs)
+      val outKeys = if (wantKeys.nonEmpty) wantKeys else ns.keys.toSeq.sorted
+      outKeys.map { c =>
+        val (na, nb) = ns.getOrElse(c, (0L, 0L))
+        val d = if (na == 0L || nb == 0L) 0.0
+          else nums(c).toDouble / (na * nb).toDouble
+        c -> ((d, na, nb))
+      }.toMap
+    } finally Checkpoint.release(pairs)
+  }
+
+  private def requireExactProducts(ns: Map[String, (Long, Long)]): Unit =
+    ns.foreach { case (c, (na, nb)) =>
+      require(na == 0L || nb == 0L || na <= Long.MaxValue / nb,
+        s"$c: nTarget*nRef overflows long ($na * $nb); use Drift.ks (sketch path)")
+    }
+
+  /** Driver finish over the collected distinct pairs: per key (nTarget,
+    * nRef) and the integral D numerator max|cumA·nb − cumB·na|. */
+  private def localNumerators(pairs: DataFrame)
+      : (Map[String, (Long, Long)], Map[String, Long]) = {
+    val byKey = pairs.collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3)))
+      .groupBy(_._1)
+    val ns = byKey.map { case (c, rows) => c -> ((rows.map(_._3).sum, rows.map(_._4).sum)) }
+    requireExactProducts(ns)
+    val nums = byKey.map { case (c, rows) =>
+      val (na, nb) = ns(c)
+      var cumA = 0L; var cumB = 0L; var num = 0L
+      // TotalOrdering is Spark's double order on grouped values: NaN last
+      rows.sortBy(_._2)(Ordering.Double.TotalOrdering).foreach { case (_, _, a, b) =>
+        cumA += a; cumB += b
+        num = math.max(num, math.abs(cumA * nb - cumB * na))
+      }
+      c -> num
+    }
+    (ns, nums)
+  }
+
+  /** Distributed finish: range-partitioned prefix sums over the distinct
+    * pairs with O(keys × partitions) offsets computed on the driver. */
+  private def distributedNumerators(pairs: DataFrame)
+      : (Map[String, (Long, Long)], Map[String, Long]) = {
+    val g = pairs
       .repartitionByRange(F.col("__c"), F.col("__v"))
       .sortWithinPartitions("__c", "__v")
       .withColumn("__pid", F.spark_partition_id())
@@ -118,12 +204,9 @@ object DriftExact {
         .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
         .sortBy(t => (t._1, t._2))
       val ns = totals.groupBy(_._1).map { case (c, ts) =>
-        c -> (ts.map(_._3).sum, ts.map(_._4).sum)
+        c -> ((ts.map(_._3).sum, ts.map(_._4).sum))
       }
-      ns.foreach { case (c, (na, nb)) =>
-        require(na == 0L || nb == 0L || na <= Long.MaxValue / nb,
-          s"$c: nTarget*nRef overflows long ($na * $nb); use Drift.ks (sketch path)")
-      }
+      requireExactProducts(ns)
       // per-(column, partition) prefix offsets — O(columns × partitions)
       val bases = totals.groupBy(_._1).toSeq.flatMap { case (c, ts) =>
         var accA = 0L; var accB = 0L
@@ -132,7 +215,7 @@ object DriftExact {
           accA += ta; accB += tb; row
         }
       }
-      val spark = prepared.sparkSession
+      val spark = pairs.sparkSession
       import spark.implicits._
       val baseDf = bases.toDF("__c2", "__pid2", "__baseA", "__baseB", "__na", "__nb")
       val w = Window.partitionBy("__c", "__pid").orderBy("__v")
@@ -145,14 +228,8 @@ object DriftExact {
         .agg(F.max(F.abs(F.col("__cca") * F.col("__nb") -
           F.col("__ccb") * F.col("__na"))).as("num"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val outKeys = if (wantKeys.nonEmpty) wantKeys else ns.keys.toSeq.sorted
-      outKeys.map { c =>
-        val (na, nb) = ns.getOrElse(c, (0L, 0L))
-        val d = if (na == 0L || nb == 0L) 0.0
-          else nums(c).toDouble / (na * nb).toDouble
-        c -> ((d, na, nb))
-      }.toMap
-    } finally g.unpersist(blocking = false)
+      (ns, nums)
+    } finally Checkpoint.release(g)
   }
 
   /** Exact Hellinger distance between the target/ref samples' histograms

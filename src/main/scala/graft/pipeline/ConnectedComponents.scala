@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
+
 /** Distributed connected components over an edge list — the clustering
   * stage of near-duplicate removal (LSH emits PAIRS; dropping all-but-one
   * document per duplicate GROUP needs the transitive closure).
@@ -41,7 +43,15 @@ object ConnectedComponents {
     *
     * Throws after `maxIter` rounds without convergence — the O(log² n)
     * bound makes 25 unreachable for any physical graph; hitting it means
-    * the input violates the contract (e.g. NULL ids). */
+    * the input violates the contract (e.g. NULL ids).
+    *
+    * Not lazy: the call itself runs Spark jobs. It always counts the
+    * canonical edge set; at or below `localEdgeBound` edges it collects
+    * them to the driver and returns a driver-built DataFrame; above it,
+    * every star round runs before the call returns. A caller that embeds
+    * the result in a larger plan pays those jobs (and up to
+    * `localEdgeBound` collected edges of driver memory) at construction
+    * time, not at the plan's action. */
   def components(
       edges: DataFrame, aCol: String, bCol: String, maxIter: Int = 25,
       localEdgeBound: Long = LocalEdgeBound): DataFrame = {
@@ -65,7 +75,7 @@ object ConnectedComponents {
     // list exceeds it and takes the distributed path unchanged.
     if (sigPrev._1 <= localEdgeBound) {
       val rows = e.select("hi", "lo").collect()
-      releaseCheckpoint(e)
+      Checkpoint.release(e)
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -130,7 +140,7 @@ object ConnectedComponents {
       // checkpoint); release the superseded round's checkpointed blocks —
       // otherwise up to maxIter copies of the edge list stay pinned in
       // executor storage for the life of the session.
-      releaseCheckpoint(e)
+      Checkpoint.release(e)
       converged = sig == sigPrev
       sigPrev = sig
       e = next
@@ -144,17 +154,6 @@ object ConnectedComponents {
       .union(e.select(F.col("lo").as("id"), F.col("lo").as("component")))
       .distinct()
   }
-
-  /** Drops the storage blocks behind a locally-checkpointed DataFrame.
-    * A local checkpoint pins its data at the RDD layer (NOT the SQL cache
-    * manager, so Dataset.unpersist does nothing); the backing RDD sits in
-    * the plan's LogicalRDD leaf. Only call on a superseded round — a
-    * checkpointed RDD has no lineage to recompute from once unpersisted. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Cheap fixpoint detector: (count, Σ xxhash64 mod 2³⁰) of the edge
     * set. Equal signatures on consecutive rounds ⇒ converged — a false

@@ -7,8 +7,16 @@ import graft.analysis.DriftExact
 /** Exact drift statistics: every case cross-checks the distributed
   * prefix-sum / binned implementation against a brute-force local ECDF or
   * a hand-derived value, across multiple partitions so the per-partition
-  * offset arithmetic is actually exercised. */
+  * offset arithmetic is actually exercised. The KS cases run on both
+  * sides of the driver-finish size gate. */
 class DriftExactSpec extends SparkSpec {
+
+  /** The default bound takes the driver finish on every fixture here;
+    * 0 forces the distributed prefix sums. */
+  private val ksBounds = Seq(DriftExact.LocalPairBound, 0L)
+
+  private def ksStat(df: org.apache.spark.sql.DataFrame, bound: Long) =
+    DriftExact.ksStats(df, Seq("v"), F.col("is_t"), bound)("v")
 
   private def localKs(a: Seq[Double], b: Seq[Double]): Double = {
     val grid = (a ++ b).distinct.sorted
@@ -22,9 +30,9 @@ class DriftExactSpec extends SparkSpec {
     // A = {1,2,3}, B = {2,3,4}: ECDFs diverge most at v=1 and v=3 (D = 1/3)
     val df = Seq((1.0, true), (2.0, true), (3.0, true),
       (2.0, false), (3.0, false), (4.0, false)).toDF("v", "is_t")
-    val (d, na, nb) = DriftExact.ksStat(df, "v", F.col("is_t"))
-    assert((na, nb) == (3L, 3L))
-    assert(d == 1.0 / 3.0)
+    ksBounds.foreach { bound =>
+      assert(ksStat(df, bound) == ((1.0 / 3.0, 3L, 3L)), s"bound $bound")
+    }
   }
 
   test("ksStat: matches brute-force ECDF on a multi-partition sample with ties") {
@@ -35,9 +43,11 @@ class DriftExactSpec extends SparkSpec {
     val b = Seq.fill(300)(rng.nextInt(50).toDouble + 5.0)
     val df = (a.map((_, true)) ++ b.map((_, false))).toDF("v", "is_t")
       .repartition(7)
-    val (d, na, nb) = DriftExact.ksStat(df, "v", F.col("is_t"))
-    assert((na, nb) == (400L, 300L))
-    assert(math.abs(d - localKs(a, b)) < 1e-15)
+    ksBounds.foreach { bound =>
+      val (d, na, nb) = ksStat(df, bound)
+      assert((na, nb) == (400L, 300L), s"bound $bound")
+      assert(math.abs(d - localKs(a, b)) < 1e-15, s"bound $bound")
+    }
   }
 
   test("ksStat: identical samples give D = 0; empty side guards") {
@@ -45,16 +55,20 @@ class DriftExactSpec extends SparkSpec {
     // both halves see the same multiset of values by construction
     val same = (0 until 100).flatMap(i =>
       Seq((i.toDouble % 13, true), (i.toDouble % 13, false))).toDF("v", "is_t")
-    assert(DriftExact.ksStat(same, "v", F.col("is_t"))._1 == 0.0)
     val oneSided = Seq((1.0, true), (2.0, true)).toDF("v", "is_t")
-    assert(DriftExact.ksStat(oneSided, "v", F.col("is_t")) == ((0.0, 2L, 0L)))
+    ksBounds.foreach { bound =>
+      assert(ksStat(same, bound)._1 == 0.0, s"bound $bound")
+      assert(ksStat(oneSided, bound) == ((0.0, 2L, 0L)), s"bound $bound")
+    }
   }
 
   test("ksStat: nulls are excluded, not counted") {
     import spark.implicits._
     val df = Seq((Some(1.0), true), (None, true), (Some(1.0), false),
       (None, false)).toDF("v", "is_t")
-    assert(DriftExact.ksStat(df, "v", F.col("is_t")) == ((0.0, 1L, 1L)))
+    ksBounds.foreach { bound =>
+      assert(ksStat(df, bound) == ((0.0, 1L, 1L)), s"bound $bound")
+    }
   }
 
   test("hellingerStat: disjoint extreme bins give H = 1, identical give 0") {
@@ -94,9 +108,13 @@ class DriftExactSpec extends SparkSpec {
     val rng = new scala.util.Random(11)
     val df = Seq.fill(300)((rng.nextInt(40).toDouble, rng.nextGaussian() * 3 + 10,
       rng.nextBoolean())).toDF("x", "y", "is_t").repartition(6)
-    val ks = graft.analysis.DriftExact.ksStats(df, Seq("x", "y"), F.col("is_t"))
-    assert(ks("x") == DriftExact.ksStat(df.select("x", "is_t"), "x", F.col("is_t")))
-    assert(ks("y") == DriftExact.ksStat(df.select("y", "is_t"), "y", F.col("is_t")))
+    ksBounds.foreach { bound =>
+      val ks = DriftExact.ksStats(df, Seq("x", "y"), F.col("is_t"), bound)
+      Seq("x", "y").foreach { c =>
+        assert(ks(c) == DriftExact.ksStats(df.select(c, "is_t"), Seq(c), F.col("is_t"),
+          bound)(c), s"$c, bound $bound")
+      }
+    }
     val hl = DriftExact.hellingerStats(df, Seq("x", "y"), F.col("is_t"))
     assert(hl("x") == DriftExact.hellingerStat(df.select("x", "is_t"), "x", F.col("is_t")))
     assert(hl("y") == DriftExact.hellingerStat(df.select("y", "is_t"), "y", F.col("is_t")))
@@ -119,12 +137,15 @@ class DriftExactSpec extends SparkSpec {
       } yield {
         val df = (a.map((_, true)) ++ b.map((_, false))).toDF("v", "is_t")
           .repartition(3)
-        val (d, na, nb) = DriftExact.ksStat(df, "v", F.col("is_t"))
-        assert((na, nb) == (a.size.toLong, b.size.toLong))
         // 0.0 == -0.0 for grouping AND ordering in both paths
         val norm = (x: Double) => if (x == 0.0) 0.0 else x
-        assert(math.abs(d - localKs(a.map(norm), b.map(norm))) < 1e-12,
-          s"seed $i: a=$a b=$b")
+        val want = localKs(a.map(norm), b.map(norm))
+        val got = ksBounds.map(bound => ksStat(df, bound))
+        got.foreach { case (d, na, nb) =>
+          assert((na, nb) == (a.size.toLong, b.size.toLong))
+          assert(math.abs(d - want) < 1e-12, s"seed $i: a=$a b=$b")
+        }
+        assert(got.distinct.size == 1, s"seed $i: the two finishes differ: $got")
       }
       assert(res.isDefined, s"generator failed at seed $i")
     }
@@ -254,12 +275,42 @@ class DriftExactSpec extends SparkSpec {
       rng.nextInt(40).toDouble + (if (rng.nextBoolean()) 3.0 else 0.0),
       rng.nextBoolean())) ++ Seq((null, 1.0, true), (null, 2.0, false))
     val df = rows.toDF("seg", "v", "is_t").repartition(7)
-    val byKey = DriftExact.ksStatsByKey(df, F.col("seg"), "v", F.col("is_t"))
-    assert(byKey.keySet == Set("a", "b", "c"))
-    Seq("a", "b", "c").foreach { s =>
-      val single = DriftExact.ksStat(
-        df.filter(F.col("seg") === s), "v", F.col("is_t"))
-      assert(byKey(s) == single, s"segment $s")
+    ksBounds.foreach { bound =>
+      val byKey = DriftExact.ksStatsByKey(df, F.col("seg"), "v", F.col("is_t"), bound)
+      assert(byKey.keySet == Set("a", "b", "c"))
+      Seq("a", "b", "c").foreach { s =>
+        val single = ksStat(df.filter(F.col("seg") === s), bound)
+        assert(byKey(s) == single, s"segment $s, bound $bound")
+      }
+    }
+  }
+
+  test("ksStats: NaN sorts last, -0.0 folds into 0.0, an all-NULL column is empty") {
+    import spark.implicits._
+    // a = {NaN, -0.0, 1}, b = {0, 0, 2, NaN}; in Spark's double order
+    // (0 < 1 < 2 < NaN) the numerator |cumA·4 − cumB·3| peaks at 2 on
+    // values 0 and 1. NaN sorted first would give 3, an unfolded -0.0 4.
+    val df = (Seq(Double.NaN, -0.0, 1.0).map((_, true)) ++
+      Seq(0.0, 0.0, 2.0, Double.NaN).map((_, false)))
+      .map { case (v, t) => (v, Option.empty[Double], t) }
+      .toDF("v", "n", "is_t").repartition(3)
+    val got = ksBounds.map(bound =>
+      DriftExact.ksStats(df, Seq("v", "n"), F.col("is_t"), bound))
+    assert(got.head("v") == ((2.0 / 12.0, 3L, 4L)))
+    assert(got.head("n") == ((0.0, 0L, 0L)))
+    assert(got.distinct.size == 1, s"the two finishes differ: $got")
+  }
+
+  test("ksStats and ksStatsByKey release every checkpoint they pin") {
+    import spark.implicits._
+    val df = Seq.tabulate(300)(i => (Seq("a", "b")(i % 2), (i % 17).toDouble, i % 3 == 0))
+      .toDF("seg", "v", "is_t").repartition(4)
+    val sc = spark.sparkContext
+    ksBounds.foreach { bound =>
+      val before = sc.getPersistentRDDs.keySet
+      ksStat(df, bound)
+      DriftExact.ksStatsByKey(df, F.col("seg"), "v", F.col("is_t"), bound)
+      assert(sc.getPersistentRDDs.keySet == before, s"bound $bound")
     }
   }
 
