@@ -3,6 +3,8 @@ package graft.analysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
+
 /** Split-conformal prediction intervals (Vovk et al.; Lei et al. JASA
   * 2018 for the split recipe) on top of the exact-fit OLS — the
   * "predict WITH a finite-sample guarantee" closure of the trainable
@@ -51,21 +53,22 @@ object Conformal {
     val (b0, b1, b2) = (m.getDouble(1), m.getDouble(2), m.getDouble(3))
     val pred = F.lit(b0) + F.lit(b1) * F.col(x1Col).cast("double") +
       F.lit(b2) * F.col(x2Col).cast("double")
-    val scores = complete(cal, yCol, x1Col, x2Col)
-      .select(F.abs(F.col(yCol).cast("double") - pred).as("__score"))
-      .localCheckpoint(false)
-    try {
+    Checkpoint.scoped(complete(cal, yCol, x1Col, x2Col)
+      .select(F.abs(F.col(yCol).cast("double") - pred).as("__score"))) { scores =>
       val nCal = scores.count()
       // k = ceil((n+1)·(den−num)/den), exact integers
       val k = ((nCal + 1L) * (alphaDen - alphaNum) + alphaDen - 1L) / alphaDen
       require(k <= nCal,
         s"calibration split too small: need k=$k <= n_cal=$nCal (lower alphaDen or add data)")
-      val q = ExactQuantiles.percentRanksMulti(scores, Seq("__score"))
-        .filter(F.col("n_below") < k &&
-          F.col("n_below") + F.col("n_value") >= k)
-        .agg(F.min("value")).head().getDouble(0)
+      // the rank table reads its own checkpoint: released once q is read
+      val ranks = ExactQuantiles.percentRanksMulti(scores, Seq("__score"))
+      val q =
+        try ranks.filter(F.col("n_below") < k &&
+            F.col("n_below") + F.col("n_value") >= k)
+          .agg(F.min("value")).head().getDouble(0)
+        finally Checkpoint.release(ranks)
       Model(b0, b1, b2, q, nCal, k)
-    } finally { scores.unpersist(blocking = false); () }
+    }
   }
 
   /** The point prediction `b0 + b1·x1 + b2·x2` — one fixed IEEE tree,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.LongType
 
+import graft.core.Checkpoint
+
 /** Dataset-level integrity audits for training-data pipelines: referential
   * integrity across fact/dimension tables, k-anonymity of quasi-identifier
   * combinations, schema drift between two snapshots of a table, and a
@@ -472,38 +474,35 @@ object DataAudit {
     * tables ([[ExactQuantiles.percentRanksMulti]] — never an
     * unpartitioned window), the tables (distinct values, not rows)
     * join back by value, and one map-side-combined aggregate emits the
-    * three sums. */
+    * three sums. The result reads the pair and rank checkpoints, so they
+    * stay pinned for the session. */
   def spearmanCorr(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val base = df.select(F.col(aCol).cast("double").as("__a"),
         F.col(bCol).cast("double").as("__b"))
       .filter(F.col("__a").isNotNull && !F.isnan(F.col("__a")) &&
         F.col("__b").isNotNull && !F.isnan(F.col("__b")))
       .localCheckpoint(false)
-    try {
-      val n = base.count()
-      require(n > 0, "no complete-case rows")
-      val ranks = ExactQuantiles.percentRanksMulti(base, Seq("__a", "__b"))
-        .localCheckpoint(false)
-      try {
-        def rk(c: String, d: String) = ranks.filter(F.col("feature") === c)
-          .select(F.col("value").as(c),
-            (F.lit(2L) * F.col("n_below") + F.col("n_value") - F.lit(n)).as(d))
-        base.join(rk("__a", "__da"), Seq("__a"))
-          .join(rk("__b", "__db"), Seq("__b"))
-          .agg(
-            F.count(F.lit(1)).as("n"),
-            F.sum(F.col("__da") * F.col("__db")).as("s_ab"),
-            F.sum(F.col("__da") * F.col("__da")).as("s_aa"),
-            F.sum(F.col("__db") * F.col("__db")).as("s_bb"))
-          .select(F.col("n"), F.col("s_ab"), F.col("s_aa"), F.col("s_bb"),
-            F.when(F.col("s_aa") === 0L || F.col("s_bb") === 0L,
-                F.lit(null).cast("double"))
-              .otherwise(F.col("s_ab").cast("double") /
-                (F.sqrt(F.col("s_aa").cast("double")) *
-                  F.sqrt(F.col("s_bb").cast("double"))))
-              .as("rho"))
-      } finally { ranks.unpersist(blocking = false); () }
-    } finally { base.unpersist(blocking = false); () }
+    val n = base.count()
+    require(n > 0, "no complete-case rows")
+    val ranks = ExactQuantiles.percentRanksMulti(base, Seq("__a", "__b"))
+      .localCheckpoint(false)
+    def rk(c: String, d: String) = ranks.filter(F.col("feature") === c)
+      .select(F.col("value").as(c),
+        (F.lit(2L) * F.col("n_below") + F.col("n_value") - F.lit(n)).as(d))
+    base.join(rk("__a", "__da"), Seq("__a"))
+      .join(rk("__b", "__db"), Seq("__b"))
+      .agg(
+        F.count(F.lit(1)).as("n"),
+        F.sum(F.col("__da") * F.col("__db")).as("s_ab"),
+        F.sum(F.col("__da") * F.col("__da")).as("s_aa"),
+        F.sum(F.col("__db") * F.col("__db")).as("s_bb"))
+      .select(F.col("n"), F.col("s_ab"), F.col("s_aa"), F.col("s_bb"),
+        F.when(F.col("s_aa") === 0L || F.col("s_bb") === 0L,
+            F.lit(null).cast("double"))
+          .otherwise(F.col("s_ab").cast("double") /
+            (F.sqrt(F.col("s_aa").cast("double")) *
+              F.sqrt(F.col("s_bb").cast("double"))))
+          .as("rho"))
   }
 
   /** Multi-column [[spearmanCorr]]: the full pairwise rank-correlation
@@ -519,46 +518,44 @@ object DataAudit {
     require(cols.size >= 2, "need at least two columns")
     val spark = df.sparkSession
     import spark.implicits._
+    val pairs = for { i <- cols.indices; j <- i until cols.size } yield (i, j)
     val vs = cols.map(c => "__v_" + c)
-    val base = df.select(cols.zip(vs).map { case (c, v) =>
+    val row = Checkpoint.scoped(df.select(cols.zip(vs).map { case (c, v) =>
         F.col(c).cast("double").as(v) }: _*)
       .filter(vs.map(v => F.col(v).isNotNull && !F.isnan(F.col(v)))
-        .reduce(_ && _))
-      .localCheckpoint(false)
-    try {
+        .reduce(_ && _))) { base =>
       val n = base.count()
       require(n > 0, "no complete-case rows")
-      val ranks = ExactQuantiles.percentRanksMulti(base, vs)
-        .localCheckpoint(false)
-      try {
+      // the rank table reads its own checkpoint: released once summed
+      val rankTable = ExactQuantiles.percentRanksMulti(base, vs)
+      try Checkpoint.scoped(rankTable) { ranks =>
         val joined = cols.zip(vs).foldLeft(base) { case (acc, (c, v)) =>
           acc.join(ranks.filter(F.col("feature") === v)
             .select(F.col("value").as(v),
               (F.lit(2L) * F.col("n_below") + F.col("n_value") - F.lit(n))
                 .as("__d_" + c)), Seq(v))
         }
-        val pairs = for { i <- cols.indices; j <- i until cols.size } yield (i, j)
         val aggs = Seq(F.count(F.lit(1)).as("__n")) ++ pairs.map { case (i, j) =>
           F.sum(F.col("__d_" + cols(i)) * F.col("__d_" + cols(j)))
             .as(s"__s${i}_$j") }
-        val row = joined.agg(aggs.head, aggs.tail: _*).head
-        val nOut = row.getLong(0)
-        val pIdx = pairs.zipWithIndex.toMap
-        def s(i: Int, j: Int): Long = row.getLong(1 + pIdx((i, j)))
-        val out = for {
-          i <- cols.indices; j <- (i + 1) until cols.size
-        } yield {
-          require(s(i, i) != 0L && s(j, j) != 0L,
-            s"zero rank variance in pair (${cols(i)}, ${cols(j)})")
-          val rho = s(i, j).toDouble /
-            (math.sqrt(s(i, i).toDouble) * math.sqrt(s(j, j).toDouble))
-          val (a, b) = if (cols(i) <= cols(j)) (cols(i), cols(j))
-            else (cols(j), cols(i))
-          (a, b, nOut, rho)
-        }
-        out.toDF("f1", "f2", "n", "rho").orderBy("f1", "f2")
-      } finally { ranks.unpersist(blocking = false); () }
-    } finally { base.unpersist(blocking = false); () }
+        joined.agg(aggs.head, aggs.tail: _*).head
+      } finally Checkpoint.release(rankTable)
+    }
+    val nOut = row.getLong(0)
+    val pIdx = pairs.zipWithIndex.toMap
+    def s(i: Int, j: Int): Long = row.getLong(1 + pIdx((i, j)))
+    val out = for {
+      i <- cols.indices; j <- (i + 1) until cols.size
+    } yield {
+      require(s(i, i) != 0L && s(j, j) != 0L,
+        s"zero rank variance in pair (${cols(i)}, ${cols(j)})")
+      val rho = s(i, j).toDouble /
+        (math.sqrt(s(i, i).toDouble) * math.sqrt(s(j, j).toDouble))
+      val (a, b) = if (cols(i) <= cols(j)) (cols(i), cols(j))
+        else (cols(j), cols(i))
+      (a, b, nOut, rho)
+    }
+    out.toDF("f1", "f2", "n", "rho").orderBy("f1", "f2")
   }
 
   /** Mutual information between two categorical columns with the

@@ -139,12 +139,10 @@ object DriftExact {
     // NOT widened (r20): a pre-aggregation repartition ships every raw
     // (c, v) row and loses the map-side combine (guide §2.3) — measured
     // slower at sf0.1, same finding as the file's two-exchange note above.
-    val pairs = prepared
+    Checkpoint.scoped(prepared
       .filter(F.col("__v").isNotNull)
       .groupBy("__c", "__v")
-      .agg(F.sum("__ca").as("__ca"), F.sum("__cb").as("__cb"))
-      .localCheckpoint(false)
-    try {
+      .agg(F.sum("__ca").as("__ca"), F.sum("__cb").as("__cb"))) { pairs =>
       // an RDD count is one job with no exchange (Dataset.count plans an
       // aggregate shuffle) and it materializes the lazy checkpoint, so
       // either finish reads the pinned pairs, never the input again
@@ -158,7 +156,7 @@ object DriftExact {
           else nums(c).toDouble / (na * nb).toDouble
         c -> ((d, na, nb))
       }.toMap
-    } finally Checkpoint.release(pairs)
+    }
   }
 
   private def requireExactProducts(ns: Map[String, (Long, Long)]): Unit =
@@ -193,12 +191,10 @@ object DriftExact {
     * pairs with O(keys × partitions) offsets computed on the driver. */
   private def distributedNumerators(pairs: DataFrame)
       : (Map[String, (Long, Long)], Map[String, Long]) = {
-    val g = pairs
+    Checkpoint.scoped(pairs
       .repartitionByRange(F.col("__c"), F.col("__v"))
       .sortWithinPartitions("__c", "__v")
-      .withColumn("__pid", F.spark_partition_id())
-      .localCheckpoint(false)
-    try {
+      .withColumn("__pid", F.spark_partition_id())) { g =>
       val totals = g.groupBy("__c", "__pid")
         .agg(F.sum("__ca").as("ta"), F.sum("__cb").as("tb"))
         .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
@@ -229,7 +225,7 @@ object DriftExact {
           F.col("__ccb") * F.col("__na"))).as("num"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       (ns, nums)
-    } finally Checkpoint.release(g)
+    }
   }
 
   /** Exact Hellinger distance between the target/ref samples' histograms

@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.DataFrame
 
+import graft.core.Checkpoint
+
 /** Exact interpolated quantiles at scale — the sketch-free complement of
   * the profiler's KLL path (reference
   * `core/metrics/metrics.py` DistributionMetric quantiles), for
@@ -17,7 +19,7 @@ import org.apache.spark.sql.DataFrame
   *     per-value counts (the only corpus-sized shuffle; heavy ties
   *     collapse before the exchange);
   *  2. `repartitionByRange` + in-partition sort of the distinct values,
-  *     pinned by a localCheckpoint;
+  *     pinned by a [[graft.core.Checkpoint.scoped]] localCheckpoint;
   *  3. per-partition cumulative counts + O(columns × partitions)
   *     driver-side prefix offsets (the [[DriftExact.ksStats]] /
   *     [[graft.pipeline.Packing.withOffsets]] two-pass prefix-sum
@@ -40,16 +42,13 @@ object ExactQuantiles {
       df: DataFrame, valueCols: Seq[String], ranks: Seq[Double])
       : Map[String, Seq[Double]] = {
     require(valueCols.nonEmpty, "quantiles needs at least one column")
-    val pair = F.explode(F.array(valueCols.map(c =>
-      F.struct(F.lit(c).as("c"), F.col(c).cast("double").as("v"))): _*)).as("__p")
     // NOT widened (r20): a pre-aggregation repartition ships every raw
     // exploded (c, v) row and loses the map-side combine that collapses
     // them to distinct pairs BEFORE any exchange (guide §2.3 "aggregate
     // before you shuffle") — measured 1.2-2.5 s SLOWER per query at
     // sf0.1 across the quantile/drift family when tried.
-    val tagged = df.select(pair)
-      .select(F.col("__p.c").as("__c"), F.col("__p.v").as("__v"))
-    val got = quantilesOfTagged(tagged, ranks)
+    val got = Checkpoint.scoped(weightedTable(melted(df, valueCols), keepNaN = false))(
+      weightedQuantiles(_, ranks))
     valueCols.map(c => c -> got.getOrElse(c, Seq.empty)).toMap
   }
 
@@ -62,18 +61,26 @@ object ExactQuantiles {
       ranks: Seq[Double]): Map[String, Seq[Double]] = {
     val tagged = df
       .select(keyCol.cast("string").as("__c"),
-        F.col(valueCol).cast("double").as("__v"))
+        F.col(valueCol).cast("double").as("__v"), F.lit(1L).as("__n"))
       .filter(F.col("__c").isNotNull)
-    quantilesOfTagged(tagged, ranks)
+    Checkpoint.scoped(weightedTable(tagged, keepNaN = false))(weightedQuantiles(_, ranks))
+  }
+
+  /** Melt `valueCols` into weighted (__c = column name, __v = value as
+    * double, __n = 1) rows, so ONE scan feeds every column's table. */
+  private[analysis] def melted(df: DataFrame, valueCols: Seq[String]): DataFrame = {
+    val pair = F.explode(F.array(valueCols.map(c =>
+      F.struct(F.lit(c).as("c"), F.col(c).cast("double").as("v"))): _*)).as("__p")
+    df.select(pair).select(F.col("__p.c").as("__c"),
+      F.col("__p.v").as("__v"), F.lit(1L).as("__n"))
   }
 
   /** The per-(key, value) weighted table behind the machinery:
     * `rows` = (__c string, __v double, __n long) — per-row weights,
     * `lit(1L)` for raw data — map-side combined to per-distinct-value
     * weight sums (the only corpus-sized exchange), range-partitioned
-    * and in-partition sorted by (__c, __v), partition-stamped, lazily
-    * localCheckpointed. The CALLER owns the checkpoint (unpersist when
-    * done). With `keepNaN = true`, NaN values survive as their own
+    * and in-partition sorted by (__c, __v), partition-stamped; lazy —
+    * the caller pins it. With `keepNaN = true`, NaN values survive as their own
     * (last-ordered) group so value-universe consumers that must count
     * them (fence-count passes over the same scan — [[Outliers]]) can;
     * quantile math must then exclude them ([[weightedQuantiles]]
@@ -88,77 +95,75 @@ object ExactQuantiles {
       .repartitionByRange(F.col("__c"), F.col("__v"))
       .sortWithinPartitions("__c", "__v")
       .withColumn("__pid", F.spark_partition_id())
-      .localCheckpoint(false)
   }
 
-  /** Core: tagged (__c string key, __v double) → key → rank-aligned
-    * exact quantiles. Keys discovered from the data. */
-  private def quantilesOfTagged(
-      tagged: DataFrame, ranks: Seq[Double]): Map[String, Seq[Double]] = {
-    val g = weightedTable(
-      tagged.withColumn("__n", F.lit(1L)), keepNaN = false)
-    try weightedQuantiles(g, ranks)
-    finally g.unpersist(blocking = false)
+  /** `g` (a pinned [[weightedTable]]) with `__below`, the weight of its
+    * key's values below each row's, and each key's total weight; prefix
+    * offsets from ONE collected per-(key, partition) aggregate. */
+  private def withBelow(g: DataFrame): (DataFrame, Map[String, Long]) = {
+    val totals = g.groupBy("__c", "__pid").agg(F.sum("__n").as("t"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
+    val bases = totals.groupBy(_._1).toSeq.flatMap { case (c, ts) =>
+      var acc = 0L
+      ts.sortBy(_._2).map { case (_, pid, t) =>
+        val row = (c, pid, acc); acc += t; row
+      }
+    }
+    val spark = g.sparkSession
+    import spark.implicits._
+    val baseDf = bases.toDF("__c2", "__pid2", "__base")
+    val w = Window.partitionBy("__c", "__pid").orderBy("__v")
+    val below = g.join(F.broadcast(baseDf),
+        F.col("__c") === F.col("__c2") && F.col("__pid") === F.col("__pid2"))
+      .withColumn("__below",
+        F.coalesce(F.sum("__n").over(w) - F.col("__n"), F.lit(0L)) + F.col("__base"))
+    (below, totals.groupBy(_._1).map { case (c, ts) => c -> ts.map(_._3).sum })
   }
 
   /** Rank-aligned exact weighted quantiles over a [[weightedTable]]
     * frame (or any NaN-free filtered view of one — the prefix-sum
     * machinery only needs rows sorted by __v within each (__c, __pid)
     * and per-(__c, __pid) totals, both invariant under row filtering).
-    * Does NOT unpersist its input. */
+    * Runs two jobs over `g`, so `g` must be pinned (by the caller). */
   private[analysis] def weightedQuantiles(
       g: DataFrame, ranks: Seq[Double]): Map[String, Seq[Double]] = {
     require(ranks.nonEmpty && ranks.forall(r => r >= 0.0 && r <= 1.0),
-      s"ranks must be within [0, 1]: $ranks");
-    {
-      val totals = g.groupBy("__c", "__pid").agg(F.sum("__n").as("t"))
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-      val ns = totals.groupBy(_._1).map { case (c, ts) => c -> ts.map(_._3).sum }
-      val bases = totals.groupBy(_._1).toSeq.flatMap { case (c, ts) =>
-        var acc = 0L
-        ts.sortBy(_._2).map { case (_, pid, t) =>
-          val row = (c, pid, acc); acc += t; row
-        }
+      s"ranks must be within [0, 1]: $ranks")
+    val (below, ns) = withBelow(g)
+    // 1-based ranks of the two order statistics bracketing each
+    // requested quantile: h = r·(n−1) (type-7), k = ⌊h⌋+1 and ⌈h⌉+1
+    val keys = ns.keys.toSeq.sorted
+    val targets = keys.flatMap { c =>
+      ns.get(c).toSeq.filter(_ > 0).flatMap { n =>
+        ranks.flatMap { r =>
+          val h = r * (n - 1).toDouble
+          Seq(math.floor(h).toLong + 1L, math.ceil(h).toLong + 1L)
+        }.distinct.map(k => (c, k))
       }
-      // 1-based ranks of the two order statistics bracketing each
-      // requested quantile: h = r·(n−1) (type-7), k = ⌊h⌋+1 and ⌈h⌉+1
-      val keys = ns.keys.toSeq.sorted
-      val targets = keys.flatMap { c =>
-        ns.get(c).toSeq.filter(_ > 0).flatMap { n =>
-          ranks.flatMap { r =>
-            val h = r * (n - 1).toDouble
-            Seq(math.floor(h).toLong + 1L, math.ceil(h).toLong + 1L)
-          }.distinct.map(k => (c, k))
-        }
-      }
-      if (targets.isEmpty) return Map.empty
-      val spark = g.sparkSession
-      import spark.implicits._
-      val baseDf = bases.toDF("__c2", "__pid2", "__base")
-      val tgtDf = targets.toDF("__c3", "__k")
-      val w = Window.partitionBy("__c", "__pid").orderBy("__v")
-      // a value covers ranks (ccum − n, ccum]; each target k hits exactly one
-      val hit = g.join(F.broadcast(baseDf),
-          F.col("__c") === F.col("__c2") && F.col("__pid") === F.col("__pid2"))
-        .withColumn("__ccum", F.sum("__n").over(w) + F.col("__base"))
-        .join(F.broadcast(tgtDf), F.col("__c") === F.col("__c3") &&
-          F.col("__k") <= F.col("__ccum") &&
-          F.col("__k") > F.col("__ccum") - F.col("__n"))
-        .select(F.col("__c"), F.col("__k"), F.col("__v"))
-        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      keys.map { c =>
-        val qs = ns.get(c).filter(_ > 0).map { n =>
-          ranks.map { r =>
-            val h = r * (n - 1).toDouble
-            val v1 = hit((c, math.floor(h).toLong + 1L))
-            val v2 = hit((c, math.ceil(h).toLong + 1L))
-            val f = h - math.floor(h)
-            (1.0 - f) * v1 + f * v2
-          }
-        }.getOrElse(Seq.empty)
-        c -> qs
-      }.toMap
     }
+    if (targets.isEmpty) return Map.empty
+    val spark = g.sparkSession
+    import spark.implicits._
+    val tgtDf = targets.toDF("__c3", "__k")
+    // a value covers ranks (below, below + n]; each target k hits exactly one
+    val hit = below
+      .join(F.broadcast(tgtDf), F.col("__c") === F.col("__c3") &&
+        F.col("__k") > F.col("__below") &&
+        F.col("__k") <= F.col("__below") + F.col("__n"))
+      .select(F.col("__c"), F.col("__k"), F.col("__v"))
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    keys.map { c =>
+      val qs = ns.get(c).filter(_ > 0).map { n =>
+        ranks.map { r =>
+          val h = r * (n - 1).toDouble
+          val v1 = hit((c, math.floor(h).toLong + 1L))
+          val v2 = hit((c, math.ceil(h).toLong + 1L))
+          val f = h - math.floor(h)
+          (1.0 - f) * v1 + f * v2
+        }
+      }.getOrElse(Seq.empty)
+      c -> qs
+    }.toMap
   }
 
   /** Exact percent-rank per DISTINCT value — global ranking WITHOUT a
@@ -189,46 +194,22 @@ object ExactQuantiles {
     * per distinct (column, value) — `n_value` the exact tie count, so
     * midranks (`n_below + (n_value+1)/2`, what [[DataAudit.spearmanCorr]]
     * consumes doubled) come for free; per-column denominators ride a
-    * broadcast of k rows. */
+    * broadcast of k rows. The result reads the value table's checkpoint,
+    * pinned for the session unless the caller releases the result. */
   def percentRanksMulti(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "need at least one column")
-    val entries = F.explode(F.array(cols.map(c =>
-      F.struct(F.lit(c).as("c"), F.col(c).cast("double").as("v"))): _*)).as("e")
-    val g = df.select(entries)
-      .select(F.col("e.c").as("__c"), F.col("e.v").as("__v"))
-      .filter(F.col("__v").isNotNull && !F.isnan(F.col("__v")))
-      .groupBy("__c", "__v").agg(F.count(F.lit(1)).as("__n"))
-      .repartitionByRange(F.col("__c"), F.col("__v"))
-      .sortWithinPartitions("__c", "__v")
-      .withColumn("__pid", F.spark_partition_id())
-      .localCheckpoint(false)
-    try {
-      val parts = g.groupBy("__pid", "__c").agg(F.sum("__n").as("t"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-      val ns = parts.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
-      cols.foreach(c => require(ns.getOrElse(c, 0L) > 0,
-        s"no non-null values in $c"))
-      val bases = parts.groupBy(_._2).toSeq.flatMap { case (c, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, _, t) =>
-          val row = (c, pid, acc); acc += t; row
-        }
-      }
-      val spark = df.sparkSession
-      import spark.implicits._
-      val baseDf = bases.toDF("__c2", "__pid2", "__base")
-      val nDf = ns.toSeq.map { case (c, n) =>
-        (c, math.max(n - 1L, 1L).toDouble) }.toDF("__c3", "__den")
-      val w = Window.partitionBy("__c", "__pid").orderBy("__v")
-      g.join(F.broadcast(baseDf),
-          F.col("__c") === F.col("__c2") && F.col("__pid") === F.col("__pid2"))
-        .withColumn("__below",
-          F.coalesce(F.sum("__n").over(w) - F.col("__n"), F.lit(0L)) + F.col("__base"))
-        .join(F.broadcast(nDf), F.col("__c") === F.col("__c3"))
-        .select(F.col("__c").as("feature"), F.col("__v").as("value"),
-          F.col("__n").as("n_value"), F.col("__below").as("n_below"),
-          (F.col("__below").cast("double") / F.col("__den")).as("pct_rank"))
-    } finally { g.unpersist(blocking = false); () }
+    val g = weightedTable(melted(df, cols), keepNaN = false).localCheckpoint(false)
+    val (below, ns) = withBelow(g)
+    cols.foreach(c => require(ns.getOrElse(c, 0L) > 0,
+      s"no non-null values in $c"))
+    val spark = df.sparkSession
+    import spark.implicits._
+    val nDf = ns.toSeq.map { case (c, n) =>
+      (c, math.max(n - 1L, 1L).toDouble) }.toDF("__c3", "__den")
+    below.join(F.broadcast(nDf), F.col("__c") === F.col("__c3"))
+      .select(F.col("__c").as("feature"), F.col("__v").as("value"),
+        F.col("__n").as("n_value"), F.col("__below").as("n_below"),
+        (F.col("__below").cast("double") / F.col("__den")).as("pct_rank"))
   }
 
   /** Quantile (equal-frequency) binning — the feature-discretization

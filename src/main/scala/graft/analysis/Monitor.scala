@@ -3,6 +3,8 @@ package graft.analysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
+
 /** Sequential control charts over time-bucketed series — the
   * profile-TIMELINE monitors that sit downstream of the per-batch
   * drift family ([[DriftExact]] compares two snapshots; this watches a
@@ -137,16 +139,16 @@ object Monitor {
     // fires off that count, and only a verified-bounded table is ever
     // pulled to the driver — an over-cap series×days result can never
     // OOM the driver on its way to the error message.
-    val chart = df
+    val cells = Checkpoint.scoped(df
       .filter(F.col(seriesCol).isNotNull && F.col(tsCol).isNotNull)
       .groupBy(F.col(seriesCol).cast("string").as("__s"),
         F.to_date(F.date_trunc("day", F.col(tsCol))).as("__d"))
-      .agg(F.count(F.lit(1)).as("__x"))
-      .localCheckpoint(false)
-    val nCells = chart.count()
-    require(nCells <= maxCells,
-      s"$nCells chart cells exceeds $maxCells — coarsen the bucket or split series")
-    val cells = chart.collect().map(r => (r.getString(0), r.getDate(1), r.getLong(2)))
+      .agg(F.count(F.lit(1)).as("__x"))) { chart =>
+      val nCells = chart.count()
+      require(nCells <= maxCells,
+        s"$nCells chart cells exceeds $maxCells — coarsen the bucket or split series")
+      chart.collect().map(r => (r.getString(0), r.getDate(1), r.getLong(2)))
+    }
     val out = cells.groupBy(_._1).toSeq.flatMap { case (series, rows) =>
       var e = 0L; var c = 0L
       rows.sortBy(_._2.getTime).zipWithIndex.map { case ((_, day, x), i) =>

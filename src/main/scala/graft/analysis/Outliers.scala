@@ -1,7 +1,9 @@
 package graft.analysis
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
+
+import graft.core.Checkpoint
 
 /** Tukey-fence outlier detection per column — the data-quality check the
   * reference expresses only indirectly (constraints on fixed bounds);
@@ -18,18 +20,6 @@ import org.apache.spark.sql.{functions => F}
   * deterministic, and every count is an exact integer. */
 object Outliers {
 
-  /** Per column: quartiles, fences, and outlier counts. Returns a
-    * DataFrame (col_name, q1, q3, iqr, lo_fence, hi_fence, n, n_low,
-    * n_high, n_outliers). Columns with no non-null values are omitted. */
-  /** Melt `valueCols` into weighted (__c, __v, __n=1) rows — the shared
-    * first step of both detectors' single scan. */
-  private def melted(df: DataFrame, valueCols: Seq[String]): DataFrame = {
-    val pair = F.explode(F.array(valueCols.map(c =>
-      F.struct(F.lit(c).as("c"), F.col(c).cast("double").as("v"))): _*)).as("__p")
-    df.select(pair).select(F.col("__p.c").as("__c"),
-      F.col("__p.v").as("__v"), F.lit(1L).as("__n"))
-  }
-
   /** Per-column fence counts summed from the weighted value table —
     * no raw scan: `n` is the weight sum (NaN groups included, matching
     * `count(v)` which counts NaN as non-null), `n_low`/`n_high` compare
@@ -38,7 +28,7 @@ object Outliers {
     * GREATER than every value, so NaN lands in `n_high` both ways). */
   private def fenceCounts(
       gAll: DataFrame, present: Seq[String],
-      fences: Map[String, (Double, Double)]): org.apache.spark.sql.Row = {
+      fences: Map[String, (Double, Double)]): Map[String, (Long, Long, Long)] = {
     val aggs = present.flatMap { c =>
       val isC = F.col("__c") === c
       val (lo, hi) = fences(c)
@@ -47,9 +37,16 @@ object Outliers {
         F.sum(F.when(isC && F.col("__v") < lo, F.col("__n")).otherwise(0L)).as(s"__lo_$c"),
         F.sum(F.when(isC && F.col("__v") > hi, F.col("__n")).otherwise(0L)).as(s"__hi_$c"))
     }
-    gAll.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val row = gAll.agg(aggs.head, aggs.tail: _*).collect()(0)
+    present.zipWithIndex.map { case (c, i) =>
+      c -> ((row.getLong(3 * i), row.getLong(3 * i + 1), row.getLong(3 * i + 2)))
+    }.toMap
   }
 
+  /** Per column: quartiles, fences, and outlier counts. Returns a
+    * DataFrame (col_name, q1, q3, iqr, lo_fence, hi_fence, n, n_low,
+    * n_high, n_outliers), built on the driver. Columns with no non-null
+    * values are omitted. */
   def iqrOutliers(
       df: DataFrame, valueCols: Seq[String], k: Double = 1.5): DataFrame = {
     require(valueCols.nonEmpty, "iqrOutliers needs at least one column")
@@ -59,32 +56,30 @@ object Outliers {
     // value) weighted table feeds both the quartile order statistics
     // and the fence counts. NaN values ride along as their own group
     // so the counts still see them; the quantile pass filters them.
-    val gAll = ExactQuantiles.weightedTable(
-      melted(df, valueCols), keepNaN = true)
-    try {
+    Checkpoint.scoped(ExactQuantiles.weightedTable(
+        ExactQuantiles.melted(df, valueCols), keepNaN = true)) { gAll =>
       val qs = ExactQuantiles.weightedQuantiles(
         gAll.filter(!F.isnan(F.col("__v"))), Seq(0.25, 0.75))
       val present = valueCols.filter(c => qs.get(c).exists(_.nonEmpty))
-      if (present.isEmpty)
-        return Seq.empty[(String, Double, Double, Double, Double, Double, Long, Long, Long, Long)]
-          .toDF("col_name", "q1", "q3", "iqr", "lo_fence", "hi_fence",
-            "n", "n_low", "n_high", "n_outliers")
-      val fences = present.map { c =>
-        val Seq(q1, q3) = qs(c)
-        val iqr = q3 - q1
-        c -> (q1, q3, iqr, q1 - k * iqr, q3 + k * iqr)
-      }.toMap
-      val row = fenceCounts(gAll, present,
-        fences.map { case (c, (_, _, _, lo, hi)) => c -> (lo, hi) })
-      present.map { c =>
-        val (q1, q3, iqr, lo, hi) = fences(c)
-        val n = row.getAs[Long](s"__n_$c")
-        val nLo = row.getAs[Long](s"__lo_$c")
-        val nHi = row.getAs[Long](s"__hi_$c")
-        (c, q1, q3, iqr, lo, hi, n, nLo, nHi, nLo + nHi)
-      }.toDF("col_name", "q1", "q3", "iqr", "lo_fence", "hi_fence",
+      val rows =
+        if (present.isEmpty) Seq.empty
+        else {
+          val fences = present.map { c =>
+            val Seq(q1, q3) = qs(c)
+            val iqr = q3 - q1
+            c -> (q1, q3, iqr, q1 - k * iqr, q3 + k * iqr)
+          }.toMap
+          val counts = fenceCounts(gAll, present,
+            fences.map { case (c, (_, _, _, lo, hi)) => c -> (lo, hi) })
+          present.map { c =>
+            val (q1, q3, iqr, lo, hi) = fences(c)
+            val (n, nLo, nHi) = counts(c)
+            (c, q1, q3, iqr, lo, hi, n, nLo, nHi, nLo + nHi)
+          }
+        }
+      rows.toDF("col_name", "q1", "q3", "iqr", "lo_fence", "hi_fence",
         "n", "n_low", "n_high", "n_outliers")
-    } finally { gAll.unpersist(blocking = false); () }
+    }
   }
 
   /** Robust (MAD-based) outlier detection per column: median and median
@@ -92,8 +87,8 @@ object Outliers {
     * median ± k·(scale·MAD) with the Gaussian consistency constant
     * scale = 1.4826 (Hampel 1974; the robust analog of ±k·σ), fence
     * counts from the same weighted table. Returns (col_name, med, mad,
-    * lo_fence, hi_fence, n, n_low, n_high, n_outliers). Columns with no
-    * non-null values are omitted.
+    * lo_fence, hi_fence, n, n_low, n_high, n_outliers), built on the
+    * driver. Columns with no non-null values are omitted.
     *
     * Exactness: med/MAD are exact interpolated order statistics; fences
     * are the literal IEEE expression `med − k·(scale·mad)` mirrored in
@@ -112,42 +107,38 @@ object Outliers {
     // (colliding deviations merge by weight sum), which is the same
     // multiset the per-row pass produced, so the weighted order
     // statistics are bit-identical.
-    val gAll = ExactQuantiles.weightedTable(
-      melted(df, valueCols), keepNaN = true)
-    try {
+    Checkpoint.scoped(ExactQuantiles.weightedTable(
+        ExactQuantiles.melted(df, valueCols), keepNaN = true)) { gAll =>
       val gQ = gAll.filter(!F.isnan(F.col("__v")))
       val med = ExactQuantiles.weightedQuantiles(gQ, Seq(0.5))
       val present = valueCols.filter(c => med.get(c).exists(_.nonEmpty))
-      if (present.isEmpty)
-        return Seq.empty[(String, Double, Double, Double, Double, Long, Long, Long, Long)]
-          .toDF("col_name", "med", "mad", "lo_fence", "hi_fence",
-            "n", "n_low", "n_high", "n_outliers")
-      val medExpr = present.tail.foldLeft(
-        F.when(F.col("__c") === present.head, F.lit(med(present.head).head))) {
-        (acc, c) => acc.when(F.col("__c") === c, F.lit(med(c).head))
-      }
-      val gDev = ExactQuantiles.weightedTable(
-        gQ.select(F.col("__c"), F.abs(F.col("__v") - medExpr).as("__v"),
-          F.col("__n")), keepNaN = false)
-      val mad =
-        try ExactQuantiles.weightedQuantiles(gDev, Seq(0.5))
-        finally gDev.unpersist(blocking = false)
-      val fences = present.map { c =>
-        val m = med(c).head
-        val d = mad(c).head
-        c -> (m, d, m - k * (scale * d), m + k * (scale * d))
-      }.toMap
-      val row = fenceCounts(gAll, present,
-        fences.map { case (c, (_, _, lo, hi)) => c -> (lo, hi) })
-      present.map { c =>
-        val (m, d, lo, hi) = fences(c)
-        val n = row.getAs[Long](s"__n_$c")
-        val nLo = row.getAs[Long](s"__lo_$c")
-        val nHi = row.getAs[Long](s"__hi_$c")
-        (c, m, d, lo, hi, n, nLo, nHi, nLo + nHi)
-      }.toDF("col_name", "med", "mad", "lo_fence", "hi_fence",
+      val rows =
+        if (present.isEmpty) Seq.empty
+        else {
+          val medExpr = present.tail.foldLeft(
+            F.when(F.col("__c") === present.head, F.lit(med(present.head).head))) {
+            (acc, c) => acc.when(F.col("__c") === c, F.lit(med(c).head))
+          }
+          val mad = Checkpoint.scoped(ExactQuantiles.weightedTable(
+            gQ.select(F.col("__c"), F.abs(F.col("__v") - medExpr).as("__v"),
+              F.col("__n")), keepNaN = false))(
+            ExactQuantiles.weightedQuantiles(_, Seq(0.5)))
+          val fences = present.map { c =>
+            val m = med(c).head
+            val d = mad(c).head
+            c -> (m, d, m - k * (scale * d), m + k * (scale * d))
+          }.toMap
+          val counts = fenceCounts(gAll, present,
+            fences.map { case (c, (_, _, lo, hi)) => c -> (lo, hi) })
+          present.map { c =>
+            val (m, d, lo, hi) = fences(c)
+            val (n, nLo, nHi) = counts(c)
+            (c, m, d, lo, hi, n, nLo, nHi, nLo + nHi)
+          }
+        }
+      rows.toDF("col_name", "med", "mad", "lo_fence", "hi_fence",
         "n", "n_low", "n_high", "n_outliers")
-    } finally { gAll.unpersist(blocking = false); () }
+    }
   }
 
   /** Winsorization summary — the robust alternative to DROPPING

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Minimum-parallelism guard for compute-heavy map/join stages (guide
   * §2.5 "input skew: one huge unsplittable file ... repartition
@@ -46,12 +47,13 @@ import org.apache.spark.sql.DataFrame
   * against a static side and the per-row join work dwarfs one narrow
   * exchange of the batch.
   *
-  * Partitioning is probed on the PRE-AQE static plan (`df.rdd`), so
-  * the guard is only meaningful directly above a scan or an
+  * Partitioning is probed on the PRE-AQE static plan and runs no Spark
+  * job, so the guard is only meaningful directly above a scan or an
   * explicitly-partitioned frame: a plan already containing an
-  * exchange reports `spark.sql.shuffle.partitions` and no-ops. All
-  * call sites are scan-rooted. The probe also pays one physical
-  * planning pass per call — keep it off construction-time hot loops.
+  * exchange reports its static width (`spark.sql.shuffle.partitions`
+  * for a hash exchange, the requested count for a repartition). All
+  * call sites are scan-rooted. The probe also pays up to two physical
+  * planning passes per call — keep it off construction-time hot loops.
   */
 object Par {
   /** Inputs at least this large that already span ≥ 1/4 of the core
@@ -69,7 +71,12 @@ object Par {
   def widen(df: DataFrame): DataFrame = {
     val n = df.sparkSession.sparkContext.defaultParallelism
     if (df.isStreaming) return df.repartition(n)
-    val parts = df.rdd.getNumPartitions
+    val parts = df.queryExecution.executedPlan match {
+      // an adaptive plan's `.rdd` runs its exchanges; its pre-AQE width
+      // does not (0 where unknown, which widens)
+      case a: AdaptiveSparkPlanExec => a.initialPlan.outputPartitioning.numPartitions
+      case _ => df.rdd.getNumPartitions
+    }
     if (parts >= n) df
     else if (parts >= math.max(2, n / 4) &&
       df.queryExecution.optimizedPlan.stats.sizeInBytes >= largeInputBytes) df

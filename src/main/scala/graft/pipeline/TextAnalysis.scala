@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
+
 /** Text analysis for training-data pipelines: token counting, quality
   * scoring, language ID, all as codegen'd column expressions (map-only,
   * no UDFs — a 100 TB corpus pays exactly one scan and no Python/JVM
@@ -232,7 +234,8 @@ object TextAnalysis {
     * over the vocabulary frame — which holds one row per DISTINCT
     * word, not per occurrence, so rounds never rescan the corpus. The
     * evolving frame is localCheckpointed per round (iterative lineage
-    * truncation, as [[graft.pipeline.ConnectedComponents]]). */
+    * truncation, as [[graft.pipeline.ConnectedComponents]]) and released
+    * once superseded; the last once the merges are on the driver. */
   def bpeTrainMerges(df: DataFrame, textCol: String, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = df.sparkSession
@@ -248,30 +251,33 @@ object TextAnalysis {
         F.col("freq"))
     var frame = vocab.localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val syms = F.filter(F.split(F.col("e"), sep2), s => F.length(s) > 0)
-      val len = F.greatest(F.size(syms) - 1, F.lit(0))
-      val adj = F.arrays_zip(F.slice(syms, F.lit(1), len), F.slice(syms, F.lit(2), len))
-      val top = frame
-        .select(F.explode(adj).as("p"), F.col("freq"))
-        .groupBy(F.col("p.0").as("s1"), F.col("p.1").as("s2"))
-        .agg(F.sum("freq").as("cnt"))
-        .orderBy(F.col("cnt").desc, F.col("s1"), F.col("s2"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (s1, s2, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((r, s1, s2, s1 + s2, cnt))
-        val next = frame.select(
-          F.regexp_replace(F.col("e"),
-            F.lit(sep + s1 + sep2 + s2 + sep), F.lit(sep + s1 + s2 + sep)).as("e"),
-          F.col("freq")).localCheckpoint(true)
-        frame = next
-        r += 1
+    try {
+      var r = 1
+      var exhausted = false
+      while (r <= rounds && !exhausted) {
+        val syms = F.filter(F.split(F.col("e"), sep2), s => F.length(s) > 0)
+        val len = F.greatest(F.size(syms) - 1, F.lit(0))
+        val adj = F.arrays_zip(F.slice(syms, F.lit(1), len), F.slice(syms, F.lit(2), len))
+        val top = frame
+          .select(F.explode(adj).as("p"), F.col("freq"))
+          .groupBy(F.col("p.0").as("s1"), F.col("p.1").as("s2"))
+          .agg(F.sum("freq").as("cnt"))
+          .orderBy(F.col("cnt").desc, F.col("s1"), F.col("s2"))
+          .limit(1).collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val (s1, s2, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          merges += ((r, s1, s2, s1 + s2, cnt))
+          val next = frame.select(
+            F.regexp_replace(F.col("e"),
+              F.lit(sep + s1 + sep2 + s2 + sep), F.lit(sep + s1 + s2 + sep)).as("e"),
+            F.col("freq")).localCheckpoint(true)
+          Checkpoint.release(frame) // superseded; next is materialized
+          frame = next
+          r += 1
+        }
       }
-    }
+    } finally Checkpoint.release(frame)
     merges.toSeq.toDF("round", "s1", "s2", "merged", "cnt")
   }
 
