@@ -51,10 +51,12 @@ object Decontaminate {
     * `(a, b, jaccard, split_a, split_b)` for every cross-split
     * near-dup pair.
     *
-    * Plan: the [[Dedup.minHashNearDups]] banded candidate machinery
-    * unchanged (its shuffles carry 8-byte keys), plus two lean joins
-    * back to the (id, split) projection — split labels are map-only
-    * derivations, so those scans prune to the id column. */
+    * Plan: the [[Dedup.minHashNearDups]] pairs — finished on the driver
+    * below its size bound, through the banded candidate exchange
+    * (8-byte keys) above it — plus two lean joins back to the (id,
+    * split) projection — split labels are map-only derivations, so
+    * those scans prune to the id column. Not lazy: the pairing jobs run
+    * before the call returns. */
   def splitLeakage(
       df: DataFrame, textCol: String, idCol: String, splitCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5): DataFrame = {

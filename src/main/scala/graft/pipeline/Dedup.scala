@@ -286,30 +286,68 @@ object Dedup {
       .groupBy("band", "bh").agg(F.count(F.lit(1)).as("bucket_size"))
       .filter(F.col("bucket_size") > maxBucketSize)
 
+  /** Ceiling on the longs [[minHashNearDups]] collects for its driver
+    * finish: Σ size(ids) shingle ids plus `bands` band hashes per row,
+    * i.e. at most 16 MB of longs — the same rationale as
+    * `ConnectedComponents.LocalEdgeBound`. It covers the sf0.01 (~27 k
+    * ids) and sf0.1 (~265 k ids) fixtures and a curation batch of a few
+    * thousand documents; a corpus-scale input (the 100× scale probe
+    * has ~27 M ids) keeps the distributed band exchange. */
+  private[graft] val LocalShingleBound: Long = 2000000L
+
+  /** Ceiling on the candidate pairs the driver finish may enumerate,
+    * counted from the bucket sizes before any pair is built: Σ C(n, 2)
+    * over buckets at or under the cap plus n − 1 per over-cap bucket.
+    * Past it (a large uncapped bucket) the pair set and its Jaccard
+    * merges would cost tens of MB and seconds of driver time, so the
+    * distributed plan runs instead. */
+  private[graft] val LocalCandidateBound: Long = 1000000L
+
   /** Full MinHash-LSH near-dup pipeline: returns candidate pairs with
     * their exact shingle-set Jaccard (over 64-bit shingle ids), filtered
     * at `threshold`.
     *
-    * Scale shape: shingle→sign→band per row (map-only); the banded
-    * exchange carries ONLY (band, hash, doc_id) — never the shingle
-    * arrays; candidate pairs are deduped, then the two id-arrays are
-    * re-fetched by joining the pair list back to the (doc_id, ids)
-    * projection — so array bytes move only for verified candidates, not
-    * through the band-bucket exchange. Pathological buckets (corpus-scale
-    * boilerplate) switch to star-edge candidate generation via
-    * [[lshPairs]] — see its scaladoc for the recall accounting.
+    * Scale shape: shingle→sign→band per row (map-only) into a persisted
+    * (doc_id, ids) projection, so shingling runs once. For integral
+    * ids, one aggregate job materializes the persist and measures
+    * Σ size(ids) and the row count; then one of two finishes runs, with
+    * the same rows:
+    *  1. at most [[LocalShingleBound]] collected longs (ids plus `bands`
+    *     band hashes per row) and at most [[LocalCandidateBound]]
+    *     candidates: (doc_id, ids, band hashes) are collected in one
+    *     job and the driver builds the band buckets, the all-pairs /
+    *     star-edge candidates of [[lshPairs]], the deduped pair set and
+    *     each pair's exact Jaccard. The result
+    *     is built from driver data with the distributed plan's schema,
+    *     so the call pins nothing. The candidate count is taken from the
+    *     bucket sizes before any pair is built; past its bound the
+    *     distributed plan runs from the still-persisted ids.
+    *  2. otherwise the banded exchange carries ONLY (band, hash, doc_id)
+    *     — never the shingle arrays; candidate pairs are deduped, then the
+    *     two id-arrays are re-fetched by joining the pair list back to the
+    *     persisted projection — so array bytes move only for verified
+    *     candidates. The pair result is eagerly localCheckpointed so the
+    *     persist can be released before the caller's own actions run; the
+    *     returned frame reads that checkpoint, so it stays pinned for the
+    *     session.
+    * Pathological buckets (corpus-scale boilerplate) switch to star-edge
+    * candidate generation on either branch — see [[lshPairs]] for the
+    * recall accounting.
     *
-    * The (doc_id, ids) projection is referenced three times (banding +
-    * both re-fetch joins); it is map-only with no exchange beneath it, so
-    * without a persist Catalyst re-executes the whole tokenize→shingle
-    * →hash subtree per reference — three full passes over the corpus.
-    * Persisting it makes shingling run once; the small pair result is
-    * localCheckpointed so the cache can be released before the caller's
-    * own actions run. */
+    * Not lazy: the call runs its Spark jobs (two on the driver finish)
+    * before it returns. */
   def minHashNearDups(
       df: DataFrame, textCol: String, idCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5,
-      maxBucketSize: Int = 1000): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame =
+    minHashNearDups(df, textCol, idCol, numPerm, bands, threshold, maxBucketSize,
+      LocalShingleBound)
+
+  /** [[minHashNearDups]] with an explicit driver-finish bound (0 forces
+    * the distributed plan). */
+  private[graft] def minHashNearDups(
+      df: DataFrame, textCol: String, idCol: String, numPerm: Int, bands: Int,
+      threshold: Double, maxBucketSize: Int, localShingleBound: Long): DataFrame = {
     // NOT widened (r20): shingling is ~µs per row — unlike the
     // Levenshtein/codec paths, a one-file input's single-core map stage
     // here is cheaper than the added exchange + per-task overhead on the
@@ -321,15 +359,129 @@ object Dedup {
     try {
       val banded = ids.select(F.col("doc_id"),
         F.posexplode(bandHashes(F.col("ids"), numPerm, bands)).as(Seq("band", "bh")))
-      val pairs = lshPairs(banded, Seq("band", "bh"), "doc_id", maxBucketSize)
-      pairs
+      val verified = lshPairs(banded, Seq("band", "bh"), "doc_id", maxBucketSize)
         .join(ids.select(F.col("doc_id").as("a"), F.col("ids").as("ia")), Seq("a"))
         .join(ids.select(F.col("doc_id").as("b"), F.col("ids").as("ib")), Seq("b"))
         .withColumn("jaccard", jaccard(F.col("ia"), F.col("ib")))
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
-        .localCheckpoint(true)
+      val local = integralId(ids.schema("doc_id").dataType).flatMap { toId =>
+        // (rows, Σ size(ids)) as an RDD aggregate: one job with no
+        // exchange (Dataset.agg runs a cache stage, a map stage and a
+        // result stage), and it materializes the persist
+        val (n, nIds) = ids.select(
+            F.when(F.col("ids").isNotNull, F.size(F.col("ids"))).otherwise(0))
+          .rdd.aggregate((0L, 0L))(
+            (acc, r) => (acc._1 + 1, acc._2 + r.getInt(0)),
+            (x, y) => (x._1 + y._1, x._2 + y._2))
+        if (nIds + n * bands > localShingleBound) None
+        else {
+          val conf = df.sparkSession.conf
+          // size(NULL) is -1 outside ANSI when the legacy flag is on
+          // (Spark's own rule), which makes jaccard() read 1.0
+          val legacySizeOfNull = conf.get("spark.sql.legacy.sizeOfNull").toBoolean &&
+            !conf.get("spark.sql.ansi.enabled").toBoolean
+          localNearDups(
+            ids.select(F.col("doc_id"), F.col("ids"), bandHashes(F.col("ids"), numPerm, bands))
+              .collect(),
+            bands, threshold, maxBucketSize, legacySizeOfNull, toId)
+        }
+      }
+      local match {
+        case Some(rows) => df.sparkSession.createDataFrame(rows, verified.schema)
+        case None => verified.localCheckpoint(true)
+      }
     } finally ids.unpersist(blocking = false)
+  }
+
+  /** Long view of an integral id column's values, and back: the driver
+    * finish compares ids as longs, which is Spark's order on these
+    * types. Other id types take the distributed plan. */
+  private def integralId(t: org.apache.spark.sql.types.DataType): Option[Long => Any] = {
+    import org.apache.spark.sql.types._
+    t match {
+      case LongType => Some(l => l)
+      case IntegerType => Some(_.toInt)
+      case ShortType => Some(_.toShort)
+      case ByteType => Some(_.toByte)
+      case _ => None
+    }
+  }
+
+  /** The driver finish of [[minHashNearDups]] over collected (doc_id,
+    * ids, band hashes) rows: the rows [[lshPairs]] + the re-fetch joins
+    * + the `threshold` filter would produce, or None when the candidate
+    * count exceeds [[LocalCandidateBound]]. A NULL id never pairs; a
+    * repeated id pairs once per pair of its rows, as in the joins. */
+  private def localNearDups(
+      rows: Array[org.apache.spark.sql.Row], bands: Int, threshold: Double,
+      maxBucketSize: Int, legacySizeOfNull: Boolean, toId: Long => Any)
+      : Option[java.util.List[org.apache.spark.sql.Row]] = {
+    import scala.collection.mutable
+    import scala.jdk.CollectionConverters._
+    val id: Array[java.lang.Long] =
+      rows.map(r => if (r.isNullAt(0)) null else Long.box(r.getAs[Number](0).longValue))
+    val bhs: Array[Array[Long]] =
+      rows.map(r => if (r.isNullAt(2)) null else r.getSeq[Long](2).toArray)
+    // Buckets with ≥ 2 rows, per band: sort the band's hashes, keep the
+    // repeated ones, then gather their rows — singletons never allocate.
+    val bandedRows = rows.indices.filter(bhs(_) != null).toArray
+    val hs = new Array[Long](bandedRows.length)
+    val buckets = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[Int]]
+    for (band <- 0 until bands) {
+      for (k <- bandedRows.indices) hs(k) = bhs(bandedRows(k))(band)
+      java.util.Arrays.sort(hs)
+      val shared = new java.util.HashMap[Long, mutable.ArrayBuffer[Int]]()
+      for (k <- 1 until hs.length if hs(k) == hs(k - 1))
+        shared.putIfAbsent(hs(k), mutable.ArrayBuffer.empty[Int])
+      if (!shared.isEmpty) bandedRows.foreach { i =>
+        val b = shared.get(bhs(i)(band))
+        if (b != null) b += i
+      }
+      buckets ++= shared.values.asScala
+    }
+    def underCap(n: Int) = maxBucketSize <= 0 || n <= maxBucketSize
+    val candidates = buckets.iterator.map { b =>
+      val n = b.length.toLong
+      if (underCap(b.length)) n * (n - 1) / 2 else n - 1
+    }.sum
+    if (candidates > LocalCandidateBound) return None
+
+    val pairs = mutable.HashSet.empty[(Long, Long)]
+    buckets.foreach { b =>
+      val members = b.iterator.map(id(_)).filter(_ != null).map(_.longValue).toArray
+      if (underCap(b.length)) {
+        for (x <- members; y <- members if x < y) pairs += ((x, y))
+      } else if (members.nonEmpty) {
+        // star edges to the minimum-id representative, rep < member
+        val rep = members.min
+        members.foreach(m => if (m != rep) pairs += ((rep, m)))
+      }
+    }
+    val rowsOf = rows.indices.filter(id(_) != null).groupBy(id(_).longValue)
+    val sorted = mutable.HashMap.empty[Int, Array[Long]]
+    def idSet(i: Int): Array[Long] = sorted.getOrElseUpdate(i,
+      if (rows(i).isNullAt(1)) null else rows(i).getSeq[Long](1).toArray.distinct.sorted)
+    // jaccard(): NULL on a NULL side (the filter drops it), or 1.0 when
+    // size(NULL) is -1; 0.0 on an empty union
+    def jaccardOf(x: Int, y: Int): Option[Double] = {
+      val (p, q) = (idSet(x), idSet(y))
+      if (p == null || q == null) { if (legacySizeOfNull) Some(1.0) else None }
+      else {
+        var i = 0; var j = 0; var inter = 0
+        while (i < p.length && j < q.length) {
+          if (p(i) < q(j)) i += 1
+          else if (p(i) > q(j)) j += 1
+          else { inter += 1; i += 1; j += 1 }
+        }
+        val union = p.length + q.length - inter
+        Some(if (union == 0) 0.0 else inter.toDouble / union.toDouble)
+      }
+    }
+    val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    for ((a, b) <- pairs; x <- rowsOf(a); y <- rowsOf(b); j <- jaccardOf(x, y) if j >= threshold)
+      out.add(org.apache.spark.sql.Row(toId(a), toId(b), j))
+    Some(out)
   }
 
   /** Materialized LSH index of a corpus: one row per doc with its
@@ -389,12 +541,25 @@ object Dedup {
     * doc_ids against the corpus rather than materializing the identity
     * rows. The pair list (candidate-bounded, ≪ corpus) is the only input
     * to the iterative stage, so clustering cost scales with duplicates
-    * found, not data scanned. */
+    * found, not data scanned. Both stages pick their finish by a counted
+    * size bound: a small corpus is paired and clustered on the driver
+    * and leaves nothing pinned; a large one runs the distributed band
+    * exchange and star rounds. Not lazy: the pairing and clustering
+    * jobs run before the call returns. */
   def nearDupClusters(
       df: DataFrame, textCol: String, idCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val pairs = minHashNearDups(df, textCol, idCol, numPerm, bands, threshold, maxBucketSize)
+      maxBucketSize: Int = 1000): DataFrame =
+    nearDupClusters(df, textCol, idCol, numPerm, bands, threshold, maxBucketSize,
+      LocalShingleBound)
+
+  /** [[nearDupClusters]] with an explicit [[minHashNearDups]] driver-finish
+    * bound (0 forces its distributed plan). */
+  private[graft] def nearDupClusters(
+      df: DataFrame, textCol: String, idCol: String, numPerm: Int, bands: Int,
+      threshold: Double, maxBucketSize: Int, localShingleBound: Long): DataFrame = {
+    val pairs = minHashNearDups(df, textCol, idCol, numPerm, bands, threshold,
+      maxBucketSize, localShingleBound)
     val comp = ConnectedComponents.components(pairs, "a", "b")
     val sizes = comp.groupBy(F.col("component").as("c2"))
       .agg(F.count(F.lit(1)).as("cluster_size"))
@@ -441,11 +606,12 @@ object Dedup {
     * docs and the doc's own id for singletons — both deterministic, so
     * the split is stable across runs and engines like every hashSplit.
     *
-    * Scale: clustering is [[nearDupClusters]] (banded LSH + star
-    * contraction, never all-pairs); the (doc → component) table is
-    * bounded by CLUSTERED docs, not corpus size, and joins back LEFT on
-    * the id key — singletons pass through with no extra shuffle beyond
-    * that join. Output: all input columns + `split_key` + `split`. */
+    * Scale: clustering is [[nearDupClusters]] (banded LSH candidates,
+    * never all-pairs, finished on the driver below its size bounds);
+    * the (doc → component) table is bounded by CLUSTERED docs, not
+    * corpus size, and joins back LEFT on the id key — singletons pass
+    * through with no extra shuffle beyond that join. Output: all input
+    * columns + `split_key` + `split`. */
   def clusterSafeSplit(
       df: DataFrame, textCol: String, idCol: String,
       splits: Seq[(String, Double)], salt: String = "split",
@@ -467,8 +633,8 @@ object Dedup {
     * and clustering are identical to [[nearDupClusters]]; only `keep`
     * moves, and the member's score rides along.
     *
-    * Scale shape: clustering is unchanged (banded LSH + star-contraction
-    * components); keeper election is a groupBy(component) max of a
+    * Scale shape: clustering is [[nearDupClusters]]' (either finish);
+    * keeper election is a groupBy(component) max of a
     * (score, -id) struct + a SHUFFLE join-back on the same key — the
     * [[exact]] shape, NOT a window: a mega-cluster (the star-edge path's
     * explicit design case — every member of a 10⁸-doc boilerplate

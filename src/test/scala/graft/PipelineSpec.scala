@@ -60,9 +60,14 @@ class PipelineSpec extends SparkSpec {
 
   test("minHashNearDups finds exactly the exact-Jaccard pairs at 0.5") {
     val docs = table("documents")
-    val got = Dedup.minHashNearDups(docs, "text", "doc_id",
-      numPerm = 64, bands = 32, threshold = 0.5)
-      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the driver finish (default bound) and the distributed plan (bound 0)
+    val Seq(local, dist) = Seq(Dedup.LocalShingleBound, 0L).map(bound =>
+      Dedup.minHashNearDups(docs, "text", "doc_id", numPerm = 64, bands = 32,
+        threshold = 0.5, maxBucketSize = 1000, localShingleBound = bound))
+    assert(local.schema == dist.schema)
+    assert(local.collect().map(_.toString).sorted.toSeq ==
+      dist.collect().map(_.toString).sorted.toSeq)
+    val got = local.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // exact all-pairs oracle via shingle-id arrays (small corpus)
     val ids = docs.select(F.col("doc_id"), Dedup.shingleIds(F.col("text")).as("ids"))
     val exact = ids.as("x").join(ids.as("y"), F.col("x.doc_id") < F.col("y.doc_id"))
@@ -72,6 +77,7 @@ class PipelineSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "fixture should contain planted near-duplicates")
     assert(got == exact)
+    graft.core.Checkpoint.release(dist)
   }
 
   test("ivfTopK recall@5 >= 0.9 vs brute force") {

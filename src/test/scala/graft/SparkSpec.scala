@@ -29,4 +29,30 @@ abstract class SparkSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.api.StandardQueries.rebuildTs(table("events"))
   }
+
+  /** `body`'s value and the Spark jobs started while it ran. A marker job
+    * started after it flushes the listener queue, which delivers events in
+    * order, so every earlier job start has been counted once the marker's
+    * is seen. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val marker = "job-count-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "marker job start never delivered")
+      (out, seen.size - 1)
+    } finally sc.removeSparkListener(listener)
+  }
 }

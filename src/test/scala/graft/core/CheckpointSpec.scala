@@ -7,7 +7,7 @@ import org.apache.spark.sql.{functions => F}
 
 import graft.{SparkEntry, SparkSpec}
 import graft.analysis.{Boost, Conformal, DataAudit, ExactQuantiles, Outliers, TreeSplit}
-import graft.pipeline.TextAnalysis
+import graft.pipeline.{Dedup, TextAnalysis}
 
 /** [[Checkpoint.scoped]] frees what it pins, and the exact-statistics
   * calls built on it leave no local checkpoint registered once their
@@ -79,7 +79,9 @@ class CheckpointSpec extends SparkSpec {
       "Conformal.fit" -> (() => Conformal.fit(data, "id", "y", "a", "c")),
       "spearmanMatrix" -> (() => DataAudit.spearmanMatrix(data, Seq("a", "b", "c")).collect()),
       "lsBoostModel" -> (() => Boost.lsBoostModel(data, "y", features, rounds = 3)),
-      "bpeTrainMerges" -> (() => TextAnalysis.bpeTrainMerges(data, "text", rounds = 3).collect()))
+      "bpeTrainMerges" -> (() => TextAnalysis.bpeTrainMerges(data, "text", rounds = 3).collect()),
+      "minHashNearDups" -> (() => Dedup.minHashNearDups(data, "text", "id").collect()),
+      "nearDupClusters" -> (() => Dedup.nearDupClusters(data, "text", "id").collect()))
     data.count()
     assert(leaks(calls) === Map.empty[String, Int])
   }

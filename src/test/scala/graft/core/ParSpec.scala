@@ -1,40 +1,11 @@
 package graft.core
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.{functions => F}
 
 class ParSpec extends SparkSpec {
   import spark.implicits._
-
-  /** `body`'s value and the Spark jobs started while it ran. A marker job
-    * started after it flushes the listener queue, which delivers events in
-    * order, so every earlier job start has been counted once the marker's
-    * is seen. */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = "par-spec-marker"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "marker job start never delivered")
-      (out, seen.size - 1)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("widen raises a below-core-count input to defaultParallelism") {
     val n = spark.sparkContext.defaultParallelism

@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.{functions => F}
 
 import graft.SparkSpec
@@ -14,6 +17,35 @@ class DedupCapSpec extends SparkSpec {
   private def components(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     ConnectedComponents.components(pairs, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** `Dedup.minHashNearDups`' driver finish (default bound) and its
+    * distributed plan (bound 0); every minHash case runs on both. */
+  private val bounds = Seq(Dedup.LocalShingleBound, 0L)
+
+  /** Which finish built a `minHashNearDups` result: driver rows or the
+    * distributed plan's checkpoint. */
+  private def finish(pairs: DataFrame): String = {
+    val plan = pairs.queryExecution.analyzed
+    if (plan.collectFirst { case r: LogicalRDD => r }.nonEmpty) "distributed"
+    else if (plan.collectFirst { case r: LocalRelation => r }.nonEmpty) "driver"
+    else "unknown"
+  }
+
+  private def multiset(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** Runs `pairsAt` on both bounds, checks each took the intended finish
+    * and that both give the same schema and the same multiset of rows;
+    * returns the rows. */
+  private def sameOnBothFinishes(pairsAt: Long => DataFrame): Seq[String] = {
+    val Seq(local, dist) = bounds.map(pairsAt)
+    assert(finish(local) == "driver")
+    assert(finish(dist) == "distributed")
+    assert(local.schema == dist.schema)
+    val rows = multiset(local)
+    assert(rows == multiset(dist))
+    graft.core.Checkpoint.release(dist)
+    rows
+  }
 
   test("lshPairs: over-cap bucket emits star edges to the min-id rep; under-cap all pairs") {
     import spark.implicits._
@@ -65,19 +97,19 @@ class DedupCapSpec extends SparkSpec {
       (900L, "completely unrelated text about compiler construction and parsing"),
       (901L, "another standalone document describing volcano geology fieldwork")))
       .toDF("doc_id", "text").repartition(7)
-    val pairs = Dedup.minHashNearDups(docs, "text", "doc_id",
-      numPerm = 16, bands = 8, threshold = 0.5, maxBucketSize = 8)
-    val rows = pairs.collect()
-    // every bucket of the 40 copies over-caps in EVERY band -> star edges only
-    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      (2L to 40L).map(x => (1L, x)).toSet)
-    assert(rows.forall(_.getDouble(2) == 1.0), "identical copies have jaccard 1.0")
-    val clusters = Dedup.nearDupClusters(docs, "text", "doc_id",
-      numPerm = 16, bands = 8, threshold = 0.5, maxBucketSize = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-    assert(clusters.length == 40, "all 40 copies clustered; singletons absent")
-    assert(clusters.forall(c => c._2 == 1L && c._3 == 40L))
-    assert(clusters.filter(_._4).map(_._1).toSeq == Seq(1L), "keep = min-id canonical only")
+    val rows = sameOnBothFinishes(bound => Dedup.minHashNearDups(docs, "text", "doc_id",
+      numPerm = 16, bands = 8, threshold = 0.5, maxBucketSize = 8, localShingleBound = bound))
+    // every bucket of the 40 copies over-caps in EVERY band -> star edges
+    // only; identical copies have jaccard 1.0
+    assert(rows == (2 to 40).map(x => s"[1,$x,1.0]").sorted)
+    for (bound <- bounds) {
+      val clusters = Dedup.nearDupClusters(docs, "text", "doc_id",
+        numPerm = 16, bands = 8, threshold = 0.5, maxBucketSize = 8, localShingleBound = bound)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      assert(clusters.length == 40, "all 40 copies clustered; singletons absent")
+      assert(clusters.forall(c => c._2 == 1L && c._3 == 40L))
+      assert(clusters.filter(_._4).map(_._1).toSeq == Seq(1L), "keep = min-id canonical only")
+    }
   }
 
   test("lshPairs: the wide banded relation is exchanged on (band,bh) exactly once") {
@@ -108,10 +140,69 @@ class DedupCapSpec extends SparkSpec {
 
   test("under-cap corpus: capped pair set is identical to uncapped") {
     val docs = table("documents")
-    def pairs(cap: Int) = Dedup.minHashNearDups(docs, "text", "doc_id",
-      numPerm = 64, bands = 32, threshold = 0.5, maxBucketSize = cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def pairs(cap: Int) = sameOnBothFinishes(bound => Dedup.minHashNearDups(docs, "text",
+      "doc_id", numPerm = 64, bands = 32, threshold = 0.5, maxBucketSize = cap,
+      localShingleBound = bound))
     assert(pairs(1000) == pairs(0), "no natural bucket over-caps at sf0.001")
+  }
+
+  test("minHashNearDups edge cases: both finishes give the same rows and schema") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog again and again"
+    val other = "completely different text about spark catalyst optimizers rules"
+    val docs = Seq[(Option[Long], Option[String])](
+      (Some(1L), Some(base)), (Some(2L), Some(base + " extended")),
+      (None, Some(base)),                              // NULL id: bucketed, never paired
+      (Some(3L), None), (Some(4L), Some("")), (Some(5L), Some("word")), // NULL bands
+      (Some(6L), Some(other)), (Some(6L), Some(other + " y")),          // repeated id
+      (Some(6L), None), (Some(7L), Some(other)),
+      // 3-shingles {abc, bcd, cde} vs {abc, bcd, cdf}: Jaccard exactly 2/4
+      (Some(8L), Some("a b c d e")), (Some(9L), Some("a b c d f")))
+      .toDF("doc_id", "text").repartition(3)
+    // outside ANSI, size(NULL) is -1 and jaccard() reads 1.0 for a NULL side
+    for (ansi <- Seq(true, false); cap <- Seq(1000, 2, 0, -1)) {
+      val prev = spark.conf.get("spark.sql.ansi.enabled")
+      val rows = try {
+        spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+        sameOnBothFinishes(bound => Dedup.minHashNearDups(docs, "text", "doc_id",
+          numPerm = 64, bands = 64, threshold = 0.5, maxBucketSize = cap,
+          localShingleBound = bound))
+      } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+      assert(!rows.exists(_.contains("null")), s"cap $cap: a NULL id or jaccard paired")
+      if (cap != 2) {
+        assert(rows.contains("[8,9,0.5]"), s"cap $cap: the pair at the threshold is kept")
+        // doc 6's two non-NULL rows each pair with 7; its NULL-text row only
+        // outside ANSI
+        assert(rows.count(_.startsWith("[6,7,")) == (if (ansi) 2 else 3), s"cap $cap: $rows")
+      }
+    }
+    val clusters = bounds.map(bound => multiset(Dedup.nearDupClusters(docs, "text", "doc_id",
+      numPerm = 64, bands = 64, threshold = 0.5, maxBucketSize = 2, localShingleBound = bound)))
+    assert(clusters(0) == clusters(1))
+  }
+
+  test("minHashNearDups: too many candidates for the driver falls back to the distributed plan") {
+    import spark.implicits._
+    // 180 copies, 64 single-row bands, no cap: 64 * C(180, 2) = 1,031,040 candidates
+    val n = 180
+    val docs = (1L to n.toLong).map(i => (i, "one shared boilerplate sentence for every copy"))
+      .toDF("doc_id", "text").repartition(4)
+    val pairs = Dedup.minHashNearDups(docs, "text", "doc_id",
+      numPerm = 64, bands = 64, threshold = 0.5, maxBucketSize = 0)
+    assert(64L * n * (n - 1) / 2 > Dedup.LocalCandidateBound)
+    assert(finish(pairs) == "distributed")
+    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(got.length == n * (n - 1) / 2)
+    assert(got.toSet == (for (a <- 1L to n; b <- a + 1 to n) yield (a, b, 1.0)).toSet)
+    graft.core.Checkpoint.release(pairs)
+  }
+
+  test("minHashNearDups: the driver finish starts at most 2 Spark jobs") {
+    val docs = table("documents")
+    val (pairs, jobs) = withJobCount(Dedup.minHashNearDups(docs, "text", "doc_id"))
+    assert(finish(pairs) == "driver")
+    assert(jobs <= 2, s"$jobs jobs")
+    assert(pairs.collect().nonEmpty)
   }
 
   test("nearDupsAgainstIndex: batch doc matching an over-cap index bucket is still flagged") {
@@ -174,13 +265,17 @@ class DedupCapSpec extends SparkSpec {
     assert(got(2L)._4 && !got(1L)._4 && !got(3L)._4)
     // family 2: score tie -> smallest id
     assert(got(10L)._4 && !got(11L)._4)
-    // clustering identical to nearDupClusters (components + sizes agree)
-    val plain = Dedup.nearDupClusters(df, "text", "doc_id",
-      numPerm = 64, bands = 32, threshold = 0.4)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(plain.keySet == got.keySet)
-    plain.foreach { case (id, (comp2, size)) =>
-      assert(got(id)._1 == comp2 && got(id)._2 == size)
+    // clustering identical to nearDupClusters (components + sizes agree),
+    // whichever finish pairs the documents
+    for (bound <- bounds) {
+      val plain = Dedup.nearDupClusters(df, "text", "doc_id",
+        numPerm = 64, bands = 32, threshold = 0.4, maxBucketSize = 1000,
+        localShingleBound = bound)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(plain.keySet == got.keySet)
+      plain.foreach { case (id, (comp2, size)) =>
+        assert(got(id)._1 == comp2 && got(id)._2 == size)
+      }
     }
     // exactly one keeper per component
     got.values.groupBy(_._1).foreach { case (_, members) =>
