@@ -119,15 +119,19 @@ object DriftExact {
     * distributed prefix sums). */
   private[graft] def ksStatsByKey(
       df: DataFrame, key: Column, valueCol: String, isTarget: Column,
-      localPairBound: Long): Map[String, (Double, Long, Long)] = {
-    val ca = F.when(isTarget, 1L).otherwise(0L)
-    val prepared = df
-      .select(key.cast("string").as("__c"),
-        F.col(valueCol).cast("double").as("__v"), ca.as("__ca"))
+      localPairBound: Long): Map[String, (Double, Long, Long)] =
+    ksCore(keyedValues(df, key, valueCol, isTarget), Nil, localPairBound)
+
+  /** The per-key stats' input: (__c key as a string, __v value as a
+    * double, __ca / __cb target and reference indicators), NULL keys
+    * dropped (they are no segment). */
+  private def keyedValues(
+      df: DataFrame, key: Column, valueCol: String, isTarget: Column): DataFrame =
+    df.select(key.cast("string").as("__c"),
+        F.col(valueCol).cast("double").as("__v"),
+        F.when(isTarget, 1L).otherwise(0L).as("__ca"))
       .filter(F.col("__c").isNotNull)
       .withColumn("__cb", F.lit(1L) - F.col("__ca"))
-    ksCore(prepared, Nil, localPairBound)
-  }
 
   /** Shared ECDF-supremum core: `prepared` carries (__c key, __v value,
     * __ca, __cb). `wantKeys` fixes the output key set ([[ksStats]]
@@ -282,15 +286,7 @@ object DriftExact {
   def psiStats(
       df: DataFrame, valueCols: Seq[String], isTarget: Column,
       nBins: Int = 30, eps: Double = 1e-4): Map[String, (Double, Long, Long)] =
-    binnedStats(df, valueCols, isTarget, nBins) { (counts, na, nb) =>
-      var acc = 0.0
-      counts.foreach { case (_, ca, cb) =>
-        val pa = math.max(ca.toDouble / na, eps)
-        val pb = math.max(cb.toDouble / nb, eps)
-        acc += (pa - pb) * math.log(pa / pb)
-      }
-      acc
-    }
+    binnedStats(df, valueCols, isTarget, nBins)(psiFold(eps))
 
   /** Jensen–Shannon divergence (nats) over the same exact fixed-width
     * bins as [[psiStats]]: JSD = ½·KL(p‖m) + ½·KL(q‖m) with
@@ -304,19 +300,7 @@ object DriftExact {
   def jsdStats(
       df: DataFrame, valueCols: Seq[String], isTarget: Column,
       nBins: Int = 30): Map[String, (Double, Long, Long)] =
-    binnedStats(df, valueCols, isTarget, nBins) { (counts, na, nb) =>
-      def lnq(x: Double): Double = math.floor(math.log(x) * 1e9) / 1e9
-      var acc = 0.0
-      counts.foreach { case (_, ca, cb) =>
-        val pa = ca.toDouble / na
-        val pb = cb.toDouble / nb
-        val m = (pa + pb) / 2
-        val ta = if (pa > 0) 0.5 * (pa * lnq(pa / m)) else 0.0
-        val tb = if (pb > 0) 0.5 * (pb * lnq(pb / m)) else 0.0
-        acc += ta + tb
-      }
-      acc
-    }
+    binnedStats(df, valueCols, isTarget, nBins)(jsdFold)
 
   /** Normalized grid Earth-Mover's (Wasserstein-1) distance over the
     * same exact fixed-width bins: Σ over bins of |cdfA − cdfB|, divided
@@ -336,19 +320,7 @@ object DriftExact {
   def emdStats(
       df: DataFrame, valueCols: Seq[String], isTarget: Column,
       nBins: Int = 30): Map[String, (Double, Long, Long)] =
-    binnedStats(df, valueCols, isTarget, nBins) { (counts, na, nb) =>
-      val byBin = counts.map(t => t._1 -> ((t._2, t._3))).toMap
-      var cumA = 0L
-      var cumB = 0L
-      var acc = 0L
-      (0L until nBins.toLong).foreach { b =>
-        val (ca, cb) = byBin.getOrElse(b, (0L, 0L))
-        cumA += ca
-        cumB += cb
-        acc += math.abs(cumA * nb - cumB * na)
-      }
-      acc.toDouble / (na.toDouble * nb.toDouble * nBins.toDouble)
-    }
+    binnedStats(df, valueCols, isTarget, nBins)(emdFold(nBins))
 
   /** PSI over REFERENCE-QUANTILE bins — the industry-standard PSI
     * configuration (equal-population bins frozen on the reference
@@ -389,25 +361,12 @@ object DriftExact {
       val rows = byCol.getOrElse(c, Array.empty).sortBy(_._2)
       val na = rows.map(_._3).sum
       val nb = rows.map(_._4).sum
-      val psi = if (na == 0L || nb == 0L) 0.0 else {
-        var acc = 0.0
-        rows.foreach { case (_, _, cca, ccb) =>
-          val pa = math.max(cca.toDouble / na, eps)
-          val pb = math.max(ccb.toDouble / nb, eps)
-          acc += (pa - pb) * math.log(pa / pb)
-        }
-        acc
-      }
+      val psi = if (na == 0L || nb == 0L) 0.0
+        else psiFold(eps)(rows.map(r => (r._2, r._3, r._4)), na, nb)
       c -> ((psi, na, nb))
     }.toMap
   }
 
-  /** Shared exact-binning core of [[hellingerStats]] / [[psiStats]]:
-    * two input scans total (per-column (min, max, n) envelope, then bin
-    * counts), each column's (lo, width) on a broadcast join, ≤ N·nBins
-    * rows collected, and `statOf(binCounts, na, nb)` folded over the
-    * per-bin (bin, ca, cb) triples in ascending bin order driver-side
-    * so the float accumulation order is deterministic. */
   /** PSI per KEY (e.g. a segment column) over per-key fixed-width bins —
     * the PSI member of the segmented-drift trio with [[ksStatsByKey]]
     * (each key gets ITS OWN [min, max] envelope, as running each column
@@ -417,76 +376,74 @@ object DriftExact {
   def psiStatsByKey(
       df: DataFrame, key: Column, valueCol: String, isTarget: Column,
       nBins: Int = 30, eps: Double = 1e-4,
-      maxSegments: Int = 10000): Map[String, (Double, Long, Long)] = {
-    val prepared = df
-      .select(key.cast("string").as("__c"),
-        F.col(valueCol).cast("double").as("__v"),
-        F.when(isTarget, 1L).otherwise(0L).as("__ca"))
-      .filter(F.col("__c").isNotNull)
-      .withColumn("__cb", F.lit(1L) - F.col("__ca"))
-    binnedCore(prepared, Nil, nBins, maxSegments) { (counts, na, nb) =>
-      var acc = 0.0
-      counts.foreach { case (_, ca, cb) =>
-        val pa = math.max(ca.toDouble / na, eps)
-        val pb = math.max(cb.toDouble / nb, eps)
-        acc += (pa - pb) * math.log(pa / pb)
-      }
-      acc
-    }
-  }
+      maxSegments: Int = 10000): Map[String, (Double, Long, Long)] =
+    binnedCore(keyedValues(df, key, valueCol, isTarget), Nil, nBins, maxSegments)(psiFold(eps))
 
   /** Per-segment [[jsdStats]]: one (segment, bin) exchange, each
     * segment's own (min, max) envelope, same quantized-ln fold. */
   def jsdStatsByKey(
       df: DataFrame, key: Column, valueCol: String, isTarget: Column,
-      nBins: Int = 30, maxSegments: Int = 10000): Map[String, (Double, Long, Long)] = {
-    val prepared = df
-      .select(key.cast("string").as("__c"),
-        F.col(valueCol).cast("double").as("__v"),
-        F.when(isTarget, 1L).otherwise(0L).as("__ca"))
-      .filter(F.col("__c").isNotNull)
-      .withColumn("__cb", F.lit(1L) - F.col("__ca"))
-    binnedCore(prepared, Nil, nBins, maxSegments) { (counts, na, nb) =>
-      def lnq(x: Double): Double = math.floor(math.log(x) * 1e9) / 1e9
-      var acc = 0.0
-      counts.foreach { case (_, ca, cb) =>
-        val pa = ca.toDouble / na
-        val pb = cb.toDouble / nb
-        val m = (pa + pb) / 2
-        val ta = if (pa > 0) 0.5 * (pa * lnq(pa / m)) else 0.0
-        val tb = if (pb > 0) 0.5 * (pb * lnq(pb / m)) else 0.0
-        acc += ta + tb
-      }
-      acc
-    }
-  }
+      nBins: Int = 30, maxSegments: Int = 10000): Map[String, (Double, Long, Long)] =
+    binnedCore(keyedValues(df, key, valueCol, isTarget), Nil, nBins, maxSegments)(jsdFold)
 
   /** Per-segment [[emdStats]]: same integer cross-multiplied CDF fold,
     * one (segment, bin) exchange, per-segment envelopes. */
   def emdStatsByKey(
       df: DataFrame, key: Column, valueCol: String, isTarget: Column,
-      nBins: Int = 30, maxSegments: Int = 10000): Map[String, (Double, Long, Long)] = {
-    val prepared = df
-      .select(key.cast("string").as("__c"),
-        F.col(valueCol).cast("double").as("__v"),
-        F.when(isTarget, 1L).otherwise(0L).as("__ca"))
-      .filter(F.col("__c").isNotNull)
-      .withColumn("__cb", F.lit(1L) - F.col("__ca"))
-    binnedCore(prepared, Nil, nBins, maxSegments) { (counts, na, nb) =>
-      val byBin = counts.map(t => t._1 -> ((t._2, t._3))).toMap
-      var cumA = 0L
-      var cumB = 0L
-      var acc = 0L
-      (0L until nBins.toLong).foreach { b =>
-        val (ca, cb) = byBin.getOrElse(b, (0L, 0L))
-        cumA += ca
-        cumB += cb
-        acc += math.abs(cumA * nb - cumB * na)
-      }
-      acc.toDouble / (na.toDouble * nb.toDouble * nBins.toDouble)
+      nBins: Int = 30, maxSegments: Int = 10000): Map[String, (Double, Long, Long)] =
+    binnedCore(keyedValues(df, key, valueCol, isTarget), Nil, nBins, maxSegments)(emdFold(nBins))
+
+  // The driver-side folds over one key's per-bin (bin, ca, cb) counts,
+  // in ascending bin order, shared by the per-column and per-key stats.
+
+  /** PSI: Σ (pₐ−p_b)·ln(pₐ/p_b), both proportions floored at `eps`. */
+  private def psiFold(eps: Double)(counts: Array[(Long, Long, Long)], na: Long, nb: Long): Double = {
+    var acc = 0.0
+    counts.foreach { case (_, ca, cb) =>
+      val pa = math.max(ca.toDouble / na, eps)
+      val pb = math.max(cb.toDouble / nb, eps)
+      acc += (pa - pb) * math.log(pa / pb)
     }
+    acc
   }
 
+  /** JSD: `acc += ta + tb` per bin, ln floored at 1e-9. */
+  private def jsdFold(counts: Array[(Long, Long, Long)], na: Long, nb: Long): Double = {
+    def lnq(x: Double): Double = math.floor(math.log(x) * 1e9) / 1e9
+    var acc = 0.0
+    counts.foreach { case (_, ca, cb) =>
+      val pa = ca.toDouble / na
+      val pb = cb.toDouble / nb
+      val m = (pa + pb) / 2
+      val ta = if (pa > 0) 0.5 * (pa * lnq(pa / m)) else 0.0
+      val tb = if (pb > 0) 0.5 * (pb * lnq(pb / m)) else 0.0
+      acc += ta + tb
+    }
+    acc
+  }
+
+  /** EMD: integer cross-multiplied CDF gaps over all `nBins` bins
+    * (empty ones included), one final division. */
+  private def emdFold(nBins: Int)(counts: Array[(Long, Long, Long)], na: Long, nb: Long): Double = {
+    val byBin = counts.map(t => t._1 -> ((t._2, t._3))).toMap
+    var cumA = 0L
+    var cumB = 0L
+    var acc = 0L
+    (0L until nBins.toLong).foreach { b =>
+      val (ca, cb) = byBin.getOrElse(b, (0L, 0L))
+      cumA += ca
+      cumB += cb
+      acc += math.abs(cumA * nb - cumB * na)
+    }
+    acc.toDouble / (na.toDouble * nb.toDouble * nBins.toDouble)
+  }
+
+  /** Shared exact-binning core of [[hellingerStats]] / [[psiStats]]:
+    * two input scans total (per-column (min, max, n) envelope, then bin
+    * counts), each column's (lo, width) on a broadcast join, ≤ N·nBins
+    * rows collected, and `statOf(binCounts, na, nb)` folded over the
+    * per-bin (bin, ca, cb) triples in ascending bin order driver-side
+    * so the float accumulation order is deterministic. */
   private def binnedStats(
       df: DataFrame, valueCols: Seq[String], isTarget: Column,
       nBins: Int)(

@@ -81,11 +81,7 @@ class Profiler(
           st.as("string"), ob.as("obj"), te.as("tensor")).as(Namespace.Types))
 
       case Namespace.Ints if kind == Integral || kind == Bool =>
-        val asLong = field.dataType match {
-          case DateType      => c.cast(LongType)
-          case TimestampType => c.cast(LongType)
-          case _             => c.cast(LongType)
-        }
+        val asLong = c.cast(LongType)
         Some(F.struct(F.min(asLong).as("min"), F.max(asLong).as("max")).as(Namespace.Ints))
       case Namespace.Ints => None
 

@@ -115,6 +115,292 @@ object StandardQueries {
   private val liInts = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
   private val liAll = liNumeric ++ Seq("l_returnflag", "l_linestatus", "l_shipdate")
 
+  /** The exact fields (n, nulls, present, vmin, vmax) of every
+    * `liNumeric` column of a merged lineitem profile, one row per column
+    * — the result of the profile round-trip queries. */
+  private def liNumericFields(s: SparkSession, merged: graft.profile.DatasetProfileView): DataFrame = {
+    import s.implicits._
+    liNumeric.sorted.map { c =>
+      val v = merged.columns(c)
+      val d = v.distribution.get
+      (c, v.counts.get.n, v.counts.get.nulls, d.n, d.min.get, d.max.get)
+    }.toDF("col_name", "n", "nulls", "present", "vmin", "vmax").orderBy("col_name")
+  }
+
+  /** [[liNumericFields]] over the whole lineitem table, in DuckDB. */
+  private val liNumericFieldsOracle =
+    liNumeric.sorted.map { c =>
+      s"""SELECT '$c' AS col_name, count(*) AS n,
+         | count(*) FILTER (WHERE $c IS NULL) AS nulls,
+         | count(*) FILTER (WHERE $c IS NOT NULL AND NOT isnan(CAST($c AS DOUBLE))) AS present,
+         | CAST(min($c) AS DOUBLE) AS vmin, CAST(max($c) AS DOUBLE) AS vmax
+         | FROM lineitem""".stripMargin.replaceAll("\n", " ")
+    }.mkString("", " UNION ALL ", " ORDER BY col_name")
+
+  /** The lineitem columns of the per-column drift queries. */
+  private val liDriftCols = Seq("l_extendedprice", "l_quantity")
+
+  /** Two-sample drift of each `liDriftCols` column, target slice
+    * `l_orderkey % 3 = 0`: (col_name, `stat`, n_target, n_ref) rows. */
+  private def liDrift(s: SparkSession, dir: String, stat: String)(
+      stats: (DataFrame, Seq[String], Column) => Map[String, (Double, Long, Long)]): DataFrame = {
+    import s.implicits._
+    val byCol = stats(t(s, dir, "lineitem"), liDriftCols, F.col("l_orderkey") % 3 === 0)
+    liDriftCols.sorted.map { c =>
+      val (v, na, nb) = byCol(c)
+      (c, v, na, nb)
+    }.toDF("col_name", stat, "n_target", "n_ref")
+  }
+
+  /** Two-sample drift of events `value` per event_type, target slice
+    * `event_id % 3 = 0`: (segment, `stat`, n_target, n_ref) rows. */
+  private def segmentDrift(s: SparkSession, dir: String, stat: String)(
+      stats: (DataFrame, Column, String, Column) => Map[String, (Double, Long, Long)]): DataFrame = {
+    import s.implicits._
+    val bySeg = stats(events(s, dir), F.col("event_type"), "value", F.col("event_id") % 3 === 0)
+    bySeg.toSeq.sortBy(_._1).map { case (seg, (v, na, nb)) =>
+      (seg, v, na, nb)
+    }.toDF("segment", stat, "n_target", "n_ref")
+  }
+
+  /** Per-window drift of the events stream: each 1-day window's value
+    * bins (complete mode, in a memory table) scored by `perWindow`
+    * against the envelope frozen from the events before 2024-01-11;
+    * (window_start, `stat`, n_target) rows. */
+  private def streamingDrift(s: SparkSession, dir: String, stat: Column)(
+      perWindow: (DataFrame, graft.streaming.DriftStream.BinEnvelope) => DataFrame): DataFrame = {
+    val split = F.lit("2024-01-11").cast("timestamp")
+    val env = graft.streaming.DriftStream.referenceEnvelope(
+      events(s, dir).filter(F.col("ts") < split), "value", nBins = 30)
+    val sdf = st(s, dir, "events")
+      .transform(rebuildTs)
+    val counts = graft.streaming.DriftStream.windowedBinCounts(
+      sdf, "ts", "1 day", "value", env)
+    perWindow(Streams.toMemory(counts, "complete"), env)
+      .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
+        stat, F.col("n_target"))
+      .orderBy("window_start")
+  }
+
+  /** Typo'd part names (every 5th part, third char dropped, ids
+    * shifted by 10⁶) streamed against the static lowercased part-name
+    * index through [[graft.pipeline.FuzzyDedup.matchIndex]] at edit
+    * distance 1, blocks above `maxBlockSize` skipped. */
+  private def streamingFuzzyMatch(s: SparkSession, dir: String, maxBlockSize: Option[Int]): DataFrame = {
+    val part = t(s, dir, "part")
+    val indexDf = part.select(F.col("p_partkey").as("ix_id"),
+      F.lower(F.col("p_name")).as("ix_s"))
+    val sdf = st(s, dir, "part")
+      .filter(F.col("p_partkey") % 5 === 0)
+      .select((F.col("p_partkey") + 1000000L).as("probe_id"),
+        F.concat(F.substring(F.lower(F.col("p_name")), 1, 2),
+          F.expr("substring(lower(p_name), 4)")).as("probe_s"))
+    Streams.toMemory(graft.pipeline.FuzzyDedup.matchIndex(
+        sdf, "probe_id", "probe_s", indexDf, "ix_id", "ix_s",
+        maxDist = 1, maxBlockSize = maxBlockSize))
+      .orderBy("id", "index_id")
+  }
+
+  // ---- oracle SQL fragments shared by several queries ----------------
+  // Each is spliced into an oracle that is then stripMargin'd and joined
+  // onto one line; the fragments keep the exact text of the copies they
+  // replace, so the oracle strings are unchanged.
+
+  /** Word tokens `w` of each document, empty tokens dropped
+    * ([[Dedup.tokens]] in DuckDB). */
+  private val tokCte =
+    """tok AS (
+      |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> len(w) > 0) AS w
+      |  FROM documents)""".stripMargin
+
+  /** Distinct word bigrams `g` of each `doc_id` of `from`
+    * ([[Dedup.shingles]] in DuckDB); `cols` carries extra columns
+    * through (", source"). */
+  private def shingleCte(cols: String = "", from: String = "documents"): String =
+    s"""sh AS (
+       |  SELECT doc_id$cols,
+       |   list_distinct([array_to_string(words[i:i+2], ' ')
+       |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
+       |  FROM (SELECT doc_id$cols, string_split_regex(lower(trim(text)), '\\s+') AS words FROM $from))""".stripMargin
+
+  /** Exact Jaccard of the shingle sets of `sh` rows `a` and `b`. */
+  private val jaccardSql =
+    "CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE)"
+
+  /** Every `sh` pair a < b at exact Jaccard >= 0.5. */
+  private val nearDupJoinSql =
+    s"""FROM sh a JOIN sh b ON b.doc_id > a.doc_id
+       |  WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
+       |   AND $jaccardSql >= 0.5""".stripMargin
+
+  /** The near-dup pairs (a, b, jaccard) at threshold 0.5, `sh` rows
+    * joined `on` — the whole oracle of the pair-listing queries. */
+  private def nearDupPairsOracle(cols: String, on: String): String =
+    s"""WITH ${shingleCte(cols)}
+       | SELECT a.doc_id AS a, b.doc_id AS b,
+       |  $jaccardSql AS jaccard
+       | FROM sh a JOIN sh b ON $on
+       | WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
+       |  AND $jaccardSql >= 0.5
+       | ORDER BY a, b""".stripMargin.replaceAll("\n", " ")
+
+  /** Near-dup connected components over the documents of `from`:
+    * `comp(id, component)`, component = the minimum reachable doc_id
+    * (recursive min-label reachability; the WITH must be RECURSIVE). */
+  private def nearDupComponentsCte(from: String = "documents"): String =
+    s"""${shingleCte(from = from)},
+       | pairs AS (
+       |  SELECT a.doc_id AS a, b.doc_id AS b
+       |  $nearDupJoinSql),
+       | edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
+       | r AS (
+       |   SELECT u, u AS m FROM (SELECT DISTINCT u FROM edges)
+       |   UNION
+       |   SELECT e.u, r.m FROM edges e JOIN r ON e.v = r.u),
+       | comp AS (SELECT u AS id, min(m) AS component FROM r GROUP BY u)""".stripMargin
+
+  /** The per-column drift oracle over [[DriftExact]]'s fixed 30-bin
+    * layout: CTEs b (value, target flag), mm (envelope), g (per-bin
+    * counts ca/cb) and t (totals na/nb), then `tail(column)` — the
+    * statistic's own CTEs and final SELECT — one UNION ALL arm per
+    * `liDriftCols` column. */
+  private def liBinnedDriftOracle(tail: String => String): String =
+    liDriftCols.sorted.map { c =>
+      s"""SELECT * FROM (
+         | WITH b AS (SELECT CAST($c AS DOUBLE) AS v,
+         |     CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE 0 END AS ta
+         |   FROM lineitem WHERE $c IS NOT NULL),
+         | mm AS (SELECT min(v) AS lo, max(v) AS hi FROM b),
+         | g AS (SELECT LEAST(CAST(floor((v - lo) / ((hi - lo) / 30)) AS BIGINT), 29) AS bin,
+         |     sum(ta) AS ca, sum(1 - ta) AS cb
+         |   FROM b, mm GROUP BY 1),
+         | t AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM g),
+         | ${tail(c)}
+         |)""".stripMargin.replaceAll("\n", " ")
+    }.mkString("", " UNION ALL ", " ORDER BY col_name")
+
+  /** The per-segment counterpart of [[liBinnedDriftOracle]]'s CTEs:
+    * each event_type binned over its own envelope (p: lo, width wd),
+    * t per segment. */
+  private val segmentBinnedCtes =
+    """b AS (SELECT event_type AS seg, CAST(value AS DOUBLE) AS v,
+      |   CASE WHEN event_id % 3 = 0 THEN 1 ELSE 0 END AS ta
+      |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
+      | mm AS (SELECT seg, min(v) AS lo, max(v) AS hi FROM b GROUP BY 1),
+      | p AS (SELECT seg, lo, CASE WHEN hi > lo THEN (hi - lo)/30 ELSE 1.0 END AS wd FROM mm),
+      | g AS (SELECT b.seg, LEAST(CAST(floor((v - lo)/wd) AS BIGINT), 29) AS bin,
+      |   sum(ta) AS ca, sum(1 - ta) AS cb
+      |  FROM b JOIN p ON b.seg = p.seg GROUP BY 1, 2),
+      | t AS (SELECT seg, sum(ca) AS na, sum(cb) AS nb FROM g GROUP BY 1)""".stripMargin
+
+  /** Exact cosine top-5 neighbours (similarity desc, id desc) of the
+    * first 20 embeddings, brute force; `cast` ("::DOUBLE[]") scores the
+    * double-cast vectors. */
+  private def embeddingTopKOracle(cast: String = ""): String =
+    s"""SELECT query_id, neighbor_id, rank FROM (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |   row_number() OVER (PARTITION BY q.vec_id
+       |     ORDER BY list_cosine_similarity(q.embedding$cast, c.embedding$cast) DESC, c.vec_id DESC) AS rank
+       |  FROM embeddings q, embeddings c
+       |  WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
+       | WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin.replaceAll("\n", " ")
+
+  /** [[tokCte]] plus g(doc_id, pos, gram): every 5-token gram of each
+    * document at its 1-based token position. */
+  private val spanGramCtes =
+    s"""$tokCte,
+       | g AS (
+       |  SELECT doc_id, u.pos AS pos, u.gram AS gram FROM (
+       |   SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(w) - 4, 0)),
+       |     i -> struct_pack(pos := i, gram := array_to_string(w[i:i+4], ' ')))) AS u
+       |   FROM tok))""".stripMargin
+
+  /** The streaming drift oracles' CTEs: e (value, day window w, ts),
+    * the reference envelope mm/p frozen before 2024-01-11 (nr rows),
+    * reference bin counts rb, per-window bin counts tb and totals wn,
+    * and the full (window, bin) grid. */
+  private val windowBinnedCtes =
+    """e AS (SELECT CAST(value AS DOUBLE) AS v,
+      |   date_trunc('day', CAST(ts AS TIMESTAMP)) AS w, ts FROM events
+      |   WHERE value IS NOT NULL),
+      | mm AS (SELECT min(v) AS lo, max(v) AS hi, count(*) AS nr FROM e
+      |   WHERE ts < TIMESTAMP '2024-01-11'),
+      | p AS (SELECT lo, CASE WHEN hi > lo THEN (hi - lo)/30 ELSE 1.0 END AS wd, nr FROM mm),
+      | rb AS (SELECT LEAST(GREATEST(CAST(floor((v - lo)/wd) AS BIGINT), 0), 29) AS bin,
+      |   count(*) AS rc FROM e, p WHERE ts < TIMESTAMP '2024-01-11' GROUP BY 1),
+      | tb AS (SELECT w, LEAST(GREATEST(CAST(floor((v - lo)/wd) AS BIGINT), 0), 29) AS bin,
+      |   count(*) AS c FROM e, p GROUP BY 1, 2),
+      | wn AS (SELECT w, sum(c) AS nt FROM tb GROUP BY 1),
+      | grid AS (SELECT w, b.range AS bin FROM (SELECT DISTINCT w FROM tb), range(30) b)""".stripMargin
+
+  /** Gap sessionization of a CTE `e(user_id, event_id, ts_us, ...)`:
+    * g flags a new session after a gap over 6h, s numbers each user's
+    * sessions (session_seq). */
+  private val sessionSeqCtes =
+    """g AS (
+      |  SELECT *, CASE WHEN ts_us - lag(ts_us) OVER w IS NULL
+      |    OR ts_us - lag(ts_us) OVER w > 21600000000 THEN 1 ELSE 0 END AS new_session
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
+      | s AS (
+      |  SELECT *, sum(new_session) OVER (
+      |    PARTITION BY user_id ORDER BY ts_us, event_id
+      |    ROWS UNBOUNDED PRECEDING) AS session_seq FROM g)""".stripMargin
+
+  /** The rank-sum CTEs over lineitem's quantity, discount and tax, with
+    * `l_linestatus = 'O'` as the current slice: per-(column, value) tie
+    * counts h and the reference rows ranked below each value (c.rb). */
+  private val rankSumCtes =
+    """u AS (
+      |  SELECT 'l_quantity' AS cn, CAST(l_quantity AS DOUBLE) AS v, l_linestatus = 'O' AS t FROM lineitem
+      |   WHERE l_quantity IS NOT NULL AND l_linestatus IS NOT NULL
+      |  UNION ALL SELECT 'l_discount', CAST(l_discount AS DOUBLE), l_linestatus = 'O' FROM lineitem
+      |   WHERE l_discount IS NOT NULL AND l_linestatus IS NOT NULL
+      |  UNION ALL SELECT 'l_tax', CAST(l_tax AS DOUBLE), l_linestatus = 'O' FROM lineitem
+      |   WHERE l_tax IS NOT NULL AND l_linestatus IS NOT NULL),
+      | h AS (SELECT cn, v, CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS n_cur,
+      |   CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS n_ref FROM u GROUP BY 1, 2),
+      | c AS (SELECT cn, v, n_cur, n_ref,
+      |   CAST(coalesce(sum(n_ref) OVER (PARTITION BY cn ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_ref, 0) AS BIGINT) AS rb
+      |  FROM h)""".stripMargin
+
+  /** [[streamingFuzzyMatch]] in DuckDB: the same probes joined to the
+    * index within their 2-char block and length band, blocks over
+    * `maxBlockSize` entries dropped. */
+  private def fuzzyMatchOracle(maxBlockSize: Option[Int]): String = {
+    val index =
+      """ AS (SELECT CAST(p_partkey AS BIGINT) AS index_id, lower(p_name) AS index_s,
+        |   substr(lower(p_name), 1, 2) AS blk, CAST(len(p_name) AS BIGINT) AS l FROM part)"""
+    val ix = maxBlockSize.fold("ix" + index) { cap =>
+      s"""ix0$index,
+         | keep AS (SELECT blk FROM ix0 GROUP BY blk HAVING count(*) <= $cap),
+         | ix AS (SELECT ix0.index_id, ix0.index_s, ix0.blk, ix0.l FROM ix0 JOIN keep USING (blk))"""
+    }
+    s"""WITH $ix,
+       | pr AS (SELECT CAST(p_partkey + 1000000 AS BIGINT) AS id,
+       |   substr(lower(p_name), 1, 2) || substr(lower(p_name), 4) AS s
+       |  FROM part WHERE p_partkey % 5 = 0),
+       | pb AS (SELECT id, s, substr(s, 1, 2) AS blk, CAST(len(s) AS BIGINT) AS l FROM pr)
+       | SELECT pb.id, ix.index_id, pb.s, ix.index_s,
+       |  CAST(levenshtein(pb.s, ix.index_s) AS BIGINT) AS dist
+       | FROM pb JOIN ix ON ix.blk = pb.blk AND abs(pb.l - ix.l) <= 1
+       | WHERE levenshtein(pb.s, ix.index_s) <= 1
+       | ORDER BY id, index_id""".stripMargin.replaceAll("\n", " ")
+  }
+
+  /** The tail of [[HtmlExtract.visibleText]] in DuckDB: the five named
+    * entities of `html` decoded, whitespace runs collapsed, trimmed;
+    * `indent` pads the continuation lines. */
+  private def entityDecodeSql(html: String, indent: String = "    "): String =
+    s"""trim(regexp_replace(replace(replace(replace(replace(replace(
+       |$indent$html,
+       |$indent'&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
+       |$indent'\\s+', ' ', 'g'))""".stripMargin
+
+  /** [[HtmlExtract.visibleText]] of column `col` in DuckDB: tags become
+    * spaces, then [[entityDecodeSql]]. */
+  private def visibleTextSql(col: String, indent: String = "    "): String =
+    entityDecodeSql(s"regexp_replace($col, '<[^>]*>', ' ', 'g')", indent)
+
   /** (table, column) pairs whose distinct counts sit far inside HLL coupon
     * range — estimates are exact there. */
   private val lowCardCols = Seq(
@@ -1039,22 +1325,9 @@ object StandardQueries {
       val parts = new Profiler()
         .profileSegmented(li.select((F.col("__part") +: liNumeric.map(F.col)): _*), Seq("__part"))
       val merged = parts.values.reduce(_ merge _)
-      import s.implicits._
-      liNumeric.sorted.map { c =>
-        val v = merged.columns(c)
-        val d = v.distribution.get
-        (c, v.counts.get.n, v.counts.get.nulls, d.n, d.min.get, d.max.get)
-      }.toDF("col_name", "n", "nulls", "present", "vmin", "vmax").orderBy("col_name")
+      liNumericFields(s, merged)
     },
-    Some {
-      liNumeric.sorted.map { c =>
-        s"""SELECT '$c' AS col_name, count(*) AS n,
-           | count(*) FILTER (WHERE $c IS NULL) AS nulls,
-           | count(*) FILTER (WHERE $c IS NOT NULL AND NOT isnan(CAST($c AS DOUBLE))) AS present,
-           | CAST(min($c) AS DOUBLE) AS vmin, CAST(max($c) AS DOUBLE) AS vmax
-           | FROM lineitem""".stripMargin.replaceAll("\n", " ")
-      }.mkString("", " UNION ALL ", " ORDER BY col_name")
-    })
+    Some(liNumericFieldsOracle))
 
   private def qFullProfileSummary = Q(
     (s, dir) => new Profiler().summaryDF(t(s, dir, "lineitem")),
@@ -1137,22 +1410,9 @@ object StandardQueries {
         store.write(view, "lineitem", day0 + key.head.toLong * 86400000L)
       }
       val merged = store.readMerged("lineitem", day0, day0 + 2 * 86400000L)
-      import s.implicits._
-      liNumeric.sorted.map { c =>
-        val v = merged.columns(c)
-        val d = v.distribution.get
-        (c, v.counts.get.n, v.counts.get.nulls, d.n, d.min.get, d.max.get)
-      }.toDF("col_name", "n", "nulls", "present", "vmin", "vmax").orderBy("col_name")
+      liNumericFields(s, merged)
     },
-    Some {
-      liNumeric.sorted.map { c =>
-        s"""SELECT '$c' AS col_name, count(*) AS n,
-           | count(*) FILTER (WHERE $c IS NULL) AS nulls,
-           | count(*) FILTER (WHERE $c IS NOT NULL AND NOT isnan(CAST($c AS DOUBLE))) AS present,
-           | CAST(min($c) AS DOUBLE) AS vmin, CAST(max($c) AS DOUBLE) AS vmax
-           | FROM lineitem""".stripMargin.replaceAll("\n", " ")
-      }.mkString("", " UNION ALL ", " ORDER BY col_name")
-    })
+    Some(liNumericFieldsOracle))
 
   /** CSV source coverage (SURVEY §2.E: the reference profiles whatever
     * pandas reads — csv being the everyday case): nation round-trips
@@ -1195,22 +1455,9 @@ object StandardQueries {
         .values
         .map(v => Why1.fromBytes(Why1.toBytes(v)))
         .reduce(_ merge _)
-      import s.implicits._
-      liNumeric.sorted.map { c =>
-        val v = merged.columns(c)
-        val d = v.distribution.get
-        (c, v.counts.get.n, v.counts.get.nulls, d.n, d.min.get, d.max.get)
-      }.toDF("col_name", "n", "nulls", "present", "vmin", "vmax").orderBy("col_name")
+      liNumericFields(s, merged)
     },
-    Some {
-      liNumeric.sorted.map { c =>
-        s"""SELECT '$c' AS col_name, count(*) AS n,
-           | count(*) FILTER (WHERE $c IS NULL) AS nulls,
-           | count(*) FILTER (WHERE $c IS NOT NULL AND NOT isnan(CAST($c AS DOUBLE))) AS present,
-           | CAST(min($c) AS DOUBLE) AS vmin, CAST(max($c) AS DOUBLE) AS vmax
-           | FROM lineitem""".stripMargin.replaceAll("\n", " ")
-      }.mkString("", " UNION ALL ", " ORDER BY col_name")
-    })
+    Some(liNumericFieldsOracle))
 
   /** v0 migration (reference `migration/converters.py`): each partial
     * profile round-trips through the legacy `DatasetProfileMessageV0`
@@ -1224,22 +1471,9 @@ object StandardQueries {
         .values
         .map(v => graft.profile.MigrationV0.fromV0Bytes(graft.profile.MigrationV0.toV0Bytes(v)))
         .reduce(_ merge _)
-      import s.implicits._
-      liNumeric.sorted.map { c =>
-        val v = merged.columns(c)
-        val d = v.distribution.get
-        (c, v.counts.get.n, v.counts.get.nulls, d.n, d.min.get, d.max.get)
-      }.toDF("col_name", "n", "nulls", "present", "vmin", "vmax").orderBy("col_name")
+      liNumericFields(s, merged)
     },
-    Some {
-      liNumeric.sorted.map { c =>
-        s"""SELECT '$c' AS col_name, count(*) AS n,
-           | count(*) FILTER (WHERE $c IS NULL) AS nulls,
-           | count(*) FILTER (WHERE $c IS NOT NULL AND NOT isnan(CAST($c AS DOUBLE))) AS present,
-           | CAST(min($c) AS DOUBLE) AS vmin, CAST(max($c) AS DOUBLE) AS vmax
-           | FROM lineitem""".stripMargin.replaceAll("\n", " ")
-      }.mkString("", " UNION ALL ", " ORDER BY col_name")
-    })
+    Some(liNumericFieldsOracle))
 
   /** Segmented `WHY1` multi-profile file (DatasetSegmentHeader, reference
     * `segmented_dataset_profile_view.py`): segment profiles round-trip
@@ -2020,18 +2254,9 @@ object StandardQueries {
     * drift_hellinger_exact; the production sketch path over the same
     * algorithms is `drift_scores`. */
   private def qDriftKsExact = Q(
-    (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      import s.implicits._
-      val cols = Seq("l_extendedprice", "l_quantity")
-      val stats = DriftExact.ksStats(li, cols, F.col("l_orderkey") % 3 === 0)
-      cols.sorted.map { c =>
-        val (d, na, nb) = stats(c)
-        (c, d, na, nb)
-      }.toDF("col_name", "ks_stat", "n_target", "n_ref").orderBy("col_name")
-    },
+    (s, dir) => liDrift(s, dir, "ks_stat")(DriftExact.ksStats(_, _, _)).orderBy("col_name"),
     Some {
-      Seq("l_extendedprice", "l_quantity").sorted.map { c =>
+      liDriftCols.sorted.map { c =>
         s"""SELECT * FROM (
            | WITH g AS (SELECT $c AS v,
            |     sum(CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE 0 END) AS ca,
@@ -2057,38 +2282,16 @@ object StandardQueries {
     * the double sums are bit-identical — the `drift_chi2_stat`
     * convention. */
   private def qDriftHellingerExact = Q(
-    (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      import s.implicits._
-      val cols = Seq("l_extendedprice", "l_quantity")
-      val stats = DriftExact.hellingerStats(li, cols, F.col("l_orderkey") % 3 === 0)
-      cols.sorted.map { c =>
-        val (h, na, nb) = stats(c)
-        (c, h, na, nb)
-      }.toDF("col_name", "hellinger", "n_target", "n_ref").orderBy("col_name")
-    },
-    Some {
-      Seq("l_extendedprice", "l_quantity").sorted.map { c =>
-        s"""SELECT * FROM (
-           | WITH b AS (SELECT CAST($c AS DOUBLE) AS v,
-           |     CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE 0 END AS ta
-           |   FROM lineitem WHERE $c IS NOT NULL),
-           | mm AS (SELECT min(v) AS lo, max(v) AS hi FROM b),
-           | g AS (SELECT LEAST(CAST(floor((v - lo) / ((hi - lo) / 30)) AS BIGINT), 29) AS bin,
-           |     sum(ta) AS ca, sum(1 - ta) AS cb
-           |   FROM b, mm GROUP BY 1),
-           | t AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM g),
-           | d AS (SELECT bin,
-           |     sqrt(CAST(ca AS DOUBLE) / na) - sqrt(CAST(cb AS DOUBLE) / nb) AS dd
-           |   FROM g, t)
-           | SELECT '$c' AS col_name,
-           |   sqrt(sum(dd * dd ORDER BY bin) / 2) AS hellinger,
-           |   CAST((SELECT na FROM t) AS BIGINT) AS n_target,
-           |   CAST((SELECT nb FROM t) AS BIGINT) AS n_ref
-           | FROM d
-           |)""".stripMargin.replaceAll("\n", " ")
-      }.mkString("", " UNION ALL ", " ORDER BY col_name")
-    })
+    (s, dir) => liDrift(s, dir, "hellinger")(DriftExact.hellingerStats(_, _, _)).orderBy("col_name"),
+    Some(liBinnedDriftOracle(c =>
+      s"""d AS (SELECT bin,
+         |     sqrt(CAST(ca AS DOUBLE) / na) - sqrt(CAST(cb AS DOUBLE) / nb) AS dd
+         |   FROM g, t)
+         | SELECT '$c' AS col_name,
+         |   sqrt(sum(dd * dd ORDER BY bin) / 2) AS hellinger,
+         |   CAST((SELECT na FROM t) AS BIGINT) AS n_target,
+         |   CAST((SELECT nb FROM t) AS BIGINT) AS n_ref
+         | FROM d""")))
 
   /** Population Stability Index over the same exact 30-bin histogram as
     * `drift_hellinger_exact` ([[DriftExact.psiStats]]). Same two-scan /
@@ -2096,39 +2299,17 @@ object StandardQueries {
     * an ordered sum so the float accumulation order matches the
     * driver-side ascending-bin fold. */
   private def qDriftPsi = Q(
-    (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      import s.implicits._
-      val cols = Seq("l_extendedprice", "l_quantity")
-      val stats = DriftExact.psiStats(li, cols, F.col("l_orderkey") % 3 === 0)
-      cols.sorted.map { c =>
-        val (p, na, nb) = stats(c)
-        (c, p, na, nb)
-      }.toDF("col_name", "psi", "n_target", "n_ref").orderBy("col_name")
-    },
-    Some {
-      Seq("l_extendedprice", "l_quantity").sorted.map { c =>
-        s"""SELECT * FROM (
-           | WITH b AS (SELECT CAST($c AS DOUBLE) AS v,
-           |     CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE 0 END AS ta
-           |   FROM lineitem WHERE $c IS NOT NULL),
-           | mm AS (SELECT min(v) AS lo, max(v) AS hi FROM b),
-           | g AS (SELECT LEAST(CAST(floor((v - lo) / ((hi - lo) / 30)) AS BIGINT), 29) AS bin,
-           |     sum(ta) AS ca, sum(1 - ta) AS cb
-           |   FROM b, mm GROUP BY 1),
-           | t AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM g),
-           | d AS (SELECT bin,
-           |     GREATEST(CAST(ca AS DOUBLE) / na, 0.0001) AS pa,
-           |     GREATEST(CAST(cb AS DOUBLE) / nb, 0.0001) AS pb
-           |   FROM g, t)
-           | SELECT '$c' AS col_name,
-           |   sum((pa - pb) * ln(pa / pb) ORDER BY bin) AS psi,
-           |   CAST((SELECT na FROM t) AS BIGINT) AS n_target,
-           |   CAST((SELECT nb FROM t) AS BIGINT) AS n_ref
-           | FROM d
-           |)""".stripMargin.replaceAll("\n", " ")
-      }.mkString("", " UNION ALL ", " ORDER BY col_name")
-    })
+    (s, dir) => liDrift(s, dir, "psi")(DriftExact.psiStats(_, _, _)).orderBy("col_name"),
+    Some(liBinnedDriftOracle(c =>
+      s"""d AS (SELECT bin,
+         |     GREATEST(CAST(ca AS DOUBLE) / na, 0.0001) AS pa,
+         |     GREATEST(CAST(cb AS DOUBLE) / nb, 0.0001) AS pb
+         |   FROM g, t)
+         | SELECT '$c' AS col_name,
+         |   sum((pa - pb) * ln(pa / pb) ORDER BY bin) AS psi,
+         |   CAST((SELECT na FROM t) AS BIGINT) AS n_target,
+         |   CAST((SELECT nb FROM t) AS BIGINT) AS n_ref
+         | FROM d""")))
 
   /** Exact Jensen–Shannon divergence ([[DriftExact.jsdStats]]) over the
     * PSI query's fixed 30-bin layout and slice split — the symmetric,
@@ -2136,82 +2317,38 @@ object StandardQueries {
     * bins, probabilities and the ascending-bin `acc += ta + tb` fold
     * with the 1e-9 ln floor. */
   private def qDriftJsd = Q(
-    (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      import s.implicits._
-      val cols = Seq("l_extendedprice", "l_quantity")
-      val stats = DriftExact.jsdStats(li, cols, F.col("l_orderkey") % 3 === 0)
-      cols.sorted.map { c =>
-        val (j, na, nb) = stats(c)
-        (c, j, na, nb)
-      }.toDF("col_name", "jsd", "n_target", "n_ref").orderBy("col_name")
-    },
-    Some {
-      Seq("l_extendedprice", "l_quantity").sorted.map { c =>
-        s"""SELECT * FROM (
-           | WITH b AS (SELECT CAST($c AS DOUBLE) AS v,
-           |     CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE 0 END AS ta
-           |   FROM lineitem WHERE $c IS NOT NULL),
-           | mm AS (SELECT min(v) AS lo, max(v) AS hi FROM b),
-           | g AS (SELECT LEAST(CAST(floor((v - lo) / ((hi - lo) / 30)) AS BIGINT), 29) AS bin,
-           |     sum(ta) AS ca, sum(1 - ta) AS cb
-           |   FROM b, mm GROUP BY 1),
-           | t AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM g),
-           | d AS (SELECT bin, CAST(ca AS DOUBLE) / na AS pa, CAST(cb AS DOUBLE) / nb AS pb FROM g, t),
-           | j AS (SELECT bin,
-           |     (CASE WHEN pa > 0 THEN 0.5 * (pa * (floor(ln(pa / ((pa + pb) / 2)) * 1000000000.0) / 1000000000.0)) ELSE 0.0 END)
-           |   + (CASE WHEN pb > 0 THEN 0.5 * (pb * (floor(ln(pb / ((pa + pb) / 2)) * 1000000000.0) / 1000000000.0)) ELSE 0.0 END) AS term
-           |   FROM d)
-           | SELECT '$c' AS col_name,
-           |   (SELECT sum(term ORDER BY bin) FROM j) AS jsd,
-           |   CAST((SELECT na FROM t) AS BIGINT) AS n_target,
-           |   CAST((SELECT nb FROM t) AS BIGINT) AS n_ref
-           |)""".stripMargin.replaceAll("\n", " ")
-      }.mkString("", " UNION ALL ", " ORDER BY col_name")
-    })
+    (s, dir) => liDrift(s, dir, "jsd")(DriftExact.jsdStats(_, _, _)).orderBy("col_name"),
+    Some(liBinnedDriftOracle(c =>
+      s"""d AS (SELECT bin, CAST(ca AS DOUBLE) / na AS pa, CAST(cb AS DOUBLE) / nb AS pb FROM g, t),
+         | j AS (SELECT bin,
+         |     (CASE WHEN pa > 0 THEN 0.5 * (pa * (floor(ln(pa / ((pa + pb) / 2)) * 1000000000.0) / 1000000000.0)) ELSE 0.0 END)
+         |   + (CASE WHEN pb > 0 THEN 0.5 * (pb * (floor(ln(pb / ((pa + pb) / 2)) * 1000000000.0) / 1000000000.0)) ELSE 0.0 END) AS term
+         |   FROM d)
+         | SELECT '$c' AS col_name,
+         |   (SELECT sum(term ORDER BY bin) FROM j) AS jsd,
+         |   CAST((SELECT na FROM t) AS BIGINT) AS n_target,
+         |   CAST((SELECT nb FROM t) AS BIGINT) AS n_ref""")))
 
   /** Exact normalized grid EMD ([[DriftExact.emdStats]]) on the PSI
     * query's layout: integer cross-multiplied CDF gaps summed over all
     * 30 bins (empty bins included), one final division — no float
     * caveats at all. */
   private def qDriftEmd = Q(
-    (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      import s.implicits._
-      val cols = Seq("l_extendedprice", "l_quantity")
-      val stats = DriftExact.emdStats(li, cols, F.col("l_orderkey") % 3 === 0)
-      cols.sorted.map { c =>
-        val (e, na, nb) = stats(c)
-        (c, e, na, nb)
-      }.toDF("col_name", "emd", "n_target", "n_ref").orderBy("col_name")
-    },
-    Some {
-      Seq("l_extendedprice", "l_quantity").sorted.map { c =>
-        s"""SELECT * FROM (
-           | WITH b AS (SELECT CAST($c AS DOUBLE) AS v,
-           |     CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE 0 END AS ta
-           |   FROM lineitem WHERE $c IS NOT NULL),
-           | mm AS (SELECT min(v) AS lo, max(v) AS hi FROM b),
-           | g AS (SELECT LEAST(CAST(floor((v - lo) / ((hi - lo) / 30)) AS BIGINT), 29) AS bin,
-           |     sum(ta) AS ca, sum(1 - ta) AS cb
-           |   FROM b, mm GROUP BY 1),
-           | t AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM g),
-           | bb AS (SELECT unnest(range(0, 30)) AS bin),
-           | d AS (SELECT bb.bin AS bin, COALESCE(g.ca, 0) AS ca, COALESCE(g.cb, 0) AS cb
-           |   FROM bb LEFT JOIN g ON bb.bin = g.bin),
-           | cc AS (SELECT bin,
-           |     sum(ca) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cuma,
-           |     sum(cb) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cumb
-           |   FROM d),
-           | s AS (SELECT sum(abs(cuma * (SELECT nb FROM t) - cumb * (SELECT na FROM t))) AS acc FROM cc)
-           | SELECT '$c' AS col_name,
-           |   CAST(acc AS DOUBLE) / (CAST((SELECT na FROM t) AS DOUBLE) * CAST((SELECT nb FROM t) AS DOUBLE) * 30.0) AS emd,
-           |   CAST((SELECT na FROM t) AS BIGINT) AS n_target,
-           |   CAST((SELECT nb FROM t) AS BIGINT) AS n_ref
-           | FROM s
-           |)""".stripMargin.replaceAll("\n", " ")
-      }.mkString("", " UNION ALL ", " ORDER BY col_name")
-    })
+    (s, dir) => liDrift(s, dir, "emd")(DriftExact.emdStats(_, _, _)).orderBy("col_name"),
+    Some(liBinnedDriftOracle(c =>
+      s"""bb AS (SELECT unnest(range(0, 30)) AS bin),
+         | d AS (SELECT bb.bin AS bin, COALESCE(g.ca, 0) AS ca, COALESCE(g.cb, 0) AS cb
+         |   FROM bb LEFT JOIN g ON bb.bin = g.bin),
+         | cc AS (SELECT bin,
+         |     sum(ca) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cuma,
+         |     sum(cb) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cumb
+         |   FROM d),
+         | s AS (SELECT sum(abs(cuma * (SELECT nb FROM t) - cumb * (SELECT na FROM t))) AS acc FROM cc)
+         | SELECT '$c' AS col_name,
+         |   CAST(acc AS DOUBLE) / (CAST((SELECT na FROM t) AS DOUBLE) * CAST((SELECT nb FROM t) AS DOUBLE) * 30.0) AS emd,
+         |   CAST((SELECT na FROM t) AS BIGINT) AS n_target,
+         |   CAST((SELECT nb FROM t) AS BIGINT) AS n_ref
+         | FROM s""")))
 
   /** Tukey-fence outlier counts per column
     * ([[graft.analysis.Outliers.iqrOutliers]]); quartiles via the
@@ -2243,15 +2380,7 @@ object StandardQueries {
     * takes the role the column name plays in `drift_ks_exact`. Integer
     * numerator until one division ⇒ bit-exact oracle. */
   private def qDriftKsSegmented = Q(
-    (s, dir) => {
-      import s.implicits._
-      val stats = DriftExact.ksStatsByKey(
-        events(s, dir), F.col("event_type"), "value",
-        F.col("event_id") % 3 === 0)
-      stats.toSeq.sortBy(_._1).map { case (seg, (d, na, nb)) =>
-        (seg, d, na, nb)
-      }.toDF("segment", "ks_stat", "n_target", "n_ref").orderBy("segment")
-    },
+    (s, dir) => segmentDrift(s, dir, "ks_stat")(DriftExact.ksStatsByKey(_, _, _, _)).orderBy("segment"),
     Some("""WITH g AS (SELECT event_type AS seg, value AS v,
            |    sum(CASE WHEN event_id % 3 = 0 THEN 1 ELSE 0 END) AS ca,
            |    sum(CASE WHEN event_id % 3 <> 0 THEN 1 ELSE 0 END) AS cb
@@ -2272,27 +2401,11 @@ object StandardQueries {
     * scan for all segments. psi rounded to 8 on both sides (ln() ulp
     * parity, as in the other PSI queries). */
   private def qDriftPsiSegmented = Q(
-    (s, dir) => {
-      import s.implicits._
-      val stats = DriftExact.psiStatsByKey(
-        events(s, dir), F.col("event_type"), "value",
-        F.col("event_id") % 3 === 0)
-      stats.toSeq.sortBy(_._1).map { case (seg, (p, na, nb)) =>
-        (seg, p, na, nb)
-      }.toDF("segment", "psi", "n_target", "n_ref")
-        .select(F.col("segment"), F.round(F.col("psi"), 8).as("psi"),
-          F.col("n_target"), F.col("n_ref"))
-        .orderBy("segment")
-    },
-    Some("""WITH b AS (SELECT event_type AS seg, CAST(value AS DOUBLE) AS v,
-           |   CASE WHEN event_id % 3 = 0 THEN 1 ELSE 0 END AS ta
-           |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-           | mm AS (SELECT seg, min(v) AS lo, max(v) AS hi FROM b GROUP BY 1),
-           | p AS (SELECT seg, lo, CASE WHEN hi > lo THEN (hi - lo)/30 ELSE 1.0 END AS wd FROM mm),
-           | g AS (SELECT b.seg, LEAST(CAST(floor((v - lo)/wd) AS BIGINT), 29) AS bin,
-           |   sum(ta) AS ca, sum(1 - ta) AS cb
-           |  FROM b JOIN p ON b.seg = p.seg GROUP BY 1, 2),
-           | t AS (SELECT seg, sum(ca) AS na, sum(cb) AS nb FROM g GROUP BY 1),
+    (s, dir) => segmentDrift(s, dir, "psi")(DriftExact.psiStatsByKey(_, _, _, _))
+      .select(F.col("segment"), F.round(F.col("psi"), 8).as("psi"),
+        F.col("n_target"), F.col("n_ref"))
+      .orderBy("segment"),
+    Some(s"""WITH $segmentBinnedCtes,
            | d AS (SELECT g.seg, bin,
            |   GREATEST(CAST(ca AS DOUBLE)/na, 0.0001) AS pa,
            |   GREATEST(CAST(cb AS DOUBLE)/nb, 0.0001) AS pb, na, nb
@@ -2306,25 +2419,8 @@ object StandardQueries {
     * segmented-PSI layout; quantized ln ⇒ exact oracle match, no
     * rounding. */
   private def qDriftJsdSegmented = Q(
-    (s, dir) => {
-      import s.implicits._
-      val stats = DriftExact.jsdStatsByKey(
-        events(s, dir), F.col("event_type"), "value",
-        F.col("event_id") % 3 === 0)
-      stats.toSeq.sortBy(_._1).map { case (seg, (j, na, nb)) =>
-        (seg, j, na, nb)
-      }.toDF("segment", "jsd", "n_target", "n_ref")
-        .orderBy("segment")
-    },
-    Some("""WITH b AS (SELECT event_type AS seg, CAST(value AS DOUBLE) AS v,
-           |   CASE WHEN event_id % 3 = 0 THEN 1 ELSE 0 END AS ta
-           |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-           | mm AS (SELECT seg, min(v) AS lo, max(v) AS hi FROM b GROUP BY 1),
-           | p AS (SELECT seg, lo, CASE WHEN hi > lo THEN (hi - lo)/30 ELSE 1.0 END AS wd FROM mm),
-           | g AS (SELECT b.seg, LEAST(CAST(floor((v - lo)/wd) AS BIGINT), 29) AS bin,
-           |   sum(ta) AS ca, sum(1 - ta) AS cb
-           |  FROM b JOIN p ON b.seg = p.seg GROUP BY 1, 2),
-           | t AS (SELECT seg, sum(ca) AS na, sum(cb) AS nb FROM g GROUP BY 1),
+    (s, dir) => segmentDrift(s, dir, "jsd")(DriftExact.jsdStatsByKey(_, _, _, _)).orderBy("segment"),
+    Some(s"""WITH $segmentBinnedCtes,
            | d AS (SELECT g.seg, bin,
            |   CAST(ca AS DOUBLE)/na AS pa, CAST(cb AS DOUBLE)/nb AS pb, na, nb
            |  FROM g JOIN t ON g.seg = t.seg)
@@ -2338,25 +2434,8 @@ object StandardQueries {
     * the segmented-PSI layout — integer CDF gaps per segment envelope,
     * empty bins included. */
   private def qDriftEmdSegmented = Q(
-    (s, dir) => {
-      import s.implicits._
-      val stats = DriftExact.emdStatsByKey(
-        events(s, dir), F.col("event_type"), "value",
-        F.col("event_id") % 3 === 0)
-      stats.toSeq.sortBy(_._1).map { case (seg, (e, na, nb)) =>
-        (seg, e, na, nb)
-      }.toDF("segment", "emd", "n_target", "n_ref")
-        .orderBy("segment")
-    },
-    Some("""WITH b AS (SELECT event_type AS seg, CAST(value AS DOUBLE) AS v,
-           |   CASE WHEN event_id % 3 = 0 THEN 1 ELSE 0 END AS ta
-           |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-           | mm AS (SELECT seg, min(v) AS lo, max(v) AS hi FROM b GROUP BY 1),
-           | p AS (SELECT seg, lo, CASE WHEN hi > lo THEN (hi - lo)/30 ELSE 1.0 END AS wd FROM mm),
-           | g AS (SELECT b.seg, LEAST(CAST(floor((v - lo)/wd) AS BIGINT), 29) AS bin,
-           |   sum(ta) AS ca, sum(1 - ta) AS cb
-           |  FROM b JOIN p ON b.seg = p.seg GROUP BY 1, 2),
-           | t AS (SELECT seg, sum(ca) AS na, sum(cb) AS nb FROM g GROUP BY 1),
+    (s, dir) => segmentDrift(s, dir, "emd")(DriftExact.emdStatsByKey(_, _, _, _)).orderBy("segment"),
+    Some(s"""WITH $segmentBinnedCtes,
            | grid AS (SELECT t.seg, b.range AS bin FROM t, range(30) b),
            | d AS (SELECT grid.seg, grid.bin, COALESCE(g.ca, 0) AS ca, COALESCE(g.cb, 0) AS cb
            |  FROM grid LEFT JOIN g ON grid.seg = g.seg AND grid.bin = g.bin),
@@ -2441,22 +2520,12 @@ object StandardQueries {
     * quantile_cont, so the oracle rebuilds the identical bins). psi
     * rounded to 8 on both sides to absorb 1-ulp ln() divergence. */
   private def qDriftPsiQuantile = Q(
-    (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      import s.implicits._
-      val cols = Seq("l_extendedprice", "l_quantity")
-      val stats = DriftExact.psiQuantileStats(
-        li, cols, F.col("l_orderkey") % 3 === 0)
-      cols.sorted.map { c =>
-        val (p, na, nb) = stats(c)
-        (c, p, na, nb)
-      }.toDF("col_name", "psi", "n_target", "n_ref")
-        .select(F.col("col_name"), F.round(F.col("psi"), 8).as("psi"),
-          F.col("n_target"), F.col("n_ref"))
-        .orderBy("col_name")
-    },
+    (s, dir) => liDrift(s, dir, "psi")(DriftExact.psiQuantileStats(_, _, _))
+      .select(F.col("col_name"), F.round(F.col("psi"), 8).as("psi"),
+        F.col("n_target"), F.col("n_ref"))
+      .orderBy("col_name"),
     Some {
-      Seq("l_extendedprice", "l_quantity").sorted.map { c =>
+      liDriftCols.sorted.map { c =>
         val edges = (1 to 9).map(i =>
           s"quantile_cont(v, 0.$i) AS e$i").mkString(", ")
         val binSum = (1 to 9).map(i =>
@@ -2577,9 +2646,7 @@ object StandardQueries {
       val sigs = (0 until 4).map { j =>
         s"list_min(list_transform(g, x -> md5('$j:' || x))) AS sig$j"
       }.mkString(", ")
-      s"""WITH tok AS (
-         |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), w -> len(w) > 0) AS w
-         |  FROM documents),
+      s"""WITH $tokCte,
          | sh AS (SELECT doc_id, list_distinct([array_to_string(w[i:i+2], ' ')
          |   for i in range(1, greatest(len(w) - 1, 1))]) AS g FROM tok)
          | SELECT doc_id, $sigs FROM sh ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")
@@ -2610,9 +2677,7 @@ object StandardQueries {
       val bits = (0 until 16).map { b =>
         s"CASE WHEN COALESCE(list_sum(list_transform(w, t -> CASE WHEN substr(md5('$b:' || t), 1, 1) >= '8' THEN 1 ELSE -1 END)), 0) > 0 THEN ${1L << b} ELSE 0 END"
       }.mkString(" + ")
-      s"""WITH tok AS (
-         |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), w -> len(w) > 0) AS w
-         |  FROM documents)
+      s"""WITH $tokCte
          | SELECT doc_id, CAST($bits AS BIGINT) AS simhash_md5 FROM tok ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")
     })
 
@@ -2627,13 +2692,9 @@ object StandardQueries {
           Dedup.jaccard(F.col("sha"), F.col("shb")).as("jaccard"))
         .orderBy("a")
     },
-    Some("""WITH sh AS (
-           |  SELECT doc_id,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents))
+    Some(s"""WITH ${shingleCte()}
            | SELECT a.doc_id AS a, b.doc_id AS b,
-           |  CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS jaccard
+           |  $jaccardSql AS jaccard
            | FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1 ORDER BY a""".stripMargin.replaceAll("\n", " ")))
 
   /** Flagship near-dup pipeline (LSH banding + exact-Jaccard verify).
@@ -2653,17 +2714,7 @@ object StandardQueries {
         numPerm = 64, bands = 32, threshold = 0.5)
         .orderBy("a", "b")
     },
-    Some("""WITH sh AS (
-           |  SELECT doc_id,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents))
-           | SELECT a.doc_id AS a, b.doc_id AS b,
-           |  CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS jaccard
-           | FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-           | WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |  AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5
-           | ORDER BY a, b""".stripMargin.replaceAll("\n", " ")))
+    Some(nearDupPairsOracle("", "b.doc_id > a.doc_id")))
 
   /** Train/eval split-leakage audit
     * ([[graft.pipeline.Decontaminate.splitLeakage]]): the corpus under
@@ -2681,21 +2732,15 @@ object StandardQueries {
       Decontaminate.splitLeakage(docs, "text", "doc_id", "split")
         .orderBy("a", "b")
     },
-    Some("""WITH sp AS (SELECT doc_id,
+    Some(s"""WITH sp AS (SELECT doc_id,
            |   CASE WHEN h < 'cccccccd' THEN 'train'
            |        WHEN h < 'e6666666' THEN 'val'
            |        ELSE 'test' END AS split
            |  FROM (SELECT doc_id, substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8) AS h FROM documents)),
-           | sh AS (
-           |  SELECT doc_id,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents)),
+           | ${shingleCte()},
            | pr AS (SELECT a.doc_id AS a, b.doc_id AS b,
-           |   CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS jaccard
-           |  FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-           |  WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |   AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5)
+           |   $jaccardSql AS jaccard
+           |  $nearDupJoinSql)
            | SELECT pr.a, pr.b, pr.jaccard, sa.split AS split_a, sb.split AS split_b
            | FROM pr JOIN sp sa ON pr.a = sa.doc_id JOIN sp sb ON pr.b = sb.doc_id
            | WHERE sa.split <> sb.split ORDER BY a, b""".stripMargin.replaceAll("\n", " ")))
@@ -2715,17 +2760,7 @@ object StandardQueries {
         numPerm = 64, bands = 32, threshold = 0.5)
         .orderBy("a", "b")
     },
-    Some("""WITH sh AS (
-           |  SELECT doc_id, source,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, source, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents))
-           | SELECT a.doc_id AS a, b.doc_id AS b,
-           |  CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS jaccard
-           | FROM sh a JOIN sh b ON a.source = 'src1' AND b.source <> 'src1'
-           | WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |  AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5
-           | ORDER BY a, b""".stripMargin.replaceAll("\n", " ")))
+    Some(nearDupPairsOracle(", source", "a.source = 'src1' AND b.source <> 'src1'")))
 
   /** Near-dup CLUSTERS: the pair set of `dedup_near` closed under
     * transitivity (alternating large-star/small-star — see
@@ -2741,22 +2776,7 @@ object StandardQueries {
         numPerm = 64, bands = 32, threshold = 0.5)
         .orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE sh AS (
-           |  SELECT doc_id,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents)),
-           | pairs AS (
-           |  SELECT a.doc_id AS a, b.doc_id AS b
-           |  FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-           |  WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |   AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5),
-           | edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-           | r AS (
-           |   SELECT u, u AS m FROM (SELECT DISTINCT u FROM edges)
-           |   UNION
-           |   SELECT e.u, r.m FROM edges e JOIN r ON e.v = r.u),
-           | comp AS (SELECT u AS id, min(m) AS component FROM r GROUP BY u),
+    Some(s"""WITH RECURSIVE ${nearDupComponentsCte()},
            | sizes AS (SELECT component, count(*) AS cluster_size FROM comp GROUP BY component)
            | SELECT c.id AS doc_id, c.component, s.cluster_size, c.id = c.component AS keep
            | FROM comp c JOIN sizes s USING (component) ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")))
@@ -2773,22 +2793,7 @@ object StandardQueries {
         numPerm = 64, bands = 32, threshold = 0.5)
         .orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE sh AS (
-           |  SELECT doc_id,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents)),
-           | pairs AS (
-           |  SELECT a.doc_id AS a, b.doc_id AS b
-           |  FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-           |  WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |   AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5),
-           | edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-           | r AS (
-           |   SELECT u, u AS m FROM (SELECT DISTINCT u FROM edges)
-           |   UNION
-           |   SELECT e.u, r.m FROM edges e JOIN r ON e.v = r.u),
-           | comp AS (SELECT u AS id, min(m) AS component FROM r GROUP BY u),
+    Some(s"""WITH RECURSIVE ${nearDupComponentsCte()},
            | sizes AS (SELECT component, count(*) AS cluster_size FROM comp GROUP BY component)
            | SELECT c.id AS doc_id, c.component, s.cluster_size,
            |  CAST(d.n_chars AS DOUBLE) AS score,
@@ -2812,22 +2817,7 @@ object StandardQueries {
         numPerm = 64, bands = 32, threshold = 0.5)
         .select("doc_id", "source").orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE sh AS (
-           |  SELECT doc_id,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents)),
-           | pairs AS (
-           |  SELECT a.doc_id AS a, b.doc_id AS b
-           |  FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-           |  WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |   AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5),
-           | edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-           | r AS (
-           |   SELECT u, u AS m FROM (SELECT DISTINCT u FROM edges)
-           |   UNION
-           |   SELECT e.u, r.m FROM edges e JOIN r ON e.v = r.u),
-           | comp AS (SELECT u AS id, min(m) AS component FROM r GROUP BY u),
+    Some(s"""WITH RECURSIVE ${nearDupComponentsCte()},
            | keepers AS (
            |   SELECT c.id,
            |    row_number() OVER (PARTITION BY c.component
@@ -3072,26 +3062,11 @@ object StandardQueries {
         numPerm = 64, bands = 32, threshold = 0.5, maxBucketSize = 8)
         .orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE corpus AS (
+    Some(s"""WITH RECURSIVE corpus AS (
            |  SELECT doc_id, text FROM documents
            |  UNION ALL
            |  SELECT 1000000 + t.k AS doc_id, d.text FROM documents d, range(1, 31) t(k) WHERE d.doc_id = 0),
-           | sh AS (
-           |  SELECT doc_id,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM corpus)),
-           | pairs AS (
-           |  SELECT a.doc_id AS a, b.doc_id AS b
-           |  FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-           |  WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |   AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5),
-           | edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-           | r AS (
-           |   SELECT u, u AS m FROM (SELECT DISTINCT u FROM edges)
-           |   UNION
-           |   SELECT e.u, r.m FROM edges e JOIN r ON e.v = r.u),
-           | comp AS (SELECT u AS id, min(m) AS component FROM r GROUP BY u),
+           | ${nearDupComponentsCte("corpus")},
            | sizes AS (SELECT component, count(*) AS cluster_size FROM comp GROUP BY component)
            | SELECT c.id AS doc_id, c.component, s.cluster_size, c.id = c.component AS keep
            | FROM comp c JOIN sizes s USING (component) ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")))
@@ -3103,13 +3078,7 @@ object StandardQueries {
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     },
-    Some("""SELECT query_id, neighbor_id, rank FROM (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id DESC) AS rank
-           |  FROM embeddings q, embeddings c
-           |  WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
-           | WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin.replaceAll("\n", " ")))
+    Some(embeddingTopKOracle()))
 
   private def qEmbeddingIvf = Q(
     (s, dir) => {
@@ -3136,13 +3105,7 @@ object StandardQueries {
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     },
-    Some("""SELECT query_id, neighbor_id, rank FROM (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC, c.vec_id DESC) AS rank
-           |  FROM embeddings q, embeddings c
-           |  WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
-           | WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin.replaceAll("\n", " ")))
+    Some(embeddingTopKOracle()))
 
   /** PQ with EXHAUSTIVE re-rank (rerank >= corpus): every ADC candidate
     * survives to the exact-cosine re-scoring, so the result must equal
@@ -3160,13 +3123,7 @@ object StandardQueries {
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     },
-    Some("""SELECT query_id, neighbor_id, rank FROM (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC, c.vec_id DESC) AS rank
-           |  FROM embeddings q, embeddings c
-           |  WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
-           | WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin.replaceAll("\n", " ")))
+    Some(embeddingTopKOracle("::DOUBLE[]")))
 
   /** Composed IVF-PQ ([[Similarity.ivfPqTopK]]) with EXHAUSTIVE
     * probing AND re-rank (nprobe = numCentroids, rerank ≥ corpus): all
@@ -3186,13 +3143,7 @@ object StandardQueries {
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     },
-    Some("""SELECT query_id, neighbor_id, rank FROM (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           |   row_number() OVER (PARTITION BY q.vec_id
-           |     ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC, c.vec_id DESC) AS rank
-           |  FROM embeddings q, embeddings c
-           |  WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
-           | WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin.replaceAll("\n", " ")))
+    Some(embeddingTopKOracle("::DOUBLE[]")))
 
   /** IVF-PQ ANN AT INGESTION ([[Similarity.ivfPqStream]]): query
     * vectors arrive as a stream, the compressed index is static, and
@@ -3653,8 +3604,6 @@ object StandardQueries {
     },
     None)
 
-  private val punctSqlClass = """[.,;:!?''"()-]""".replace("''", "''")
-
   // --- shared DuckDB fragments for the text-analysis oracles ---
   /** Whitespace regex as a VALUE (plain-literal escape rules), so the
     * interpolated fragments below never re-process backslashes. */
@@ -3766,9 +3715,7 @@ object StandardQueries {
           F.col("top2_frac"), F.col("dup3_frac"))
         .orderBy("doc_id")
     },
-    Some("""WITH tok AS (
-           |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> len(w) > 0) AS w
-           |  FROM documents),
+    Some(s"""WITH $tokCte,
            | base AS (
            |  SELECT doc_id, len(w) AS nw, len(list_distinct(w)) AS nd,
            |   length(array_to_string(w, ' ')) AS norm_chars FROM tok),
@@ -3895,9 +3842,7 @@ object StandardQueries {
       // fixture docs run 20-90 words; drop the floor so both verdicts
       // and several distinct failure reasons appear in the output
       minWords = 30).orderBy("doc_id"),
-    Some("""WITH tok AS (
-           |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> len(w) > 0) AS w
-           |  FROM documents),
+    Some(s"""WITH $tokCte,
            | base AS (
            |  SELECT doc_id, len(w) AS nw,
            |   length(array_to_string(w, ' ')) AS norm_chars,
@@ -4580,14 +4525,7 @@ object StandardQueries {
       .select(F.col("doc_id"), F.col("pos").cast("long").as("pos"),
         F.col("n_copies"))
       .orderBy("doc_id", "pos"),
-    Some("""WITH tok AS (
-           |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> len(w) > 0) AS w
-           |  FROM documents),
-           | g AS (
-           |  SELECT doc_id, u.pos AS pos, u.gram AS gram FROM (
-           |   SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(w) - 4, 0)),
-           |     i -> struct_pack(pos := i, gram := array_to_string(w[i:i+4], ' ')))) AS u
-           |   FROM tok)),
+    Some(s"""WITH $spanGramCtes,
            | d AS (SELECT gram, count(*) AS n_copies FROM g GROUP BY gram HAVING count(*) > 1)
            | SELECT g.doc_id, CAST(g.pos AS BIGINT) AS pos, d.n_copies
            | FROM g JOIN d USING (gram) ORDER BY doc_id, pos""".stripMargin.replaceAll("\n", " ")))
@@ -4601,14 +4539,7 @@ object StandardQueries {
       .select(F.col("doc_id"), F.col("start_pos").cast("long").as("start_pos"),
         F.col("end_pos").cast("long").as("end_pos"), F.col("n_grams"))
       .orderBy("doc_id", "start_pos"),
-    Some("""WITH tok AS (
-           |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> len(w) > 0) AS w
-           |  FROM documents),
-           | g AS (
-           |  SELECT doc_id, u.pos AS pos, u.gram AS gram FROM (
-           |   SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(w) - 4, 0)),
-           |     i -> struct_pack(pos := i, gram := array_to_string(w[i:i+4], ' ')))) AS u
-           |   FROM tok)),
+    Some(s"""WITH $spanGramCtes,
            | d AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
            | f AS (SELECT g.doc_id, g.pos,
            |   g.pos - row_number() OVER (PARTITION BY g.doc_id ORDER BY g.pos) AS island
@@ -4628,14 +4559,7 @@ object StandardQueries {
   private def qDedupSpansApply = Q(
     (s, dir) => Dedup.cutDuplicateSpans(t(s, dir, "documents"), "text", "doc_id", n = 5)
       .orderBy("doc_id"),
-    Some("""WITH tok AS (
-           |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> len(w) > 0) AS w
-           |  FROM documents),
-           | g AS (
-           |  SELECT doc_id, u.pos AS pos, u.gram AS gram FROM (
-           |   SELECT doc_id, unnest(list_transform(generate_series(1, greatest(len(w) - 4, 0)),
-           |     i -> struct_pack(pos := i, gram := array_to_string(w[i:i+4], ' ')))) AS u
-           |   FROM tok)),
+    Some(s"""WITH $spanGramCtes,
            | d AS (SELECT gram, min(doc_id * 1000000 + pos) AS fk FROM g
            |   GROUP BY gram HAVING count(*) > 1),
            | nc AS (SELECT g.doc_id, g.pos FROM g JOIN d USING (gram)
@@ -4901,16 +4825,9 @@ object StandardQueries {
           F.col("session_seq"))
         .orderBy("event_id")
     },
-    Some("""WITH e AS (
+    Some(s"""WITH e AS (
            |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
-           | g AS (
-           |  SELECT *, CASE WHEN ts_us - lag(ts_us) OVER w IS NULL
-           |    OR ts_us - lag(ts_us) OVER w > 21600000000 THEN 1 ELSE 0 END AS new_session
-           |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-           | s AS (
-           |  SELECT *, sum(new_session) OVER (
-           |    PARTITION BY user_id ORDER BY ts_us, event_id
-           |    ROWS UNBOUNDED PRECEDING) AS session_seq FROM g),
+           | $sessionSeqCtes,
            | iv AS (SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
            |   min(ts_us) AS start_us, max(ts_us) AS end_us FROM s GROUP BY 1, 2)
            | SELECT e.event_id, e.user_id, e.ts_us, iv.session_seq
@@ -4929,17 +4846,10 @@ object StandardQueries {
       events(s, dir), "user_id", "ts", gapSeconds = 21600L,
       tieCol = "event_id", valueCol = "value", typeCol = "event_type")
       .orderBy("user_id", "session_seq"),
-    Some("""WITH e AS (
+    Some(s"""WITH e AS (
            |  SELECT user_id, event_id, event_type, value,
            |   epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
-           | g AS (
-           |  SELECT *, CASE WHEN ts_us - lag(ts_us) OVER w IS NULL
-           |    OR ts_us - lag(ts_us) OVER w > 21600000000 THEN 1 ELSE 0 END AS new_session
-           |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-           | s AS (
-           |  SELECT *, sum(new_session) OVER (
-           |    PARTITION BY user_id ORDER BY ts_us, event_id
-           |    ROWS UNBOUNDED PRECEDING) AS session_seq FROM g)
+           | $sessionSeqCtes
            | SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
            |  count(*) AS n_events, min(ts_us) AS start_us, max(ts_us) AS end_us,
            |  count(DISTINCT event_type) AS n_event_types,
@@ -4962,17 +4872,10 @@ object StandardQueries {
       Streams.toMemory(graft.streaming.SessionStream.sessions(sdf, gapSeconds = 21600L))
         .orderBy("user_id", "session_seq")
     },
-    Some("""WITH e AS (
+    Some(s"""WITH e AS (
            |  SELECT user_id, event_id, event_type, value,
            |   epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
-           | g AS (
-           |  SELECT *, CASE WHEN ts_us - lag(ts_us) OVER w IS NULL
-           |    OR ts_us - lag(ts_us) OVER w > 21600000000 THEN 1 ELSE 0 END AS new_session
-           |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-           | s AS (
-           |  SELECT *, sum(new_session) OVER (
-           |    PARTITION BY user_id ORDER BY ts_us, event_id
-           |    ROWS UNBOUNDED PRECEDING) AS session_seq FROM g),
+           | $sessionSeqCtes,
            | a AS (
            |  SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
            |   count(*) AS n_events, min(ts_us) AS start_us, max(ts_us) AS end_us,
@@ -5094,17 +4997,7 @@ object StandardQueries {
           .orderBy("a", "b")
       } finally index.unpersist(blocking = false)
     },
-    Some("""WITH sh AS (
-           |  SELECT doc_id, source,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, source, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents))
-           | SELECT a.doc_id AS a, b.doc_id AS b,
-           |  CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS jaccard
-           | FROM sh a JOIN sh b ON a.source = 'src1' AND b.source <> 'src1'
-           | WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |  AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5
-           | ORDER BY a, b""".stripMargin.replaceAll("\n", " ")))
+    Some(nearDupPairsOracle(", source", "a.source = 'src1' AND b.source <> 'src1'")))
 
   /** SLIDING-window stats (2h windows, 1h slide) — each event lands in
     * exactly two overlapping windows; the oracle replicates the window
@@ -5288,34 +5181,12 @@ object StandardQueries {
     * float op is IEEE-exact and the fold is ascending-bin, so the DuckDB
     * oracle matches bit-for-bit. */
   private def qStreamingDriftPsi = Q(
-    (s, dir) => {
-      val split = F.lit("2024-01-11").cast("timestamp")
-      val env = graft.streaming.DriftStream.referenceEnvelope(
-        events(s, dir).filter(F.col("ts") < split), "value", nBins = 30)
-      val sdf = st(s, dir, "events")
-        .transform(rebuildTs)
-      val counts = graft.streaming.DriftStream.windowedBinCounts(
-        sdf, "ts", "1 day", "value", env)
-      // round(8): Math.log and DuckDB's std::log disagree by 1 ulp on
-      // some arguments (~1e-18 on these psi magnitudes) — same parity
-      // trim as nlp_svd's residual
-      graft.streaming.DriftStream.psiPerWindow(Streams.toMemory(counts, "complete"), env)
-        .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
-          F.round(F.col("psi"), 8).as("psi"), F.col("n_target"))
-        .orderBy("window_start")
-    },
-    Some("""WITH e AS (SELECT CAST(value AS DOUBLE) AS v,
-           |   date_trunc('day', CAST(ts AS TIMESTAMP)) AS w, ts FROM events
-           |   WHERE value IS NOT NULL),
-           | mm AS (SELECT min(v) AS lo, max(v) AS hi, count(*) AS nr FROM e
-           |   WHERE ts < TIMESTAMP '2024-01-11'),
-           | p AS (SELECT lo, CASE WHEN hi > lo THEN (hi - lo)/30 ELSE 1.0 END AS wd, nr FROM mm),
-           | rb AS (SELECT LEAST(GREATEST(CAST(floor((v - lo)/wd) AS BIGINT), 0), 29) AS bin,
-           |   count(*) AS rc FROM e, p WHERE ts < TIMESTAMP '2024-01-11' GROUP BY 1),
-           | tb AS (SELECT w, LEAST(GREATEST(CAST(floor((v - lo)/wd) AS BIGINT), 0), 29) AS bin,
-           |   count(*) AS c FROM e, p GROUP BY 1, 2),
-           | wn AS (SELECT w, sum(c) AS nt FROM tb GROUP BY 1),
-           | grid AS (SELECT w, b.range AS bin FROM (SELECT DISTINCT w FROM tb), range(30) b),
+    // round(8): Math.log and DuckDB's std::log disagree by 1 ulp on
+    // some arguments (~1e-18 on these psi magnitudes) — same parity
+    // trim as nlp_svd's residual
+    (s, dir) => streamingDrift(s, dir, F.round(F.col("psi"), 8).as("psi"))(
+      graft.streaming.DriftStream.psiPerWindow(_, _)),
+    Some(s"""WITH $windowBinnedCtes,
            | terms AS (SELECT g.w, g.bin, wn.nt,
            |     GREATEST(CAST(COALESCE(tb.c, 0) AS DOUBLE) / wn.nt, 0.0001) AS pa,
            |     GREATEST(CAST(COALESCE(rb.rc, 0) AS DOUBLE) / p.nr, 0.0001) AS pb
@@ -5333,31 +5204,9 @@ object StandardQueries {
     * ln-floor makes every term bit-replayable, so the oracle matches
     * exactly rather than at 8 decimals. */
   private def qStreamingDriftJsd = Q(
-    (s, dir) => {
-      val split = F.lit("2024-01-11").cast("timestamp")
-      val env = graft.streaming.DriftStream.referenceEnvelope(
-        events(s, dir).filter(F.col("ts") < split), "value", nBins = 30)
-      val sdf = st(s, dir, "events")
-        .transform(rebuildTs)
-      val counts = graft.streaming.DriftStream.windowedBinCounts(
-        sdf, "ts", "1 day", "value", env)
-      graft.streaming.DriftStream.jsdPerWindow(Streams.toMemory(counts, "complete"), env)
-        .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
-          F.col("jsd"), F.col("n_target"))
-        .orderBy("window_start")
-    },
-    Some("""WITH e AS (SELECT CAST(value AS DOUBLE) AS v,
-           |   date_trunc('day', CAST(ts AS TIMESTAMP)) AS w, ts FROM events
-           |   WHERE value IS NOT NULL),
-           | mm AS (SELECT min(v) AS lo, max(v) AS hi, count(*) AS nr FROM e
-           |   WHERE ts < TIMESTAMP '2024-01-11'),
-           | p AS (SELECT lo, CASE WHEN hi > lo THEN (hi - lo)/30 ELSE 1.0 END AS wd, nr FROM mm),
-           | rb AS (SELECT LEAST(GREATEST(CAST(floor((v - lo)/wd) AS BIGINT), 0), 29) AS bin,
-           |   count(*) AS rc FROM e, p WHERE ts < TIMESTAMP '2024-01-11' GROUP BY 1),
-           | tb AS (SELECT w, LEAST(GREATEST(CAST(floor((v - lo)/wd) AS BIGINT), 0), 29) AS bin,
-           |   count(*) AS c FROM e, p GROUP BY 1, 2),
-           | wn AS (SELECT w, sum(c) AS nt FROM tb GROUP BY 1),
-           | grid AS (SELECT w, b.range AS bin FROM (SELECT DISTINCT w FROM tb), range(30) b),
+    (s, dir) => streamingDrift(s, dir, F.col("jsd"))(
+      graft.streaming.DriftStream.jsdPerWindow(_, _)),
+    Some(s"""WITH $windowBinnedCtes,
            | terms AS (SELECT g.w, g.bin, wn.nt,
            |     CAST(COALESCE(tb.c, 0) AS DOUBLE) / wn.nt AS pa,
            |     CAST(COALESCE(rb.rc, 0) AS DOUBLE) / p.nr AS pb
@@ -5375,31 +5224,9 @@ object StandardQueries {
     * stream and envelope — integer cross-multiplied CDF gaps, one final
     * division, zero float caveats. */
   private def qStreamingDriftEmd = Q(
-    (s, dir) => {
-      val split = F.lit("2024-01-11").cast("timestamp")
-      val env = graft.streaming.DriftStream.referenceEnvelope(
-        events(s, dir).filter(F.col("ts") < split), "value", nBins = 30)
-      val sdf = st(s, dir, "events")
-        .transform(rebuildTs)
-      val counts = graft.streaming.DriftStream.windowedBinCounts(
-        sdf, "ts", "1 day", "value", env)
-      graft.streaming.DriftStream.emdPerWindow(Streams.toMemory(counts, "complete"), env)
-        .select(F.unix_timestamp(F.col("window.start")).as("window_start"),
-          F.col("emd"), F.col("n_target"))
-        .orderBy("window_start")
-    },
-    Some("""WITH e AS (SELECT CAST(value AS DOUBLE) AS v,
-           |   date_trunc('day', CAST(ts AS TIMESTAMP)) AS w, ts FROM events
-           |   WHERE value IS NOT NULL),
-           | mm AS (SELECT min(v) AS lo, max(v) AS hi, count(*) AS nr FROM e
-           |   WHERE ts < TIMESTAMP '2024-01-11'),
-           | p AS (SELECT lo, CASE WHEN hi > lo THEN (hi - lo)/30 ELSE 1.0 END AS wd, nr FROM mm),
-           | rb AS (SELECT LEAST(GREATEST(CAST(floor((v - lo)/wd) AS BIGINT), 0), 29) AS bin,
-           |   count(*) AS rc FROM e, p WHERE ts < TIMESTAMP '2024-01-11' GROUP BY 1),
-           | tb AS (SELECT w, LEAST(GREATEST(CAST(floor((v - lo)/wd) AS BIGINT), 0), 29) AS bin,
-           |   count(*) AS c FROM e, p GROUP BY 1, 2),
-           | wn AS (SELECT w, sum(c) AS nt FROM tb GROUP BY 1),
-           | grid AS (SELECT w, b.range AS bin FROM (SELECT DISTINCT w FROM tb), range(30) b),
+    (s, dir) => streamingDrift(s, dir, F.col("emd"))(
+      graft.streaming.DriftStream.emdPerWindow(_, _)),
+    Some(s"""WITH $windowBinnedCtes,
            | cums AS (SELECT g.w, g.bin, wn.nt,
            |     sum(COALESCE(tb.c, 0)) OVER (PARTITION BY g.w ORDER BY g.bin ROWS UNBOUNDED PRECEDING) AS cuml,
            |     sum(COALESCE(rb.rc, 0)) OVER (PARTITION BY g.w ORDER BY g.bin ROWS UNBOUNDED PRECEDING) AS cumr
@@ -5831,9 +5658,7 @@ object StandardQueries {
       .select(F.col("doc_id"),
         F.explode(Dedup.winnowFingerprints(F.col("text"), 4, 4)).as("fp"))
       .orderBy("doc_id", "fp"),
-    Some("""WITH tok AS (
-           |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> len(w) > 0) AS w
-           |  FROM documents),
+    Some(s"""WITH $tokCte,
            | g AS (SELECT doc_id,
            |   list_transform(generate_series(1, greatest(len(w) - 3, 0)),
            |     i -> CAST('0x' || substr(md5(array_to_string(w[i:i+3], ' ')), 1, 15) AS BIGINT)) AS ghs
@@ -5857,22 +5682,7 @@ object StandardQueries {
       Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
       numPerm = 64, bands = 32, threshold = 0.5)
       .select("doc_id", "split_key", "split").orderBy("doc_id"),
-    Some("""WITH RECURSIVE sh AS (
-           |  SELECT doc_id,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents)),
-           | pairs AS (
-           |  SELECT a.doc_id AS a, b.doc_id AS b
-           |  FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-           |  WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |   AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5),
-           | edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-           | r AS (
-           |   SELECT u, u AS m FROM (SELECT DISTINCT u FROM edges)
-           |   UNION
-           |   SELECT e.u, r.m FROM edges e JOIN r ON e.v = r.u),
-           | comp AS (SELECT u AS id, min(m) AS component FROM r GROUP BY u),
+    Some(s"""WITH RECURSIVE ${nearDupComponentsCte()},
            | k AS (SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS split_key
            |   FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)
            | SELECT doc_id, split_key,
@@ -5890,9 +5700,7 @@ object StandardQueries {
       t(s, dir, "documents"), "text", "doc_id",
       n = 4, window = 4, minShared = 2, maxDocFreq = 100)
       .orderBy("a", "b"),
-    Some("""WITH tok AS (
-           |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> len(w) > 0) AS w
-           |  FROM documents),
+    Some(s"""WITH $tokCte,
            | g AS (SELECT doc_id,
            |   list_transform(generate_series(1, greatest(len(w) - 3, 0)),
            |     i -> CAST('0x' || substr(md5(array_to_string(w[i:i+3], ' ')), 1, 15) AS BIGINT)) AS ghs
@@ -5927,15 +5735,9 @@ object StandardQueries {
         .orderBy(F.col("rank").desc, F.col("id"))
     },
     Some {
-      val shPr = """sh AS (
-        |  SELECT doc_id,
-        |   list_distinct([array_to_string(words[i:i+2], ' ')
-        |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-        |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents)),
+      val shPr = s"""${shingleCte()},
         | pr AS (SELECT a.doc_id AS a, b.doc_id AS b
-        |  FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-        |  WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-        |   AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5)"""
+        |  $nearDupJoinSql)"""
       val iters = (1 to 3).map { k =>
         s"""c$k AS (SELECT e.dst AS id, sum(r.rank // d.outdeg) AS s
            | FROM e JOIN r${k - 1} r ON e.src = r.id JOIN deg d ON e.src = d.id GROUP BY 1),
@@ -6817,6 +6619,19 @@ object StandardQueries {
     F.lit("<p>Café: "), F.substring(F.col("text"), 1, 40),
     F.lit(" &amp; more</p>"))
 
+  /** Every WARC record of each document's `warc` bytes, one row each:
+    * doc_id, rec_idx and the record's header fields and payload. */
+  private def warcRecordRows(docs: DataFrame, warc: Column): DataFrame =
+    docs.select(F.col("doc_id"),
+        F.posexplode(graft.sources.Warc.warc_records(warc)).as(Seq("rec_idx", "r")))
+      .select(F.col("doc_id"), F.col("rec_idx"),
+        F.col("r.warc_type").as("warc_type"),
+        F.col("r.record_id").as("record_id"),
+        F.col("r.target_uri").as("target_uri"),
+        F.col("r.content_length").as("content_length"),
+        F.col("r.payload").as("payload"))
+      .orderBy("doc_id", "rec_idx")
+
   /** The same fixture in DuckDB (chr(13)||chr(10) spells CRLF). */
   private def warcSqlRecs: String =
     """WITH nl AS (SELECT chr(13) || chr(10) AS c),
@@ -6844,19 +6659,7 @@ object StandardQueries {
     * adversarial non-fixture shapes (truncation, overrun lengths,
     * garbage tails) are pinned in WarcSpec. */
   private def qWarcParse = Q(
-    (s, dir) => {
-      val docs = t(s, dir, "documents")
-      docs.select(F.col("doc_id"),
-          F.posexplode(graft.sources.Warc.warc_records(warcFixture))
-            .as(Seq("rec_idx", "r")))
-        .select(F.col("doc_id"), F.col("rec_idx"),
-          F.col("r.warc_type").as("warc_type"),
-          F.col("r.record_id").as("record_id"),
-          F.col("r.target_uri").as("target_uri"),
-          F.col("r.content_length").as("content_length"),
-          F.col("r.payload").as("payload"))
-        .orderBy("doc_id", "rec_idx")
-    },
+    (s, dir) => warcRecordRows(t(s, dir, "documents"), warcFixture),
     Some {
       s"""$warcSqlRecs
          | SELECT doc_id, rec_idx, warc_type, record_id, target_uri, content_length, payload
@@ -6883,10 +6686,7 @@ object StandardQueries {
     Some {
       s"""$warcSqlRecs
          | SELECT doc_id, target_uri,
-         |  trim(regexp_replace(replace(replace(replace(replace(replace(
-         |    regexp_replace(payload, '<[^>]*>', ' ', 'g'),
-         |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-         |    '\\s+', ' ', 'g')) AS text
+         |  ${visibleTextSql("payload")} AS text
          | FROM recs WHERE warc_type = 'response'
          | ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")
     })
@@ -6903,24 +6703,9 @@ object StandardQueries {
     (s, dir) => {
       val gz = F.concat(warcFixtureRecords.map(r =>
         graft.functions.Gzip.gzip_compress(r)): _*)
-      t(s, dir, "documents")
-        .select(F.col("doc_id"),
-          F.posexplode(graft.sources.Warc.warc_records(
-            graft.functions.Gzip.gzip_decompress(gz)))
-            .as(Seq("rec_idx", "r")))
-        .select(F.col("doc_id"), F.col("rec_idx"),
-          F.col("r.warc_type").as("warc_type"),
-          F.col("r.record_id").as("record_id"),
-          F.col("r.target_uri").as("target_uri"),
-          F.col("r.content_length").as("content_length"),
-          F.col("r.payload").as("payload"))
-        .orderBy("doc_id", "rec_idx")
+      warcRecordRows(t(s, dir, "documents"), graft.functions.Gzip.gzip_decompress(gz))
     },
-    Some {
-      s"""$warcSqlRecs
-         | SELECT doc_id, rec_idx, warc_type, record_id, target_uri, content_length, payload
-         | FROM recs ORDER BY doc_id, rec_idx""".stripMargin.replaceAll("\n", " ")
-    })
+    qWarcParse.oracle)
 
   /** BOUNDED-MEMORY WARC FILE INGESTION
     * ([[graft.sources.WarcFiles.readRecords]] — the file-scale front
@@ -7059,10 +6844,7 @@ object StandardQueries {
          |   substr(payload, strpos(payload, (SELECT s FROM sep)) + 4) AS body
          |  FROM recs)
          | SELECT doc_id, target_uri, status, content_type,
-         |  trim(regexp_replace(replace(replace(replace(replace(replace(
-         |    regexp_replace(body, '<[^>]*>', ' ', 'g'),
-         |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-         |    '\\s+', ' ', 'g')) AS text
+         |  ${visibleTextSql("body")} AS text
          | FROM sp ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")
     })
 
@@ -7110,10 +6892,7 @@ object StandardQueries {
          |  FROM documents)
          | SELECT doc_id, target_uri, 200 AS status,
          |  'chunked' AS transfer_encoding,
-         |  trim(regexp_replace(replace(replace(replace(replace(replace(
-         |    regexp_replace(body, '<[^>]*>', ' ', 'g'),
-         |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-         |    '\\s+', ' ', 'g')) AS text
+         |  ${visibleTextSql("body")} AS text
          | FROM orig ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")
     })
 
@@ -7160,10 +6939,7 @@ object StandardQueries {
          |   '<p>Café mañana: ' || substr(text, 1, 30) || '</p>' AS body
          |  FROM documents)
          | SELECT doc_id, 200 AS status, 'iso-8859-1' AS charset,
-         |  trim(regexp_replace(replace(replace(replace(replace(replace(
-         |    regexp_replace(body, '<[^>]*>', ' ', 'g'),
-         |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-         |    '\\s+', ' ', 'g')) AS text
+         |  ${visibleTextSql("body")} AS text
          | FROM orig ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")
     })
 
@@ -7239,14 +7015,8 @@ object StandardQueries {
          |   '<p>Chunk+gzip: ' || substr(text, 1, 25) || '</p>' AS b1
          |  FROM documents),
          | x AS (SELECT doc_id,
-         |  trim(regexp_replace(replace(replace(replace(replace(replace(
-         |    regexp_replace(b0, '<[^>]*>', ' ', 'g'),
-         |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-         |    '\\s+', ' ', 'g')) AS t0,
-         |  trim(regexp_replace(replace(replace(replace(replace(replace(
-         |    regexp_replace(b1, '<[^>]*>', ' ', 'g'),
-         |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-         |    '\\s+', ' ', 'g')) AS t1
+         |  ${visibleTextSql("b0")} AS t0,
+         |  ${visibleTextSql("b1")} AS t1
          |  FROM d)
          | SELECT doc_id, 0 AS rec_idx, 200 AS status, 'gzip' AS content_encoding, t0 AS text FROM x
          | UNION ALL SELECT doc_id, 1, 200, 'gzip', t1 FROM x
@@ -7298,14 +7068,8 @@ object StandardQueries {
          |   '<p>Bom café: ' || substr(text, 1, 20) || '</p>' AS b1
          |  FROM documents),
          | x AS (SELECT doc_id,
-         |  trim(regexp_replace(replace(replace(replace(replace(replace(
-         |    regexp_replace(b0, '<[^>]*>', ' ', 'g'),
-         |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-         |    '\\s+', ' ', 'g')) AS t0,
-         |  trim(regexp_replace(replace(replace(replace(replace(replace(
-         |    regexp_replace(b1, '<[^>]*>', ' ', 'g'),
-         |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-         |    '\\s+', ' ', 'g')) AS t1
+         |  ${visibleTextSql("b0")} AS t0,
+         |  ${visibleTextSql("b1")} AS t1
          |  FROM d)
          | SELECT doc_id, 0 AS rec_idx, 'utf-16le' AS charset, t0 AS text FROM x
          | UNION ALL SELECT doc_id, 1, 'utf-8', t1 FROM x
@@ -7442,10 +7206,7 @@ object StandardQueries {
        |    ELSE '<p>Café: ' || substr(text, 1, 40) || ' &amp; mirrored</p>' END AS html
        |  FROM documents),
        | x AS (SELECT doc_id, source,
-       |   trim(regexp_replace(replace(replace(replace(replace(replace(
-       |     regexp_replace(html, '<[^>]*>', ' ', 'g'),
-       |     '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-       |     '\\s+', ' ', 'g')) AS text
+       |   ${visibleTextSql("html", "     ")} AS text
        |  FROM d),
        | urls AS (
        |  SELECT text, 'http://cdn.' || source || '.example.com/p/' || doc_id AS url
@@ -7726,10 +7487,7 @@ object StandardQueries {
        |   unnest(list_transform(generate_series(1, len(segs)), i -> {'pos': i, 'seg': segs[i]})) AS s FROM sp),
        | sg2 AS (SELECT doc_id, source, s.pos AS pos, s.seg AS seg FROM sg),
        | f AS (SELECT doc_id, source, pos,
-       |   trim(regexp_replace(replace(replace(replace(replace(replace(
-       |     regexp_replace(seg, '<[^>]*>', ' ', 'g'),
-       |     '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-       |     '\\s+', ' ', 'g')) AS text,
+       |   ${visibleTextSql("seg", "     ")} AS text,
        |   regexp_extract_all(seg, '(?i)<a\\b[^>]*>(.*?)</a>', 1) AS links
        |  FROM sg2),
        | g AS (SELECT doc_id, source, pos, text,
@@ -7835,7 +7593,7 @@ object StandardQueries {
           HtmlExtract.visibleText(frag).as("text"))
         .orderBy("doc_id")
     },
-    Some("""WITH u AS (SELECT doc_id,
+    Some(s"""WITH u AS (SELECT doc_id,
            |   '<p>A&#39;B &#x2019; &#X2019; c&#169;d &#x1F600; &#128512; '
            |   || '&#0; &#xD800; &#55296; &#1114112; &#x0010FFFF; &#00000039; '
            |   || '&#12 &#x1F &#; x&#' || CAST(doc_id % 10 + 33 AS VARCHAR)
@@ -7866,10 +7624,7 @@ object StandardQueries {
            |     ELSE '&#' || e END), 'string_agg', '') AS numdec
            |  FROM strip)
            | SELECT doc_id, dec_raw,
-           |  trim(regexp_replace(replace(replace(replace(replace(replace(
-           |    numdec,
-           |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&nbsp;', ' '), '&amp;', '&'),
-           |    '\s+', ' ', 'g')) AS text
+           |  ${entityDecodeSql("numdec")} AS text
            | FROM dec ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")))
 
   /** PRODUCTION-VOCABULARY BPE encoding
@@ -8424,18 +8179,7 @@ object StandardQueries {
     (s, dir) => graft.analysis.DriftExact.rankSumStats(
       t(s, dir, "lineitem"), Seq("l_quantity", "l_discount", "l_tax"),
       F.col("l_linestatus") === "O"),
-    Some("""WITH u AS (
-           |  SELECT 'l_quantity' AS cn, CAST(l_quantity AS DOUBLE) AS v, l_linestatus = 'O' AS t FROM lineitem
-           |   WHERE l_quantity IS NOT NULL AND l_linestatus IS NOT NULL
-           |  UNION ALL SELECT 'l_discount', CAST(l_discount AS DOUBLE), l_linestatus = 'O' FROM lineitem
-           |   WHERE l_discount IS NOT NULL AND l_linestatus IS NOT NULL
-           |  UNION ALL SELECT 'l_tax', CAST(l_tax AS DOUBLE), l_linestatus = 'O' FROM lineitem
-           |   WHERE l_tax IS NOT NULL AND l_linestatus IS NOT NULL),
-           | h AS (SELECT cn, v, CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS n_cur,
-           |   CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS n_ref FROM u GROUP BY 1, 2),
-           | c AS (SELECT cn, v, n_cur, n_ref,
-           |   CAST(coalesce(sum(n_ref) OVER (PARTITION BY cn ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_ref, 0) AS BIGINT) AS rb
-           |  FROM h),
+    Some(s"""WITH $rankSumCtes,
            | a AS (SELECT cn, CAST(sum(n_ref) AS BIGINT) AS n_ref, CAST(sum(n_cur) AS BIGINT) AS n_cur,
            |   CAST(sum(n_cur * (2 * rb + n_ref)) AS BIGINT) AS u2,
            |   CAST(sum((n_ref + n_cur) * (n_ref + n_cur) * (n_ref + n_cur) - (n_ref + n_cur)) AS BIGINT) AS tc
@@ -8459,18 +8203,7 @@ object StandardQueries {
     (s, dir) => graft.analysis.DriftExact.cliffsDelta(
       t(s, dir, "lineitem"), Seq("l_quantity", "l_discount", "l_tax"),
       F.col("l_linestatus") === "O"),
-    Some("""WITH u AS (
-           |  SELECT 'l_quantity' AS cn, CAST(l_quantity AS DOUBLE) AS v, l_linestatus = 'O' AS t FROM lineitem
-           |   WHERE l_quantity IS NOT NULL AND l_linestatus IS NOT NULL
-           |  UNION ALL SELECT 'l_discount', CAST(l_discount AS DOUBLE), l_linestatus = 'O' FROM lineitem
-           |   WHERE l_discount IS NOT NULL AND l_linestatus IS NOT NULL
-           |  UNION ALL SELECT 'l_tax', CAST(l_tax AS DOUBLE), l_linestatus = 'O' FROM lineitem
-           |   WHERE l_tax IS NOT NULL AND l_linestatus IS NOT NULL),
-           | h AS (SELECT cn, v, CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS n_cur,
-           |   CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS n_ref FROM u GROUP BY 1, 2),
-           | c AS (SELECT cn, v, n_cur, n_ref,
-           |   CAST(coalesce(sum(n_ref) OVER (PARTITION BY cn ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_ref, 0) AS BIGINT) AS rb
-           |  FROM h),
+    Some(s"""WITH $rankSumCtes,
            | a AS (SELECT cn, CAST(sum(n_ref) AS BIGINT) AS n_ref, CAST(sum(n_cur) AS BIGINT) AS n_cur,
            |   CAST(sum(n_cur * (2 * rb + n_ref)) AS BIGINT) AS u2
            |  FROM c GROUP BY 1),
@@ -9021,22 +8754,7 @@ object StandardQueries {
         .groupBy("cluster_size").agg(F.count(F.lit(1)).as("n_clusters"))
         .orderBy("cluster_size")
     },
-    Some("""WITH RECURSIVE sh AS (
-           |  SELECT doc_id,
-           |   list_distinct([array_to_string(words[i:i+2], ' ')
-           |                  for i in range(1, greatest(len(words) - 1, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS words FROM documents)),
-           | pairs AS (
-           |  SELECT a.doc_id AS a, b.doc_id AS b
-           |  FROM sh a JOIN sh b ON b.doc_id > a.doc_id
-           |  WHERE len(list_distinct(list_concat(a.g, b.g))) > 0
-           |   AND CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.5),
-           | edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b AS u, a AS v FROM pairs),
-           | r AS (
-           |   SELECT u, u AS m FROM (SELECT DISTINCT u FROM edges)
-           |   UNION
-           |   SELECT e.u, r.m FROM edges e JOIN r ON e.v = r.u),
-           | comp AS (SELECT u AS id, min(m) AS component FROM r GROUP BY u),
+    Some(s"""WITH RECURSIVE ${nearDupComponentsCte()},
            | sizes AS (SELECT component, CAST(count(*) AS BIGINT) AS cluster_size FROM comp GROUP BY component)
            | SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
            | FROM sizes GROUP BY cluster_size ORDER BY cluster_size""".stripMargin.replaceAll("\n", " ")))
@@ -9213,30 +8931,8 @@ object StandardQueries {
     * join — stream–static, append mode, stateless per probe row. Both
     * engines replay the identical cross-table linkage. */
   private def qStreamingFuzzyMatch = Q(
-    (s, dir) => {
-      val part = t(s, dir, "part")
-      val indexDf = part.select(F.col("p_partkey").as("ix_id"),
-        F.lower(F.col("p_name")).as("ix_s"))
-      val sdf = st(s, dir, "part")
-        .filter(F.col("p_partkey") % 5 === 0)
-        .select((F.col("p_partkey") + 1000000L).as("probe_id"),
-          F.concat(F.substring(F.lower(F.col("p_name")), 1, 2),
-            F.expr("substring(lower(p_name), 4)")).as("probe_s"))
-      Streams.toMemory(graft.pipeline.FuzzyDedup.matchIndex(
-          sdf, "probe_id", "probe_s", indexDf, "ix_id", "ix_s", maxDist = 1))
-        .orderBy("id", "index_id")
-    },
-    Some("""WITH ix AS (SELECT CAST(p_partkey AS BIGINT) AS index_id, lower(p_name) AS index_s,
-           |   substr(lower(p_name), 1, 2) AS blk, CAST(len(p_name) AS BIGINT) AS l FROM part),
-           | pr AS (SELECT CAST(p_partkey + 1000000 AS BIGINT) AS id,
-           |   substr(lower(p_name), 1, 2) || substr(lower(p_name), 4) AS s
-           |  FROM part WHERE p_partkey % 5 = 0),
-           | pb AS (SELECT id, s, substr(s, 1, 2) AS blk, CAST(len(s) AS BIGINT) AS l FROM pr)
-           | SELECT pb.id, ix.index_id, pb.s, ix.index_s,
-           |  CAST(levenshtein(pb.s, ix.index_s) AS BIGINT) AS dist
-           | FROM pb JOIN ix ON ix.blk = pb.blk AND abs(pb.l - ix.l) <= 1
-           | WHERE levenshtein(pb.s, ix.index_s) <= 1
-           | ORDER BY id, index_id""".stripMargin.replaceAll("\n", " ")))
+    (s, dir) => streamingFuzzyMatch(s, dir, maxBlockSize = None),
+    Some(fuzzyMatchOracle(None)))
 
   /** Cramér's V ([[DataAudit.cramersV]]) between order status and
     * order priority: χ² from the joint histogram via the zero-cell-free
@@ -9364,33 +9060,8 @@ object StandardQueries {
     * 4 below the 250 cap, so the skip path does real work and the
     * oracle replays it with a HAVING filter. */
   private def qStreamingFuzzyMatchCapped = Q(
-    (s, dir) => {
-      val part = t(s, dir, "part")
-      val indexDf = part.select(F.col("p_partkey").as("ix_id"),
-        F.lower(F.col("p_name")).as("ix_s"))
-      val sdf = st(s, dir, "part")
-        .filter(F.col("p_partkey") % 5 === 0)
-        .select((F.col("p_partkey") + 1000000L).as("probe_id"),
-          F.concat(F.substring(F.lower(F.col("p_name")), 1, 2),
-            F.expr("substring(lower(p_name), 4)")).as("probe_s"))
-      Streams.toMemory(graft.pipeline.FuzzyDedup.matchIndex(
-          sdf, "probe_id", "probe_s", indexDf, "ix_id", "ix_s",
-          maxDist = 1, maxBlockSize = Some(250)))
-        .orderBy("id", "index_id")
-    },
-    Some("""WITH ix0 AS (SELECT CAST(p_partkey AS BIGINT) AS index_id, lower(p_name) AS index_s,
-           |   substr(lower(p_name), 1, 2) AS blk, CAST(len(p_name) AS BIGINT) AS l FROM part),
-           | keep AS (SELECT blk FROM ix0 GROUP BY blk HAVING count(*) <= 250),
-           | ix AS (SELECT ix0.index_id, ix0.index_s, ix0.blk, ix0.l FROM ix0 JOIN keep USING (blk)),
-           | pr AS (SELECT CAST(p_partkey + 1000000 AS BIGINT) AS id,
-           |   substr(lower(p_name), 1, 2) || substr(lower(p_name), 4) AS s
-           |  FROM part WHERE p_partkey % 5 = 0),
-           | pb AS (SELECT id, s, substr(s, 1, 2) AS blk, CAST(len(s) AS BIGINT) AS l FROM pr)
-           | SELECT pb.id, ix.index_id, pb.s, ix.index_s,
-           |  CAST(levenshtein(pb.s, ix.index_s) AS BIGINT) AS dist
-           | FROM pb JOIN ix ON ix.blk = pb.blk AND abs(pb.l - ix.l) <= 1
-           | WHERE levenshtein(pb.s, ix.index_s) <= 1
-           | ORDER BY id, index_id""".stripMargin.replaceAll("\n", " ")))
+    (s, dir) => streamingFuzzyMatch(s, dir, maxBlockSize = Some(250)),
+    Some(fuzzyMatchOracle(Some(250))))
 
   /** First-order Markov transition matrix
     * ([[graft.pipeline.Markov.transitions]]) over each user's

@@ -19,8 +19,7 @@ class GraftApiSpec extends SparkSpec {
     val seg = Graft.logSegmented(li, Seq("l_returnflag"))
     assert(seg.merged.columns("l_quantity").counts.get.n == li.count())
 
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "graft-api-").toString + "/p.bin"
+    val path = targetTempDir("graft-api-") + "/p.bin"
     Graft.write(r, path)
     assert(Graft.read(path).view.summaryRows == r.view.summaryRows)
   }

@@ -18,6 +18,23 @@ class HarnessSpec extends AnyFunSuite {
     assert(Bench.outliers(Map("a" -> 4.0), Map("a" -> 1.0)).isEmpty)
     assert(Bench.outliers(best, Map.empty).isEmpty)
   }
+
+  test("query registry: 311 entries, these 20 rows-only, every other one with oracle SQL") {
+    val all = graft.api.StandardQueries.all
+    assert(all.size == 311)
+    val rowsOnly = all.collect { case (name, q) if q.oracle.isEmpty => name }.toSet
+    assert(rowsOnly == Set(
+      "cardinality_hll_bounds", "dedup_embedding_lsh", "dedup_minhash_sig",
+      "dedup_simhash", "doc_fingerprint", "drift_scores", "embedding_ivf",
+      "embedding_ivf_recall", "embedding_ivfpq", "embedding_pca_refs",
+      "embedding_pq", "embedding_pq_recall", "frame_hashes",
+      "full_profile_summary", "kll_quantiles", "nlp_svd_residual",
+      "quality_classifier_train", "semdedup_auto", "semdedup_clustered",
+      "viz_summary_report"))
+    assert(SparkEntry.queries.keySet == all.keySet)
+    assert(SparkEntry.oracleSql.keySet == all.keySet -- rowsOnly)
+    assert(SparkEntry.oracleSql.values.forall(_.trim.nonEmpty))
+  }
 }
 
 /** ScaleProbe replication semantics on a real Spark frame. */

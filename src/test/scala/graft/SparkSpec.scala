@@ -22,6 +22,25 @@ abstract class SparkSpec extends AnyFunSuite {
   def sfDir: String = TestSpark.sfDir
   def table(name: String) = spark.read.parquet(s"$sfDir/$name.parquet")
 
+  private val testDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A new directory `target/<prefix><random>`, deleted with its contents
+    * when the running test ends. */
+  def targetTempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get("target"), prefix)
+    testDirs.add(dir)
+    dir.toString
+  }
+
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test)
+    finally while (!testDirs.isEmpty) {
+      val walk = java.nio.file.Files.walk(testDirs.poll())
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
+
   /** events with `ts` normalized to a session-tz timestamp regardless of
     * the fixture's stored dtype (legacy raw-nanos BIGINT or timestamp).
     * Same dispatch as the main registry's loader. */

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{functions => F}
 
 import graft.api.{Profiler, ProfileStore}
@@ -10,9 +8,7 @@ import graft.profile.ProfileSerde
 /** Profile serde + parquet store. */
 class StoreSpec extends SparkSpec {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "store-spec-").toString
+  private def tmpDir(): String = targetTempDir("store-spec-")
 
   test("GRFT1 serde round-trips every metric summary exactly") {
     val li = table("lineitem")

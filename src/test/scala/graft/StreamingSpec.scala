@@ -111,19 +111,16 @@ class StreamingSpec extends SparkSpec {
     // split events into two files; maxFilesPerTrigger=1 forces windows to
     // span batches — the update-mode cumulative re-emission bug would
     // double-count here
-    val srcDir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-2batch-").toString
+    val srcDir = targetTempDir("stream-2batch-")
     val ev = eventsBatch
     ev.filter(F.col("event_id") % 2 === 0).write.parquet(srcDir + "/f0")
     ev.filter(F.col("event_id") % 2 =!= 0).write.parquet(srcDir + "/f1")
-    val flat = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-2batch-flat-").toString
+    val flat = targetTempDir("stream-2batch-flat-")
     spark.read.parquet(srcDir + "/f0").write.mode("append").parquet(flat)
     spark.read.parquet(srcDir + "/f1").write.mode("append").parquet(flat)
     val sdf = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(flat)
-    val storeDir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-2batch-store-").toString
+    val storeDir = targetTempDir("stream-2batch-store-")
     val q = ProfileStream.toStore(sdf, "ts", "1 hour", watermark = "1 hour",
       storePath = storeDir, datasetId = "ev2",
       profiler = new Profiler(MetricConfig(),
@@ -165,8 +162,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("toStore with segment columns streams segmented profiles, executor-side") {
-    val storeDir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-seg-store-").toString
+    val storeDir = targetTempDir("stream-seg-store-")
     val q = ProfileStream.toStore(
       eventsStream, "ts", "1 hour", watermark = "1 hour",
       storePath = storeDir, datasetId = "events_seg",
@@ -187,8 +183,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("toStore streams window profiles into the profile store") {
-    val storeDir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-store-").toString
+    val storeDir = targetTempDir("stream-store-")
     val q = ProfileStream.toStore(
       eventsStream, "ts", "1 hour", watermark = "1 hour",
       storePath = storeDir, datasetId = "events",
