@@ -43,13 +43,10 @@ class ProfileStore(spark: SparkSession, path: String) {
   /** Append a batch of profiles in one parquet job. */
   def writeAll(profiles: Seq[(DatasetProfileView, Long)], datasetId: String): Unit = {
     if (profiles.isEmpty) return
-    val rows = new java.util.ArrayList[Row](profiles.length)
-    profiles.foreach { case (view, tsMs) =>
+    append(profiles.map { case (view, tsMs) =>
       val stamped = view.copy(datasetTimestampMs = view.datasetTimestampMs.orElse(Some(tsMs)))
-      rows.add(Row(tsMs, null, ProfileSerde.toBytes(stamped), datasetId, dateOf(tsMs)))
-    }
-    spark.createDataFrame(rows, schema)
-      .write.mode("append").partitionBy("dataset_id", "date").parquet(path)
+      Row(tsMs, null, ProfileSerde.toBytes(stamped), datasetId, dateOf(tsMs))
+    })
   }
 
   /** Distributed write of a segmented profiling result: one store row per
@@ -66,11 +63,19 @@ class ProfileStore(spark: SparkSession, path: String) {
     * dataset timestamp (window start, epoch ms), then `nSegCols`
     * segment-key columns, then the metric structs. Serialization happens
     * on executors, so a high-cardinality segmented stream never funnels
-    * through the driver. */
+    * through the driver; the sink sends only micro-batches above
+    * `Profiler.LocalCellBound` cells here and serializes smaller ones on
+    * the driver (the `Seq[Row]` overload). */
   def writeWindowed(
       df: DataFrame, nSegCols: Int, datasetId: String,
       quantiles: Seq[Double] = graft.metrics.DistributionAgg.DefaultQuantiles): Unit =
     writeRows(df, nSegCols, datasetId, quantiles, fixedTs = None)
+
+  /** [[writeWindowed]] for rows already on the driver (the streaming
+    * sink's driver-side finish): the same store rows, serialized here. */
+  private[graft] def writeWindowed(
+      rows: Seq[Row], nSegCols: Int, datasetId: String, quantiles: Seq[Double]): Unit =
+    append(rows.map(r => Row.fromTuple(storeRow(r, nSegCols, datasetId, quantiles, None))))
 
   private def writeRows(
       df: DataFrame, nSegCols: Int, datasetId: String,
@@ -78,20 +83,19 @@ class ProfileStore(spark: SparkSession, path: String) {
     import org.apache.spark.sql.Encoders
     val enc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING,
       Encoders.BINARY, Encoders.STRING, Encoders.STRING)
-    val tsOffset = if (fixedTs.isEmpty) 1 else 0
-    df.map { row =>
-      val tsMs = fixedTs.getOrElse(row.getLong(0))
-      val segKey =
-        if (nSegCols == 0) null
-        else (tsOffset until tsOffset + nSegCols).map(i => segValue(row.get(i)))
-          .mkString(SegSep.toString)
-      val view = Profiler.parseRow(row, tsOffset + nSegCols, quantiles)
-        .copy(datasetTimestampMs = Some(tsMs))
-      (tsMs, segKey, ProfileSerde.toBytes(view), datasetId, dateOf(tsMs))
-    }(enc)
-      .toDF("dataset_ts", "segment", "profile", "dataset_id", "date")
-      .write.mode("append").partitionBy("dataset_id", "date").parquet(path)
+    write(df.map(row => storeRow(row, nSegCols, datasetId, quantiles, fixedTs))(enc)
+      .toDF("dataset_ts", "segment", "profile", "dataset_id", "date"))
   }
+
+  /** Driver rows are KB-scale profiles: one task writes them, one file
+    * per (dataset_id, date) partition. */
+  private def append(rows: Seq[Row]): Unit = {
+    import scala.jdk.CollectionConverters._
+    write(spark.createDataFrame(rows.asJava, schema).coalesce(1))
+  }
+
+  private def write(df: DataFrame): Unit =
+    df.write.mode("append").partitionBy("dataset_id", "date").parquet(path)
 
   /** All profiles for datasetId in [fromMs, toMs], with partition pruning
     * on (dataset_id, date). */
@@ -201,6 +205,24 @@ object ProfileStore {
           graft.profile.Why1.fromBytes(b))
       }
     }
+
+  /** One store row `(dataset_ts, segment, profile, dataset_id, date)`
+    * from an aggregated profile row: the dataset timestamp is `fixedTs`
+    * or, without one, the row's first column, followed by `nSegCols`
+    * segment-key columns and the metric structs. */
+  private def storeRow(
+      row: Row, nSegCols: Int, datasetId: String, quantiles: Seq[Double],
+      fixedTs: Option[Long]): (Long, String, Array[Byte], String, String) = {
+    val tsOffset = if (fixedTs.isEmpty) 1 else 0
+    val tsMs = fixedTs.getOrElse(row.getLong(0))
+    val segKey =
+      if (nSegCols == 0) null
+      else (tsOffset until tsOffset + nSegCols).map(i => segValue(row.get(i)))
+        .mkString(SegSep.toString)
+    val view = Profiler.parseRow(row, tsOffset + nSegCols, quantiles)
+      .copy(datasetTimestampMs = Some(tsMs))
+    (tsMs, segKey, ProfileSerde.toBytes(view), datasetId, dateOf(tsMs))
+  }
 
   /** Multi-column segment keys join on \u0001; NULL segment values encode
     * as \u0002 so they stay distinct from the literal string "null".

@@ -1333,10 +1333,6 @@ object StandardQueries {
     (s, dir) => new Profiler().summaryDF(t(s, dir, "lineitem")),
     None)
 
-  /** Persist-and-merge-later round trip (reference ProfileStore +
-    * DateQuery): three "daily" profiles written as GRFT1 blobs in a
-    * partitioned parquet store, read back by date range, merged — every
-    * exact field must equal whole-table SQL. */
   /** Summary generation, hash-checked on its exact subset: the long-format
     * summary DF filtered to counts/types/ints — every value is an exact
     * integer, so DuckDB can recompute the full (column, metric, value)
@@ -1394,6 +1390,10 @@ object StandardQueries {
       rows.mkString("", " UNION ALL ", " ORDER BY col_name, metric")
     })
 
+  /** Persist-and-merge-later round trip (reference ProfileStore +
+    * DateQuery): three "daily" profiles written as GRFT1 blobs in a
+    * partitioned parquet store, read back by date range, merged — every
+    * exact field must equal whole-table SQL. */
   private def qProfileStoreRoundtrip = Q(
     (s, dir) => {
       val storeDir = "target/tmp/profile_store_" + java.util.UUID.randomUUID().toString

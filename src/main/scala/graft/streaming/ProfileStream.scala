@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.Row
 
 import graft.api.{Profiler, ProfileStore}
+import graft.core.LocalAggregate
 
 /** Rolling / streaming profiles (reference TimedRollingLogger,
   * `api/logger/rolling.py:63-262`) re-expressed as Structured Streaming:
@@ -19,11 +19,11 @@ import graft.api.{Profiler, ProfileStore}
   * identical profiles to a batch run over the same data — the property
   * the store's merge algebra needs.
   *
-  * Scale shape: the windowed aggregation is the same partial/final
-  * sketch aggregation as batch profiling, keyed by (window, segment);
-  * state per key is KB-bounded sketch buffers, and the sink appends
-  * KB-scale profile rows to the store — the stream itself is never
-  * buffered.
+  * Scale shape: the windowed aggregation is the same aggregate as batch
+  * profiling (partial/final, or on the driver below its size bound),
+  * keyed by (window, segment); state per key is KB-bounded sketch
+  * buffers, and the sink appends KB-scale profile rows to the store —
+  * the stream itself is never buffered.
   */
 object ProfileStream {
 
@@ -59,7 +59,10 @@ object ProfileStream {
     * bounds state for the streaming-aggregation path
     * ([[windowedProfileDF]]); here lateness only means a late row lands
     * in a later store row for the same window — merged reads are
-    * unaffected. */
+    * unaffected. A micro-batch of at most [[Profiler.LocalCellBound]]
+    * cells is aggregated and serialized on the driver after one counted
+    * collect; a larger one runs the windowed aggregate and the store
+    * write on the executors. */
   def toStore(
       sdf: DataFrame,
       tsCol: String,
@@ -75,21 +78,40 @@ object ProfileStream {
       profiler: Profiler = new Profiler(),
       columns: Option[Seq[String]] = None,
       segmentColumns: Seq[String] = Nil,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    toStore(sdf, tsCol, window, watermark, storePath, datasetId, profiler, columns,
+      segmentColumns, trigger, Profiler.LocalCellBound)
+
+  /** [[toStore]] with an explicit driver-finish bound for each
+    * micro-batch (0 forces the distributed aggregate and write). */
+  private[graft] def toStore(
+      sdf: DataFrame, tsCol: String, window: String, watermark: String, storePath: String,
+      datasetId: String, profiler: Profiler, columns: Option[Seq[String]],
+      segmentColumns: Seq[String], trigger: Trigger, localCellBound: Long): StreamingQuery = {
+    val profiled = columns.getOrElse(sdf.schema.fields.map(_.name).toSeq
+      .filterNot(n => n == tsCol || segmentColumns.contains(n)))
+    val needed = ((tsCol +: segmentColumns) ++ profiled).distinct.map(F.col)
+    def flat(batch: DataFrame): DataFrame = {
+      val windowed =
+        windowedProfileDF(batch, tsCol, window, None, profiler, Some(profiled), segmentColumns)
+      windowed.select(
+        F.unix_timestamp(F.col("window.start")).*(1000).as("__ts") +:
+          windowed.columns.toSeq.filterNot(_ == "window").map(F.col): _*)
+    }
     sdf.withWatermark(tsCol, watermark).writeStream
       .outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val store = new ProfileStore(batch.sparkSession, storePath)
-        val windowed =
-          windowedProfileDF(batch, tsCol, window, None, profiler, columns, segmentColumns)
-        val flat = windowed.select(
-          F.unix_timestamp(F.col("window.start")).*(1000).as("__ts") +:
-            windowed.columns.filterNot(_ == "window").map(F.col): _*)
-        // rows are KB-scale profiles; serialization happens on executors
-        // (ProfileStore.writeWindowed), so a high-cardinality segmented
-        // stream appends straight to the store with no driver funnel
-        store.writeWindowed(flat, segmentColumns.length, datasetId, profiler.config.quantiles)
+        val (nSeg, quantiles) = (segmentColumns.length, profiler.config.quantiles)
+        LocalAggregate.local(batch.select(needed: _*), localCellBound)
+          .flatMap(l => LocalAggregate.collect(flat(l))) match {
+          case Some(rows) => store.writeWindowed(rows.toSeq, nSeg, datasetId, quantiles)
+          // above the bound, rows serialize on the executors, so a
+          // high-cardinality segmented stream appends straight to the
+          // store with no driver funnel
+          case None => store.writeWindowed(flat(batch), nSeg, datasetId, quantiles)
+        }
       }
       .start()
   }

@@ -85,7 +85,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val batch = docs.filter(F.col("source") === "src1")
     val rest = docs.filter(F.col("source") =!= "src1")
     // store the index like an ingestion pipeline would, read it back
-    val dir = java.nio.file.Files.createTempDirectory("lsh_index").toString
+    val dir = targetTempDir("lsh_index")
     Dedup.minHashIndex(rest, "text", "doc_id").write.mode("overwrite").parquet(dir)
     val index = spark.read.parquet(dir)
     val got = Dedup.nearDupsAgainstIndex(batch, index, "text", "doc_id")

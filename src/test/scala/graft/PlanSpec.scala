@@ -94,7 +94,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("profile store reads prune to the queried (dataset_id, date) partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("plan_store").toString
+    val dir = targetTempDir("plan_store")
     val store = new graft.api.ProfileStore(spark, dir)
     val view = new Profiler().profile(table("lineitem"), Some(Seq("l_quantity")))
     val day = 86400000L
@@ -839,7 +839,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("warc FILE ingestion chain: record-streaming walk + split + extract is map-only") {
-    val dir = java.nio.file.Files.createTempDirectory("warcplan").toString
+    val dir = targetTempDir("warcplan")
     val payload = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<p>hi</p>"
     val rec = "WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: <x>\r\n" +
       s"Content-Length: ${payload.getBytes("UTF-8").length}\r\n\r\n$payload\r\n\r\n"
@@ -865,7 +865,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("corpus sink: ONE shard exchange to write; manifest verify is one agg exchange per side") {
-    val dir = java.nio.file.Files.createTempDirectory("sinkplan").toString
+    val dir = targetTempDir("sinkplan")
     val docs = table("documents").select(F.col("doc_id"),
       F.concat(F.col("doc_id").cast("string"), F.lit("\t"),
         F.col("text")).as("line"))

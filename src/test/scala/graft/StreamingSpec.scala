@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{functions => F}
 
 import graft.api.{Profiler, ProfileStore}
@@ -64,8 +62,8 @@ class StreamingSpec extends SparkSpec {
         "flamingo orchestra rehearses nocturnal arithmetic beneath the viaduct"))
         .toDF("doc_id", "text")
       val batchDf = seeded.unionByName(novel)
-      val srcDir = Files.createTempDirectory("dedup_stream_src").toString
-      val outDir = Files.createTempDirectory("dedup_stream_out").toString + "/flags"
+      val srcDir = targetTempDir("dedup_stream_src")
+      val outDir = targetTempDir("dedup_stream_out") + "/flags"
       batchDf.coalesce(1).write.mode("overwrite").parquet(srcDir)
       val stream = spark.readStream.schema(batchDf.schema).parquet(srcDir)
       val q = graft.streaming.DedupStream.flagAgainstIndex(
@@ -90,7 +88,7 @@ class StreamingSpec extends SparkSpec {
     val batch = Seq(
       (1L, "contact a@b.io or 10.0.0.1"),
       (2L, "nothing sensitive here")).toDF("doc_id", "text")
-    val srcDir = Files.createTempDirectory("pii_stream_src").toString
+    val srcDir = targetTempDir("pii_stream_src")
     batch.coalesce(1).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(batch.schema).parquet(srcDir)
     // scan is codegen'd map-only expressions — legal in a streaming plan

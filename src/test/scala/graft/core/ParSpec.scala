@@ -77,7 +77,7 @@ class ParSpec extends SparkSpec {
   }
 
   test("widen itself is stream-safe (no .rdd-on-streaming crash)") {
-    val dir = java.nio.file.Files.createTempDirectory("parstream2").toString
+    val dir = targetTempDir("parstream2")
     spark.range(7).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
     val sdf = spark.readStream
       .schema(spark.read.parquet(dir).schema).parquet(dir)
@@ -93,7 +93,7 @@ class ParSpec extends SparkSpec {
   }
 
   test("widen repartitions a streaming frame without touching .rdd") {
-    val dir = java.nio.file.Files.createTempDirectory("parstream").toString
+    val dir = targetTempDir("parstream")
     spark.range(10).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
     val sdf = spark.readStream
       .schema(spark.read.parquet(dir).schema).parquet(dir)

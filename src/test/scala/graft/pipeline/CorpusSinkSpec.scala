@@ -17,7 +17,7 @@ class CorpusSinkSpec extends SparkSpec {
         (F.col("id") % 7).cast("string")).as("line"))
 
   test("write -> verify round trip: every shard matches its manifest") {
-    val dir = Files.createTempDirectory("corpussink").toString
+    val dir = targetTempDir("corpussink")
     val man = CorpusSink.writeCorpusShards(
       corpus, F.col("line"), F.col("id"), dir, 4)
     assert(man.count() == 4)
@@ -31,8 +31,8 @@ class CorpusSinkSpec extends SparkSpec {
   }
 
   test("sharding and in-file order are deterministic across runs and partitionings") {
-    val d1 = Files.createTempDirectory("corpusdet1").toString
-    val d2 = Files.createTempDirectory("corpusdet2").toString
+    val d1 = targetTempDir("corpusdet1")
+    val d2 = targetTempDir("corpusdet2")
     CorpusSink.writeCorpusShards(corpus, F.col("line"), F.col("id"), d1, 4)
     CorpusSink.writeCorpusShards(corpus.repartition(13), F.col("line"),
       F.col("id"), d2, 4)
@@ -48,7 +48,7 @@ class CorpusSinkSpec extends SparkSpec {
   }
 
   test("a line containing CR/LF fails the write LOUDLY (never silent corruption)") {
-    val dir = Files.createTempDirectory("corpusnl").toString
+    val dir = targetTempDir("corpusnl")
     val bad = spark.range(3L).select(F.col("id"),
       F.when(F.col("id") === 1L, F.lit("first half\nsecond half"))
         .otherwise(F.lit("clean line")).as("line"))
@@ -62,7 +62,7 @@ class CorpusSinkSpec extends SparkSpec {
   }
 
   test("a NULL line fails the write LOUDLY (the text writer would emit an empty line)") {
-    val dir = Files.createTempDirectory("corpusnull").toString
+    val dir = targetTempDir("corpusnull")
     val bad = spark.range(3L).select(F.col("id"),
       F.when(F.col("id") === 1L, F.lit(null).cast("string"))
         .otherwise(F.lit("clean line")).as("line"))
@@ -76,7 +76,7 @@ class CorpusSinkSpec extends SparkSpec {
   }
 
   test("an empty corpus writes an empty manifest and verifies clean") {
-    val dir = Files.createTempDirectory("corpusempty").toString
+    val dir = targetTempDir("corpusempty")
     val empty = corpus.where(F.lit(false))
     val man = CorpusSink.writeCorpusShards(empty, F.col("line"), F.col("id"), dir, 4)
     assert(man.count() == 0)
@@ -84,7 +84,7 @@ class CorpusSinkSpec extends SparkSpec {
   }
 
   test("a tampered shard file fails verification for that shard only") {
-    val dir = Files.createTempDirectory("corpustamper").toString
+    val dir = targetTempDir("corpustamper")
     CorpusSink.writeCorpusShards(corpus, F.col("line"), F.col("id"), dir, 4)
     // replace one shard's file wholesale with different (valid gzip)
     // content — count AND digest must flip the match flag

@@ -133,7 +133,7 @@ class IvfPqSpec extends SparkSpec {
   test("save/load round-trip: a loaded index searches bit-identically") {
     val emb = table("embeddings")
     val ix = Similarity.ivfPqBuild(emb, numCentroids = 8, m = 16, ksub = 16)
-    val base = java.nio.file.Files.createTempDirectory("ivfpqsl").toString
+    val base = targetTempDir("ivfpqsl")
     Similarity.ivfPqSave(ix, s"$base/index")
     ix.encoded.write.partitionBy("__cell").parquet(s"$base/store")
     val loaded = Similarity.ivfPqLoad(spark, s"$base/index", s"$base/store", emb)

@@ -47,10 +47,12 @@ class SqliteStoreSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](Sqlite.readTable(db, "nope"))
     assert(e.getMessage.contains("not found"))
     val tmp = java.nio.file.Files.createTempFile("notdb", ".db")
-    java.nio.file.Files.write(tmp, Array.fill[Byte](200)(7))
-    val e2 = intercept[IllegalArgumentException](
-      Sqlite.readTable(tmp.toString, "profile_store"))
-    assert(e2.getMessage.contains("not a SQLite 3 file"))
+    try {
+      java.nio.file.Files.write(tmp, Array.fill[Byte](200)(7))
+      val e2 = intercept[IllegalArgumentException](
+        Sqlite.readTable(tmp.toString, "profile_store"))
+      assert(e2.getMessage.contains("not a SQLite 3 file"))
+    } finally java.nio.file.Files.delete(tmp)
   }
 
   test("columnNames parses the reference store's CREATE TABLE") {

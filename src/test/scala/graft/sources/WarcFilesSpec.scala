@@ -80,7 +80,7 @@ class WarcFilesSpec extends SparkSpec {
   }
 
   test("readRecords: plain and gzipped files (magic-detected), via Spark") {
-    val dir = Files.createTempDirectory("warcfiles").toString
+    val dir = targetTempDir("warcfiles")
     val s1 = rec("response", "<p1>", "plain body") + rec("metadata", "<p2>", "m")
     Files.write(Paths.get(s"$dir/a.warc"), s1.getBytes("UTF-8"))
     // per-record gzip members, concatenated — the .warc.gz layout —
@@ -105,7 +105,7 @@ class WarcFilesSpec extends SparkSpec {
     // GZIPInputStream reads the member header eagerly in its
     // constructor — this file's damage throws BEFORE the record walk
     // even starts; the job must keep reading the healthy shards
-    val dir = Files.createTempDirectory("warcbadhdr").toString
+    val dir = targetTempDir("warcbadhdr")
     Files.write(Paths.get(s"$dir/bad.warc.gz"),
       Array[Byte](0x1f.toByte, 0x8b.toByte)) // magic, then EOF
     Files.write(Paths.get(s"$dir/good.warc"),
@@ -128,7 +128,7 @@ class WarcFilesSpec extends SparkSpec {
   }
 
   test("streamRecords: crawl shards arriving as a stream yield the batch record set") {
-    val dir = Files.createTempDirectory("warcstream").toString
+    val dir = targetTempDir("warcstream")
     val bos = new java.io.ByteArrayOutputStream()
     (0 until 5).foreach { i =>
       val gz = new java.util.zip.GZIPOutputStream(bos)
@@ -154,7 +154,7 @@ class WarcFilesSpec extends SparkSpec {
   }
 
   test("readCrawlText: file -> responses -> HTTP split -> visible text, in one scan") {
-    val dir = Files.createTempDirectory("crawltext").toString
+    val dir = targetTempDir("crawltext")
     val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n\r\n" +
       "<html><body><p>Hello &amp; welcome</p></body></html>"
     val s = rec("response", "<r1>", http) +
@@ -171,7 +171,7 @@ class WarcFilesSpec extends SparkSpec {
   }
 
   test("readCrawlText decodes non-UTF-8 pages via charset resolution (bytes preserved)") {
-    val dir = Files.createTempDirectory("crawlcs").toString
+    val dir = targetTempDir("crawlcs")
     val html = "<p>café mañana</p>" // é/ñ: latin-1 single bytes, invalid UTF-8
     val bodyLatin = html.getBytes("ISO-8859-1")
     // header declares the charset; Content-Length counts latin-1 BYTES
@@ -199,7 +199,7 @@ class WarcFilesSpec extends SparkSpec {
   }
 
   test("readCrawlText decompresses content codings; unknown codings are NULL text") {
-    val dir = Files.createTempDirectory("crawlce").toString
+    val dir = targetTempDir("crawlce")
     def gz(s: String): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       val g = new java.util.zip.GZIPOutputStream(bos)
@@ -235,7 +235,7 @@ class WarcFilesSpec extends SparkSpec {
   }
 
   test("readCrawlText surfaces meta-robots noindex as a compliance column") {
-    val dir = Files.createTempDirectory("crawlnx").toString
+    val dir = targetTempDir("crawlnx")
     def resp(id: String, html: String): Array[Byte] = {
       val payload = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html)
         .getBytes("UTF-8")

@@ -52,7 +52,7 @@ class DedupStreamSpec extends SparkSpec {
       (5L, "aaa"), (7L, "bbb"),               // batch 1
       (2L, "aaa"), (9L, "aaa"), (8L, "ccc"))  // batch 2: smaller "aaa" id
     def runWith(batches: Seq[Seq[(Long, String)]]): Map[String, (Long, Long)] = {
-      val path = java.nio.file.Files.createTempDirectory("keeper_store").toString
+      val path = targetTempDir("keeper_store")
       val in = MemoryStream[(Long, String)]
       val q = DedupStream.exactKeepersToStore(
         in.toDF().toDF("doc_id", "text"), "text", "doc_id", path,
@@ -83,8 +83,7 @@ class DedupStreamSpec extends SparkSpec {
 
   test("upsertKeepers rewrites only touched buckets and replaces by hash") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("keeper_upsert")
-      .resolve("state").toString
+    val path = targetTempDir("keeper_upsert") + "/state"
     def df(rows: (String, Long, Long)*) =
       rows.toDF("text_hash", "keeper_id", "dup_count")
     DedupStream.upsertKeepers(df(("h1", 5L, 1L), ("h2", 7L, 2L)), path, 4)
@@ -106,8 +105,7 @@ class DedupStreamSpec extends SparkSpec {
 
   test("carried-state read touches ONLY the batch's buckets, and corrupt state fails the batch") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("keeper_prune")
-      .resolve("state").toString
+    val path = targetTempDir("keeper_prune") + "/state"
     def df(rows: (String, Long, Long)*) =
       rows.toDF("text_hash", "keeper_id", "dup_count")
     // pick two hashes that land in DIFFERENT buckets (bucket is
@@ -226,8 +224,7 @@ class DedupStreamSpec extends SparkSpec {
     // regression pin: the file source does not descend into a symlinked
     // subdirectory — before the directory passthrough, a multi-split
     // table streamed as ZERO rows (single-file fixtures masked it)
-    val dir = java.nio.file.Files.createTempDirectory("dedup_dir_src")
-      .resolve("docs.parquet").toString
+    val dir = targetTempDir("dedup_dir_src") + "/docs.parquet"
     (1L to 100L).map(i => (i, s"doc number $i")).toDF("doc_id", "text")
       .repartition(8).write.mode("overwrite").parquet(dir)
     val sdf = spark.readStream

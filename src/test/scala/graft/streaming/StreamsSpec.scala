@@ -29,7 +29,7 @@ class StreamsSpec extends SparkSpec {
   /** A file-source stream over `n` ids in one parquet file, and its
     * batch counterpart. */
   private def ids(n: Int): (DataFrame, DataFrame) = {
-    val dir = Files.createTempDirectory("streams_src").toString
+    val dir = targetTempDir("streams_src")
     spark.range(n).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
     val batch = spark.read.parquet(dir)
     (spark.readStream.schema(batch.schema).parquet(dir), batch)
