@@ -80,8 +80,6 @@ object Bootstrap {
       loRank: Double = 0.025, hiRank: Double = 0.975): DataFrame = {
     require(b >= 4, "need at least 4 replicates")
     require(loRank >= 0 && loRank < hiRank && hiRank <= 1, "bad rank band")
-    val spark = df.sparkSession
-    import spark.implicits._
     // spread the SLIM (id, v) projection BEFORE the replicate explode:
     // the explode multiplies each input split's work by B, so a table
     // that arrives as few splits (one small parquet file locally; a

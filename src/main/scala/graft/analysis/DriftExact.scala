@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
-import graft.core.Checkpoint
+import graft.core.{Checkpoint, Gate}
 
 /** Exact (sketch-free) drift statistics computed distributed over the raw
   * column, complementing the profile-vs-profile path in [[Drift]] (which
@@ -62,11 +62,9 @@ object DriftExact {
     ksStats(df, Seq(valueCol), isTarget)(valueCol)
 
   /** Distinct (key, value) pair ceiling for [[ksStat]]'s driver-side
-    * finish — the same rationale as `ConnectedComponents.LocalEdgeBound`:
-    * the collected rows and their per-key sort are a few tens of MB of
-    * driver memory at worst, far past any monitoring batch and far below
-    * a corpus-scale column, which keeps the distributed prefix sums. */
-  private[graft] val LocalPairBound: Long = 200000L
+    * finish, by [[Gate]]'s driver-memory rule: the collected rows and
+    * their per-key sort. */
+  private[graft] val LocalPairBound = new Gate("DriftExact.LocalPairBound", 200000L)
 
   /** [[ksStat]] over N columns in ONE input scan: the (column, value)
     * pairs are exploded into a single keyed relation, so profiling drift
@@ -79,13 +77,6 @@ object DriftExact {
     * integral columns beyond 2^53 use a per-column [[ksStat]] on the raw
     * type). */
   def ksStats(df: DataFrame, valueCols: Seq[String], isTarget: Column)
-      : Map[String, (Double, Long, Long)] =
-    ksStats(df, valueCols, isTarget, LocalPairBound)
-
-  /** [[ksStats]] with an explicit driver-finish bound (0 forces the
-    * distributed prefix sums). */
-  private[graft] def ksStats(
-      df: DataFrame, valueCols: Seq[String], isTarget: Column, localPairBound: Long)
       : Map[String, (Double, Long, Long)] = {
     require(valueCols.nonEmpty, "ksStats needs at least one column")
     val pair = F.explode(F.array(valueCols.map(c =>
@@ -101,7 +92,7 @@ object DriftExact {
     val prepared = df.select(pair, ca.as("__ca"))
       .select(F.col("__p.c").as("__c"), F.col("__p.v").as("__v"),
         F.col("__ca"), (F.lit(1L) - F.col("__ca")).as("__cb"))
-    ksCore(prepared, valueCols, localPairBound)
+    ksCore(prepared, valueCols)
   }
 
   /** [[ksStat]] per KEY — exact KS between the target/ref slices WITHIN
@@ -113,14 +104,7 @@ object DriftExact {
   def ksStatsByKey(
       df: DataFrame, key: Column, valueCol: String, isTarget: Column)
       : Map[String, (Double, Long, Long)] =
-    ksStatsByKey(df, key, valueCol, isTarget, LocalPairBound)
-
-  /** [[ksStatsByKey]] with an explicit driver-finish bound (0 forces the
-    * distributed prefix sums). */
-  private[graft] def ksStatsByKey(
-      df: DataFrame, key: Column, valueCol: String, isTarget: Column,
-      localPairBound: Long): Map[String, (Double, Long, Long)] =
-    ksCore(keyedValues(df, key, valueCol, isTarget), Nil, localPairBound)
+    ksCore(keyedValues(df, key, valueCol, isTarget), Nil)
 
   /** The per-key stats' input: (__c key as a string, __v value as a
     * double, __ca / __cb target and reference indicators), NULL keys
@@ -137,8 +121,7 @@ object DriftExact {
     * __ca, __cb). `wantKeys` fixes the output key set ([[ksStats]]
     * reports every requested column); empty ⇒ the keys found in the data
     * ([[ksStatsByKey]]). */
-  private def ksCore(
-      prepared: DataFrame, wantKeys: Seq[String], localPairBound: Long)
+  private def ksCore(prepared: DataFrame, wantKeys: Seq[String])
       : Map[String, (Double, Long, Long)] = {
     // NOT widened (r20): a pre-aggregation repartition ships every raw
     // (c, v) row and loses the map-side combine (guide §2.3) — measured
@@ -151,7 +134,7 @@ object DriftExact {
       // aggregate shuffle) and it materializes the lazy checkpoint, so
       // either finish reads the pinned pairs, never the input again
       val (ns, nums) =
-        if (pairs.rdd.count() <= localPairBound) localNumerators(pairs)
+        if (LocalPairBound.admits(pairs.rdd.count())) localNumerators(pairs)
         else distributedNumerators(pairs)
       val outKeys = if (wantKeys.nonEmpty) wantKeys else ns.keys.toSeq.sorted
       outKeys.map { c =>

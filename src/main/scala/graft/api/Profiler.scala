@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{functions => F}
 
-import graft.core.{LocalAggregate, LogicalKind, MetricConfig, Namespace, ResolverSpec}
+import graft.core.{Gate, LocalAggregate, LogicalKind, MetricConfig, Namespace, ResolverSpec}
 import graft.functions._
 import graft.profile._
 
@@ -181,9 +181,9 @@ class Profiler(
     //    paths measured and reverted (Similarity.scala).
     // So: heavy = the resolver plans an HLL / frequent-items /
     // unicode-range update (the datasketches per-row costs) for some
-    // profiled column; the 4 MB floor keeps small fixtures and daily
-    // chunks narrow. Real multi-split tables take Par's no-exchange
-    // branch regardless.
+    // profiled column; the 4 MB floor (`HeavyWidenMinBytes`) keeps
+    // small fixtures and daily chunks narrow. Real multi-split tables
+    // take Par's no-exchange branch regardless.
     // Order-safety: every oracle-exact profile field is an integer
     // count, a min/max, or an HLL register max — set functions; float
     // moment and sketch-quantile fields surface only through rows-only
@@ -191,7 +191,7 @@ class Profiler(
     val heavyPerRow = plansHeavyPerRowMetric(df, fields)
     val sel = df.select(fields.map(F.col): _*)
     aggregate(
-      if (heavyPerRow) graft.core.Par.widenIfAtLeast(sel, minInputBytes = 4L << 20) else sel,
+      if (heavyPerRow) graft.core.Par.widenIfAtLeast(sel, Profiler.HeavyWidenMinBytes) else sel,
       fields)
   }
 
@@ -201,17 +201,12 @@ class Profiler(
     * [[Profiler.LocalCellBound]] cells is collected once and every batch
     * is aggregated on the driver ([[graft.core.LocalAggregate]]); a
     * larger one runs [[profileDF]] per batch. */
-  def profile(df: DataFrame, columns: Option[Seq[String]] = None): DatasetProfileView =
-    profile(df, columns, Profiler.LocalCellBound)
-
-  /** [[profile]] with an explicit driver-finish bound (0 forces the
-    * distributed aggregate). */
-  private[graft] def profile(
-      df: DataFrame, columns: Option[Seq[String]], localCellBound: Long): DatasetProfileView = {
+  def profile(df: DataFrame, columns: Option[Seq[String]] = None): DatasetProfileView = {
     val names = columns.getOrElse(df.schema.fields.map(_.name).toSeq)
       .filter(n => aggColumnFor(df.schema(n)).nonEmpty)
     val batches = names.grouped(math.max(1, config.columnBatchSize)).toSeq
-    lazy val local = LocalAggregate.local(df.select(names.map(F.col): _*), localCellBound)
+    lazy val local =
+      LocalAggregate.local(df.select(names.map(F.col): _*), Profiler.LocalCellBound.bound)
     val views = batches.map { batch =>
       val row = local.flatMap(l => LocalAggregate.collect(aggregate(l, batch)))
         .getOrElse(profileDF(df, Some(batch)).collect())(0)
@@ -271,7 +266,7 @@ class Profiler(
     val sel = segmentInput(df, segmentColumns, filter, profiled)
     val in =
       if (widenForCollect && plansHeavyPerRowMetric(df, profiled))
-        graft.core.Par.widenIfAtLeast(sel, minInputBytes = 4L << 20)
+        graft.core.Par.widenIfAtLeast(sel, Profiler.HeavyWidenMinBytes)
       else sel
     segmentAggregate(in, segmentColumns, profiled)
   }
@@ -299,19 +294,10 @@ class Profiler(
   def profileSegmented(
       df: DataFrame,
       segmentColumns: Seq[String],
-      filter: Option[Column] = None): Map[Seq[String], DatasetProfileView] =
-    profileSegmented(df, segmentColumns, filter, Profiler.LocalCellBound)
-
-  /** [[profileSegmented]] with an explicit driver-finish bound (0 forces
-    * the distributed aggregate). */
-  private[graft] def profileSegmented(
-      df: DataFrame,
-      segmentColumns: Seq[String],
-      filter: Option[Column],
-      localCellBound: Long): Map[Seq[String], DatasetProfileView] = {
+      filter: Option[Column] = None): Map[Seq[String], DatasetProfileView] = {
     val profiled = df.schema.fields.map(_.name).toSeq.filterNot(segmentColumns.contains)
     val input = segmentInput(df, segmentColumns, filter, profiled)
-    val rows = LocalAggregate.local(input, localCellBound)
+    val rows = LocalAggregate.local(input, Profiler.LocalCellBound.bound)
       .flatMap(l => LocalAggregate.collect(segmentAggregate(l, segmentColumns, profiled)))
       .getOrElse(segmentedAgg(df, segmentColumns, filter, Some(profiled), widenForCollect = true)
         .collect())
@@ -349,7 +335,12 @@ object Profiler {
     * 0.30 s at 32 k, then lost at 64 k (0.41 s against 0.32 s), where its
     * interpreted per-cell updates outgrow Spark's fixed per-job cost
     * (ROADMAP item 6 holds the table). */
-  private[graft] val LocalCellBound: Long = 1L << 15
+  private[graft] val LocalCellBound = new Gate("Profiler.LocalCellBound", 1L << 15)
+
+  /** Optimizer-size floor for widening a heavy-per-row profile input
+    * ([[Profiler.profileDF]] and the segmented collect path): a smaller
+    * input stays narrow, for the r21 reasons given in `profileDF`. */
+  private val HeavyWidenMinBytes: Long = 4L << 20
 
   /** Parse one aggregated row (possibly offset past segment-key columns)
     * into a profile view, using the row's schema for metric discovery.

@@ -27,8 +27,6 @@ case class UnicodeNormalize(child: Expression, form: String)
   override def dataType: DataType = StringType
   override def prettyName: String = "unicode_normalize"
 
-  private lazy val f = Normalizer.Form.valueOf(form)
-
   override def nullSafeEval(input: Any): Any =
     NormalizeUtil.normalize(input.asInstanceOf[UTF8String], form)
 

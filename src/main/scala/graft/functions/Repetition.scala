@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftx.{columnExpr, exprColumn}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-document n-gram repetition statistics — the Gopher-style
   * repetition quality filters (Rae et al., "Scaling Language Models:

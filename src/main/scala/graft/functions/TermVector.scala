@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftx.{columnExpr, exprColumn}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Hashing-trick term vector: slot i counts tokens whose
   * `xxhash64(token) mod dim` is i — the NLP SVD's input representation

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.graftx.{columnExpr, exprColumn}
-import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.{functions => F}
 
 import graft.metrics.{BloomAgg, CardinalityAgg, DistributionAgg, FrequentItemsAgg, TopKAgg, VarOptAgg}

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
-import graft.core.Checkpoint
+import graft.core.{Checkpoint, Gate}
 
 /** Distributed connected components over an edge list — the clustering
   * stage of near-duplicate removal (LSH emits PAIRS; dropping all-but-one
@@ -28,11 +28,10 @@ import graft.core.Checkpoint
   */
 object ConnectedComponents {
 
-  /** Edge-count ceiling for the driver-side union-find fast path —
-    * small enough that the collected edge array and the parent map are
-    * a few tens of MB at worst, far past any fixture and far below any
-    * corpus-scale duplicate graph. */
-  private[pipeline] val LocalEdgeBound: Long = 200000L
+  /** Edge-count ceiling for the driver-side union-find fast path, by
+    * [[Gate]]'s driver-memory rule: the collected edge array and the
+    * parent map (≤ ~2·bound boxed entries). */
+  private[graft] val LocalEdgeBound = new Gate("ConnectedComponents.LocalEdgeBound", 200000L)
 
   /** Connected components of the undirected graph given by `edges`
     * (`aCol`, `bCol`: long-castable node ids). Returns one row per
@@ -46,15 +45,14 @@ object ConnectedComponents {
     * the input violates the contract (e.g. NULL ids).
     *
     * Not lazy: the call itself runs Spark jobs. It always counts the
-    * canonical edge set; at or below `localEdgeBound` edges it collects
+    * canonical edge set; at or below [[LocalEdgeBound]] edges it collects
     * them to the driver and returns a driver-built DataFrame; above it,
     * every star round runs before the call returns. A caller that embeds
     * the result in a larger plan pays those jobs (and up to
-    * `localEdgeBound` collected edges of driver memory) at construction
+    * [[LocalEdgeBound]] collected edges of driver memory) at construction
     * time, not at the plan's action. */
   def components(
-      edges: DataFrame, aCol: String, bCol: String, maxIter: Int = 25,
-      localEdgeBound: Long = LocalEdgeBound): DataFrame = {
+      edges: DataFrame, aCol: String, bCol: String, maxIter: Int = 25): DataFrame = {
     // canonical undirected edges (hi > lo), self-loops dropped
     var e = edges
       .select(F.col(aCol).cast("long").as("x"), F.col(bCol).cast("long").as("y"))
@@ -70,10 +68,9 @@ object ConnectedComponents {
     // sf0.1: every CC consumer pays ~1 s of round-trip jobs to cluster a
     // few hundred pairs). Union-find with union-by-min-root yields the
     // IDENTICAL (id, component = min reachable id) table — exact integer
-    // output, no float, no tie-break ambiguity. The bound keeps driver
-    // memory trivial (≤ ~2·bound boxed map entries); a corpus-scale pair
-    // list exceeds it and takes the distributed path unchanged.
-    if (sigPrev._1 <= localEdgeBound) {
+    // output, no float, no tie-break ambiguity. A corpus-scale pair list
+    // exceeds the bound and takes the distributed path unchanged.
+    if (LocalEdgeBound.admits(sigPrev._1)) {
       val rows = e.select("hi", "lo").collect()
       Checkpoint.release(e)
       val parent = new java.util.HashMap[Long, Long]()

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Gate
+
 /** Deduplication operators for training-data pipelines.
   *
   * All stages are expression-only (codegen'd, no UDFs): shingling and
@@ -287,13 +289,13 @@ object Dedup {
       .filter(F.col("bucket_size") > maxBucketSize)
 
   /** Ceiling on the longs [[minHashNearDups]] collects for its driver
-    * finish: Σ size(ids) shingle ids plus `bands` band hashes per row,
-    * i.e. at most 16 MB of longs — the same rationale as
-    * `ConnectedComponents.LocalEdgeBound`. It covers the sf0.01 (~27 k
-    * ids) and sf0.1 (~265 k ids) fixtures and a curation batch of a few
-    * thousand documents; a corpus-scale input (the 100× scale probe
-    * has ~27 M ids) keeps the distributed band exchange. */
-  private[graft] val LocalShingleBound: Long = 2000000L
+    * finish, by [[Gate]]'s driver-memory rule: Σ size(ids) shingle ids
+    * plus `bands` band hashes per row, i.e. at most 16 MB of longs. It
+    * covers the sf0.01 (~27 k ids) and sf0.1 (~265 k ids) fixtures and a
+    * curation batch of a few thousand documents; a corpus-scale input
+    * (the 100× scale probe has ~27 M ids) keeps the distributed band
+    * exchange. */
+  private[graft] val LocalShingleBound = new Gate("Dedup.LocalShingleBound", 2000000L)
 
   /** Ceiling on the candidate pairs the driver finish may enumerate,
     * counted from the bucket sizes before any pair is built: Σ C(n, 2)
@@ -301,7 +303,7 @@ object Dedup {
     * Past it (a large uncapped bucket) the pair set and its Jaccard
     * merges would cost tens of MB and seconds of driver time, so the
     * distributed plan runs instead. */
-  private[graft] val LocalCandidateBound: Long = 1000000L
+  private[graft] val LocalCandidateBound = new Gate("Dedup.LocalCandidateBound", 1000000L)
 
   /** Full MinHash-LSH near-dup pipeline: returns candidate pairs with
     * their exact shingle-set Jaccard (over 64-bit shingle ids), filtered
@@ -339,15 +341,7 @@ object Dedup {
   def minHashNearDups(
       df: DataFrame, textCol: String, idCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5,
-      maxBucketSize: Int = 1000): DataFrame =
-    minHashNearDups(df, textCol, idCol, numPerm, bands, threshold, maxBucketSize,
-      LocalShingleBound)
-
-  /** [[minHashNearDups]] with an explicit driver-finish bound (0 forces
-    * the distributed plan). */
-  private[graft] def minHashNearDups(
-      df: DataFrame, textCol: String, idCol: String, numPerm: Int, bands: Int,
-      threshold: Double, maxBucketSize: Int, localShingleBound: Long): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     // NOT widened (r20): shingling is ~µs per row — unlike the
     // Levenshtein/codec paths, a one-file input's single-core map stage
     // here is cheaper than the added exchange + per-task overhead on the
@@ -374,7 +368,7 @@ object Dedup {
           .rdd.aggregate((0L, 0L))(
             (acc, r) => (acc._1 + 1, acc._2 + r.getInt(0)),
             (x, y) => (x._1 + y._1, x._2 + y._2))
-        if (nIds + n * bands > localShingleBound) None
+        if (!LocalShingleBound.admits(nIds + n * bands)) None
         else {
           val conf = df.sparkSession.conf
           // size(NULL) is -1 outside ANSI when the legacy flag is on
@@ -445,7 +439,7 @@ object Dedup {
       val n = b.length.toLong
       if (underCap(b.length)) n * (n - 1) / 2 else n - 1
     }.sum
-    if (candidates > LocalCandidateBound) return None
+    if (!LocalCandidateBound.admits(candidates)) return None
 
     val pairs = mutable.HashSet.empty[(Long, Long)]
     buckets.foreach { b =>
@@ -542,24 +536,17 @@ object Dedup {
     * rows. The pair list (candidate-bounded, ≪ corpus) is the only input
     * to the iterative stage, so clustering cost scales with duplicates
     * found, not data scanned. Both stages pick their finish by a counted
-    * size bound: a small corpus is paired and clustered on the driver
-    * and leaves nothing pinned; a large one runs the distributed band
-    * exchange and star rounds. Not lazy: the pairing and clustering
-    * jobs run before the call returns. */
+    * size bound ([[LocalShingleBound]] with [[LocalCandidateBound]], then
+    * `ConnectedComponents.LocalEdgeBound`): a small corpus is paired and
+    * clustered on the driver and leaves nothing pinned; a large one runs
+    * the distributed band exchange and star rounds. Not lazy: the pairing
+    * and clustering jobs run before the call returns. */
   def nearDupClusters(
       df: DataFrame, textCol: String, idCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5,
-      maxBucketSize: Int = 1000): DataFrame =
-    nearDupClusters(df, textCol, idCol, numPerm, bands, threshold, maxBucketSize,
-      LocalShingleBound)
-
-  /** [[nearDupClusters]] with an explicit [[minHashNearDups]] driver-finish
-    * bound (0 forces its distributed plan). */
-  private[graft] def nearDupClusters(
-      df: DataFrame, textCol: String, idCol: String, numPerm: Int, bands: Int,
-      threshold: Double, maxBucketSize: Int, localShingleBound: Long): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     val pairs = minHashNearDups(df, textCol, idCol, numPerm, bands, threshold,
-      maxBucketSize, localShingleBound)
+      maxBucketSize)
     val comp = ConnectedComponents.components(pairs, "a", "b")
     val sizes = comp.groupBy(F.col("component").as("c2"))
       .agg(F.count(F.lit(1)).as("cluster_size"))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
 /** Ordered funnel analysis: how many users complete step 1, then step 2

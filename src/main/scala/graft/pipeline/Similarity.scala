@@ -377,7 +377,6 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       numCentroids: Int = 16, m: Int = 16, ksub: Int = 16,
       sampleSize: Int = 4096): IvfPqIndex = {
-    import graft.functions.Pq
     val nc = corpus.select(F.col(idCol), l2normalize(F.col(vecCol)).as("__nv"))
     // ONE sample collect feeds both the coarse centroids and the
     // residual codebook (r21; was two identical sort+limit jobs)

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 
 /** Video-column analytics over opaque `binary` columns — the video leg

@@ -60,9 +60,9 @@ object ProfileStream {
     * ([[windowedProfileDF]]); here lateness only means a late row lands
     * in a later store row for the same window — merged reads are
     * unaffected. A micro-batch of at most [[Profiler.LocalCellBound]]
-    * cells is aggregated and serialized on the driver after one counted
-    * collect; a larger one runs the windowed aggregate and the store
-    * write on the executors. */
+    * cells (the bound in force when the query starts) is aggregated and
+    * serialized on the driver after one counted collect; a larger one
+    * runs the windowed aggregate and the store write on the executors. */
   def toStore(
       sdf: DataFrame,
       tsCol: String,
@@ -78,16 +78,10 @@ object ProfileStream {
       profiler: Profiler = new Profiler(),
       columns: Option[Seq[String]] = None,
       segmentColumns: Seq[String] = Nil,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    toStore(sdf, tsCol, window, watermark, storePath, datasetId, profiler, columns,
-      segmentColumns, trigger, Profiler.LocalCellBound)
-
-  /** [[toStore]] with an explicit driver-finish bound for each
-    * micro-batch (0 forces the distributed aggregate and write). */
-  private[graft] def toStore(
-      sdf: DataFrame, tsCol: String, window: String, watermark: String, storePath: String,
-      datasetId: String, profiler: Profiler, columns: Option[Seq[String]],
-      segmentColumns: Seq[String], trigger: Trigger, localCellBound: Long): StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    // read once, on the starting thread: every batch uses the bound in
+    // force when the query started
+    val cellBound = Profiler.LocalCellBound.bound
     val profiled = columns.getOrElse(sdf.schema.fields.map(_.name).toSeq
       .filterNot(n => n == tsCol || segmentColumns.contains(n)))
     val needed = ((tsCol +: segmentColumns) ++ profiled).distinct.map(F.col)
@@ -104,7 +98,7 @@ object ProfileStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val store = new ProfileStore(batch.sparkSession, storePath)
         val (nSeg, quantiles) = (segmentColumns.length, profiler.config.quantiles)
-        LocalAggregate.local(batch.select(needed: _*), localCellBound)
+        LocalAggregate.local(batch.select(needed: _*), cellBound)
           .flatMap(l => LocalAggregate.collect(flat(l))) match {
           case Some(rows) => store.writeWindowed(rows.toSeq, nSeg, datasetId, quantiles)
           // above the bound, rows serialize on the executors, so a

@@ -56,8 +56,8 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("distributed star rounds and the local fast path agree") {
-    // localEdgeBound = 0 forces the alternating-star path on a graph the
-    // default bound would close on the driver — both must produce the
+    // LocalEdgeBound set to 0 forces the alternating-star path on a graph
+    // the default bound would close on the driver — both must produce the
     // identical (id, min-reachable) table, including schema.
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -65,7 +65,8 @@ class ConnectedComponentsSpec extends SparkSpec {
       .filter { case (a, b) => a != b }
     val df = edges.toDF("a", "b").repartition(5)
     val loc = ConnectedComponents.components(df, "a", "b")
-    val dist = ConnectedComponents.components(df, "a", "b", localEdgeBound = 0L)
+    val dist = ConnectedComponents.LocalEdgeBound.withBound(0L)(
+      ConnectedComponents.components(df, "a", "b"))
     assert(loc.schema.map(f => (f.name, f.dataType)) ==
       dist.schema.map(f => (f.name, f.dataType)))
     val lm = loc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

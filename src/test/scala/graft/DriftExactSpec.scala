@@ -13,10 +13,14 @@ class DriftExactSpec extends SparkSpec {
 
   /** The default bound takes the driver finish on every fixture here;
     * 0 forces the distributed prefix sums. */
-  private val ksBounds = Seq(DriftExact.LocalPairBound, 0L)
+  private val ksBounds = Seq(DriftExact.LocalPairBound.default, 0L)
+
+  /** `body` with the KS gate's bound set to `bound`. */
+  private def at[T](bound: Long)(body: => T): T =
+    DriftExact.LocalPairBound.withBound(bound)(body)
 
   private def ksStat(df: org.apache.spark.sql.DataFrame, bound: Long) =
-    DriftExact.ksStats(df, Seq("v"), F.col("is_t"), bound)("v")
+    at(bound)(DriftExact.ksStats(df, Seq("v"), F.col("is_t")))("v")
 
   private def localKs(a: Seq[Double], b: Seq[Double]): Double = {
     val grid = (a ++ b).distinct.sorted
@@ -109,10 +113,10 @@ class DriftExactSpec extends SparkSpec {
     val df = Seq.fill(300)((rng.nextInt(40).toDouble, rng.nextGaussian() * 3 + 10,
       rng.nextBoolean())).toDF("x", "y", "is_t").repartition(6)
     ksBounds.foreach { bound =>
-      val ks = DriftExact.ksStats(df, Seq("x", "y"), F.col("is_t"), bound)
+      val ks = at(bound)(DriftExact.ksStats(df, Seq("x", "y"), F.col("is_t")))
       Seq("x", "y").foreach { c =>
-        assert(ks(c) == DriftExact.ksStats(df.select(c, "is_t"), Seq(c), F.col("is_t"),
-          bound)(c), s"$c, bound $bound")
+        assert(ks(c) == at(bound)(DriftExact.ksStats(df.select(c, "is_t"), Seq(c),
+          F.col("is_t")))(c), s"$c, bound $bound")
       }
     }
     val hl = DriftExact.hellingerStats(df, Seq("x", "y"), F.col("is_t"))
@@ -276,7 +280,7 @@ class DriftExactSpec extends SparkSpec {
       rng.nextBoolean())) ++ Seq((null, 1.0, true), (null, 2.0, false))
     val df = rows.toDF("seg", "v", "is_t").repartition(7)
     ksBounds.foreach { bound =>
-      val byKey = DriftExact.ksStatsByKey(df, F.col("seg"), "v", F.col("is_t"), bound)
+      val byKey = at(bound)(DriftExact.ksStatsByKey(df, F.col("seg"), "v", F.col("is_t")))
       assert(byKey.keySet == Set("a", "b", "c"))
       Seq("a", "b", "c").foreach { s =>
         val single = ksStat(df.filter(F.col("seg") === s), bound)
@@ -295,7 +299,7 @@ class DriftExactSpec extends SparkSpec {
       .map { case (v, t) => (v, Option.empty[Double], t) }
       .toDF("v", "n", "is_t").repartition(3)
     val got = ksBounds.map(bound =>
-      DriftExact.ksStats(df, Seq("v", "n"), F.col("is_t"), bound))
+      at(bound)(DriftExact.ksStats(df, Seq("v", "n"), F.col("is_t"))))
     assert(got.head("v") == ((2.0 / 12.0, 3L, 4L)))
     assert(got.head("n") == ((0.0, 0L, 0L)))
     assert(got.distinct.size == 1, s"the two finishes differ: $got")
@@ -309,7 +313,7 @@ class DriftExactSpec extends SparkSpec {
     ksBounds.foreach { bound =>
       val before = sc.getPersistentRDDs.keySet
       ksStat(df, bound)
-      DriftExact.ksStatsByKey(df, F.col("seg"), "v", F.col("is_t"), bound)
+      at(bound)(DriftExact.ksStatsByKey(df, F.col("seg"), "v", F.col("is_t")))
       assert(sc.getPersistentRDDs.keySet == before, s"bound $bound")
     }
   }

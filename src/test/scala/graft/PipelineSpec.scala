@@ -61,9 +61,9 @@ class PipelineSpec extends SparkSpec {
   test("minHashNearDups finds exactly the exact-Jaccard pairs at 0.5") {
     val docs = table("documents")
     // the driver finish (default bound) and the distributed plan (bound 0)
-    val Seq(local, dist) = Seq(Dedup.LocalShingleBound, 0L).map(bound =>
-      Dedup.minHashNearDups(docs, "text", "doc_id", numPerm = 64, bands = 32,
-        threshold = 0.5, maxBucketSize = 1000, localShingleBound = bound))
+    val Seq(local, dist) = Seq(Dedup.LocalShingleBound.default, 0L).map(bound =>
+      Dedup.LocalShingleBound.withBound(bound)(Dedup.minHashNearDups(docs, "text", "doc_id",
+        numPerm = 64, bands = 32, threshold = 0.5, maxBucketSize = 1000)))
     assert(local.schema == dist.schema)
     assert(local.collect().map(_.toString).sorted.toSeq ==
       dist.collect().map(_.toString).sorted.toSeq)

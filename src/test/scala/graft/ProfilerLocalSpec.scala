@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.datasketches.kll.KllSketch
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{functions => F}
 
@@ -16,15 +15,18 @@ import graft.profile.{DatasetProfileView, ProfileSerde}
 import graft.streaming.ProfileStream
 
 /** Both branches of the driver-side profile finish: every case runs with
-  * the default [[Profiler.LocalCellBound]] (driver) and with bound 0
-  * (distributed). On one partition with at most `kllK` rows per group
-  * the two give byte-identical profiles and store rows; above that, or
-  * across partitions, every exact metric agrees and KLL quantiles agree
-  * within the sketch's rank error. */
+  * the default [[Profiler.LocalCellBound]] (driver) and with the gate's
+  * bound set to 0 (distributed). On one partition with at most `kllK`
+  * rows per group the two give byte-identical profiles and store rows;
+  * above that, or across partitions, every exact metric agrees and KLL
+  * quantiles agree within the sketch's rank error. */
 class ProfilerLocalSpec extends SparkSpec {
 
-  private val Local = Profiler.LocalCellBound
+  private val Local = Profiler.LocalCellBound.default
   private val Distributed = 0L
+
+  /** `body` with the profile gate's bound set to `bound`. */
+  private def at[T](bound: Long)(body: => T): T = Profiler.LocalCellBound.withBound(bound)(body)
 
   private val schema = StructType(Seq(
     StructField("seg", StringType), StructField("d", DoubleType),
@@ -72,8 +74,8 @@ class ProfilerLocalSpec extends SparkSpec {
     test(s"profile and profileSegmented are byte-identical on both branches: $name, ansi=$ansi") {
       withAnsi(ansi) {
         val df = onePartition(rows(600))
-        val (local, localJobs) = withJobCount(p.profile(df, None, Local))
-        val (dist, distJobs) = withJobCount(p.profile(df, None, Distributed))
+        val (local, localJobs) = withJobCount(at(Local)(p.profile(df)))
+        val (dist, distJobs) = withJobCount(at(Distributed)(p.profile(df)))
         assert(localJobs === 1)
         assert(distJobs > localJobs)
         assert(bytes(local) === bytes(dist))
@@ -82,8 +84,9 @@ class ProfilerLocalSpec extends SparkSpec {
           (0 until 600).count(i => i % 17 != 0 && i % 19 == 0))
 
         val filter = Some(F.col("l") =!= 0)
-        val (segLocal, segJobs) = withJobCount(p.profileSegmented(df, Seq("seg"), filter, Local))
-        val segDist = p.profileSegmented(df, Seq("seg"), filter, Distributed)
+        val (segLocal, segJobs) =
+          withJobCount(at(Local)(p.profileSegmented(df, Seq("seg"), filter)))
+        val segDist = at(Distributed)(p.profileSegmented(df, Seq("seg"), filter))
         assert(segJobs === 1)
         assert(segLocal.keySet === Set(Seq("x"), Seq("y"), Seq("null")))
         assert(segLocal.keySet === segDist.keySet)
@@ -98,12 +101,12 @@ class ProfilerLocalSpec extends SparkSpec {
       def aggColumn(c: Column) = F.struct(F.sum(c).as("sum"))
     }))
     val empty = onePartition(Nil)
-    assert(bytes(p.profile(empty, None, Local)) === bytes(p.profile(empty, None, Distributed)))
-    assert(p.profile(empty, None, Local).columns("d").counts.get.n === 0L)
-    assert(p.profileSegmented(empty, Seq("seg"), None, Local).isEmpty)
+    assert(bytes(at(Local)(p.profile(empty))) === bytes(at(Distributed)(p.profile(empty))))
+    assert(at(Local)(p.profile(empty)).columns("d").counts.get.n === 0L)
+    assert(at(Local)(p.profileSegmented(empty, Seq("seg"))).isEmpty)
 
     val df = onePartition(rows(300))
-    assert(bytes(p.profile(df, None, Local)) === bytes(p.profile(df, None, Distributed)))
+    assert(bytes(at(Local)(p.profile(df))) === bytes(at(Distributed)(p.profile(df))))
     val local = LocalAggregate.collect(p.profileDF(LocalAggregate.local(df, Local).get))
     assert(local.get.toSeq === p.profileDF(df).collect().toSeq)
   }
@@ -117,19 +120,19 @@ class ProfilerLocalSpec extends SparkSpec {
     val df = onePartition(rows(200))
     val small = LocalAggregate.local(df, Local).get
     assert(LocalAggregate.collect(p.profileDF(small)).isEmpty)
-    val (view, jobs) = withJobCount(p.profile(df, None, Local))
+    val (view, jobs) = withJobCount(at(Local)(p.profile(df)))
     assert(jobs > 1)
-    assert(bytes(view) === bytes(p.profile(df, None, Distributed)))
+    assert(bytes(view) === bytes(at(Distributed)(p.profile(df))))
   }
 
   test("above the bound, or past the file-size estimate, the distributed aggregate runs") {
     val p = new Profiler()
     val df = onePartition(rows(400))
     // 400 rows × 8 columns = 3,200 cells: counted, over a 1,000-cell bound
-    val (over, jobs) = withJobCount(p.profile(df, None, 1000L))
+    val (over, jobs) = withJobCount(at(1000L)(p.profile(df)))
     assert(jobs > 1)
-    assert(bytes(over) === bytes(p.profile(df, None, Distributed)))
-    val (_, segJobs) = withJobCount(p.profileSegmented(df, Seq("seg"), None, 1000L))
+    assert(bytes(over) === bytes(at(Distributed)(p.profile(df))))
+    val (_, segJobs) = withJobCount(at(1000L)(p.profileSegmented(df, Seq("seg"))))
     assert(segJobs > 1)
     // a file scan larger than 8 bytes a cell of the bound is never counted
     val big = table("lineitem")
@@ -145,8 +148,8 @@ class ProfilerLocalSpec extends SparkSpec {
     val many = spark.createDataFrame(rows(2500).asJava, schema).repartition(4)
     val eps = KllSketch.getNormalizedRankError(p.config.kllK, false)
     for (df <- Seq(one, many)) {
-      val local = p.profile(df, None, Local)
-      val dist = p.profile(df, None, Distributed)
+      val local = at(Local)(p.profile(df))
+      val dist = at(Distributed)(p.profile(df))
       assert(local.columns.keySet === dist.columns.keySet)
       local.columns.keys.foreach { c =>
         val (a, b) = (local.columns(c), dist.columns(c))
@@ -197,11 +200,11 @@ class ProfilerLocalSpec extends SparkSpec {
       val sdf = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(src + "/*")
       val shuffled = shuffleBytes {
-        val q = ProfileStream.toStore(sdf, "t", "1 hour", "1 hour", store, "ds", new Profiler(),
-          None, Seq("seg"), Trigger.AvailableNow(), bound)
+        val q = at(bound)(ProfileStream.toStore(sdf, "t", "1 hour", "1 hour", store, "ds",
+          segmentColumns = Seq("seg")))
         q.awaitTermination()
       }
-      assert((shuffled == 0) === (bound == Local))
+      assert((shuffled.values.sum == 0) === (bound == Local))
       spark.read.parquet(store).select("dataset_ts", "segment", "profile").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2).toSeq))
         .sortBy(r => (r._1, r._2, r._3.mkString(",")))
@@ -212,29 +215,16 @@ class ProfilerLocalSpec extends SparkSpec {
     assert(stores.head === stores.last)
   }
 
-  /** Shuffle bytes written by the tasks `body` ran. The listener shares
-    * the queue [[withJobCount]] flushes, so every task end has arrived. */
-  private def shuffleBytes(body: => Unit): Long = {
-    val bytes = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try withJobCount(body) finally spark.sparkContext.removeSparkListener(listener)
-    bytes.get
-  }
-
   test("a NULL segment and the string \"null\" are rejected, not merged") {
     val df = spark.createDataFrame(Seq(Row("a", 1L), Row("null", 2L), Row(null, 3L),
       Row(null, 4L)).asJava,
       StructType(Seq(StructField("seg", StringType), StructField("v", LongType))))
     for (bound <- Seq(Local, Distributed)) {
       val e = intercept[IllegalArgumentException](
-        new Profiler().profileSegmented(df, Seq("seg"), None, bound))
+        at(bound)(new Profiler().profileSegmented(df, Seq("seg"))))
       assert(e.getMessage.contains("segment column seg") && e.getMessage.contains("\"null\""))
-      val ok = new Profiler().profileSegmented(
-        df.filter(F.col("seg") =!= "null" || F.col("seg").isNull), Seq("seg"), None, bound)
+      val ok = at(bound)(new Profiler().profileSegmented(
+        df.filter(F.col("seg") =!= "null" || F.col("seg").isNull), Seq("seg")))
       assert(ok.map { case (k, v) => k -> v.columns("v").counts.get.n } ===
         Map(Seq("a") -> 1L, Seq("null") -> 2L))
     }
@@ -245,8 +235,10 @@ class ProfilerLocalSpec extends SparkSpec {
     val p = new Profiler()
     for (bound <- Seq(Local, Distributed)) {
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      p.profile(df, None, bound)
-      p.profileSegmented(df, Seq("seg"), None, bound)
+      at(bound) {
+        p.profile(df)
+        p.profileSegmented(df, Seq("seg"))
+      }
       assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty)
     }
   }

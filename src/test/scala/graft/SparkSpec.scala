@@ -74,4 +74,27 @@ abstract class SparkSpec extends AnyFunSuite {
       (out, seen.size - 1)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Shuffle bytes written by the tasks `body` ran, per streaming
+    * micro-batch id (the stage's `streaming.sql.batchId` property; -1
+    * outside a stream). The listener shares the queue [[withJobCount]]
+    * flushes, so every task end has arrived. */
+  def shuffleBytes(body: => Unit): Map[Long, Long] = {
+    val batchOf = scala.collection.concurrent.TrieMap.empty[Int, Long]
+    val bytes = scala.collection.concurrent.TrieMap.empty[Long, Long]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        batchOf(e.stageInfo.stageId) = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("streaming.sql.batchId"))).fold(-1L)(_.toLong)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          val batch = batchOf.getOrElse(e.stageId, -1L)
+          bytes(batch) = bytes.getOrElse(batch, 0L) + m.shuffleWriteMetrics.bytesWritten
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try withJobCount(body) finally spark.sparkContext.removeSparkListener(listener)
+    bytes.toMap
+  }
 }

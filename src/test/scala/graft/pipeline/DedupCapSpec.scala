@@ -19,8 +19,12 @@ class DedupCapSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** `Dedup.minHashNearDups`' driver finish (default bound) and its
-    * distributed plan (bound 0); every minHash case runs on both. */
-  private val bounds = Seq(Dedup.LocalShingleBound, 0L)
+    * distributed plan (the gate's bound set to 0); every minHash case runs
+    * on both. */
+  private val bounds = Seq(Dedup.LocalShingleBound.default, 0L)
+
+  /** `body` with the MinHash gate's bound set to `bound`. */
+  private def at[T](bound: Long)(body: => T): T = Dedup.LocalShingleBound.withBound(bound)(body)
 
   /** Which finish built a `minHashNearDups` result: driver rows or the
     * distributed plan's checkpoint. */
@@ -33,11 +37,11 @@ class DedupCapSpec extends SparkSpec {
 
   private def multiset(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
-  /** Runs `pairsAt` on both bounds, checks each took the intended finish
+  /** Runs `pairsAt` at both bounds, checks each took the intended finish
     * and that both give the same schema and the same multiset of rows;
     * returns the rows. */
-  private def sameOnBothFinishes(pairsAt: Long => DataFrame): Seq[String] = {
-    val Seq(local, dist) = bounds.map(pairsAt)
+  private def sameOnBothFinishes(pairsAt: => DataFrame): Seq[String] = {
+    val Seq(local, dist) = bounds.map(bound => at(bound)(pairsAt))
     assert(finish(local) == "driver")
     assert(finish(dist) == "distributed")
     assert(local.schema == dist.schema)
@@ -97,14 +101,14 @@ class DedupCapSpec extends SparkSpec {
       (900L, "completely unrelated text about compiler construction and parsing"),
       (901L, "another standalone document describing volcano geology fieldwork")))
       .toDF("doc_id", "text").repartition(7)
-    val rows = sameOnBothFinishes(bound => Dedup.minHashNearDups(docs, "text", "doc_id",
-      numPerm = 16, bands = 8, threshold = 0.5, maxBucketSize = 8, localShingleBound = bound))
+    val rows = sameOnBothFinishes(Dedup.minHashNearDups(docs, "text", "doc_id",
+      numPerm = 16, bands = 8, threshold = 0.5, maxBucketSize = 8))
     // every bucket of the 40 copies over-caps in EVERY band -> star edges
     // only; identical copies have jaccard 1.0
     assert(rows == (2 to 40).map(x => s"[1,$x,1.0]").sorted)
     for (bound <- bounds) {
-      val clusters = Dedup.nearDupClusters(docs, "text", "doc_id",
-        numPerm = 16, bands = 8, threshold = 0.5, maxBucketSize = 8, localShingleBound = bound)
+      val clusters = at(bound)(Dedup.nearDupClusters(docs, "text", "doc_id",
+        numPerm = 16, bands = 8, threshold = 0.5, maxBucketSize = 8))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       assert(clusters.length == 40, "all 40 copies clustered; singletons absent")
       assert(clusters.forall(c => c._2 == 1L && c._3 == 40L))
@@ -140,9 +144,8 @@ class DedupCapSpec extends SparkSpec {
 
   test("under-cap corpus: capped pair set is identical to uncapped") {
     val docs = table("documents")
-    def pairs(cap: Int) = sameOnBothFinishes(bound => Dedup.minHashNearDups(docs, "text",
-      "doc_id", numPerm = 64, bands = 32, threshold = 0.5, maxBucketSize = cap,
-      localShingleBound = bound))
+    def pairs(cap: Int) = sameOnBothFinishes(Dedup.minHashNearDups(docs, "text",
+      "doc_id", numPerm = 64, bands = 32, threshold = 0.5, maxBucketSize = cap))
     assert(pairs(1000) == pairs(0), "no natural bucket over-caps at sf0.001")
   }
 
@@ -164,9 +167,8 @@ class DedupCapSpec extends SparkSpec {
       val prev = spark.conf.get("spark.sql.ansi.enabled")
       val rows = try {
         spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
-        sameOnBothFinishes(bound => Dedup.minHashNearDups(docs, "text", "doc_id",
-          numPerm = 64, bands = 64, threshold = 0.5, maxBucketSize = cap,
-          localShingleBound = bound))
+        sameOnBothFinishes(Dedup.minHashNearDups(docs, "text", "doc_id",
+          numPerm = 64, bands = 64, threshold = 0.5, maxBucketSize = cap))
       } finally spark.conf.set("spark.sql.ansi.enabled", prev)
       assert(!rows.exists(_.contains("null")), s"cap $cap: a NULL id or jaccard paired")
       if (cap != 2) {
@@ -176,8 +178,8 @@ class DedupCapSpec extends SparkSpec {
         assert(rows.count(_.startsWith("[6,7,")) == (if (ansi) 2 else 3), s"cap $cap: $rows")
       }
     }
-    val clusters = bounds.map(bound => multiset(Dedup.nearDupClusters(docs, "text", "doc_id",
-      numPerm = 64, bands = 64, threshold = 0.5, maxBucketSize = 2, localShingleBound = bound)))
+    val clusters = bounds.map(bound => multiset(at(bound)(Dedup.nearDupClusters(docs, "text",
+      "doc_id", numPerm = 64, bands = 64, threshold = 0.5, maxBucketSize = 2))))
     assert(clusters(0) == clusters(1))
   }
 
@@ -189,7 +191,7 @@ class DedupCapSpec extends SparkSpec {
       .toDF("doc_id", "text").repartition(4)
     val pairs = Dedup.minHashNearDups(docs, "text", "doc_id",
       numPerm = 64, bands = 64, threshold = 0.5, maxBucketSize = 0)
-    assert(64L * n * (n - 1) / 2 > Dedup.LocalCandidateBound)
+    assert(64L * n * (n - 1) / 2 > Dedup.LocalCandidateBound.default)
     assert(finish(pairs) == "distributed")
     val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.length == n * (n - 1) / 2)
@@ -268,9 +270,8 @@ class DedupCapSpec extends SparkSpec {
     // clustering identical to nearDupClusters (components + sizes agree),
     // whichever finish pairs the documents
     for (bound <- bounds) {
-      val plain = Dedup.nearDupClusters(df, "text", "doc_id",
-        numPerm = 64, bands = 32, threshold = 0.4, maxBucketSize = 1000,
-        localShingleBound = bound)
+      val plain = at(bound)(Dedup.nearDupClusters(df, "text", "doc_id",
+        numPerm = 64, bands = 32, threshold = 0.4, maxBucketSize = 1000))
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(plain.keySet == got.keySet)
       plain.foreach { case (id, (comp2, size)) =>
