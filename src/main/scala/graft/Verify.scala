@@ -43,6 +43,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] left: ${spark.sparkContext.getPersistentRDDs.size} persistent " +
+      s"RDDs, ${spark.catalog.listTables().collect().count(_.isTemporary)} temp views, " +
+      s"${spark.streams.active.length} active streams")
     spark.stop()
     // a failed query only leaves its output directory missing: name them all
     val names = failed.result()

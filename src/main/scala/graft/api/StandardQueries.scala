@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
 import graft.analysis._
-import graft.core.{MetricConfig, Namespace, ResolverSpec}
+import graft.core.{Checkpoint, MetricConfig, Namespace, ResolverSpec}
 import graft.functions._
 import graft.functions.Fingerprints.rolling_min_hash
 import graft.pipeline.{Audio, Decontaminate, Dedup, Embeddings, Exif, HtmlExtract, Multimodal, NaiveBayes, Packing, Pii, QualityClassifier, Sampling, Similarity, TextAnalysis, Video}
@@ -1130,14 +1130,12 @@ object StandardQueries {
   private def qStreamingDedupImages = Q(
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      val index = Multimodal.withDHash(
+      Checkpoint.scoped(Multimodal.withDHash(
         Multimodal.syntheticBmpShifted(
           docs.select((F.col("doc_id") * 2).as("img_id"),
             F.col("doc_id").as("base"), F.lit(0).as("shift")),
           "base", "shift"), "img")
-        .select("img_id", "dhash")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+        .select("img_id", "dhash")) { index =>
         val sdf = st(s, dir, "documents")
           .select((F.col("doc_id") * 2 + 1).as("img_id"),
             F.col("doc_id").as("base"), F.lit(1).as("shift"))
@@ -1147,7 +1145,7 @@ object StandardQueries {
         Streams.toMemory(Dedup.hashNearDupsAgainstIndex(probe, "img_id", "dhash",
             index, "img_id", "dhash", maxHamming = 7, bands = 8))
           .orderBy("a", "b")
-      } finally index.unpersist(blocking = false)
+      }
     },
     Some(imageDhashCte +
       """ SELECT p.img_id AS a, i.img_id AS b,
@@ -4984,18 +4982,16 @@ object StandardQueries {
     (s, dir) => {
       val docs = t(s, dir, "documents")
       // production stores the index as parquet (minHashIndex scaladoc);
-      // this inline build is persisted so the two index references
+      // this inline build is checkpointed so the two index references
       // (band join + array re-fetch) don't re-shingle the corpus
-      val index = Dedup.minHashIndex(
-        docs.filter(F.col("source") =!= "src1"), "text", "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      Checkpoint.scoped(Dedup.minHashIndex(
+          docs.filter(F.col("source") =!= "src1"), "text", "doc_id")) { index =>
         val sdf = st(s, dir, "documents")
           .filter(F.col("source") === "src1")
         Streams.toMemory(graft.streaming.DedupStream.nearDupsAgainstIndex(
           sdf, index, "text", "doc_id", numPerm = 64, bands = 32, threshold = 0.5))
           .orderBy("a", "b")
-      } finally index.unpersist(blocking = false)
+      }
     },
     Some(nearDupPairsOracle(", source", "a.source = 'src1' AND b.source <> 'src1'")))
 

@@ -56,7 +56,8 @@ object Decontaminate {
     * (8-byte keys) above it — plus two lean joins back to the (id,
     * split) projection — split labels are map-only derivations, so
     * those scans prune to the id column. Not lazy: the pairing jobs run
-    * before the call returns. */
+    * before the call returns. Above the MinHash size bound the lazy result
+    * reads the pairs' checkpoint, pinned until `Checkpoint.release`. */
   def splitLeakage(
       df: DataFrame, textCol: String, idCol: String, splitCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5): DataFrame = {

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
-import graft.core.Gate
+import graft.core.{Checkpoint, Gate}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -240,7 +240,7 @@ object Dedup {
         // the other two references (pinned by DedupCapSpec under the
         // sort-merge plan). The stats agg's partial pass + 8-byte-key
         // exchange does duplicate once across the union branches; that is
-        // a cheap re-scan of the (cached, in minHashNearDups) banding, not
+        // a cheap re-scan of the (checkpointed, in minHashNearDups) banding, not
         // a second corpus shuffle.
         val tagged = banded.join(stats, keyCols)
         val small = allPairs(
@@ -309,9 +309,9 @@ object Dedup {
     * their exact shingle-set Jaccard (over 64-bit shingle ids), filtered
     * at `threshold`.
     *
-    * Scale shape: shingle→sign→band per row (map-only) into a persisted
-    * (doc_id, ids) projection, so shingling runs once. For integral
-    * ids, one aggregate job materializes the persist and measures
+    * Scale shape: shingle→sign→band per row (map-only) into a scoped
+    * checkpoint of (doc_id, ids), so shingling runs once. For integral
+    * ids, one aggregate job materializes the checkpoint and measures
     * Σ size(ids) and the row count; then one of two finishes runs, with
     * the same rows:
     *  1. at most [[LocalShingleBound]] collected longs (ids plus `bands`
@@ -323,15 +323,15 @@ object Dedup {
     *     is built from driver data with the distributed plan's schema,
     *     so the call pins nothing. The candidate count is taken from the
     *     bucket sizes before any pair is built; past its bound the
-    *     distributed plan runs from the still-persisted ids.
+    *     distributed plan runs from the still-checkpointed ids.
     *  2. otherwise the banded exchange carries ONLY (band, hash, doc_id)
     *     — never the shingle arrays; candidate pairs are deduped, then the
     *     two id-arrays are re-fetched by joining the pair list back to the
-    *     persisted projection — so array bytes move only for verified
-    *     candidates. The pair result is eagerly localCheckpointed so the
-    *     persist can be released before the caller's own actions run; the
-    *     returned frame reads that checkpoint, so it stays pinned for the
-    *     session.
+    *     checkpointed projection — so array bytes move only for verified
+    *     candidates. The pair result is an eager local checkpoint, so
+    *     the projection is released before the caller's own actions
+    *     run; the returned frame reads the result's checkpoint, which an
+    *     eager caller frees with `Checkpoint.release` once collected.
     * Pathological buckets (corpus-scale boilerplate) switch to star-edge
     * candidate generation on either branch — see [[lshPairs]] for the
     * recall accounting.
@@ -347,10 +347,8 @@ object Dedup {
     // here is cheaper than the added exchange + per-task overhead on the
     // iterative consumers (A/B-measured at sf0.1: every CC-based dedup
     // query was equal-or-faster without the widen).
-    val ids = df.select(F.col(idCol).as("doc_id"),
-      shingleIds(F.col(textCol)).as("ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoint.scoped(df.select(F.col(idCol).as("doc_id"),
+        shingleIds(F.col(textCol)).as("ids"))) { ids =>
       val banded = ids.select(F.col("doc_id"),
         F.posexplode(bandHashes(F.col("ids"), numPerm, bands)).as(Seq("band", "bh")))
       val verified = lshPairs(banded, Seq("band", "bh"), "doc_id", maxBucketSize)
@@ -361,8 +359,7 @@ object Dedup {
         .select("a", "b", "jaccard")
       val local = integralId(ids.schema("doc_id").dataType).flatMap { toId =>
         // (rows, Σ size(ids)) as an RDD aggregate: one job with no
-        // exchange (Dataset.agg runs a cache stage, a map stage and a
-        // result stage), and it materializes the persist
+        // exchange, and it materializes the checkpoint
         val (n, nIds) = ids.select(
             F.when(F.col("ids").isNotNull, F.size(F.col("ids"))).otherwise(0))
           .rdd.aggregate((0L, 0L))(
@@ -385,7 +382,7 @@ object Dedup {
         case Some(rows) => df.sparkSession.createDataFrame(rows, verified.schema)
         case None => verified.localCheckpoint(true)
       }
-    } finally ids.unpersist(blocking = false)
+    }
   }
 
   /** Long view of an integral id column's values, and back: the driver
@@ -494,21 +491,20 @@ object Dedup {
 
   /** Incremental near-dup: new-batch docs vs an existing [[minHashIndex]]
     * — returns (a = new doc, b = index doc, jaccard ≥ threshold). The
-    * batch is shingled once (persisted across banding + re-fetch); the
-    * index contributes two PRUNED column scans (band hashes for the
+    * batch is shingled once (checkpointed across banding + re-fetch);
+    * the index contributes two PRUNED column scans (band hashes for the
     * join, id-arrays re-fetched only for deduped candidates) and is
     * never re-shingled. `numPerm`/`bands` must match the index's.
     * Intra-batch duplicates are [[minHashNearDups]]'s job — compose
     * both at ingestion. The cap is applied to the INDEX side (the corpus-
     * scale one, where boilerplate mega-buckets live); the batch side is
-    * ingestion-sized and left uncapped. */
+    * ingestion-sized and left uncapped. Eager: a caller frees the
+    * result's checkpoint with `Checkpoint.release` once collected. */
   def nearDupsAgainstIndex(
       newDf: DataFrame, index: DataFrame, textCol: String, idCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5,
       maxBucketSize: Int = 1000): DataFrame = {
-    val batch = minHashIndex(newDf, textCol, idCol, numPerm, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoint.scoped(minHashIndex(newDf, textCol, idCol, numPerm, bands)) { batch =>
       val nb = batch.select(F.col("doc_id").as("a"),
         F.posexplode(F.col("bhs")).as(Seq("band", "bh")))
       val ib = capBuckets(
@@ -524,7 +520,7 @@ object Dedup {
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
         .localCheckpoint(true)
-    } finally batch.unpersist(blocking = false)
+    }
   }
 
   /** Near-duplicate CLUSTERS: [[minHashNearDups]] pairs closed under
@@ -539,8 +535,9 @@ object Dedup {
     * size bound ([[LocalShingleBound]] with [[LocalCandidateBound]], then
     * `ConnectedComponents.LocalEdgeBound`): a small corpus is paired and
     * clustered on the driver and leaves nothing pinned; a large one runs
-    * the distributed band exchange and star rounds. Not lazy: the pairing
-    * and clustering jobs run before the call returns. */
+    * the distributed band exchange and star rounds and returns a frame
+    * over CC's last round, which a caller frees with `Checkpoint.release`.
+    * Not lazy: the pairing and clustering jobs run before the call returns. */
   def nearDupClusters(
       df: DataFrame, textCol: String, idCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5,
@@ -548,6 +545,8 @@ object Dedup {
     val pairs = minHashNearDups(df, textCol, idCol, numPerm, bands, threshold,
       maxBucketSize)
     val comp = ConnectedComponents.components(pairs, "a", "b")
+    // components is eager and copies the pairs into its own checkpoint
+    Checkpoint.release(pairs)
     val sizes = comp.groupBy(F.col("component").as("c2"))
       .agg(F.count(F.lit(1)).as("cluster_size"))
     comp.join(sizes, F.col("component") === F.col("c2"))

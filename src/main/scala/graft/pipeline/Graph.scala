@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
+
 /** Graph centrality over an edge list — the source-ranking /
   * keeper-election tool of a corpus-curation pipeline (rank crawl
   * domains by their link graph; elect the most central member of a
@@ -26,9 +28,10 @@ import org.apache.spark.sql.{functions => F}
   * broadcast when the vertex table is small and as a co-partitioned
   * shuffle join otherwise; iterations are a small constant, so the
   * whole plan is `iters` shuffles over the EDGE list, never the
-  * corpus. The edge input is persisted once (it is re-read by the
-  * degree pass and every iteration) and the result is materialized
-  * with a localCheckpoint so callers can release it.
+  * corpus. The edge list and vertex set are checkpointed for the call
+  * (the degree pass and every iteration re-read them); each round is an
+  * eager localCheckpoint that frees the one before it, and the result
+  * reads the last, which a caller frees with `Checkpoint.release`.
   *
   * (Reference analog: none — whylogs profiles tables; this exists for
   * the curation pipelines (Common Crawl-style domain ranking, cluster
@@ -63,23 +66,18 @@ object Graph {
         F.col(srcCol).cast("long").as("src"), F.col(dstCol).cast("long").as("dst"))
       .filter(F.col("src").isNotNull && F.col("dst").isNotNull &&
         F.col("src") =!= F.col("dst"))
-    val e = (if (undirected)
+    Checkpoint.scoped((if (undirected)
         raw.union(raw.select(F.col("dst").as("src"), F.col("src").as("dst")))
-      else raw)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val verts = e.select(F.col("src").as("id"))
-        .union(e.select(F.col("dst").as("id"))).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      else raw).distinct()) { e =>
+      Checkpoint.scoped(e.select(F.col("src").as("id"))
+          .union(e.select(F.col("dst").as("id"))).distinct()) { verts =>
         val n = verts.count()
         require(n > 0, "pageRank: empty graph")
         val base = (scale * (100L - dampingPct) / 100L) / n
         val deg = e.groupBy(F.col("src").as("id"))
           .agg(F.count(F.lit(1)).as("outdeg"))
         var ranks = verts.select(F.col("id"), F.lit(scale / n).as("rank"))
-        for (_ <- 0 until iters) {
+        for (round <- 0 until iters) {
           // per-vertex share once (not per edge), then one exchange on dst
           val share = ranks.join(deg, Seq("id"))
             .select(F.col("id").as("u"),
@@ -87,15 +85,17 @@ object Graph {
           val in = e.join(share, F.col("src") === F.col("u"))
             .groupBy(F.col("dst").as("id"))
             .agg(F.sum("contrib").as("s"))
-          ranks = verts.join(in, Seq("id"), "left")
+          val next = verts.join(in, Seq("id"), "left")
             .select(F.col("id"),
               (F.lit(base) +
                 F.expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("rank"))
             .localCheckpoint(true)
+          if (round > 0) Checkpoint.release(ranks) // round 0 reads `verts`
+          ranks = next
         }
         ranks.withColumn("rank_frac",
           F.col("rank").cast("double") / F.lit(scale.toDouble))
-      } finally verts.unpersist(blocking = false)
-    } finally e.unpersist(blocking = false)
+      }
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
+
 /** Multinomial Naive Bayes over whitespace tokens — the trainable
   * document classifier whose TRAINING is itself hash-exact: the model
   * is nothing but counts (per-(class, token) occurrences, per-class
@@ -58,20 +60,8 @@ object NaiveBayes {
   def trainScore(train: DataFrame, score: DataFrame,
       textCol: String, labelCol: String, idCol: String,
       quant: Double = 1000000.0): DataFrame = {
-    val trainTok = train.select(F.col(labelCol).cast("string").as("__c"),
-      F.explode(toks(F.col(textCol))).as("__t"))
-    val tc = trainTok.groupBy("__c", "__t")
-      .agg(F.count(F.lit(1)).as("__cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withCounts(train, textCol, labelCol, "trainScore") { (tc, stats) =>
       val vocab = tc.select("__t").distinct().count()
-      val totals = tc.groupBy("__c").agg(F.sum("__cnt").as("__total"))
-      val docs = train.groupBy(F.col(labelCol).cast("string").as("__c"))
-        .agg(F.count(F.lit(1)).as("__nd"))
-      val stats = totals.join(docs, Seq("__c")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      require(stats.nonEmpty, "trainScore: no training documents")
       val nDocs = stats.map(_._3).sum
       // model: token -> map(class -> cnt); lookup by key, so the
       // collect_list order inside a token group is irrelevant
@@ -102,7 +92,25 @@ object NaiveBayes {
       sums.select(F.col(idCol), best.getField("c").as("pred"),
           (best.getField("q").cast("double") / F.lit(quant)).as("score"))
         .localCheckpoint(true)
-    } finally { tc.unpersist(blocking = false); () }
+    }
+  }
+
+  /** Runs `use` on the checkpointed (class `__c`, token `__t`, `__cnt`)
+    * counts of `train` and the per-class (label, token total, doc count)
+    * stats sorted by label: the training pass [[trainScore]] and
+    * [[trainModel]] share. */
+  private def withCounts[T](train: DataFrame, textCol: String, labelCol: String,
+      caller: String)(use: (DataFrame, Array[(String, Long, Long)]) => T): T = {
+    val label = F.col(labelCol).cast("string").as("__c")
+    Checkpoint.scoped(train.select(label, F.explode(toks(F.col(textCol))).as("__t"))
+        .groupBy("__c", "__t").agg(F.count(F.lit(1)).as("__cnt"))) { tc =>
+      val stats = tc.groupBy("__c").agg(F.sum("__cnt").as("__total"))
+        .join(train.groupBy(label).agg(F.count(F.lit(1)).as("__nd")), Seq("__c"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .sortBy(_._1)
+      require(stats.nonEmpty, s"$caller: no training documents")
+      use(tc, stats)
+    }
   }
 
   /** A driver-held NB model: the per-(token, class) count table plus
@@ -122,17 +130,7 @@ object NaiveBayes {
     * half; the collect is bounded by seed-vocabulary × classes. */
   def trainModel(train: DataFrame, textCol: String, labelCol: String,
       quant: Double = 1000000.0): NbModel = {
-    val tc = train.select(F.col(labelCol).cast("string").as("__c"),
-        F.explode(toks(F.col(textCol))).as("__t"))
-      .groupBy("__c", "__t").agg(F.count(F.lit(1)).as("__cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val stats = tc.groupBy("__c").agg(F.sum("__cnt").as("__total"))
-        .join(train.groupBy(F.col(labelCol).cast("string").as("__c"))
-          .agg(F.count(F.lit(1)).as("__nd")), Seq("__c"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      require(stats.nonEmpty, "trainModel: no training documents")
+    withCounts(train, textCol, labelCol, "trainModel") { (tc, stats) =>
       val classIdx = stats.map(_._1).zipWithIndex.toMap
       val counts = tc.collect()
         .groupBy(_.getString(1))
@@ -143,7 +141,7 @@ object NaiveBayes {
         }
       NbModel(stats.map(_._1).toSeq, stats.map(_._2).toSeq, stats.map(_._3).toSeq,
         counts.size.toLong, stats.map(_._3).sum, counts, quant)
-    } finally { tc.unpersist(blocking = false); () }
+    }
   }
 
   /** MAP-ONLY scoring against a driver-held model:

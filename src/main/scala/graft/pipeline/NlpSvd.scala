@@ -116,10 +116,13 @@ object NlpSvd {
     * cross terms sign-balanced to exact cancellation) the fitted
     * subspace is the top-k axes and every residual is closed-form —
     * see the `nlp_svd_residual_exact` query. Vectors are persisted
-    * across the two jobs (Gramian + scoring); NULL vectors score
-    * NULL. */
+    * across the two jobs (Gramian + scoring); NULL vectors score NULL.
+    * Not lazy: the result is an eager local checkpoint, which a caller
+    * frees with `Checkpoint.release` once collected. */
   def residualsFromVectors(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, k: Int): DataFrame = {
+    // persist, not Checkpoint.scoped: fit's first job (RowMatrix's `first()`) reads one
+    // partition, so a lazy local checkpoint adds a job for the rest (4 → 5 on 4 partitions)
     val withVec = df
       .select(F.col(idCol), F.col(vecCol).cast("array<double>").as("__tv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
+
 /** Learned quality filtering: a linear classifier over hashed
   * bag-of-token features — the "quality classifier" step of the
   * GPT-3/CCNet-style corpus pipelines (score every page against a
@@ -103,7 +105,7 @@ object QualityClassifier {
   /** Train by batch gradient descent on the logistic loss (optional L2
     * on the weights, never the bias): returns `(weights, bias)`.
     * `labelCol` must be 0/1 (numeric or boolean). One Spark job per
-    * iteration over a cached featurized frame; deterministic up to
+    * iteration over a checkpointed featurized frame; deterministic up to
     * float summation order in the gradient exchange (≈1e-15 relative
     * — train is therefore specified by held-out accuracy, not
     * hash-equality; SCORING with fixed weights is exact). */
@@ -114,12 +116,10 @@ object QualityClassifier {
     val feat: Column => Column =
       if (md5Mode) featureMd5(_, dim) else featureXx(_, dim)
     // featurize ONCE: (label, feats: array<int>); the per-iteration
-    // jobs rescan this cached frame, not the corpus
-    val feats = df.select(
+    // jobs rescan this checkpointed frame, not the corpus
+    Checkpoint.scoped(df.select(
         F.col(labelCol).cast("double").as("__y"),
-        F.transform(toks(F.col(textCol)), t => feat(t)).as("__f"))
-      .persist()
-    try {
+        F.transform(toks(F.col(textCol)), t => feat(t)).as("__f"))) { feats =>
       val w = Array.fill(dim)(0.0)
       var b = 0.0
       for (_ <- 0 until iters) {
@@ -153,6 +153,6 @@ object QualityClassifier {
         b -= lr * gradB / n
       }
       (w, b)
-    } finally { feats.unpersist(); () }
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
+import graft.core.Checkpoint
 import graft.functions.{cosine_similarity, hyperplane_bands, top_k_agg}
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -698,15 +699,16 @@ object Similarity {
     * bands (fewer bits) — pair with a recall gate against
     * [[cosineNearDupExact]] like the IVF recall query does.
     *
-    * The banded (band, bucket, id) projection IS persisted, same as
+    * The banded (band, bucket, id) projection IS checkpointed, same as
     * [[Dedup.minHashNearDups]]'s shingle pipeline: [[Dedup.lshPairs]]
     * references it from the pair exchange AND the bucket-size
     * aggregation, and each recompute costs bits × bands × dim
     * multiply-adds per row (tens of kFLOPs at real embedding widths) —
-    * far more than caching bands × n 24-byte rows. The verification
+    * far more than checkpointing bands × n 24-byte rows. The verification
     * joins re-scan only the pruned (id, vector) projection off the
-    * parquet scan; the pair result is localCheckpointed so the cache
-    * releases before the caller's actions run.
+    * parquet scan; the pair result is an eager local checkpoint, so
+    * the banding is released before the caller's actions run (an eager
+    * caller frees the result with `Checkpoint.release` once collected).
     *
     * `maxBucketSize` switches pathological buckets (zero vectors, clusters
     * of near-identical embeddings) from quadratic within-bucket pair
@@ -734,10 +736,8 @@ object Similarity {
     // widen a one-file scan (graft.core.Par)
     val vecs = graft.core.Par.widen(
       df.select(F.col(idCol).as("id"), F.col(vecCol).cast("array<double>").as("__v")))
-    val banded = vecs.select(F.col("id"),
-      F.posexplode(bandsOf(F.col("__v"))).as(Seq("band", "bucket")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoint.scoped(vecs.select(F.col("id"),
+        F.posexplode(bandsOf(F.col("__v"))).as(Seq("band", "bucket")))) { banded =>
       val pairs = Dedup.lshPairs(banded, Seq("band", "bucket"), "id", maxBucketSize)
       pairs
         .join(vecs.select(F.col("id").as("a"), F.col("__v").as("__va")), Seq("a"))
@@ -746,7 +746,7 @@ object Similarity {
         .filter(F.col("sim") >= tau)
         .select("a", "b", "sim")
         .localCheckpoint(true)
-    } finally banded.unpersist(blocking = false)
+    }
   }
 
   /** Oracle-replayable hyperplane band keys: Rademacher (±1) hyperplane

@@ -9,6 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.Checkpoint
+
 /** URL canonicalization — the key-normalization step of web-corpus
   * dedup (CommonCrawl-style pipelines dedup by canonical URL before
   * ever touching content): scheme/host lowercased, default ports
@@ -120,7 +122,7 @@ object Urls {
     * MAP-ONLY on the (small) robots side and aggregate per host; the
     * join is host-equality with the same broadcast-budget-or-shuffle
     * degrade as [[filterBlockedDomains]] (the parsed per-host frame is
-    * computed ONCE through a transient cache that is released before
+    * computed ONCE through a local checkpoint that is released before
     * this returns — see `localizeIfSmall`); the per-row check is
     * [[robots_matches]] over that host's bounded rule array. */
   def filterRobotsDisallowed(df: DataFrame, urlCol: String,
@@ -153,30 +155,23 @@ object Urls {
       F.lit("(?im)^\\s*sitemap\\s*:\\s*(\\S+)"), F.lit(1))
 
   /** The broadcast-budget-or-shuffle degrade both crawl filters share:
-    * persist, count, and when within budget COLLECT the derived small
+    * checkpoint, count, and when within budget COLLECT the derived small
     * side into a LocalRelation (no heavier than the broadcast join
-    * itself, which gathers the same rows on the driver) and release
-    * the cache immediately — the within-budget side is computed ONCE.
-    * Past budget, release the cache and return the plan for a shuffle
-    * hash join: that side is recomputed once more when the join runs
-    * (parse + dedup of the list side — bounded, and a side that large
-    * is exactly what you do NOT want pinned in executor storage for an
-    * unknowable caller lifetime). Nothing stays persisted after this
-    * returns — earlier drafts leaked one cache entry per call for the
-    * life of the session. */
+    * itself, which gathers the same rows on the driver) — the
+    * within-budget side is computed ONCE. Past budget, return the plan
+    * for a shuffle hash join: that side is recomputed once more when
+    * the join runs (parse + dedup of the list side — bounded, and a
+    * side that large is exactly what you do NOT want pinned in executor
+    * storage for an unknowable caller lifetime). Either way the
+    * checkpoint is released before this returns, so nothing stays
+    * pinned. */
   private def localizeIfSmall(small: DataFrame,
-      broadcastMaxEntries: Long): DataFrame = {
-    small.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = small.count()
-    if (n <= broadcastMaxEntries) {
-      val rows = java.util.Arrays.asList(small.collect(): _*)
-      small.unpersist(blocking = false)
-      F.broadcast(small.sparkSession.createDataFrame(rows, small.schema))
-    } else {
-      small.unpersist(blocking = false)
-      small
-    }
-  }
+      broadcastMaxEntries: Long): DataFrame =
+    Checkpoint.scoped(small) { pinned =>
+      if (pinned.count() > broadcastMaxEntries) None
+      else Some(F.broadcast(small.sparkSession.createDataFrame(
+        java.util.Arrays.asList(pinned.collect(): _*), small.schema)))
+    }.getOrElse(small)
 
   /** A host's dot-suffixes (`a.b.c` → `[a.b.c, b.c, c]`) — the bounded
     * equality-join key set for domain-blocklist matching (a host has at

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.core.Checkpoint
 import graft.pipeline.Dedup
 
 /** Streaming deduplication: the ingestion-time face of
@@ -122,12 +123,13 @@ object DedupStream {
     // bounded skew of 2-3 buckets/task, still O(touched).
     val sized = merged.repartition(math.max(touched.size, 1), F.col("bucket"))
     // materialize before writing: the plan reads the same directory the
-    // write overwrites, so break the lineage first
+    // write overwrites, so break the lineage first; freed once written
     val out = sized.localCheckpoint(true)
-    out.write.mode("overwrite")
+    try out.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
       .parquet(statePath)
+    finally Checkpoint.release(out)
   }
 
   /** The bucket ids this batch touches — collected on the driver but
@@ -226,8 +228,9 @@ object DedupStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val flagged = Dedup.nearDupsAgainstIndex(
           batch, index, textCol, idCol, numPerm, bands, threshold, maxBucketSize)
-        flagged.withColumn("batch_id", F.lit(batchId))
+        try flagged.withColumn("batch_id", F.lit(batchId))
           .write.mode("append").parquet(outPath)
+        finally Checkpoint.release(flagged)
       }
       .start()
 }

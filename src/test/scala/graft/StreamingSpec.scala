@@ -66,9 +66,13 @@ class StreamingSpec extends SparkSpec {
       val outDir = targetTempDir("dedup_stream_out") + "/flags"
       batchDf.coalesce(1).write.mode("overwrite").parquet(srcDir)
       val stream = spark.readStream.schema(batchDf.schema).parquet(srcDir)
+      index.count()
+      val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val q = graft.streaming.DedupStream.flagAgainstIndex(
         stream, index, "text", "doc_id", outDir, numPerm = 16, bands = 8)
       q.awaitTermination()
+      // each batch freed its flagged pairs once written
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- pinnedBefore).isEmpty)
       val got = spark.read.parquet(outDir)
         .select("a", "b", "jaccard").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

@@ -7,12 +7,14 @@ import org.apache.spark.sql.{functions => F}
 
 import graft.{SparkEntry, SparkSpec}
 import graft.analysis.{Boost, Conformal, DataAudit, ExactQuantiles, Outliers, TreeSplit}
-import graft.pipeline.{Dedup, TextAnalysis}
+import graft.pipeline.{Dedup, Graph, NaiveBayes, NlpSvd, QualityClassifier, Similarity,
+  TextAnalysis, Urls}
 
 /** [[Checkpoint.scoped]] frees what it pins, and the exact-statistics
-  * calls built on it leave no local checkpoint registered once their
-  * result is on the driver. A lazy result that reads its own checkpoint
-  * must keep working after the call returns. */
+  * and pipeline calls built on it leave no local checkpoint registered
+  * once their result is on the driver (an eager result once its caller
+  * releases it), at either side of every [[Gate]]. A lazy result that
+  * reads its own checkpoint must keep working after the call returns. */
 class CheckpointSpec extends SparkSpec {
   import spark.implicits._
 
@@ -67,9 +69,22 @@ class CheckpointSpec extends SparkSpec {
     assert(newlyPinned(before).isEmpty)
   }
 
+  /** Collects an eager call's result, then frees the checkpoint it reads. */
+  private def collectAndRelease(result: DataFrame): Array[Row] =
+    try result.collect() finally Checkpoint.release(result)
+
   test("exact-statistics calls leave no checkpoint pinned once their result is on the driver") {
     val features = Seq(TreeSplit.FeatureSpec("a", F.col("a")),
       TreeSplit.FeatureSpec("c", F.floor(F.col("c"))))
+    val labeled = data.select(F.col("id"), F.col("text"), F.col("seg"),
+      (F.col("y") % 2).as("label"))
+    val index = Dedup.minHashIndex(data.filter(F.col("id") % 2 === 0), "text", "id")
+    val newDocs = data.filter(F.col("id") % 2 === 1)
+    val vectors = data.select(F.col("id"), F.array(F.col("a"), F.col("b"), F.col("c")).as("v"))
+    val urls = data.select(F.col("id"),
+      F.concat(F.lit("https://"), F.col("seg"), F.lit(".example/"), F.col("id")).as("url"))
+    val blocklist = Seq(Tuple1("S1.example")).toDF("domain")
+    val robots = Seq(("s2.example", "User-agent: *\nDisallow: /1\n")).toDF("host", "txt")
     val calls: Seq[(String, () => Any)] = Seq(
       "quantiles" -> (() => ExactQuantiles.quantiles(data, Seq("a", "c"), Seq(0.25, 0.5))),
       "quantilesByKey" -> (() => ExactQuantiles.quantilesByKey(data, F.col("seg"), "c", Seq(0.5))),
@@ -80,10 +95,30 @@ class CheckpointSpec extends SparkSpec {
       "spearmanMatrix" -> (() => DataAudit.spearmanMatrix(data, Seq("a", "b", "c")).collect()),
       "lsBoostModel" -> (() => Boost.lsBoostModel(data, "y", features, rounds = 3)),
       "bpeTrainMerges" -> (() => TextAnalysis.bpeTrainMerges(data, "text", rounds = 3).collect()),
-      "minHashNearDups" -> (() => Dedup.minHashNearDups(data, "text", "id").collect()),
-      "nearDupClusters" -> (() => Dedup.nearDupClusters(data, "text", "id").collect()))
+      // function-local materializations
+      "trainModel" -> (() => NaiveBayes.trainModel(labeled, "text", "seg")),
+      "QualityClassifier.train" ->
+        (() => QualityClassifier.train(labeled, "text", "label", dim = 64, iters = 2)),
+      "filterBlockedDomains" ->
+        (() => Urls.filterBlockedDomains(urls, "url", blocklist, "domain").collect()),
+      "filterRobotsDisallowed" ->
+        (() => Urls.filterRobotsDisallowed(urls, "url", robots, "host", "txt").collect()),
+      // eager results: their caller frees them once collected
+      "trainScore" -> (() => collectAndRelease(
+        NaiveBayes.trainScore(labeled, labeled, "text", "seg", "id"))),
+      "residualsFromVectors" -> (() => collectAndRelease(
+        NlpSvd.residualsFromVectors(vectors, "id", "v", dim = 3, k = 2))),
+      "minHashNearDups" -> (() => collectAndRelease(Dedup.minHashNearDups(data, "text", "id"))),
+      "nearDupsAgainstIndex" -> (() => collectAndRelease(
+        Dedup.nearDupsAgainstIndex(newDocs, index, "text", "id"))),
+      "cosineNearDupLsh" -> (() => collectAndRelease(
+        Similarity.cosineNearDupLsh(vectors, "id", "v", tau = 0.99))),
+      "pageRank" -> (() => collectAndRelease(
+        Graph.pageRank(data.select(F.col("id"), F.col("y")), "id", "y", iters = 3))),
+      "nearDupClusters" -> (() => collectAndRelease(Dedup.nearDupClusters(data, "text", "id"))))
     data.count()
-    assert(leaks(calls) === Map.empty[String, Int])
+    for (bound <- Seq(0L, Long.MaxValue))
+      assert(Gate.withBound(bound)(leaks(calls)) === Map.empty[String, Int], s"bound $bound")
   }
 
   test("registry queries at sf0.01 return the pinned-RDD set to its baseline") {

@@ -54,11 +54,14 @@ class DedupStreamSpec extends SparkSpec {
     def runWith(batches: Seq[Seq[(Long, String)]]): Map[String, (Long, Long)] = {
       val path = targetTempDir("keeper_store")
       val in = MemoryStream[(Long, String)]
+      val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val q = DedupStream.exactKeepersToStore(
         in.toDF().toDF("doc_id", "text"), "text", "doc_id", path,
         numBuckets = 4, trigger = Trigger.ProcessingTime(0))
       try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
       finally q.stop()
+      // every micro-batch freed the checkpoint it wrote from
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- pinnedBefore).isEmpty)
       val out = spark.read.parquet(s"$path/state")
       // the bucket partition column rides along; verdict columns only
       out.select("text_hash", "keeper_id", "dup_count").collect()
