@@ -20,10 +20,11 @@ import graft.profile.{DatasetProfileView, ProfileSerde}
   * the merge of the returned profiles is driver-side monoid algebra over
   * KBs — the profiled datasets are never rescanned.
   *
-  * Segmented results are written distributed ([[writeSegmented]]): each
-  * segment row is serialized on the executors, so a million-segment
-  * profile run streams straight from the aggregation into the store
-  * without a driver collect (SURVEY §4 partitioning note).
+  * Keyed profiles share one store-row shape ([[writeWindowed]]: timestamp,
+  * segment keys, metric structs), written distributed: each row is
+  * serialized on the executors, so a million-segment profile run streams
+  * straight from the aggregation into the store without a driver collect
+  * (SURVEY §4 partitioning note).
   */
 class ProfileStore(spark: SparkSession, path: String) {
 
@@ -52,40 +53,35 @@ class ProfileStore(spark: SparkSession, path: String) {
   /** Distributed write of a segmented profiling result: one store row per
     * segment, serialized on executors (no driver collect). `segDF` must be
     * the output of `Profiler.profileSegmentedDF` with `nSegCols` leading
-    * segment-key columns. */
+    * segment-key columns; every row is stamped `tsMs`. */
   def writeSegmented(
       segDF: DataFrame, nSegCols: Int, datasetId: String, tsMs: Long,
       quantiles: Seq[Double] = graft.metrics.DistributionAgg.DefaultQuantiles): Unit =
-    writeRows(segDF, nSegCols, datasetId, quantiles, fixedTs = Some(tsMs))
+    writeWindowed(segDF.select(F.lit(tsMs).as("__ts"), F.col("*")), nSegCols, datasetId, quantiles)
 
   /** Distributed write of a WINDOWED (and optionally segmented) profiling
-    * result -- the streaming sink path: `df`'s FIRST column is the per-row
-    * dataset timestamp (window start, epoch ms), then `nSegCols`
-    * segment-key columns, then the metric structs. Serialization happens
-    * on executors, so a high-cardinality segmented stream never funnels
-    * through the driver; the sink sends only micro-batches above
-    * `Profiler.LocalCellBound` cells here and serializes smaller ones on
-    * the driver (the `Seq[Row]` overload). */
+    * result -- the streaming sink path, and the one store-row shape: `df`'s
+    * FIRST column is the per-row dataset timestamp (window start, epoch
+    * ms), then `nSegCols` segment-key columns, then the metric structs.
+    * Serialization happens on executors, so a high-cardinality segmented
+    * stream never funnels through the driver; the sink sends only
+    * micro-batches above `Profiler.LocalCellBound` cells here and
+    * serializes smaller ones on the driver (the `Seq[Row]` overload). */
   def writeWindowed(
       df: DataFrame, nSegCols: Int, datasetId: String,
-      quantiles: Seq[Double] = graft.metrics.DistributionAgg.DefaultQuantiles): Unit =
-    writeRows(df, nSegCols, datasetId, quantiles, fixedTs = None)
+      quantiles: Seq[Double] = graft.metrics.DistributionAgg.DefaultQuantiles): Unit = {
+    import org.apache.spark.sql.Encoders
+    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING,
+      Encoders.BINARY, Encoders.STRING, Encoders.STRING)
+    write(df.map(row => storeRow(row, nSegCols, datasetId, quantiles))(enc)
+      .toDF("dataset_ts", "segment", "profile", "dataset_id", "date"))
+  }
 
   /** [[writeWindowed]] for rows already on the driver (the streaming
     * sink's driver-side finish): the same store rows, serialized here. */
   private[graft] def writeWindowed(
       rows: Seq[Row], nSegCols: Int, datasetId: String, quantiles: Seq[Double]): Unit =
-    append(rows.map(r => Row.fromTuple(storeRow(r, nSegCols, datasetId, quantiles, None))))
-
-  private def writeRows(
-      df: DataFrame, nSegCols: Int, datasetId: String,
-      quantiles: Seq[Double], fixedTs: Option[Long]): Unit = {
-    import org.apache.spark.sql.Encoders
-    val enc = Encoders.tuple(Encoders.scalaLong, Encoders.STRING,
-      Encoders.BINARY, Encoders.STRING, Encoders.STRING)
-    write(df.map(row => storeRow(row, nSegCols, datasetId, quantiles, fixedTs))(enc)
-      .toDF("dataset_ts", "segment", "profile", "dataset_id", "date"))
-  }
+    append(rows.map(r => Row.fromTuple(storeRow(r, nSegCols, datasetId, quantiles))))
 
   /** Driver rows are KB-scale profiles: one task writes them, one file
     * per (dataset_id, date) partition. */
@@ -207,19 +203,16 @@ object ProfileStore {
     }
 
   /** One store row `(dataset_ts, segment, profile, dataset_id, date)`
-    * from an aggregated profile row: the dataset timestamp is `fixedTs`
-    * or, without one, the row's first column, followed by `nSegCols`
-    * segment-key columns and the metric structs. */
+    * from an aggregated profile row: the dataset timestamp (epoch ms),
+    * then `nSegCols` segment-key columns, then the metric structs. */
   private def storeRow(
-      row: Row, nSegCols: Int, datasetId: String, quantiles: Seq[Double],
-      fixedTs: Option[Long]): (Long, String, Array[Byte], String, String) = {
-    val tsOffset = if (fixedTs.isEmpty) 1 else 0
-    val tsMs = fixedTs.getOrElse(row.getLong(0))
+      row: Row, nSegCols: Int, datasetId: String,
+      quantiles: Seq[Double]): (Long, String, Array[Byte], String, String) = {
+    val tsMs = row.getLong(0)
     val segKey =
       if (nSegCols == 0) null
-      else (tsOffset until tsOffset + nSegCols).map(i => segValue(row.get(i)))
-        .mkString(SegSep.toString)
-    val view = Profiler.parseRow(row, tsOffset + nSegCols, quantiles)
+      else (1 to nSegCols).map(i => segValue(row.get(i))).mkString(SegSep.toString)
+    val view = Profiler.parseRow(row, 1 + nSegCols, quantiles)
       .copy(datasetTimestampMs = Some(tsMs))
     (tsMs, segKey, ProfileSerde.toBytes(view), datasetId, dateOf(tsMs))
   }

@@ -13,12 +13,15 @@ import graft.profile._
   * map-side partial aggregation per partition, one exchange of KB-sized
   * sketch buffers, and a final merge (the map-reduce the reference
   * hand-codes in `api/pyspark/experimental/profiler.py:29-77`). Scales
-  * with #columns, not #rows; wide tables are chunked into
-  * `columnBatchSize` passes. The collecting calls ([[profile]],
+  * with #columns, not #rows. Batch, segmented and windowed profiles are
+  * one keyed aggregate ([[keyedAggregate]]) with no key, the segment keys,
+  * or the window and the segment keys. The collecting calls ([[profile]],
   * [[profileSegmented]]) first count up to [[Profiler.LocalCellBound]]
   * cells, and an input that fits runs the same aggregate on the driver
-  * ([[graft.core.LocalAggregate]]), the reference's single-process
-  * `DatasetProfile.track`; the lazy `*DF` calls always stay distributed.
+  * ([[graft.core.LocalAggregate.finish]]), the reference's single-process
+  * `DatasetProfile.track`; a larger one runs distributed. The lazy `*DF`
+  * calls always stay distributed; only [[profile]] splits the columns
+  * into `columnBatchSize` passes.
   */
 class Profiler(
     val config: MetricConfig = MetricConfig(),
@@ -162,7 +165,48 @@ class Profiler(
   /** Distributed profile: a one-row DataFrame of nested metric structs.
     * Stays lazy — compose, write, or collect via [[profile]]. */
   def profileDF(df: DataFrame, columns: Option[Seq[String]] = None): DataFrame = {
-    val fields = columns.getOrElse(df.schema.fields.map(_.name).toSeq)
+    val fields = Profiler.profiledColumns(df.schema, columns, Nil)
+    keyedAggregate(widenIfHeavy(df.select(fields.map(F.col): _*), fields), fields)
+  }
+
+  /** Collected profile view. Wide tables are profiled in column batches to
+    * bound the aggregation-buffer row size; batches are disjoint column
+    * sets so the union of views is exact. An input of at most
+    * [[Profiler.LocalCellBound]] cells is collected once and every batch
+    * is aggregated on the driver ([[graft.core.LocalAggregate.finish]]); a
+    * larger one runs [[profileDF]] per batch. */
+  def profile(df: DataFrame, columns: Option[Seq[String]] = None): DatasetProfileView = {
+    val names = Profiler.profiledColumns(df.schema, columns, Nil)
+      .filter(n => aggColumnFor(df.schema(n)).nonEmpty)
+    val batches = names.grouped(math.max(1, config.columnBatchSize)).toSeq
+    val input = df.select(names.map(F.col): _*)
+    val rows = LocalAggregate.finish(input, Profiler.LocalCellBound.bound)(
+        l => batches.map(keyedAggregate(l, _)))
+      .getOrElse(batches.flatMap(batch => profileDF(df, Some(batch)).collect()))
+    rows.map(Profiler.parseRow(_, 0, config.quantiles))
+      .foldLeft(DatasetProfileView.empty)((acc, v) => DatasetProfileView(acc.columns ++ v.columns))
+  }
+
+  /** The one profile aggregate behind the batch, segmented and windowed
+    * profiles: the metric structs of `profiled` over `in`, one row per key.
+    * The keys are `leading` (the window of a rolling profile), then each
+    * segment column's string form as `segment_<name>`; with no key it is
+    * the single-row global aggregate (`Dataset.agg` is `groupBy().agg`). */
+  private[graft] def keyedAggregate(
+      in: DataFrame, profiled: Seq[String], segmentColumns: Seq[String] = Nil,
+      leading: Seq[Column] = Nil): DataFrame = {
+    val aggs = aggColumns(in.schema, Some(profiled))
+    require(aggs.nonEmpty, "no profilable columns")
+    val keys = leading ++ segmentColumns.map(n => F.col(n).cast(StringType).as(s"segment_$n"))
+    in.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** `in` widened to every core when the resolver plans an HLL,
+    * frequent-items or unicode-range update for one of `profiled` and `in`
+    * is at least `HeavyWidenMinBytes`. Callers: [[profileDF]] and the
+    * distributed branch of [[profileSegmented]]; never the lazy segmented
+    * or windowed frames. */
+  private def widenIfHeavy(in: DataFrame, profiled: Seq[String]): DataFrame = {
     // Widen only when the PER-ROW update work is heavy AND the input
     // is not tiny (r21; r20's ungated widen NET-REGRESSED the family,
     // 27.2→29.4 s in the driver's ground truth). Two measured regimes
@@ -171,7 +215,8 @@ class Profiler(
     //    HLL/FI/type-cascade updates dominate per row, and widening to
     //    all cores wins big (full_profile_summary 2.22→1.40,
     //    profile_summary_exact 2.20→1.45, constraints_report
-    //    2.28→1.49);
+    //    2.28→1.49; the five full-width segmented roundtrips each
+    //    ~2 s → ~1.2-1.4 s);
     //  - light resolvers (histogram-only KLL) or KB-scale inputs: the
     //    widened partial stage multiplies per-column sketch buffers by
     //    the partition count and the merges cost more than the lost
@@ -179,96 +224,39 @@ class Profiler(
     //    profile_counts/ints/types each ~2× slower) — the same
     //    per-(partition×group) state multiplication the ANN top-k
     //    paths measured and reverted (Similarity.scala).
-    // So: heavy = the resolver plans an HLL / frequent-items /
-    // unicode-range update (the datasketches per-row costs) for some
-    // profiled column; the 4 MB floor (`HeavyWidenMinBytes`) keeps
-    // small fixtures and daily chunks narrow. Real multi-split tables
-    // take Par's no-exchange branch regardless.
+    // The 4 MB floor keeps small fixtures and daily chunks narrow. Real
+    // multi-split tables take Par's no-exchange branch regardless.
+    // The LAZY segmented path is NOT widened (r21 revert of r20):
+    // consumers of the returned frame typically select a few exact struct
+    // fields, and Catalyst prunes the unused sketch aggregates down to
+    // counts/min/max — KB of real work where the widened partial state
+    // (per-column sketch buffers × SEGMENTS × partitions) multiplied 32×
+    // and the driver measured segmented_profile 0.27→0.92 s (3.4× slower).
+    // A COLLECTED profile materializes every metric for every key, so
+    // nothing prunes and the gate above applies.
     // Order-safety: every oracle-exact profile field is an integer
     // count, a min/max, or an HLL register max — set functions; float
     // moment and sketch-quantile fields surface only through rows-only
     // queries and specs with tolerances.
-    val heavyPerRow = plansHeavyPerRowMetric(df, fields)
-    val sel = df.select(fields.map(F.col): _*)
-    aggregate(
-      if (heavyPerRow) graft.core.Par.widenIfAtLeast(sel, Profiler.HeavyWidenMinBytes) else sel,
-      fields)
-  }
-
-  /** Collected profile view. Wide tables are profiled in column batches to
-    * bound the aggregation-buffer row size; batches are disjoint column
-    * sets so the union of views is exact. An input of at most
-    * [[Profiler.LocalCellBound]] cells is collected once and every batch
-    * is aggregated on the driver ([[graft.core.LocalAggregate]]); a
-    * larger one runs [[profileDF]] per batch. */
-  def profile(df: DataFrame, columns: Option[Seq[String]] = None): DatasetProfileView = {
-    val names = columns.getOrElse(df.schema.fields.map(_.name).toSeq)
-      .filter(n => aggColumnFor(df.schema(n)).nonEmpty)
-    val batches = names.grouped(math.max(1, config.columnBatchSize)).toSeq
-    lazy val local =
-      LocalAggregate.local(df.select(names.map(F.col): _*), Profiler.LocalCellBound.bound)
-    val views = batches.map { batch =>
-      val row = local.flatMap(l => LocalAggregate.collect(aggregate(l, batch)))
-        .getOrElse(profileDF(df, Some(batch)).collect())(0)
-      Profiler.parseRow(row, 0, config.quantiles)
-    }
-    views.foldLeft(DatasetProfileView.empty) { (acc, v) =>
-      DatasetProfileView(acc.columns ++ v.columns)
-    }
-  }
-
-  /** The profile aggregate of `fields` over `in`, as it is planned. */
-  private def aggregate(in: DataFrame, fields: Seq[String]): DataFrame = {
-    val aggs = aggColumns(in.schema, Some(fields))
-    require(aggs.nonEmpty, "no profilable columns")
-    in.agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** True when the resolver plans a datasketches-class per-row update
-    * (HLL cardinality, frequent items, unicode ranges) for one of
-    * `fields` — the regime where the map stage dominates and widening a
-    * one-split input pays for itself ([[profileDF]]'s measured gate). */
-  private def plansHeavyPerRowMetric(df: DataFrame, fields: Seq[String]): Boolean =
-    fields.exists { n =>
-      resolver.metricsFor(n, LogicalKind.of(df.schema(n).dataType)).exists(m =>
+    val heavyPerRow = profiled.exists { n =>
+      resolver.metricsFor(n, LogicalKind.of(in.schema(n).dataType)).exists(m =>
         m == Namespace.Cardinality || m == Namespace.FrequentItems ||
           m == Namespace.UnicodeRange)
     }
+    if (heavyPerRow) graft.core.Par.widenIfAtLeast(in, Profiler.HeavyWidenMinBytes) else in
+  }
 
   /** Segmented profiling = one hash-partitioned groupBy on the stringified
     * segment key (reference `api/logger/segment_processing.py:24-212`);
-    * one shuffle total, sketch buffers merged by Catalyst per segment. */
+    * one shuffle total, sketch buffers merged by Catalyst per segment.
+    * Never widened ([[widenIfHeavy]] says why). */
   def profileSegmentedDF(
       df: DataFrame,
       segmentColumns: Seq[String],
       filter: Option[Column] = None,
-      columns: Option[Seq[String]] = None): DataFrame =
-    segmentedAgg(df, segmentColumns, filter, columns, widenForCollect = false)
-
-  // The LAZY path is NOT widened (r21 revert of r20): consumers of the
-  // returned frame typically select a few exact struct fields, and
-  // Catalyst prunes the unused sketch aggregates down to counts/min/max
-  // — KB of real work where the widened partial state (per-column
-  // sketch buffers × SEGMENTS × partitions) multiplied 32× and the
-  // driver measured segmented_profile 0.27→0.92 s (3.4× slower). The
-  // COLLECT path below materializes every metric for every segment —
-  // nothing prunes — so there the [[profileDF]] heavy-per-row gate
-  // applies unchanged (measured sf0.1 back-to-back: the five full-width
-  // segmented roundtrips each ~2 s → ~1.2-1.4 s widened).
-  private def segmentedAgg(
-      df: DataFrame,
-      segmentColumns: Seq[String],
-      filter: Option[Column],
-      columns: Option[Seq[String]],
-      widenForCollect: Boolean): DataFrame = {
-    val profiled = columns.getOrElse(
-      df.schema.fields.map(_.name).toSeq.filterNot(segmentColumns.contains))
-    val sel = segmentInput(df, segmentColumns, filter, profiled)
-    val in =
-      if (widenForCollect && plansHeavyPerRowMetric(df, profiled))
-        graft.core.Par.widenIfAtLeast(sel, Profiler.HeavyWidenMinBytes)
-      else sel
-    segmentAggregate(in, segmentColumns, profiled)
+      columns: Option[Seq[String]] = None): DataFrame = {
+    val profiled = Profiler.profiledColumns(df.schema, columns, segmentColumns)
+    keyedAggregate(segmentInput(df, segmentColumns, filter, profiled), profiled, segmentColumns)
   }
 
   /** The filtered rows of the segment and profiled columns. */
@@ -278,29 +266,23 @@ class Profiler(
     filter.map(df.filter).getOrElse(df)
       .select((segmentColumns ++ profiled).distinct.map(F.col): _*)
 
-  /** One profile aggregate per stringified segment key over `in`. */
-  private def segmentAggregate(
-      in: DataFrame, segmentColumns: Seq[String], profiled: Seq[String]): DataFrame = {
-    val keys = segmentColumns.map(n => F.col(n).cast(StringType).as(s"segment_$n"))
-    val aggs = aggColumns(in.schema, Some(profiled))
-    in.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Collect segmented profiles: segment key values → profile view. A
     * key holds each segment value's string form, so a NULL segment value
     * has the key "null"; a segment column holding both NULL and the string
     * "null" is rejected rather than merged. An input of at most
-    * [[Profiler.LocalCellBound]] cells is aggregated on the driver. */
+    * [[Profiler.LocalCellBound]] cells is aggregated on the driver; a
+    * larger one runs [[profileSegmentedDF]]'s aggregate, widened as
+    * [[profileDF]] is. */
   def profileSegmented(
       df: DataFrame,
       segmentColumns: Seq[String],
       filter: Option[Column] = None): Map[Seq[String], DatasetProfileView] = {
-    val profiled = df.schema.fields.map(_.name).toSeq.filterNot(segmentColumns.contains)
+    val profiled = Profiler.profiledColumns(df.schema, None, segmentColumns)
     val input = segmentInput(df, segmentColumns, filter, profiled)
-    val rows = LocalAggregate.local(input, Profiler.LocalCellBound.bound)
-      .flatMap(l => LocalAggregate.collect(segmentAggregate(l, segmentColumns, profiled)))
-      .getOrElse(segmentedAgg(df, segmentColumns, filter, Some(profiled), widenForCollect = true)
-        .collect())
+    val rows = LocalAggregate.finish(input, Profiler.LocalCellBound.bound)(
+        l => Seq(keyedAggregate(l, profiled, segmentColumns)))
+      .getOrElse(
+        keyedAggregate(widenIfHeavy(input, profiled), profiled, segmentColumns).collect().toSeq)
     val keyed = scala.collection.mutable.LinkedHashMap.empty[Seq[String], Row]
     rows.foreach { row =>
       val key = segmentColumns.indices.map(i => String.valueOf(row.get(i)))
@@ -339,8 +321,14 @@ object Profiler {
 
   /** Optimizer-size floor for widening a heavy-per-row profile input
     * ([[Profiler.profileDF]] and the segmented collect path): a smaller
-    * input stays narrow, for the r21 reasons given in `profileDF`. */
+    * input stays narrow, for the r21 reasons given in `widenIfHeavy`. */
   private val HeavyWidenMinBytes: Long = 4L << 20
+
+  /** `columns`, or by default every column of `schema` but the profile's
+    * `keyColumns` (segment columns, a rolling profile's timestamp). */
+  private[graft] def profiledColumns(
+      schema: StructType, columns: Option[Seq[String]], keyColumns: Seq[String]): Seq[String] =
+    columns.getOrElse(schema.fieldNames.toSeq.filterNot(keyColumns.contains))
 
   /** Parse one aggregated row (possibly offset past segment-key columns)
     * into a profile view, using the row's schema for metric discovery.

@@ -47,6 +47,16 @@ object LocalAggregate {
     }
   }
 
+  /** The rows of the `aggregates` built on `df`'s [[local]] frame, each
+    * evaluated by [[collect]], in order. None when `df` holds more than
+    * `cellBound` cells or [[collect]] does not recognise one aggregate's
+    * plan: the caller then runs its distributed plan. */
+  def finish(df: DataFrame, cellBound: Long)(aggregates: DataFrame => Seq[DataFrame])
+      : Option[Seq[Row]] =
+    local(df, cellBound).flatMap(l => aggregates(l).foldLeft(Option(Seq.empty[Row])) {
+      (done, aggregate) => done.flatMap(rows => collect(aggregate).map(rows ++ _))
+    })
+
   /** `df`'s rows, computed on the driver, when its optimized plan is an
     * aggregate over a `LocalRelation` (or already folded to one) whose
     * functions are all non-distinct, unfiltered declarative or imperative

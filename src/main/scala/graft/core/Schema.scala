@@ -62,9 +62,11 @@ case class MetricConfig(
       * before int before float (`core/preprocessing.py:167-175`). Off by
       * default: typed columns resolve exactly from the schema. */
     stringIngestTypes: Boolean = false,
-    /** Profile at most this many columns per aggregation pass; bounds the
-      * per-row aggregation-buffer footprint on very wide tables (reference
-      * precedent: `api/pyspark/experimental/profiler.py:80-112`). */
+    /** `Profiler.profile` aggregates at most this many columns per pass;
+      * bounds the per-row aggregation-buffer footprint on very wide tables
+      * (reference precedent: `api/pyspark/experimental/profiler.py:80-112`).
+      * `profileDF`, `profileSegmented*`, `windowedProfileDF` and `toStore`
+      * aggregate every column in one pass. */
     columnBatchSize: Int = 100)
 
 /** Which metric namespaces attach to a column — the reference's

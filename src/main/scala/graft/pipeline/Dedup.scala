@@ -903,14 +903,14 @@ object Dedup {
     * Only the (tiny) banded index side is bucket-capped; each probe row
     * carries its own signature through the band join, so the plan is
     * one declarative stream-static join when `probe` is a streaming
-    * DataFrame. The index's slim (id, hash) projection is
-    * localCheckpoint-ed (it is referenced by both the cap-count
-    * aggregate and the band join); the probe side stays lazy and is
-    * evaluated once. CAUTION on unbounded streams: the trailing
-    * `dropDuplicates` is STATEFUL and retains every emitted pair
-    * indefinitely — fine under bounded triggers (`AvailableNow`, the
-    * test/backfill shape), but a continuous ingestion stream must
-    * bound it upstream with `withWatermark` +
+    * DataFrame. The index's (id, hash) projection is read twice (the
+    * cap-count aggregate and the band join), so a caller whose index is
+    * expensive materializes it first, as for [[nearDupsAgainstIndex]];
+    * the probe side stays lazy and is evaluated once. CAUTION on
+    * unbounded streams: the trailing `dropDuplicates` is STATEFUL and
+    * retains every emitted pair indefinitely — fine under bounded
+    * triggers (`AvailableNow`, the test/backfill shape), but a continuous
+    * ingestion stream must bound it upstream with `withWatermark` +
     * `dropDuplicatesWithinWatermark` (docs arrive in one micro-batch,
     * so a short watermark suffices — same accounting as
     * [[graft.streaming.DedupStream.nearDupsAgainstIndex]]). Output:
@@ -926,12 +926,10 @@ object Dedup {
       .select(F.col(probeId).as("a"), F.col(probeHash).cast("long").as("ha"))
       .select(F.col("a"), F.col("ha"),
         F.posexplode(hashChunks(F.col("ha"), bands)).as(Seq("band", "bv")))
-    val slimIx = index
-      .select(F.col(indexId).as("b"), F.col(indexHash).cast("long").as("hb"))
-      .localCheckpoint(true)
     val ix = capBuckets(
-      slimIx.select(F.col("b"), F.col("hb"),
-        F.posexplode(hashChunks(F.col("hb"), bands)).as(Seq("band", "bv"))),
+      index.select(F.col(indexId).as("b"), F.col(indexHash).cast("long").as("hb"))
+        .select(F.col("b"), F.col("hb"),
+          F.posexplode(hashChunks(F.col("hb"), bands)).as(Seq("band", "bv"))),
       Seq("band", "bv"), "b", maxBucketSize)
     p.join(ix, Seq("band", "bv"))
       .select(F.col("a"), F.col("b"),

@@ -20,16 +20,21 @@ import graft.core.LocalAggregate
   * the store's merge algebra needs.
   *
   * Scale shape: the windowed aggregation is the same aggregate as batch
-  * profiling (partial/final, or on the driver below its size bound),
-  * keyed by (window, segment); state per key is KB-bounded sketch
-  * buffers, and the sink appends KB-scale profile rows to the store —
-  * the stream itself is never buffered.
+  * and segmented profiling, keyed by (window, segment), and it finishes
+  * the same way: partial/final on the executors, or on the driver below
+  * [[Profiler.LocalCellBound]] ([[graft.core.LocalAggregate.finish]]).
+  * State per key is KB-bounded sketch buffers, and the sink appends
+  * KB-scale profile rows to the store in its one row shape
+  * ([[ProfileStore.writeWindowed]]) — the stream itself is never
+  * buffered.
   */
 object ProfileStream {
 
   /** Windowed profile aggregation plan over a streaming (or batch)
-    * DataFrame: groupBy tumbling window [+ segment columns] with the
-    * profiler's metric aggregates for `columns`. */
+    * DataFrame: the profiler's keyed aggregate
+    * ([[graft.api.Profiler.keyedAggregate]]) keyed by the tumbling window
+    * and then the segment columns, over `columns` (by default every column
+    * but `tsCol` and the segment columns). Never widened. */
   def windowedProfileDF(
       sdf: DataFrame,
       tsCol: String,
@@ -39,13 +44,9 @@ object ProfileStream {
       columns: Option[Seq[String]] = None,
       segmentColumns: Seq[String] = Nil): DataFrame = {
     val withWm = watermark.map(w => sdf.withWatermark(tsCol, w)).getOrElse(sdf)
-    val profiled = columns.getOrElse(
-      sdf.schema.fields.map(_.name).toSeq
-        .filterNot(n => n == tsCol || segmentColumns.contains(n)))
-    val aggs = profiler.aggColumns(sdf.schema, Some(profiled))
-    val keys = F.window(F.col(tsCol), window) +:
-      segmentColumns.map(n => F.col(n).cast("string").as(s"segment_$n"))
-    withWm.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+    profiler.keyedAggregate(withWm,
+      Profiler.profiledColumns(sdf.schema, columns, tsCol +: segmentColumns), segmentColumns,
+      leading = Seq(F.window(F.col(tsCol), window)))
   }
 
   /** Run rolling profiles as a streaming query appending to a
@@ -82,8 +83,7 @@ object ProfileStream {
     // read once, on the starting thread: every batch uses the bound in
     // force when the query started
     val cellBound = Profiler.LocalCellBound.bound
-    val profiled = columns.getOrElse(sdf.schema.fields.map(_.name).toSeq
-      .filterNot(n => n == tsCol || segmentColumns.contains(n)))
+    val profiled = Profiler.profiledColumns(sdf.schema, columns, tsCol +: segmentColumns)
     val needed = ((tsCol +: segmentColumns) ++ profiled).distinct.map(F.col)
     def flat(batch: DataFrame): DataFrame = {
       val windowed =
@@ -98,9 +98,8 @@ object ProfileStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val store = new ProfileStore(batch.sparkSession, storePath)
         val (nSeg, quantiles) = (segmentColumns.length, profiler.config.quantiles)
-        LocalAggregate.local(batch.select(needed: _*), cellBound)
-          .flatMap(l => LocalAggregate.collect(flat(l))) match {
-          case Some(rows) => store.writeWindowed(rows.toSeq, nSeg, datasetId, quantiles)
+        LocalAggregate.finish(batch.select(needed: _*), cellBound)(l => Seq(flat(l))) match {
+          case Some(rows) => store.writeWindowed(rows, nSeg, datasetId, quantiles)
           // above the bound, rows serialize on the executors, so a
           // high-cardinality segmented stream appends straight to the
           // store with no driver funnel

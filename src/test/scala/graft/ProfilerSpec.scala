@@ -83,7 +83,7 @@ class ProfilerSpec extends SparkSpec {
   }
 
   test("segmented collect path widened above the size gate stays exact") {
-    // Force the widenForCollect branch: single-partition input whose
+    // Force the widened collect branch: single-partition input whose
     // optimizer size estimate clears Par.widenIfAtLeast's 4 MB floor and
     // whose resolver plans heavy per-row metrics (HLL/FI on the string
     // column). Every exact field must match per-segment SQL regardless
@@ -108,6 +108,43 @@ class ProfilerSpec extends SparkSpec {
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       s.frequentItems.get.items.foreach(it => assert(it.estimate == exact(it.value)))
     }
+  }
+
+  /** The most tasks one stage ran while `body` ran. A one-partition input
+    * that is not widened runs each stage of its aggregate as one task (a
+    * one-partition child needs no exchange); a widened one runs the
+    * partial aggregation on `defaultParallelism` tasks. */
+  private def maxStageTasks(body: => Any): Int = {
+    val tasks = scala.collection.concurrent.TrieMap.empty[Int, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        tasks(e.stageId) = tasks.getOrElse(e.stageId, 0) + 1
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try withJobCount(body) finally spark.sparkContext.removeSparkListener(listener)
+    tasks.values.max
+  }
+
+  test("heavy-widen gate: a collected one-partition input widens from 4 MB, " +
+      "the lazy segmented frame never") {
+    val cores = spark.sparkContext.defaultParallelism
+    // one partition; HLL and frequent items on the strings are heavy per row
+    def heavy(rows: Long) = spark.range(0, rows, 1, 1).select(
+      (F.col("id") % 4).cast("string").as("seg"), F.col("id").as("v"),
+      F.concat(F.lit("val_"), (F.col("id") % 7).cast("string"),
+        F.lit("_padding_padding_padding")).as("s"))
+    val (big, small) = (heavy(300000), heavy(30000))
+    def estimate(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(cores > 1)
+    assert(estimate(big) >= (4L << 20) && estimate(small) < (4L << 20))
+    Profiler.LocalCellBound.withBound(0L) {
+      assert(maxStageTasks(profiler.profileSegmented(big, Seq("seg"))) === cores)
+      assert(maxStageTasks(profiler.profileSegmented(small, Seq("seg"))) === 1)
+    }
+    assert(maxStageTasks(profiler.profileDF(big).collect()) === cores)
+    assert(maxStageTasks(profiler.profileDF(small).collect()) === 1)
+    assert(maxStageTasks(profiler.profileSegmentedDF(big, Seq("seg")).collect()) === 1)
   }
 
   test("limited resolver only attaches counts/types/distribution") {

@@ -124,7 +124,8 @@ class CheckpointSpec extends SparkSpec {
   test("registry queries at sf0.01 return the pinned-RDD set to its baseline") {
     val dir = new File(new File(sfDir).getParentFile, "sf0.01").getPath
     val names = Seq("iqr_outliers", "mad_outliers", "winsorize_summary",
-      "spearman_matrix", "conformal_coverage", "ls_boost", "bpe_train_merges")
+      "spearman_matrix", "conformal_coverage", "ls_boost", "bpe_train_merges",
+      "streaming_dedup_images")
     val runs = names.map(name =>
       name -> (() => assert(SparkEntry.queries(name)(spark, dir).collect().nonEmpty, name)))
     assert(leaks(runs) === Map.empty[String, Int])

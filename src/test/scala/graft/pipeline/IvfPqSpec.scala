@@ -85,8 +85,7 @@ class IvfPqSpec extends SparkSpec {
     val qs = emb.filter(F.col("vec_id") < 10)
     val batch = Similarity.ivfPqSearch(ix, qs, nprobe = 2, k = 3, rerank = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val out = "target/tmp/ivfpq_spec_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val out = targetTempDir("ivfpq_spec_")
     val sdf = spark.readStream.schema(emb.schema)
       .parquet(graft.api.StandardQueries.streamableDir(s"$sfDir/embeddings.parquet"))
       .filter(F.col("vec_id") < 10)
@@ -101,8 +100,7 @@ class IvfPqSpec extends SparkSpec {
   test("ivfPqIngest: streamed code store equals the build-time encoding; cells prune on disk") {
     val emb = table("embeddings")
     val ix = Similarity.ivfPqBuild(emb, numCentroids = 4, m = 16, ksub = 8)
-    val base = "target/tmp/ivfpq_ingest_spec_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val base = targetTempDir("ivfpq_ingest_spec_")
     val sdf = spark.readStream.schema(emb.schema)
       .parquet(graft.api.StandardQueries.streamableDir(s"$sfDir/embeddings.parquet"))
     Similarity.ivfPqIngest(ix, sdf, "vec_id", "embedding",
