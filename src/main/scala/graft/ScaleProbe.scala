@@ -330,24 +330,24 @@ object ScaleProbe {
         .agg(F.count(F.lit(1)), F.sum("n_shared"))
         .collect()(0).getLong(0)
     }),
-    "bloom_sharded16_stream" -> (() => {
+    "bloom_sharded16_stream" -> (() => graft.core.Owner.using { o =>
       import graft.pipeline.Dedup
       val docs = spark.read.parquet(s"$outDir/documents.parquet")
       // ~10 bits/key/shard at the 100x corpus: 2^19 bits x 16 shards
       val keyer = Dedup.BloomKeyer.xx(numShards = 16, numHashes = 4, numBits = 1 << 19)
-      val bloom = Dedup
+      val bloom = o.own(Dedup
         .bloomBuildKeyed(docs.filter(F.col("doc_id") % 2 === 0), F.md5(F.col("text")), keyer)
-        .persist()
+        .persist())(_.unpersist())
       val shards = bloom.count()
       require(shards == 16, s"expected 16 shard bitsets, got $shards")
       val sdf = spark.readStream.schema(docs.schema)
         .parquet(graft.api.StandardQueries.streamableDir(s"$outDir/documents.parquet"))
         .select(F.col("doc_id"), F.md5(F.col("text")).as("ck"))
-      val q = Dedup.bloomProbeKeyed(sdf, F.col("ck"), keyer, bloom)
+      o.own(Dedup.bloomProbeKeyed(sdf, F.col("ck"), keyer, bloom)
         .writeStream.format("noop")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally { q.stop(); bloom.unpersist() }
+        .start())(_.stop())
+        .awaitTermination()
       shards
     }),
     // round-16: the stump family at 6M rows per the DOCUMENTED at-scale

@@ -21,8 +21,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try api.StandardQueries.owned(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name
@@ -43,9 +43,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val scratch = Option(new java.io.File("target/tmp").listFiles()).fold(0)(
+      _.count(d => d.isDirectory && !d.getName.startsWith("stream_src_")))
     System.err.println(s"[verify] left: ${spark.sparkContext.getPersistentRDDs.size} persistent " +
       s"RDDs, ${spark.catalog.listTables().collect().count(_.isTemporary)} temp views, " +
-      s"${spark.streams.active.length} active streams")
+      s"${spark.streams.active.length} active streams, $scratch target/tmp directories")
     spark.stop()
     // a failed query only leaves its output directory missing: name them all
     val names = failed.result()

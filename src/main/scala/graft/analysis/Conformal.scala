@@ -3,7 +3,7 @@ package graft.analysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
-import graft.core.Checkpoint
+import graft.core.{Checkpoint, Owner}
 
 /** Split-conformal prediction intervals (Vovk et al.; Lei et al. JASA
   * 2018 for the split recipe) on top of the exact-fit OLS — the
@@ -61,12 +61,10 @@ object Conformal {
       require(k <= nCal,
         s"calibration split too small: need k=$k <= n_cal=$nCal (lower alphaDen or add data)")
       // the rank table reads its own checkpoint: released once q is read
-      val ranks = ExactQuantiles.percentRanksMulti(scores, Seq("__score"))
-      val q =
-        try ranks.filter(F.col("n_below") < k &&
-            F.col("n_below") + F.col("n_value") >= k)
-          .agg(F.min("value")).head().getDouble(0)
-        finally Checkpoint.release(ranks)
+      val q = Owner.using(_.own(ExactQuantiles.percentRanksMulti(scores, Seq("__score")))(
+          Checkpoint.release)
+        .filter(F.col("n_below") < k && F.col("n_below") + F.col("n_value") >= k)
+        .agg(F.min("value")).head().getDouble(0))
       Model(b0, b1, b2, q, nCal, k)
     }
   }

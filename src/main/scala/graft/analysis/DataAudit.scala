@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.LongType
 
-import graft.core.Checkpoint
+import graft.core.{Checkpoint, Owner}
 
 /** Dataset-level integrity audits for training-data pipelines: referential
   * integrity across fact/dimension tables, k-anonymity of quasi-identifier
@@ -520,26 +520,26 @@ object DataAudit {
     import spark.implicits._
     val pairs = for { i <- cols.indices; j <- i until cols.size } yield (i, j)
     val vs = cols.map(c => "__v_" + c)
-    val row = Checkpoint.scoped(df.select(cols.zip(vs).map { case (c, v) =>
-        F.col(c).cast("double").as(v) }: _*)
-      .filter(vs.map(v => F.col(v).isNotNull && !F.isnan(F.col(v)))
-        .reduce(_ && _))) { base =>
+    val row = Owner.using { o =>
+      val base = o.own(df.select(cols.zip(vs).map { case (c, v) =>
+          F.col(c).cast("double").as(v) }: _*)
+        .filter(vs.map(v => F.col(v).isNotNull && !F.isnan(F.col(v))).reduce(_ && _))
+        .localCheckpoint(false))(Checkpoint.release)
       val n = base.count()
       require(n > 0, "no complete-case rows")
       // the rank table reads its own checkpoint: released once summed
-      val rankTable = ExactQuantiles.percentRanksMulti(base, vs)
-      try Checkpoint.scoped(rankTable) { ranks =>
-        val joined = cols.zip(vs).foldLeft(base) { case (acc, (c, v)) =>
-          acc.join(ranks.filter(F.col("feature") === v)
-            .select(F.col("value").as(v),
-              (F.lit(2L) * F.col("n_below") + F.col("n_value") - F.lit(n))
-                .as("__d_" + c)), Seq(v))
-        }
-        val aggs = Seq(F.count(F.lit(1)).as("__n")) ++ pairs.map { case (i, j) =>
-          F.sum(F.col("__d_" + cols(i)) * F.col("__d_" + cols(j)))
-            .as(s"__s${i}_$j") }
-        joined.agg(aggs.head, aggs.tail: _*).head
-      } finally Checkpoint.release(rankTable)
+      val rankTable = o.own(ExactQuantiles.percentRanksMulti(base, vs))(Checkpoint.release)
+      val ranks = o.own(rankTable.localCheckpoint(false))(Checkpoint.release)
+      val joined = cols.zip(vs).foldLeft(base) { case (acc, (c, v)) =>
+        acc.join(ranks.filter(F.col("feature") === v)
+          .select(F.col("value").as(v),
+            (F.lit(2L) * F.col("n_below") + F.col("n_value") - F.lit(n))
+              .as("__d_" + c)), Seq(v))
+      }
+      val aggs = Seq(F.count(F.lit(1)).as("__n")) ++ pairs.map { case (i, j) =>
+        F.sum(F.col("__d_" + cols(i)) * F.col("__d_" + cols(j)))
+          .as(s"__s${i}_$j") }
+      joined.agg(aggs.head, aggs.tail: _*).head
     }
     val nOut = row.getLong(0)
     val pIdx = pairs.zipWithIndex.toMap

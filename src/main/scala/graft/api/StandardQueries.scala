@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
 import graft.analysis._
-import graft.core.{Checkpoint, MetricConfig, Namespace, ResolverSpec}
+import graft.core.{Checkpoint, MetricConfig, Namespace, Owner, ResolverSpec}
 import graft.functions._
 import graft.functions.Fingerprints.rolling_min_hash
 import graft.pipeline.{Audio, Decontaminate, Dedup, Embeddings, Exif, HtmlExtract, Multimodal, NaiveBayes, Packing, Pii, QualityClassifier, Sampling, Similarity, TextAnalysis, Video}
@@ -56,26 +56,49 @@ object StandardQueries {
     dir.toAbsolutePath.toString
   }
 
+  /** The running query's owner, per thread (null outside [[owned]]). */
+  private val queryOwner = new ThreadLocal[Owner]
+
+  /** Runs `body` (a query's build and the action consuming it) in a
+    * fresh owner that deletes its [[scratch]] directories on exit, normal
+    * or thrown; a nested scope restores the enclosing one. */
+  private[graft] def owned[T](body: => T): T = Owner.using { o =>
+    o.own(queryOwner.get)(queryOwner.set)
+    queryOwner.set(o)
+    body
+  }
+
+  /** A fresh absolute path `target/tmp/<prefix><uuid>`, not created,
+    * deleted when the enclosing [[owned]] scope closes (kept outside one). */
+  private[graft] def scratch(prefix: String): String = {
+    val dir = new java.io.File("target/tmp",
+      prefix + java.util.UUID.randomUUID().toString.replace("-", "")).getAbsoluteFile
+    Option(queryOwner.get).foreach(_.own(dir)(org.apache.commons.io.FileUtils.deleteQuietly))
+    dir.getPath
+  }
+
   // Fixture-table schemas, inferred from the parquet footer ONCE per
-  // path per process and then passed explicitly. Schema inference on a
+  // file version per process and then passed explicitly. Schema inference on a
   // path-based read costs ~80 ms warm (footer job + file index), paid at
   // EVERY query construction — ~450 t() calls per bench pass re-derived
   // the same dozen schemas (guide §6: repeated listing/metadata work
   // belongs in a catalog; production tables declare their schema in a
   // metastore and never re-infer per query). This memoizes METADATA
   // only — every action still scans the parquet inputs; no data, plan,
-  // or result is cached.
-  private val tableSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  // or result is cached. Keyed on (path, length, mtime), so a fixture
+  // rewritten in place is read afresh.
+  private val tableSchemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
-  private def tableSchema(s: SparkSession, dir: String, name: String)
+  private[graft] def tableSchema(s: SparkSession, dir: String, name: String)
       : org.apache.spark.sql.types.StructType = {
     // Older fixtures store events.ts as INT64 TIMESTAMP(NANOS), which
     // Spark's parquet reader rejects unless nanos are surfaced as raw
     // longs. Harmless for the current timestamp[us] fixtures; keeping it
     // lets rebuildTs dispatch on whichever dtype the file actually has.
     if (name == "events") s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tableSchemas.computeIfAbsent(s"$dir/$name.parquet", p => s.read.parquet(p).schema)
+    val f = new java.io.File(s"$dir/$name.parquet")
+    tableSchemas.computeIfAbsent((f.getPath, f.length, f.lastModified), k => s.read.parquet(k._1).schema)
   }
 
   // NOTE: the local test files are single-row-group parquet, so scans
@@ -1394,8 +1417,7 @@ object StandardQueries {
     * exact field must equal whole-table SQL. */
   private def qProfileStoreRoundtrip = Q(
     (s, dir) => {
-      val storeDir = "target/tmp/profile_store_" + java.util.UUID.randomUUID().toString
-      val store = new ProfileStore(s, storeDir)
+      val store = new ProfileStore(s, scratch("profile_store_"))
       val li = t(s, dir, "lineitem")
       val p = new Profiler()
       val day0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
@@ -1421,7 +1443,7 @@ object StandardQueries {
   private def qCsvSourceProfile = Q(
     (s, dir) => {
       val n = t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-      val out = "target/tmp/csv_src_" + java.util.UUID.randomUUID().toString
+      val out = scratch("csv_src_")
       n.write.mode("overwrite").option("header", "true").csv(out)
       val back = s.read.option("header", "true").schema(n.schema).csv(out)
       val prof = new Profiler().profileDF(back)
@@ -3158,7 +3180,7 @@ object StandardQueries {
       val ix = Similarity.ivfPqBuild(emb, numCentroids = 8, m = 16, ksub = 16)
       val sdf = st(s, dir, "embeddings")
         .filter(F.col("vec_id") < 20)
-      val out = s"target/tmp/ivfpq_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+      val out = scratch("ivfpq_")
       val q = Similarity.ivfPqStream(ix, sdf, "vec_id", "embedding", out,
         nprobe = 8, k = 5, rerank = 1000000)
       q.awaitTermination()
@@ -3181,7 +3203,7 @@ object StandardQueries {
       val emb = t(s, dir, "embeddings")
       val ix0 = Similarity.ivfPqBuild(emb, numCentroids = 8, m = 16, ksub = 16)
       val sdf = st(s, dir, "embeddings")
-      val base = s"target/tmp/ivfpqstore_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+      val base = scratch("ivfpqstore_")
       val q = Similarity.ivfPqIngest(ix0, sdf, "vec_id", "embedding",
         s"$base/store", s"$base/ckpt")
       q.awaitTermination()
@@ -3209,7 +3231,7 @@ object StandardQueries {
     (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val ix0 = Similarity.ivfPqBuild(emb, numCentroids = 8, m = 16, ksub = 16)
-      val base = s"target/tmp/ivfpqix_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+      val base = scratch("ivfpqix_")
       Similarity.ivfPqSave(ix0, s"$base/index")
       ix0.encoded.write.partitionBy("__cell").parquet(s"$base/store")
       // from here on, nothing from ix0 is used — codebooks, codes and
@@ -4942,7 +4964,7 @@ object StandardQueries {
   private def qStreamingDedupStore = Q(
     (s, dir) => {
       val sdf = st(s, dir, "documents")
-      val path = "target/tmp/sds_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val path = scratch("sds_")
       val q = graft.streaming.DedupStream.exactKeepersToStore(
         sdf, "text", "doc_id", path, numBuckets = 8)
       q.awaitTermination()
@@ -6722,10 +6744,8 @@ object StandardQueries {
     * inside a file is irrelevant — records parse independently and the
     * queries sort their output. */
   private def writeWarcGzFiles(df: DataFrame, gz: Column): String = {
-    val base = new java.io.File(
-      s"target/tmp/warcfiles_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    base.mkdirs()
-    val abs = base.getAbsolutePath
+    val abs = scratch("warcfiles_")
+    new java.io.File(abs).mkdirs()
     // repartition BEFORE projecting the gzip bytes: below-the-exchange
     // projection would run every per-row compression on the (one-file)
     // scan's single task and then shuffle the compressed bytes; this
@@ -7235,12 +7255,10 @@ object StandardQueries {
   private def qCrawlToCorpusShards = Q(
     (s, dir) => {
       val curated = crawlCuratedDocs(s, dir)
-      val base = new java.io.File(
-        s"target/tmp/crawl_shards_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+      val path = scratch("crawl_shards_")
       val line = F.concat(F.col("url"), F.lit("\t"), F.col("text"))
-      graft.pipeline.CorpusSink.writeCorpusShards(
-        curated, line, F.col("url"), base.getAbsolutePath, 8)
-      graft.pipeline.CorpusSink.verifyShards(s, base.getAbsolutePath)
+      graft.pipeline.CorpusSink.writeCorpusShards(curated, line, F.col("url"), path, 8)
+      graft.pipeline.CorpusSink.verifyShards(s, path)
         .orderBy("shard")
     },
     Some {
@@ -7336,9 +7354,7 @@ object StandardQueries {
   private def qCorpusShardSink = Q(
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      val base = new java.io.File(
-        s"target/tmp/corpus_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-      val path = base.getAbsolutePath
+      val path = scratch("corpus_sink_")
       val line = F.concat(F.col("doc_id").cast("string"), F.lit("\t"), F.col("text"))
       graft.pipeline.CorpusSink.writeCorpusShards(
         docs, line, F.col("doc_id"), path, 8)

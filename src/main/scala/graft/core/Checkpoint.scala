@@ -21,9 +21,6 @@ object Checkpoint {
   /** Runs `use` on a lazy local checkpoint of `df` and [[release]]s it
     * on exit, normal or not. What `use` returns must not read the
     * checkpoint: a driver value, or a frame built from driver data. */
-  def scoped[T](df: DataFrame)(use: DataFrame => T): T = {
-    val pinned = df.localCheckpoint(false)
-    try use(pinned)
-    finally release(pinned)
-  }
+  def scoped[T](df: DataFrame)(use: DataFrame => T): T =
+    Owner.using(o => use(o.own(df.localCheckpoint(false))(release)))
 }

@@ -61,10 +61,9 @@ object Dedup {
 
   /** Lowercased whitespace tokens of a text column; empty text yields an
     * EMPTY array, not [""] (splitting empty text produces one empty
-    * token). The one tokenizer shared by shingling, SimHash and the NLP
-    * term vectors — keep fixes here. */
-  def tokens(textCol: Column): Column =
-    F.filter(F.split(F.lower(F.trim(textCol)), "\\s+"), w => F.length(w) > 0)
+    * token). The tokenizer of shingling, SimHash and the NLP term
+    * vectors: [[TextAnalysis.nonEmptyTokens]]. */
+  def tokens(textCol: Column): Column = TextAnalysis.nonEmptyTokens(textCol)
 
   /** Distinct word n-gram shingles of `textCol` (lowercased), as an array
     * column — the input to MinHash / Jaccard. */

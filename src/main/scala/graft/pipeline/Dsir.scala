@@ -45,8 +45,7 @@ object Dsir {
   def importanceWeights(raw: DataFrame, target: DataFrame, textCol: String,
       idCol: String): DataFrame = {
     def toks(df: DataFrame, cols: Seq[org.apache.spark.sql.Column]) =
-      df.select(cols :+ F.explode(F.filter(
-        TextAnalysis.tokens(F.col(textCol)), w => F.length(w) > 0)).as("__w"): _*)
+      df.select(cols :+ F.explode(TextAnalysis.nonEmptyTokens(F.col(textCol))).as("__w"): _*)
     val tokRaw = toks(raw, Seq(F.col(idCol).as("__id")))
     val cr = tokRaw.groupBy("__w").agg(F.count(F.lit(1)).as("__cr"))
     val ct = toks(target, Seq.empty)

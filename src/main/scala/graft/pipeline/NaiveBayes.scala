@@ -48,9 +48,6 @@ object NaiveBayes {
   private def lnqL(x: Column, quant: Double): Column =
     F.floor(F.log(x.cast("double")) * F.lit(quant)).cast("long")
 
-  private def toks(text: Column): Column =
-    F.filter(TextAnalysis.tokens(text), w => F.length(w) > 0)
-
   /** Train on `train` (`textCol`, `labelCol`) and score `score`
     * (`idCol`, `textCol`): one row per scored document —
     * `(idCol, pred, score)` where `score` is the winning class's
@@ -69,7 +66,7 @@ object NaiveBayes {
         .agg(F.map_from_entries(
           F.collect_list(F.struct(F.col("__c"), F.col("__cnt")))).as("__m"))
       val exploded = score.select(F.col(idCol),
-        F.explode_outer(toks(F.col(textCol))).as("tok"))
+        F.explode_outer(TextAnalysis.nonEmptyTokens(F.col(textCol))).as("tok"))
       val joined = exploded.join(model, Seq("tok"), "left")
       // per-class integer contributions; constants fold at plan time
       val sumCols = stats.zipWithIndex.map { case ((c, total, _), i) =>
@@ -102,7 +99,8 @@ object NaiveBayes {
   private def withCounts[T](train: DataFrame, textCol: String, labelCol: String,
       caller: String)(use: (DataFrame, Array[(String, Long, Long)]) => T): T = {
     val label = F.col(labelCol).cast("string").as("__c")
-    Checkpoint.scoped(train.select(label, F.explode(toks(F.col(textCol))).as("__t"))
+    Checkpoint.scoped(train
+        .select(label, F.explode(TextAnalysis.nonEmptyTokens(F.col(textCol))).as("__t"))
         .groupBy("__c", "__t").agg(F.count(F.lit(1)).as("__cnt"))) { tc =>
       val stats = tc.groupBy("__c").agg(F.sum("__cnt").as("__total"))
         .join(train.groupBy(label).agg(F.count(F.lit(1)).as("__nd")), Seq("__c"))
@@ -182,7 +180,7 @@ object NaiveBayes {
       }: _*)
       F.zip_with(acc, contrib, (a, b) => a + b)
     }
-    val sums = F.aggregate(toks(text), zeros, step)
+    val sums = F.aggregate(TextAnalysis.nonEmptyTokens(text), zeros, step)
     val scored = (0 until k).map { i =>
       val prior = lnqL(F.lit(model.classDocs(i).toDouble), model.quant) -
         lnqL(F.lit(model.nDocs.toDouble), model.quant)

@@ -123,10 +123,11 @@ object NlpSvd {
       dim: Int, k: Int): DataFrame = {
     // persist, not Checkpoint.scoped: fit's first job (RowMatrix's `first()`) reads one
     // partition, so a lazy local checkpoint adds a job for the rest (4 → 5 on 4 partitions)
-    val withVec = df
-      .select(F.col(idCol), F.col(vecCol).cast("array<double>").as("__tv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Owner.using { o =>
+      val withVec = o.own(df
+        .select(F.col(idCol), F.col(vecCol).cast("array<double>").as("__tv"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
+        _.unpersist(blocking = false))
       val summary = fit(withVec, "__tv", k, dim)
       val resid = F.udf((v: scala.collection.Seq[Double]) => summary.residual(v.toArray))
       val out = withVec.select(F.col(idCol),
@@ -134,6 +135,6 @@ object NlpSvd {
       // materialize (lineage truncated) so the vectors can be released
       // before callers run their own actions
       out.localCheckpoint(true)
-    } finally withVec.unpersist(blocking = false)
+    }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
 
-import graft.core.Checkpoint
+import graft.core.{Checkpoint, Owner}
 
 /** Text analysis for training-data pipelines: token counting, quality
   * scoring, language ID, all as codegen'd column expressions (map-only,
@@ -55,6 +55,16 @@ object TextAnalysis {
 
   /** Tokens of lowercased text. */
   def tokens(text: Column): Column = F.split(F.lower(F.trim(text)), "\\s+")
+
+  /** [[tokens]] without empty strings: empty text has no words. */
+  def nonEmptyTokens(text: Column): Column = F.filter(tokens(text), w => F.length(w) > 0)
+
+  /** `ln x`, or with `lnQuantize = Some(s)` floored at granularity 1/s
+    * (the [[bm25TopDocs]] cross-libm bridge). */
+  private def lnq(x: Column, lnQuantize: Option[Double]): Column = lnQuantize match {
+    case Some(s) => F.floor(F.log(x) * F.lit(s)).cast("double") / F.lit(s)
+    case None    => F.log(x)
+  }
 
   /** Stopword hits for one language list (with multiplicity). */
   def stopwordHits(text: Column, words: Seq[String]): Column = {
@@ -249,9 +259,9 @@ object TextAnalysis {
       .select(F.concat(F.lit(sep2),
           F.regexp_replace(F.col("t"), "(.)", "$1" + sep2)).as("e"),
         F.col("freq"))
-    var frame = vocab.localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    try {
+    Owner.using { o =>
+      var frame = o.own(vocab.localCheckpoint(true))(Checkpoint.release)
       var r = 1
       var exhausted = false
       while (r <= rounds && !exhausted) {
@@ -268,16 +278,16 @@ object TextAnalysis {
         else {
           val (s1, s2, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
           merges += ((r, s1, s2, s1 + s2, cnt))
-          val next = frame.select(
+          val next = o.own(frame.select(
             F.regexp_replace(F.col("e"),
               F.lit(sep + s1 + sep2 + s2 + sep), F.lit(sep + s1 + s2 + sep)).as("e"),
-            F.col("freq")).localCheckpoint(true)
+            F.col("freq")).localCheckpoint(true))(Checkpoint.release)
           Checkpoint.release(frame) // superseded; next is materialized
           frame = next
           r += 1
         }
       }
-    } finally Checkpoint.release(frame)
+    }
     merges.toSeq.toDF("round", "s1", "s2", "merged", "cnt")
   }
 
@@ -849,19 +859,15 @@ object TextAnalysis {
   def zipfFit(df: DataFrame, textCol: String, topK: Int = 1000,
       lnQuantize: Option[Double] = None): DataFrame = {
     require(topK >= 2, "need at least two ranks to fit a line")
-    def lnq(x: Column): Column = lnQuantize match {
-      case Some(s) => F.floor(F.log(x) * F.lit(s)).cast("double") / F.lit(s)
-      case None    => F.log(x)
-    }
     val tf = df
-      .select(F.explode(F.filter(tokens(F.col(textCol)), w => F.length(w) > 0)).as("term"))
+      .select(F.explode(nonEmptyTokens(F.col(textCol))).as("term"))
       .groupBy("term").agg(F.count(F.lit(1)).as("cnt"))
       .orderBy(F.col("cnt").desc, F.col("term")).limit(topK)
     val ranked = tf
       .withColumn("rank", F.row_number()
         .over(Window.orderBy(F.col("cnt").desc, F.col("term"))).cast("long"))
-      .select(F.col("rank"), lnq(F.col("rank").cast("double")).as("x"),
-        lnq(F.col("cnt").cast("double")).as("y"))
+      .select(F.col("rank"), lnq(F.col("rank").cast("double"), lnQuantize).as("x"),
+        lnq(F.col("cnt").cast("double"), lnQuantize).as("y"))
     val zero = F.struct(F.lit(0.0).as("sx"), F.lit(0.0).as("sy"),
       F.lit(0.0).as("sxx"), F.lit(0.0).as("sxy"), F.lit(0.0).as("syy"))
     val sums = F.aggregate(
@@ -895,15 +901,11 @@ object TextAnalysis {
     * ln at granularity 1/s (the [[bm25TopDocs]] cross-libm bridge); the
     * default keeps pure ln. Empty/whitespace text → 0.0. */
   def unigramEntropy(text: Column, lnQuantize: Option[Double] = None): Column = {
-    val toks = F.filter(tokens(text), w => F.length(w) > 0)
+    val toks = nonEmptyTokens(text)
     val n = F.size(toks)
-    def lnq(x: Column): Column = lnQuantize match {
-      case Some(s) => F.floor(F.log(x) * F.lit(s)).cast("double") / F.lit(s)
-      case None    => F.log(x)
-    }
     val contributions = F.transform(F.array_sort(F.array_distinct(toks)), t => {
       val p = F.size(F.filter(toks, x => x === t)).cast("double") / n.cast("double")
-      p * lnq(p)
+      p * lnq(p, lnQuantize)
     })
     F.when(n === 0, 0.0).otherwise(
       -F.aggregate(contributions, F.lit(0.0), (acc, x) => acc + x))
@@ -1165,18 +1167,13 @@ object TextAnalysis {
     require(n >= 2, s"n must be >= 2, got $n")
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     require(addK > 0, s"addK must be > 0, got $addK")
-    def toksOf(c: Column) = F.filter(tokens(c), w => F.length(w) > 0)
-    def lnq(x: Column): Column = lnQuantize match {
-      case Some(s) => F.floor(F.log(x) * F.lit(s)).cast("double") / F.lit(s)
-      case None    => F.log(x)
-    }
     def gid(g: Column): Column = if (hashGrams) F.xxhash64(g) else g
     // one count table per order — n passes over `train` (persist the
     // input upstream to amortize them at corpus scale; the tables
     // themselves are aggregated map-side and shuffle only counts)
     val counts: Map[Int, DataFrame] = (1 to n).map { m =>
       m -> train
-        .select(F.explode(wordGrams(toksOf(F.col(textCol)), m)).as("__g"))
+        .select(F.explode(wordGrams(nonEmptyTokens(F.col(textCol)), m)).as("__g"))
         .groupBy(gid(F.col("__g")).as(s"__k$m"))
         .agg(F.count(F.lit(1)).as(s"__c$m"))
     }.toMap
@@ -1189,7 +1186,7 @@ object TextAnalysis {
         else (uniTotals.getLong(0), uniTotals.getLong(1))
       val scoreGrams = score
         .select(F.col(idCol).as("__id"),
-          F.explode(wordGrams(toksOf(F.col(textCol)), n)).as("__g"))
+          F.explode(wordGrams(nonEmptyTokens(F.col(textCol)), n)).as("__g"))
       // suffix of length m and its length-(m-1) denominator prefix;
       // tokens contain no whitespace, so substring_index is exact
       def suffix(m: Int): Column = F.substring_index(F.col("__g"), " ", -m)
@@ -1225,7 +1222,7 @@ object TextAnalysis {
       }
       val perDoc = joined
         .select(F.col("__id"),
-          F.struct(gid(F.col("__g")).as("g"), lnq(prob).as("p")).as("__gp"))
+          F.struct(gid(F.col("__g")).as("g"), lnq(prob, lnQuantize).as("p")).as("__gp"))
         .groupBy("__id")
         .agg(F.sort_array(F.collect_list(F.col("__gp"))).as("__ps"))
         .select(F.col("__id"),
@@ -1272,31 +1269,26 @@ object TextAnalysis {
       hashGrams: Boolean = false): DataFrame = {
     require(n >= 2, s"n must be >= 2 (unigram LM has no context), got $n")
     require(addK > 0, s"addK must be > 0, got $addK")
-    def toks(c: Column) = F.filter(tokens(c), w => F.length(w) > 0)
-    def lnq(x: Column): Column = lnQuantize match {
-      case Some(s) => F.floor(F.log(x) * F.lit(s)).cast("double") / F.lit(s)
-      case None    => F.log(x)
-    }
     def gid(g: Column): Column = if (hashGrams) F.xxhash64(g) else g
     val trainGrams = train
-      .select(F.explode(wordGrams(toks(F.col(textCol)), n)).as("__g"))
+      .select(F.explode(wordGrams(nonEmptyTokens(F.col(textCol)), n)).as("__g"))
       .select(gid(F.col("__g")).as("__gid"),
         gid(F.substring_index(F.col("__g"), " ", n - 1)).as("__cid"))
     val gramCounts = trainGrams.groupBy("__gid")
       .agg(F.first("__cid").as("__cid"), F.count(F.lit(1)).as("__cg"))
     val ctxCounts = gramCounts.groupBy("__cid").agg(F.sum("__cg").as("__cc"))
     val vocab = train
-      .select(F.explode(toks(F.col(textCol))).as("__t"))
+      .select(F.explode(nonEmptyTokens(F.col(textCol))).as("__t"))
       .distinct().count()
     val scoreGrams = score
       .select(F.col(idCol).as("__id"),
-        F.explode(wordGrams(toks(F.col(textCol)), n)).as("__g"))
+        F.explode(wordGrams(nonEmptyTokens(F.col(textCol)), n)).as("__g"))
       .select(F.col("__id"), gid(F.col("__g")).as("__sgid"),
         gid(F.substring_index(F.col("__g"), " ", n - 1)).as("__scid"))
     val lnp = lnq(
       (F.coalesce(F.col("__cg"), F.lit(0L)).cast("double") + F.lit(addK)) /
         (F.coalesce(F.col("__cc"), F.lit(0L)).cast("double") +
-          F.lit(addK) * F.lit(vocab.toDouble)))
+          F.lit(addK) * F.lit(vocab.toDouble)), lnQuantize)
     val perDoc = scoreGrams
       .join(gramCounts.select(F.col("__gid"), F.col("__cg")),
         F.col("__sgid") === F.col("__gid"), "left")
@@ -1329,7 +1321,7 @@ object TextAnalysis {
     * is TakeOrderedAndProject, never a global sort. Character
     * semantics (not bytes), so multibyte scripts count correctly. */
   def bpePairCounts(df: DataFrame, textCol: String, topK: Int = 50): DataFrame = {
-    val tok = F.explode(F.filter(tokens(F.col(textCol)), w => F.length(w) > 0))
+    val tok = F.explode(nonEmptyTokens(F.col(textCol)))
     val pairs = F.when(F.length(F.col("__tok")) >= 2,
         F.transform(F.sequence(F.lit(1), F.length(F.col("__tok")) - 1),
           i => F.col("__tok").substr(i, F.lit(2))))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.Checkpoint
+import graft.core.{Checkpoint, Owner}
 import graft.pipeline.Dedup
 
 /** Streaming deduplication: the ingestion-time face of
@@ -124,12 +124,11 @@ object DedupStream {
     val sized = merged.repartition(math.max(touched.size, 1), F.col("bucket"))
     // materialize before writing: the plan reads the same directory the
     // write overwrites, so break the lineage first; freed once written
-    val out = sized.localCheckpoint(true)
-    try out.write.mode("overwrite")
+    Owner.using(_.own(sized.localCheckpoint(true))(Checkpoint.release)
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket")
-      .parquet(statePath)
-    finally Checkpoint.release(out)
+      .parquet(statePath))
   }
 
   /** The bucket ids this batch touches — collected on the driver but
@@ -226,11 +225,11 @@ object DedupStream {
       .outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val flagged = Dedup.nearDupsAgainstIndex(
-          batch, index, textCol, idCol, numPerm, bands, threshold, maxBucketSize)
-        try flagged.withColumn("batch_id", F.lit(batchId))
-          .write.mode("append").parquet(outPath)
-        finally Checkpoint.release(flagged)
+        Owner.using(_.own(Dedup.nearDupsAgainstIndex(
+            batch, index, textCol, idCol, numPerm, bands, threshold, maxBucketSize))(
+            Checkpoint.release)
+          .withColumn("batch_id", F.lit(batchId))
+          .write.mode("append").parquet(outPath))
       }
       .start()
 }

@@ -6,6 +6,8 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.core.Owner
+
 /** Running a bounded streaming plan to a result frame. */
 object Streams {
 
@@ -32,23 +34,18 @@ object Streams {
     *
     * `outputMode` is `append` for stateless plans and `complete` for
     * aggregations whose final state table is the result. */
-  def toMemory(ds: Dataset[_], outputMode: String = "append"): DataFrame = {
+  def toMemory(ds: Dataset[_], outputMode: String = "append"): DataFrame = Owner.using { o =>
     val spark = ds.sparkSession
     val name = "mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val checkpoint = Files.createTempDirectory(CheckpointPrefix).toFile
-    try {
-      val q = ds.writeStream.format("memory").queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", checkpoint.getPath)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        spark.table(name)
-      } finally q.stop()
-    } finally {
-      spark.catalog.dropTempView(name)
-      FileUtils.deleteQuietly(checkpoint)
-    }
+    val checkpoint =
+      o.own(Files.createTempDirectory(CheckpointPrefix).toFile)(FileUtils.deleteQuietly)
+    o.own(name)(spark.catalog.dropTempView)
+    o.own(ds.writeStream.format("memory").queryName(name)
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpoint.getPath)
+      .trigger(Trigger.AvailableNow())
+      .start())(_.stop())
+      .awaitTermination()
+    spark.table(name)
   }
 }

@@ -22,23 +22,20 @@ abstract class SparkSpec extends AnyFunSuite {
   def sfDir: String = TestSpark.sfDir
   def table(name: String) = spark.read.parquet(s"$sfDir/$name.parquet")
 
-  private val testDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  /** The running test's owner; null between tests. */
+  @volatile private var testOwner: graft.core.Owner = _
 
   /** A new directory `target/<prefix><random>`, deleted with its contents
     * when the running test ends. */
-  def targetTempDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get("target"), prefix)
-    testDirs.add(dir)
-    dir.toString
-  }
+  def targetTempDir(prefix: String): String =
+    testOwner.own(java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get("target"), prefix)
+      .toFile)(org.apache.commons.io.FileUtils.deleteDirectory).toString
 
   override def withFixture(test: NoArgTest): org.scalatest.Outcome =
-    try super.withFixture(test)
-    finally while (!testDirs.isEmpty) {
-      val walk = java.nio.file.Files.walk(testDirs.poll())
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
+    graft.core.Owner.using { o =>
+      o.own(testOwner)(testOwner = _)
+      testOwner = o
+      super.withFixture(test)
     }
 
   /** events with `ts` normalized to a session-tz timestamp regardless of
