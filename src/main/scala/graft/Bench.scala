@@ -68,7 +68,7 @@ object Bench {
           only.forall(_.contains(name)) && subset.forall(_.contains(name)) }
         .map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try api.StandardQueries.owned(fn(spark, sfDir).count()) catch {
+        try core.Owner.scope(fn(spark, sfDir).count()) catch {
           case e: Throwable =>
             if (pass == 0) failed ::= name
             System.err.println(s"[bench] $name FAILED (pass $pass): ${e.getMessage}")

@@ -21,7 +21,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try api.StandardQueries.owned(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try core.Owner.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -61,8 +61,7 @@ object Conformal {
       require(k <= nCal,
         s"calibration split too small: need k=$k <= n_cal=$nCal (lower alphaDen or add data)")
       // the rank table reads its own checkpoint: released once q is read
-      val q = Owner.using(_.own(ExactQuantiles.percentRanksMulti(scores, Seq("__score")))(
-          Checkpoint.release)
+      val q = Owner.scope(ExactQuantiles.percentRanksMulti(scores, Seq("__score"))
         .filter(F.col("n_below") < k && F.col("n_below") + F.col("n_value") >= k)
         .agg(F.min("value")).head().getDouble(0))
       Model(b0, b1, b2, q, nCal, k)

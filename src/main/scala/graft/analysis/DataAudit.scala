@@ -1,6 +1,6 @@
 package graft.analysis
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.LongType
 
@@ -291,7 +291,7 @@ object DataAudit {
     val joint = df.filter(F.col(sensitive).isNotNull)
       .groupBy((qi :+ sensitive).map(F.col): _*)
       .agg(F.count(F.lit(1)).as("__c"))
-      .localCheckpoint(false)
+      .transform(Checkpoint.pin(_, eager = false))
     val cv = joint.groupBy(sensitive).agg(F.sum("__c").as("__cv"))
     // NULL quasi-identifiers form a group (a real equivalence class to
     // an attacker), so the marginal join must be NULL-SAFE: a plain
@@ -344,7 +344,7 @@ object DataAudit {
   def keyConcentration(df: DataFrame, keyCol: String): DataFrame = {
     val counts = df.groupBy(F.col(keyCol)).agg(F.count(F.lit(1)).as("__c"))
     val hist = counts.groupBy("__c").agg(F.count(F.lit(1)).as("__f"))
-      .localCheckpoint(false)
+      .transform(Checkpoint.pin(_, eager = false))
     val w = org.apache.spark.sql.expressions.Window.orderBy("__c")
     val tot = hist.agg(F.sum(F.col("__f")).as("__nk"),
       F.sum(F.col("__c") * F.col("__f")).as("__n"))
@@ -474,18 +474,17 @@ object DataAudit {
     * tables ([[ExactQuantiles.percentRanksMulti]] — never an
     * unpartitioned window), the tables (distinct values, not rows)
     * join back by value, and one map-side-combined aggregate emits the
-    * three sums. The result reads the pair and rank checkpoints, so they
-    * stay pinned for the session. */
+    * three sums. The result reads the pair and rank [[Checkpoint.pin]]s. */
   def spearmanCorr(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val base = df.select(F.col(aCol).cast("double").as("__a"),
         F.col(bCol).cast("double").as("__b"))
       .filter(F.col("__a").isNotNull && !F.isnan(F.col("__a")) &&
         F.col("__b").isNotNull && !F.isnan(F.col("__b")))
-      .localCheckpoint(false)
+      .transform(Checkpoint.pin(_, eager = false))
     val n = base.count()
     require(n > 0, "no complete-case rows")
     val ranks = ExactQuantiles.percentRanksMulti(base, Seq("__a", "__b"))
-      .localCheckpoint(false)
+      .transform(Checkpoint.pin(_, eager = false))
     def rk(c: String, d: String) = ranks.filter(F.col("feature") === c)
       .select(F.col("value").as(c),
         (F.lit(2L) * F.col("n_below") + F.col("n_value") - F.lit(n)).as(d))
@@ -558,6 +557,14 @@ object DataAudit {
     out.toDF("f1", "f2", "n", "rho").orderBy("f1", "f2")
   }
 
+  /** The complete-case joint histogram `(__a, __b, __c)` of two columns as
+    * strings, pinned: the association statistics' one corpus scan. */
+  private def jointHistogram(df: DataFrame, aCol: Column, bCol: Column): DataFrame =
+    df.select(aCol.cast("string").as("__a"), bCol.cast("string").as("__b"))
+      .filter(F.col("__a").isNotNull && F.col("__b").isNotNull)
+      .groupBy("__a", "__b").agg(F.count(F.lit(1)).as("__c"))
+      .transform(Checkpoint.pin(_, eager = false))
+
   /** Mutual information between two categorical columns with the
     * QUANTIZED-LOG exactness bridge — the information-theoretic
     * feature↔label association the χ² keyword scorer approximates:
@@ -573,12 +580,8 @@ object DataAudit {
     * (bounded by the category product), marginals as bounded
     * aggregates of the CHECKPOINTED joint table (one corpus scan), a
     * broadcast 1-row total, one final aggregate. */
-  def mutualInformation(df: DataFrame, aCol: org.apache.spark.sql.Column,
-      bCol: org.apache.spark.sql.Column): DataFrame = {
-    val joint = df.select(aCol.cast("string").as("__a"), bCol.cast("string").as("__b"))
-      .filter(F.col("__a").isNotNull && F.col("__b").isNotNull)
-      .groupBy("__a", "__b").agg(F.count(F.lit(1)).as("__c"))
-      .localCheckpoint(false)
+  def mutualInformation(df: DataFrame, aCol: Column, bCol: Column): DataFrame = {
+    val joint = jointHistogram(df, aCol, bCol)
     val ca = joint.groupBy("__a").agg(F.sum("__c").as("__ca"))
     val cb = joint.groupBy("__b").agg(F.sum("__c").as("__cb"))
     val tot = joint.agg(F.sum("__c").as("__n"))
@@ -614,12 +617,8 @@ object DataAudit {
     * `groupBy(a, b)` joint-histogram exchange bounded by the category
     * product, marginals off the CHECKPOINTED joint (one corpus scan),
     * a broadcast 1-row total, one final aggregate. */
-  def cramersV(df: DataFrame, aCol: org.apache.spark.sql.Column,
-      bCol: org.apache.spark.sql.Column): DataFrame = {
-    val joint = df.select(aCol.cast("string").as("__a"), bCol.cast("string").as("__b"))
-      .filter(F.col("__a").isNotNull && F.col("__b").isNotNull)
-      .groupBy("__a", "__b").agg(F.count(F.lit(1)).as("__c"))
-      .localCheckpoint(false)
+  def cramersV(df: DataFrame, aCol: Column, bCol: Column): DataFrame = {
+    val joint = jointHistogram(df, aCol, bCol)
     val ca = joint.groupBy("__a").agg(F.sum("__c").as("__ca"))
     val cb = joint.groupBy("__b").agg(F.sum("__c").as("__cb"))
     val tot = joint.agg(F.sum("__c").as("__n"),
@@ -661,14 +660,10 @@ object DataAudit {
     * Scale shape: identical to [[mutualInformation]] — one bounded
     * joint-histogram exchange, marginals off the CHECKPOINTED joint,
     * broadcast totals, one final aggregate. */
-  def theilsU(df: DataFrame, aCol: org.apache.spark.sql.Column,
-      bCol: org.apache.spark.sql.Column): DataFrame = {
-    val joint = df.select(aCol.cast("string").as("__a"), bCol.cast("string").as("__b"))
-      .filter(F.col("__a").isNotNull && F.col("__b").isNotNull)
-      .groupBy("__a", "__b").agg(F.count(F.lit(1)).as("__c"))
-      .localCheckpoint(false)
+  def theilsU(df: DataFrame, aCol: Column, bCol: Column): DataFrame = {
+    val joint = jointHistogram(df, aCol, bCol)
     val tot = joint.agg(F.sum("__c").as("__n"))
-    def hq: org.apache.spark.sql.Column =
+    def hq: Column =
       F.sum(F.col("__cm") * F.floor(F.lit(1000000.0) *
         F.log(F.col("__n").cast("double") / F.col("__cm").cast("double"))).cast("long"))
     val ha = joint.groupBy("__a").agg(F.sum("__c").as("__cm"))

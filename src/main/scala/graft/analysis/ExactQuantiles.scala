@@ -194,11 +194,11 @@ object ExactQuantiles {
     * per distinct (column, value) — `n_value` the exact tie count, so
     * midranks (`n_below + (n_value+1)/2`, what [[DataAudit.spearmanCorr]]
     * consumes doubled) come for free; per-column denominators ride a
-    * broadcast of k rows. The result reads the value table's checkpoint,
-    * pinned for the session unless the caller releases the result. */
+    * broadcast of k rows. The result reads the value table's
+    * [[Checkpoint.pin]]. */
   def percentRanksMulti(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "need at least one column")
-    val g = weightedTable(melted(df, cols), keepNaN = false).localCheckpoint(false)
+    val g = Checkpoint.pin(weightedTable(melted(df, cols), keepNaN = false), eager = false)
     val (below, ns) = withBelow(g)
     cols.foreach(c => require(ns.getOrElse(c, 0L) > 0,
       s"no non-null values in $c"))

@@ -65,7 +65,7 @@ object Monitor {
       .groupBy(F.col(seriesCol).cast("string").as("__s"),
         F.to_date(F.date_trunc("day", F.col(tsCol))).as("__d"))
       .agg(F.count(F.lit(1)).as("__x"))
-      .localCheckpoint(false)
+      .transform(Checkpoint.pin(_, eager = false))
     val nCells = d.count()
     require(nCells <= maxCells,
       s"$nCells chart cells exceeds $maxCells — coarsen the bucket or split series")
@@ -75,7 +75,7 @@ object Monitor {
       .select(F.col("__s"),
         (F.col("__x2") - F.col("__x1")).as("__dx"),
         F.datediff(F.col("__d2"), F.col("__d1")).cast("long").as("__dt"))
-      .localCheckpoint(false)
+      .transform(Checkpoint.pin(_, eager = false))
     val sStat = pairs.groupBy("__s")
       .agg(F.sum(F.when(F.col("__dx") > 0, 1L)
         .when(F.col("__dx") < 0, -1L).otherwise(0L)).as("s_stat"))

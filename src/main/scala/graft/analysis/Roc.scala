@@ -113,7 +113,7 @@ object Roc {
   def rocCurve(df: DataFrame, scoreCol: Column, labelCol: Column): DataFrame = {
     // the histogram feeds both the totals and the curve — checkpoint so
     // the corpus is scanned once
-    val hist = scoreHistogram(df, scoreCol, labelCol).localCheckpoint(false)
+    val hist = graft.core.Checkpoint.pin(scoreHistogram(df, scoreCol, labelCol), eager = false)
     val w = Window.orderBy(F.col("score").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = hist.agg(F.sum("n_pos").as("__p"), F.sum("n_neg").as("__n"))

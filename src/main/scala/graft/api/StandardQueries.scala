@@ -56,26 +56,12 @@ object StandardQueries {
     dir.toAbsolutePath.toString
   }
 
-  /** The running query's owner, per thread (null outside [[owned]]). */
-  private val queryOwner = new ThreadLocal[Owner]
-
-  /** Runs `body` (a query's build and the action consuming it) in a
-    * fresh owner that deletes its [[scratch]] directories on exit, normal
-    * or thrown; a nested scope restores the enclosing one. */
-  private[graft] def owned[T](body: => T): T = Owner.using { o =>
-    o.own(queryOwner.get)(queryOwner.set)
-    queryOwner.set(o)
-    body
-  }
-
   /** A fresh absolute path `target/tmp/<prefix><uuid>`, not created,
-    * deleted when the enclosing [[owned]] scope closes (kept outside one). */
-  private[graft] def scratch(prefix: String): String = {
-    val dir = new java.io.File("target/tmp",
-      prefix + java.util.UUID.randomUUID().toString.replace("-", "")).getAbsoluteFile
-    Option(queryOwner.get).foreach(_.own(dir)(org.apache.commons.io.FileUtils.deleteQuietly))
-    dir.getPath
-  }
+    * deleted when the enclosing [[Owner.scope]] closes (kept outside one). */
+  private[graft] def scratch(prefix: String): String =
+    Owner.adopt(new java.io.File("target/tmp",
+      prefix + java.util.UUID.randomUUID().toString.replace("-", "")).getAbsoluteFile)(
+      org.apache.commons.io.FileUtils.deleteQuietly).getPath
 
   // Fixture-table schemas, inferred from the parquet footer ONCE per
   // file version per process and then passed explicitly. Schema inference on a
@@ -3356,7 +3342,7 @@ object StandardQueries {
       // the exact pair list feeds BOTH the hit join and the total count —
       // materialize it once or the O(n²) all-pairs pass runs twice
       val exact = Similarity.cosineNearDupExact(emb, "vec_id", "embedding", tau = 0.4)
-        .select("a", "b").localCheckpoint(true)
+        .select("a", "b").transform(Checkpoint.pin(_, eager = true))
       val lsh = Similarity.cosineNearDupLsh(emb, "vec_id", "embedding",
         tau = 0.4, bitsPerBand = 4, bands = 64).select("a", "b")
       val hits = exact.join(lsh, Seq("a", "b")).agg(F.count(F.lit(1)).as("hits"))
@@ -3672,7 +3658,7 @@ object StandardQueries {
           F.col("quality_ok") && F.col("lang_guess") === F.lit("en"))
         .select(F.col("doc_id"), F.md5(F.col("text")).as("__th"),
           F.col("n_tokens"), F.col("n_chars"), F.col("__pass"))
-        .localCheckpoint(true)
+        .transform(Checkpoint.pin(_, eager = true))
       val totals = enriched.agg(
         F.count(F.lit(1)).as("input_docs"),
         count_where(F.col("__pass")).as("pass_docs"))

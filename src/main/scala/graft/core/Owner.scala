@@ -36,8 +36,11 @@ final class Owner private () {
 
 object Owner {
 
+  /** The innermost [[scope]] open on each thread (null outside one). */
+  private val ambient = new ThreadLocal[Owner]
+
   /** Runs `body` with a fresh owner and closes it on exit, normal or
-    * thrown. */
+    * thrown. The owner is never ambient: [[adopt]] ignores it. */
   def using[T](body: Owner => T): T = {
     val owner = new Owner
     val out =
@@ -46,4 +49,18 @@ object Owner {
     owner.close(None)
     out
   }
+
+  /** Runs `body` (a call and the action consuming its result) as this
+    * thread's ambient scope: what it [[adopt]]s is released when it
+    * exits, normal or thrown. Scopes nest; exit restores the outer one. */
+  def scope[T](body: => T): T = using { o =>
+    o.own(ambient.get)(ambient.set)
+    ambient.set(o)
+    body
+  }
+
+  /** Registers `resource` with the innermost [[scope]] on this thread
+    * and returns it; outside one it is returned unregistered, kept. */
+  def adopt[R](resource: R)(release: R => Unit): R =
+    Option(ambient.get).fold(resource)(_.own(resource)(release))
 }

@@ -131,7 +131,7 @@ object ConnectedComponents {
         .select(F.col("lo").as("hi"), F.col("m").as("lo"))
         .union(ss.select(F.col("hi"), F.col("m").as("lo")))
         .distinct()
-        .localCheckpoint(false)
+        .transform(Checkpoint.pin(_, eager = false))
       val sig = signature(next)
       // next is now materialized (the signature action forced the lazy
       // checkpoint); release the superseded round's checkpointed blocks —

@@ -57,7 +57,7 @@ object Decontaminate {
     * split) projection — split labels are map-only derivations, so
     * those scans prune to the id column. Not lazy: the pairing jobs run
     * before the call returns. Above the MinHash size bound the lazy result
-    * reads the pairs' checkpoint, pinned until `Checkpoint.release`. */
+    * reads the pairs' [[graft.core.Checkpoint.pin]]. */
   def splitLeakage(
       df: DataFrame, textCol: String, idCol: String, splitCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5): DataFrame = {

@@ -135,7 +135,7 @@ object Dedup {
     // hashing is the same µs-per-row class).
     val fps = df.select(F.col(idCol).as("__id"),
       F.explode(winnowFingerprints(F.col(textCol), n, window, hash)).as("fp"))
-      .localCheckpoint(true)
+      .transform(Checkpoint.pin(_, eager = true))
     val keep = fps.groupBy("fp").agg(F.count(F.lit(1)).as("__df"))
       .where(F.col("__df") <= maxDocFreq).select("fp")
     val kept = fps.join(keep, Seq("fp"))
@@ -329,8 +329,7 @@ object Dedup {
     *     checkpointed projection — so array bytes move only for verified
     *     candidates. The pair result is an eager local checkpoint, so
     *     the projection is released before the caller's own actions
-    *     run; the returned frame reads the result's checkpoint, which an
-    *     eager caller frees with `Checkpoint.release` once collected.
+    *     run; the returned frame reads the result's [[Checkpoint.pin]].
     * Pathological buckets (corpus-scale boilerplate) switch to star-edge
     * candidate generation on either branch — see [[lshPairs]] for the
     * recall accounting.
@@ -379,7 +378,7 @@ object Dedup {
       }
       local match {
         case Some(rows) => df.sparkSession.createDataFrame(rows, verified.schema)
-        case None => verified.localCheckpoint(true)
+        case None => Checkpoint.pin(verified, eager = true)
       }
     }
   }
@@ -497,8 +496,8 @@ object Dedup {
     * Intra-batch duplicates are [[minHashNearDups]]'s job — compose
     * both at ingestion. The cap is applied to the INDEX side (the corpus-
     * scale one, where boilerplate mega-buckets live); the batch side is
-    * ingestion-sized and left uncapped. Eager: a caller frees the
-    * result's checkpoint with `Checkpoint.release` once collected. */
+    * ingestion-sized and left uncapped. Eager: the result reads its own
+    * [[Checkpoint.pin]]. */
   def nearDupsAgainstIndex(
       newDf: DataFrame, index: DataFrame, textCol: String, idCol: String,
       numPerm: Int = 64, bands: Int = 32, threshold: Double = 0.5,
@@ -518,7 +517,7 @@ object Dedup {
         .withColumn("jaccard", jaccard(F.col("ia"), F.col("ib")))
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
-        .localCheckpoint(true)
+        .transform(Checkpoint.pin(_, eager = true))
     }
   }
 
@@ -535,7 +534,7 @@ object Dedup {
     * `ConnectedComponents.LocalEdgeBound`): a small corpus is paired and
     * clustered on the driver and leaves nothing pinned; a large one runs
     * the distributed band exchange and star rounds and returns a frame
-    * over CC's last round, which a caller frees with `Checkpoint.release`.
+    * over CC's last round, a [[Checkpoint.pin]].
     * Not lazy: the pairing and clustering jobs run before the call returns. */
   def nearDupClusters(
       df: DataFrame, textCol: String, idCol: String,
@@ -882,7 +881,7 @@ object Dedup {
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
     val slim = df
       .select(F.col(idCol).as("__hnd_id"), F.col(hashCol).cast("long").as("__hnd_h"))
-      .localCheckpoint(true)
+      .transform(Checkpoint.pin(_, eager = true))
     def side(a: String, h: String) = slim
       .select(F.col("__hnd_id").as(a), F.col("__hnd_h").as(h))
       .select(F.col(a), F.col(h),

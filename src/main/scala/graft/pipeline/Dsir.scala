@@ -54,7 +54,7 @@ object Dsir {
       .select(F.col("__w"),
         F.coalesce(F.col("__cr"), F.lit(0L)).as("__cr"),
         F.coalesce(F.col("__ct"), F.lit(0L)).as("__ct"))
-      .localCheckpoint(false)
+      .transform(graft.core.Checkpoint.pin(_, eager = false))
     val tot = vocab.agg(F.sum("__cr").as("__nr"), F.sum("__ct").as("__nt"),
       F.count(F.lit(1)).as("__v"))
     val lr = vocab.crossJoin(F.broadcast(tot))

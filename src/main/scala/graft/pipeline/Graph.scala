@@ -30,8 +30,8 @@ import graft.core.Checkpoint
   * whole plan is `iters` shuffles over the EDGE list, never the
   * corpus. The edge list and vertex set are checkpointed for the call
   * (the degree pass and every iteration re-read them); each round is an
-  * eager localCheckpoint that frees the one before it, and the result
-  * reads the last, which a caller frees with `Checkpoint.release`.
+  * eager [[graft.core.Checkpoint.pin]] that frees the one before it, and
+  * the result reads the last.
   *
   * (Reference analog: none — whylogs profiles tables; this exists for
   * the curation pipelines (Common Crawl-style domain ranking, cluster
@@ -89,7 +89,7 @@ object Graph {
             .select(F.col("id"),
               (F.lit(base) +
                 F.expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("rank"))
-            .localCheckpoint(true)
+            .transform(Checkpoint.pin(_, eager = true))
           if (round > 0) Checkpoint.release(ranks) // round 0 reads `verts`
           ranks = next
         }

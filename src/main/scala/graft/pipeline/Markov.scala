@@ -44,7 +44,7 @@ object Markov {
         F.lag(F.col(typeCol), 1).over(w).as("prev"))
       .filter(F.col("prev").isNotNull)
     val t = steps.groupBy("prev", "next").agg(F.count(F.lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .transform(graft.core.Checkpoint.pin(_, eager = false))
     val m = t.groupBy("prev").agg(F.sum("cnt").as("__rt"))
     t.join(F.broadcast(m), Seq("prev"))
       .select(F.col("prev"), F.col("next"), F.col("cnt"),

@@ -88,7 +88,7 @@ object NaiveBayes {
       val best = F.array_max(F.array(scored.toSeq: _*))
       sums.select(F.col(idCol), best.getField("c").as("pred"),
           (best.getField("q").cast("double") / F.lit(quant)).as("score"))
-        .localCheckpoint(true)
+        .transform(Checkpoint.pin(_, eager = true))
     }
   }
 

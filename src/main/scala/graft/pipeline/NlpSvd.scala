@@ -117,8 +117,7 @@ object NlpSvd {
     * subspace is the top-k axes and every residual is closed-form —
     * see the `nlp_svd_residual_exact` query. Vectors are persisted
     * across the two jobs (Gramian + scoring); NULL vectors score NULL.
-    * Not lazy: the result is an eager local checkpoint, which a caller
-    * frees with `Checkpoint.release` once collected. */
+    * Not lazy: the result is an eager [[graft.core.Checkpoint.pin]]. */
   def residualsFromVectors(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, k: Int): DataFrame = {
     // persist, not Checkpoint.scoped: fit's first job (RowMatrix's `first()`) reads one
@@ -134,7 +133,7 @@ object NlpSvd {
         F.when(F.col("__tv").isNotNull, resid(F.col("__tv"))).as("residual"))
       // materialize (lineage truncated) so the vectors can be released
       // before callers run their own actions
-      out.localCheckpoint(true)
+      graft.core.Checkpoint.pin(out, eager = true)
     }
   }
 }

@@ -39,7 +39,7 @@ object Packing {
       .repartitionByRange(F.col(orderCol))
       .sortWithinPartitions(orderCol)
       .withColumn("__pid", F.spark_partition_id())
-      .localCheckpoint(false) // pin partitioning: both passes must see identical splits
+      .transform(graft.core.Checkpoint.pin(_, eager = false)) // pin partitioning: both passes must see identical splits
     val w = Window.partitionBy("__pid").orderBy(orderCol)
     val local = parts.withColumn("__cum", F.sum("__n_tokens").over(w))
     // one row per partition → driver prefix sum → broadcast back

@@ -371,8 +371,8 @@ object Similarity {
 
   /** Train the coarse + residual codebooks on a bounded driver-side
     * sample and encode the corpus in ONE map-only pass; the code table
-    * is localCheckpointed (materialized, lineage-free) so repeated
-    * searches never rescan or re-encode the corpus. */
+    * is an eager [[Checkpoint.pin]] (materialized, lineage-free) so
+    * repeated searches never rescan or re-encode the corpus. */
   def ivfPqBuild(
       corpus: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -397,7 +397,7 @@ object Similarity {
     }
     val codebook = trainPqOnSample(residuals, m, ksub, iters = 4)
     val encoded = encodedFrame(cents, codebook, corpus, idCol, vecCol)
-      .localCheckpoint(true)
+      .transform(Checkpoint.pin(_, eager = true))
     IvfPqIndex(cents, codebook, ksub, encoded,
       corpus.select(F.col(idCol).as("neighbor_id"),
         F.col(vecCol).cast("array<double>").as("__cv")))
@@ -707,8 +707,8 @@ object Similarity {
     * far more than checkpointing bands × n 24-byte rows. The verification
     * joins re-scan only the pruned (id, vector) projection off the
     * parquet scan; the pair result is an eager local checkpoint, so
-    * the banding is released before the caller's actions run (an eager
-    * caller frees the result with `Checkpoint.release` once collected).
+    * the banding is released before the caller's actions run (the result
+    * reads its own [[Checkpoint.pin]]).
     *
     * `maxBucketSize` switches pathological buckets (zero vectors, clusters
     * of near-identical embeddings) from quadratic within-bucket pair
@@ -745,7 +745,7 @@ object Similarity {
         .withColumn("sim", cosine_similarity(F.col("__va"), F.col("__vb")))
         .filter(F.col("sim") >= tau)
         .select("a", "b", "sim")
-        .localCheckpoint(true)
+        .transform(Checkpoint.pin(_, eager = true))
     }
   }
 

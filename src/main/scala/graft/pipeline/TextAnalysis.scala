@@ -203,7 +203,7 @@ object TextAnalysis {
     val cdf = tf.groupBy("term").agg(F.count(F.lit(1)).as("class_df"))
     val scored = tf.join(cdf, Seq("term"))
       .withColumn("score", F.col("tf").cast("double") / F.col("class_df").cast("double"))
-      .localCheckpoint(true)
+      .transform(Checkpoint.pin(_, eager = true))
     val top = scored.groupBy("class")
       .agg(graft.functions.top_k_agg(F.col("score"), F.col("term"), k).as("top"))
       .select(F.col("class"), F.posexplode(F.col("top")).as(Seq("pos", "entry")))
@@ -324,7 +324,7 @@ object TextAnalysis {
     val g = df.select(F.explode(pairs).as("p"))
       .select(F.col("p.a").as("left"), F.col("p.b").as("right"))
       .groupBy("left", "right").agg(F.count(F.lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .transform(Checkpoint.pin(_, eager = false))
     val ca = g.groupBy("left").agg(F.sum("cnt").as("__ca"))
     val cb = g.groupBy("right").agg(F.sum("cnt").as("__cb"))
     val tot = g.agg(F.sum("cnt").as("__t"))
@@ -682,7 +682,7 @@ object TextAnalysis {
       .withColumn("chi2", F.when(F.col("df") === F.lit(n), F.lit(0.0))
         .otherwise(num / den))
       .drop("__nc")
-      .localCheckpoint(true)
+      .transform(Checkpoint.pin(_, eager = true))
     val top = scored.groupBy("class")
       .agg(graft.functions.top_k_agg(F.col("chi2"), F.col("term"), k).as("top"))
       .select(F.col("class"), F.posexplode(F.col("top")).as(Seq("pos", "entry")))

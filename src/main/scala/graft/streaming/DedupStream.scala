@@ -225,9 +225,8 @@ object DedupStream {
       .outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Owner.using(_.own(Dedup.nearDupsAgainstIndex(
-            batch, index, textCol, idCol, numPerm, bands, threshold, maxBucketSize))(
-            Checkpoint.release)
+        Owner.scope(Dedup.nearDupsAgainstIndex(
+            batch, index, textCol, idCol, numPerm, bands, threshold, maxBucketSize)
           .withColumn("batch_id", F.lit(batchId))
           .write.mode("append").parquet(outPath))
       }

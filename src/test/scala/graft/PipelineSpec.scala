@@ -77,7 +77,6 @@ class PipelineSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "fixture should contain planted near-duplicates")
     assert(got == exact)
-    graft.core.Checkpoint.release(dist)
   }
 
   test("ivfTopK recall@5 >= 0.9 vs brute force") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{functions => F}
 import graft.api.StandardQueries
 
 /** Registry queries that write a scratch directory delete it once their
-  * output is consumed inside [[StandardQueries.owned]], as Verify and
+  * output is consumed inside [[graft.core.Owner.scope]], as Verify and
   * Bench run them; fixture schemas are read afresh when a fixture is
   * rewritten. */
 class RegistryScratchSpec extends SparkSpec {
@@ -23,7 +23,7 @@ class RegistryScratchSpec extends SparkSpec {
         "streaming_ivfpq_ingest", "ivfpq_persisted_search", "streaming_dedup_store",
         "warc_file_scan", "crawl_to_corpus_shards", "corpus_shard_sink")) {
       val before = scratchDirs()
-      val (rows, during) = StandardQueries.owned {
+      val (rows, during) = graft.core.Owner.scope {
         val rows = SparkEntry.queries(name)(spark, sfDir).collect()
         (rows, scratchDirs() -- before)
       }

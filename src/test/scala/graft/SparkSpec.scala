@@ -22,21 +22,17 @@ abstract class SparkSpec extends AnyFunSuite {
   def sfDir: String = TestSpark.sfDir
   def table(name: String) = spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** The running test's owner; null between tests. */
-  @volatile private var testOwner: graft.core.Owner = _
-
   /** A new directory `target/<prefix><random>`, deleted with its contents
     * when the running test ends. */
   def targetTempDir(prefix: String): String =
-    testOwner.own(java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get("target"), prefix)
-      .toFile)(org.apache.commons.io.FileUtils.deleteDirectory).toString
+    graft.core.Owner.adopt(java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get("target"),
+      prefix).toFile)(org.apache.commons.io.FileUtils.deleteDirectory).toString
 
+  /** Each test runs in its own [[graft.core.Owner.scope]]: the
+    * checkpoints its calls pin and its temp directories are released
+    * when it ends. */
   override def withFixture(test: NoArgTest): org.scalatest.Outcome =
-    graft.core.Owner.using { o =>
-      o.own(testOwner)(testOwner = _)
-      testOwner = o
-      super.withFixture(test)
-    }
+    graft.core.Owner.scope(super.withFixture(test))
 
   /** events with `ts` normalized to a session-tz timestamp regardless of
     * the fixture's stored dtype (legacy raw-nanos BIGINT or timestamp).

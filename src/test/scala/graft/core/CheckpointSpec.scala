@@ -6,15 +6,17 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
 
 import graft.{SparkEntry, SparkSpec}
-import graft.analysis.{Boost, Conformal, DataAudit, ExactQuantiles, Outliers, TreeSplit}
-import graft.pipeline.{Dedup, Graph, NaiveBayes, NlpSvd, QualityClassifier, Similarity,
-  TextAnalysis, Urls}
+import graft.analysis.{Boost, Conformal, DataAudit, ExactQuantiles, Monitor, Outliers, Roc,
+  TreeSplit}
+import graft.pipeline.{Dedup, Dsir, Graph, Markov, NaiveBayes, NlpSvd, Packing,
+  QualityClassifier, Similarity, TextAnalysis, Urls}
 
 /** [[Checkpoint.scoped]] frees what it pins, and the exact-statistics
-  * and pipeline calls built on it leave no local checkpoint registered
-  * once their result is on the driver (an eager result once its caller
-  * releases it), at either side of every [[Gate]]. A lazy result that
-  * reads its own checkpoint must keep working after the call returns. */
+  * and pipeline calls and the registry queries built on [[Checkpoint]]
+  * leave no local checkpoint registered once the [[Owner.scope]] that
+  * consumed their result has closed, at either side of every [[Gate]].
+  * A lazy result that reads its own checkpoint must keep working after
+  * the call returns. */
 class CheckpointSpec extends SparkSpec {
   import spark.implicits._
 
@@ -25,14 +27,18 @@ class CheckpointSpec extends SparkSpec {
 
   private def pinned(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Name → RDDs newly pinned after the call, for each call that left any. */
+  /** Name → RDDs newly pinned once the call's [[Owner.scope]] has closed,
+    * for each call that left any, with every gate at 0 and at
+    * `Long.MaxValue`. */
   private def leaks(calls: Seq[(String, () => Any)]): Map[String, Int] =
-    calls.flatMap { case (name, call) =>
-      val before = pinned()
-      call()
-      val left = newlyPinned(before).size
-      if (left == 0) None else Some(name -> left)
-    }.toMap
+    (for {
+      bound <- Seq(0L, Long.MaxValue)
+      (name, call) <- calls
+      before = pinned()
+      _ = Gate.withBound(bound)(Owner.scope(call()))
+      left = newlyPinned(before).size
+      if left > 0
+    } yield s"$name at $bound" -> left).toMap
 
   private lazy val data: DataFrame = {
     val rng = new scala.util.Random(11)
@@ -69,10 +75,6 @@ class CheckpointSpec extends SparkSpec {
     assert(newlyPinned(before).isEmpty)
   }
 
-  /** Collects an eager call's result, then frees the checkpoint it reads. */
-  private def collectAndRelease(result: DataFrame): Array[Row] =
-    try result.collect() finally Checkpoint.release(result)
-
   test("exact-statistics calls leave no checkpoint pinned once their result is on the driver") {
     val features = Seq(TreeSplit.FeatureSpec("a", F.col("a")),
       TreeSplit.FeatureSpec("c", F.floor(F.col("c"))))
@@ -85,6 +87,7 @@ class CheckpointSpec extends SparkSpec {
       F.concat(F.lit("https://"), F.col("seg"), F.lit(".example/"), F.col("id")).as("url"))
     val blocklist = Seq(Tuple1("S1.example")).toDF("domain")
     val robots = Seq(("s2.example", "User-agent: *\nDisallow: /1\n")).toDF("host", "txt")
+    val embeddings = table("embeddings")
     val calls: Seq[(String, () => Any)] = Seq(
       "quantiles" -> (() => ExactQuantiles.quantiles(data, Seq("a", "c"), Seq(0.25, 0.5))),
       "quantilesByKey" -> (() => ExactQuantiles.quantilesByKey(data, F.col("seg"), "c", Seq(0.5))),
@@ -103,29 +106,54 @@ class CheckpointSpec extends SparkSpec {
         (() => Urls.filterBlockedDomains(urls, "url", blocklist, "domain").collect()),
       "filterRobotsDisallowed" ->
         (() => Urls.filterRobotsDisallowed(urls, "url", robots, "host", "txt").collect()),
-      // eager results: their caller frees them once collected
-      "trainScore" -> (() => collectAndRelease(
-        NaiveBayes.trainScore(labeled, labeled, "text", "seg", "id"))),
-      "residualsFromVectors" -> (() => collectAndRelease(
-        NlpSvd.residualsFromVectors(vectors, "id", "v", dim = 3, k = 2))),
-      "minHashNearDups" -> (() => collectAndRelease(Dedup.minHashNearDups(data, "text", "id"))),
-      "nearDupsAgainstIndex" -> (() => collectAndRelease(
-        Dedup.nearDupsAgainstIndex(newDocs, index, "text", "id"))),
-      "cosineNearDupLsh" -> (() => collectAndRelease(
-        Similarity.cosineNearDupLsh(vectors, "id", "v", tau = 0.99))),
-      "pageRank" -> (() => collectAndRelease(
-        Graph.pageRank(data.select(F.col("id"), F.col("y")), "id", "y", iters = 3))),
-      "nearDupClusters" -> (() => collectAndRelease(Dedup.nearDupClusters(data, "text", "id"))))
+      // results that read a pin: freed when the consuming scope closes
+      "trainScore" -> (() => NaiveBayes.trainScore(labeled, labeled, "text", "seg", "id").collect()),
+      "residualsFromVectors" ->
+        (() => NlpSvd.residualsFromVectors(vectors, "id", "v", dim = 3, k = 2).collect()),
+      "minHashNearDups" -> (() => Dedup.minHashNearDups(data, "text", "id").collect()),
+      "nearDupsAgainstIndex" ->
+        (() => Dedup.nearDupsAgainstIndex(newDocs, index, "text", "id").collect()),
+      "cosineNearDupLsh" -> (() => Similarity.cosineNearDupLsh(vectors, "id", "v", tau = 0.99).collect()),
+      "pageRank" ->
+        (() => Graph.pageRank(data.select(F.col("id"), F.col("y")), "id", "y", iters = 3).collect()),
+      "nearDupClusters" -> (() => Dedup.nearDupClusters(data, "text", "id").collect()),
+      "percentRanksMulti" -> (() => ExactQuantiles.percentRanksMulti(data, Seq("a", "c")).collect()),
+      "spearmanCorr" -> (() => DataAudit.spearmanCorr(data, "a", "b").collect()),
+      "tCloseness" -> (() => DataAudit.tCloseness(data, Seq("seg"), "y").collect()),
+      "keyConcentration" -> (() => DataAudit.keyConcentration(data, "y").collect()),
+      "mutualInformation" ->
+        (() => DataAudit.mutualInformation(data, F.col("seg"), F.col("y") % 3).collect()),
+      "cramersV" -> (() => DataAudit.cramersV(data, F.col("seg"), F.col("y") % 3).collect()),
+      "theilsU" -> (() => DataAudit.theilsU(data, F.col("seg"), F.col("y") % 3).collect()),
+      "trendTest" -> (() => Monitor.trendTest(
+        data.withColumn("ts", F.timestamp_seconds(F.col("id") * 3600L)), "seg", "ts").collect()),
+      "rocCurve" -> (() => Roc.rocCurve(data, F.col("a"), F.col("y") % 2 === 0).collect()),
+      "ivfPqBuild" -> (() => Similarity.ivfPqSearch(
+        Similarity.ivfPqBuild(embeddings, numCentroids = 4, m = 16, ksub = 8),
+        embeddings.filter(F.col("vec_id") < 5), nprobe = 2, k = 3).collect()),
+      "winnowMatches" -> (() => Dedup.winnowMatches(data, "text", "id").collect()),
+      "hashNearDups" -> (() => Dedup.hashNearDups(data, "id", "y", maxHamming = 2).collect()),
+      "importanceWeights" ->
+        (() => Dsir.importanceWeights(data, newDocs, "text", "id").collect()),
+      "transitions" -> (() => Markov.transitions(data, "seg", "id", "text", "id").collect()),
+      "withOffsets" ->
+        (() => Packing.withOffsets(data, "id", F.col("y"), capacity = 100L).collect()),
+      "classTfidf" -> (() => TextAnalysis.classTfidf(data, "seg", "text").collect()),
+      "termCooccurrence" -> (() => TextAnalysis.termCooccurrence(data, "text").collect()),
+      "classChi2Keywords" -> (() => TextAnalysis.classChi2Keywords(data, "seg", "text").collect()))
     data.count()
-    for (bound <- Seq(0L, Long.MaxValue))
-      assert(Gate.withBound(bound)(leaks(calls)) === Map.empty[String, Int], s"bound $bound")
+    assert(leaks(calls) === Map.empty[String, Int])
   }
 
   test("registry queries at sf0.01 return the pinned-RDD set to its baseline") {
     val dir = new File(new File(sfDir).getParentFile, "sf0.01").getPath
     val names = Seq("iqr_outliers", "mad_outliers", "winsorize_summary",
       "spearman_matrix", "conformal_coverage", "ls_boost", "bpe_train_merges",
-      "streaming_dedup_images")
+      "streaming_dedup_images",
+      // queries whose result reads a pin
+      "dedup_embedding_lsh_recall", "corpus_pipeline", "dedup_clusters", "pagerank_neardups",
+      "trend_test", "roc_curve", "percent_ranks", "nlp_svd_residual", "embedding_ivfpq",
+      "ivfpq_persisted_search")
     val runs = names.map(name =>
       name -> (() => assert(SparkEntry.queries(name)(spark, dir).collect().nonEmpty, name)))
     assert(leaks(runs) === Map.empty[String, Int])

@@ -86,9 +86,7 @@ class GateSpec extends SparkSpec {
           val df = SparkEntry.queries(name)(spark, sfDir)
           val readsCheckpoint =
             df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r }.nonEmpty
-          val out = (df.schema, sortedRows(df), readsCheckpoint)
-          Checkpoint.release(df)
-          out
+          (df.schema, sortedRows(df), readsCheckpoint)
         }
       }
       assert(distributed._1 === driver._1)

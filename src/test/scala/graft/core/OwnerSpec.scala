@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.api.StandardQueries
 
 /** [[Owner.using]] releases what its body owned, latest first, on normal
-  * and thrown exit, runs every release even when one fails, and the
-  * registry's per-thread owner scopes nest. */
+  * and thrown exit, and runs every release even when one fails;
+  * [[Owner.scope]]s nest per thread and release what [[Owner.adopt]]
+  * registered on that thread only. */
 class OwnerSpec extends AnyFunSuite {
 
   test("returns the body's value and releases in reverse order of registration") {
@@ -61,12 +62,12 @@ class OwnerSpec extends AnyFunSuite {
     dir
   }
 
-  test("registry scopes nest: an inner scope deletes its own scratch and restores the outer one") {
+  test("scopes nest: an inner scope deletes its own scratch, restores the outer one") {
     val outside = made("owner_spec_outside_")
     try {
-      val (outer, inner, afterInner) = StandardQueries.owned {
+      val (outer, inner, afterInner) = Owner.scope {
         val outer = made("owner_spec_outer_")
-        val inner = StandardQueries.owned(made("owner_spec_inner_"))
+        val inner = Owner.scope(made("owner_spec_inner_"))
         assert(!inner.exists())
         assert(outer.exists())
         // registered with the restored outer scope, not the closed inner one
@@ -77,9 +78,9 @@ class OwnerSpec extends AnyFunSuite {
       assert(outside.exists(), "scratch outside a scope is left in place")
       // an inner scope left by an exception restores the outer one too
       var thrownIn: File = null
-      val afterThrow = StandardQueries.owned {
+      val afterThrow = Owner.scope {
         intercept[IllegalStateException] {
-          StandardQueries.owned {
+          Owner.scope {
             thrownIn = made("owner_spec_thrown_")
             throw new IllegalStateException("query failed")
           }
@@ -89,5 +90,36 @@ class OwnerSpec extends AnyFunSuite {
       }
       assert(!afterThrow.exists())
     } finally outside.delete()
+  }
+
+  test("adopt outside a scope, or on another thread, registers nothing") {
+    val log = Seq.newBuilder[String]
+    assert(Owner.adopt("outside")(r => log += r) === "outside")
+    Owner.scope {
+      // a stream's foreachBatch runs on its own thread, outside the caller's scope
+      val other = new Thread(() => Owner.adopt("other thread")(r => log += r))
+      other.start()
+      other.join()
+      Owner.adopt("inside")(r => log += r)
+    }
+    assert(log.result() === Seq("inside"))
+  }
+
+  test("an exception inside a nested using releases its own resources, not the ambient scope's") {
+    val log = Seq.newBuilder[String]
+    Owner.scope {
+      Owner.adopt("ambient")(r => log += r)
+      intercept[IllegalStateException] {
+        Owner.using { o =>
+          o.own("local")(r => log += r)
+          // adopted inside the nested using: still the ambient scope's
+          Owner.adopt("adopted in using")(r => log += r)
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(log.result() === Seq("local"))
+      log += "scope body done"
+    }
+    assert(log.result() === Seq("local", "scope body done", "adopted in using", "ambient"))
   }
 }

@@ -47,7 +47,6 @@ class DedupCapSpec extends SparkSpec {
     assert(local.schema == dist.schema)
     val rows = multiset(local)
     assert(rows == multiset(dist))
-    graft.core.Checkpoint.release(dist)
     rows
   }
 
@@ -196,7 +195,6 @@ class DedupCapSpec extends SparkSpec {
     val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.length == n * (n - 1) / 2)
     assert(got.toSet == (for (a <- 1L to n; b <- a + 1 to n) yield (a, b, 1.0)).toSet)
-    graft.core.Checkpoint.release(pairs)
   }
 
   test("minHashNearDups: the driver finish starts at most 2 Spark jobs") {

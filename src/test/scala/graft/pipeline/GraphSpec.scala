@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{functions => F}
 
 import graft.SparkSpec
-import graft.core.Checkpoint
+import graft.core.Owner
 
 /** Fixed-point PageRank semantics: hand-computed integer fixed-point
   * values (the whole point is bit-reproducibility, so the assertions
@@ -64,13 +64,15 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("a", "b")
     def newlyPinned(before: Set[Int]) = sc.getPersistentRDDs.keySet.toSet -- before
     val before = sc.getPersistentRDDs.keySet.toSet
-    val ranks = Graph.pageRank(edges, "a", "b", iters = 3)
-    // the edge list, the vertex set and the two superseded rounds are freed
-    assert(newlyPinned(before).size === 1)
-    val once = ranksOf(ranks)
-    assert(ranksOf(ranks) === once)
-    assert(once === Map(1L -> 333333333332L, 2L -> 333333333332L, 3L -> 333333333332L))
-    Checkpoint.release(ranks)
+    Owner.scope {
+      val ranks = Graph.pageRank(edges, "a", "b", iters = 3)
+      // the edge list, the vertex set and the two superseded rounds are freed
+      assert(newlyPinned(before).size === 1)
+      val once = ranksOf(ranks)
+      assert(ranksOf(ranks) === once)
+      assert(once === Map(1L -> 333333333332L, 2L -> 333333333332L, 3L -> 333333333332L))
+    }
+    // the last round is released with the scope that read it
     assert(newlyPinned(before).isEmpty)
     // zero rounds would return a frame over the released vertex set
     intercept[IllegalArgumentException](Graph.pageRank(edges, "a", "b", iters = 0))
